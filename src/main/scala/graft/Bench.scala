@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":…,"value":…,"queries":{…},"sf":…}.
@@ -10,79 +9,20 @@ import org.apache.spark.sql.SparkSession
   * small query amortises session/codegen start-up out of the numbers.
   */
 object Bench {
-  /** Preferred display order: heavy distributed families first, then
-    * the o-series metadata/export ops. Any catalog key NOT listed here
-    * is appended automatically — the bench covers the ENTIRE catalog by
+  /** Full bench set: every catalog query (sorted) plus the end-to-end
+    * export pipeline — the bench covers the ENTIRE catalog by
     * construction, so a regression in any query is visible per-round.
     */
-  private val preferredOrder: Seq[String] = Seq(
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-    "q_top_customers", "q_window_rank", "q_window_stats", "q_running_total", "q_forward_fill", "q_interpolate",
-    "q_global_sort", "q_rollup",
-    "q_outer_join", "q_seq_pack",
-    "q_events_hourly", "q_sessionize", "q_funnel", "q_json_extract", "q_sql_cte",
-    "st3_latest_state",
-    "q_asof_join", "q_range_join", "q_salted_agg", "q_skew_join", "q_cube",
-    "q_bucketed_join", "q_partition_prune", "q_zorder", "q_cdc_apply", "q_profile",
-    "d1_exact_dedup", "d2_minhash_lsh", "d3_simhash", "d4_ngram_jaccard",
-    "d5_embedding_dups", "d6_incremental_dedup", "d7_dup_clusters",
-    "d8_contamination", "d9_winnowing_dups", "d10_dedup_canonical",
-    "s1_knn_brute", "s2_knn_lsh", "s3_knn_ivf", "s4_knn_pq",
-    "t1_text_stats", "t2_lang_id", "t3_token_counts", "t4_fingerprint",
-    "t5_winnowing", "t6_repetition", "t7_pii_scrub", "t8_top_terms",
-    "t10_tfidf_keywords",
-    "q_approx_topk", "q_approx_quantile",
-    "q_train_split", "q_stratified_sample", "q_upsample_mix",
-    "p1_pipeline", "p2_pipeline",
-    "mm1_decode_meta", "mm2_frame_samples",
-    "mm3_resize_spec", "mm4_feature_knn", "mm5_audio_meta", "mm8_audio_levels",
-    // rounds 3-4 flagship additions — listed (rather than left to the
-    // alphabetical remainder) so the capped stdout line keeps them when
-    // space runs out; the cut should land on o-series metadata trivia
-    "d11_bloom_screen", "d12_semdedup", "d13_dup_spans", "d14_span_strip",
-    "d15_exact_keep", "d16_segment_dedup", "d17_bloom_persisted",
-    "s5_range_search", "s6_random_projection", "s7_knn_ivfpq",
-    "s8_knn_persisted", "s9_knn_rerank",
-    "t9_surprisal", "t11_domain_cap", "t12_quality_filter",
-    "t13_mix_rebalance", "t14_token_budget", "t15_bigram_surprisal",
-    "st1_first_seen", "st2_interval_join", "st4_dedup_keys",
-    "st5_scd2_stream", "st6_screen_stream", "st7_cdc_upsert",
-    "st8_time_travel", "st9_outer_interval", "st10_neardup_screen",
-    "st11_table_diff",
-    "t16_classifier_score", "t17_ppl_buckets", "t18_char_entropy",
-    "t19_collocations",
-    // round-6 continuation flagships
-    "t20_bpe_pairs", "s10_diverse_sample", "s11_ivf_append", "s12_knn_sq8",
-    "g1_supplier_rank", "mm6_image_neardup", "st12_window_topk",
-    "st13_anonymise_stream", "q_histogram", "q_cohort_retention",
-    "q_changepoint", "q_basket_pairs", "q_time_weighted",
-    "g2_triangles", "st14_user_drift",
-    "d18_containment", "p3_ingest_pipeline", "o26_csv_roundtrip",
-    "o27_orc_roundtrip", "o28_k_anonymity", "o29_subset_closure",
-    "q_approx_cms", "q_expectations", "q_shard_layout", "q_scd2",
-    "q_sql_frontend", "q_bloom_join",
-    "o16_dump_stats", "o24_dump_parallel", "o25_jsonl_roundtrip",
-    "o11_consistency", "o21_dry_run")
-
-  /** Full bench set: every catalog query (preferred order first, the
-    * rest sorted) plus the end-to-end export pipeline.
-    */
   val headline: Seq[String] =
-    preferredOrder ++
-      (GraftQueries.all.keySet -- preferredOrder).toSeq.sorted :+
-      "anonymise_export"
+    GraftQueries.all.keys.toSeq.sorted :+ "anonymise_export"
 
   def main(args: Array[String]): Unit = {
-    // a renamed catalog key would otherwise surface as a per-query
-    // "failed" error deep in the run — fail fast instead
-    val unknown = preferredOrder.filterNot(GraftQueries.all.contains)
-    require(unknown.isEmpty, s"preferredOrder keys not in catalog: ${unknown.mkString(", ")}")
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the suite — for quiet-host
     // re-measures of flagged queries without paying a full catalog run
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     // a typo'd name must fail fast, not yield a successful-looking
-    // empty/partial run (same rule as the preferredOrder require above)
+    // empty/partial run
     only.foreach { f =>
       val bad = f -- headline.toSet
       require(bad.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names not in catalog: ${bad.mkString(", ")}")
@@ -104,7 +44,6 @@ object Bench {
     val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(3)
     require(passes >= 1 && passes <= 10, "SPARK_GRAFT_BENCH_PASSES must be 1..10")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Let AQE pick the POST-shuffle partition count from measured
     // map output instead of pinning it to the core count: with
     // shuffle.partitions=32 a 100x-bigger shuffle (the sf10
@@ -142,7 +81,7 @@ object Bench {
         require(n >= 1, s"SPARK_GRAFT_BENCH_INITPARTS must be >= 1, got: $n")
         n
       case None =>
-        val c = cpus.toInt
+        val c = GraftSession.cpus
         val derived = inputBytes(sfDir) / (8L << 20)
         math.max(c, math.min(8L * c, derived)).toInt
     }
@@ -156,18 +95,10 @@ object Bench {
     // metadata, not heap data. Scale-independent (per-plan, not
     // per-row); override for A/B with SPARK_GRAFT_CODEGEN_CACHE.
     val codegenCache = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.get(GraftSession.builder()
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         initParts.toString)
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.sql.codegen.cache.maxEntries", codegenCache))
     System.err.println(s"[bench] initialPartitionNum=$initParts sfDir=$sfDir")
 
     // warm-up: session, codegen, parquet footer reads
@@ -252,49 +183,14 @@ object Bench {
     }
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.collect { case (k, v) if !failed.contains(k) => v }.sum
-    def render(rs: Seq[(String, Double)], omitted: Int): String = {
-      val qs = rs.map((entry _).tupled).mkString("{", ",", "}")
-      val om = if (omitted > 0) s""","omitted":$omitted,"full":"BENCH_full.json"""" else ""
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errs$om,"sf":"$sfDir"}"""
-    }
-    // The stdout line carries the FULL per-query map. Earlier rounds
-    // capped it at ~1.8k chars (failures + a priority prefix, the rest
-    // in BENCH_full.json) because the collecting harness once kept only
-    // a ~2000-char stdout tail — but that truncation hid ~190 keys from
-    // the round-over-round diff and was itself fragile (round 11's
-    // record arrived unparseable). The capture window demonstrably holds
-    // more than the old cap assumed, so the full map is printed and the
-    // identical line still lands in BENCH_full.json for the committed
-    // per-round artifact. SPARK_GRAFT_BENCH_STDOUT_CHARS restores a cap
-    // if a consumer ever needs one (failures sort first in suite order
-    // by construction of `render`, so a capped line keeps them).
-    val fullLine = render(results, 0)
+    val qs = results.map((entry _).tupled).mkString("{", ",", "}")
+    // The stdout line carries the FULL per-query map; the identical line
+    // lands in BENCH_full.json for the committed per-round artifact.
+    val fullLine =
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_full.json"),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    sys.env.get("SPARK_GRAFT_BENCH_STDOUT_CHARS").map(_.toInt) match {
-      case Some(budget) =>
-        val preferredSet = preferredOrder.toSet
-        def prio(r: (String, Double)): Int =
-          if (failed.contains(r._1)) 0
-          else if (r._1 == "anonymise_export") 1
-          else if (preferredSet(r._1)) 2
-          else if (r._1.startsWith("o")) 4 // metadata/export trivia — first to cut
-          else 3
-        val ordered = results.sortBy(prio)
-        val kept = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-        var len = render(Nil, results.size).length
-        val (failures, rest) = ordered.partition(r => failed.contains(r._1))
-        for (r <- failures) { kept += r; len += entry(r._1, r._2).length + 1 }
-        var cut = false
-        for (r <- rest if !cut) {
-          val add = entry(r._1, r._2).length + 1
-          if (len + add <= budget) { kept += r; len += add } else cut = true
-        }
-        val keptSet = kept.map(_._1).toSet
-        println(render(results.filter(r => keptSet(r._1)), results.size - kept.size))
-      case None =>
-        println(fullLine)
-    }
+    println(fullLine)
     spark.stop()
   }
 }

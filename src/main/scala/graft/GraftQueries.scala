@@ -1582,7 +1582,7 @@ object GraftQueries {
     * cross-engine exact (same left-to-right double fold as DuckDB's
     * `list_cosine_similarity` — the s1/s16 precedent). This is the
     * shipped answer to d5's probed ~n² true-pair growth at the sf10
-    * decade (103× pairs for 10× data, `D5Sf10Probe`, SCALING.md):
+    * decade (103× pairs for 10× data, SCALING.md round 11):
     * output ≤ k·n rows by contract however dense the cosine graph.
     */
   def d5EmbeddingCapped(s: SparkSession, dir: String): DataFrame =
@@ -1712,7 +1712,8 @@ object GraftQueries {
     * the probed cells are ⅛ of the partitions (spec-asserted via the
     * scan's numFiles metric — the pruning ratio is REAL, not just a
     * filter in the plan), and the recall verdict clears the 0.25
-    * floor at all fixture SFs (measured min 0.30, RecallProbe).
+    * floor at all fixture SFs (measured min 0.30, MEASUREMENTS.md
+    * round 9).
     */
   def s8KnnPersisted(s: SparkSession, dir: String): DataFrame = {
     val emb = tbl(s, dir, "embeddings")
@@ -1734,7 +1735,7 @@ object GraftQueries {
     * codes (16 B/vector, 16× compression) + asymmetric-distance top-k,
     * verdict row = recall@10 vs the exact in-query brute force clears
     * the 0.25 floor (measured min 0.30 across sf0.001/0.01/0.1,
-    * RecallProbe — MEASUREMENTS.md round 9; deterministic codebooks →
+    * MEASUREMENTS.md round 9; deterministic codebooks →
     * stable verdict).
     */
   def s4KnnPq(s: SparkSession, dir: String): DataFrame = {
@@ -1798,8 +1799,8 @@ object GraftQueries {
         s, o, emb.filter(pmod(col("vec_id"), lit(5)) === 0))
     }
     val q = emb.filter(col("vec_id") < 10)
-    // nprobe 16 of 64 (round-10 retune from 8: RecallProbe min recall
-    // 0.60/0.50/0.40 across SFs vs 0.30/0.30/0.20 — the floor rises to
+    // nprobe 16 of 64 (round-10 retune from 8, MEASUREMENTS.md round 10:
+    // min recall 0.60/0.50/0.40 across SFs vs 0.30/0.30/0.20 — the floor rises to
     // 0.35 for double the probed cells, still 1/4 of the inverted file)
     val ann = graft.ops.VectorIndex.queryIvf(s, out, q, k = 10, nprobe = 16)
     val exact = Similarity.bruteForceTopK(emb, q, k = 10)
@@ -1941,7 +1942,7 @@ object GraftQueries {
     * residual PQ compression + asymmetric-distance scoring — the
     * billion-vector configuration. Probes 6 of 8 cells with 8x256
     * codebooks (round-10 retune: the old 4-probe/16x64 point sat at a
-    * measured-tight 0.2 min recall; RecallProbe showed +2 probes and
+    * measured-tight 0.2 min recall; MEASUREMENTS.md round 10: +2 probes and
     * coarser-but-deeper codebooks buy min 0.50/0.40/0.30 across the
     * three SFs for ~no extra candidate volume), so unlike s3 this is
     * genuinely approximate on BOTH axes (routing and codes); verdict
@@ -2591,12 +2592,8 @@ object GraftQueries {
       col("c_nationkey").as("d_nation"))
   }
 
-  /** The feed and registry with their block-key columns attached.
-    * `private[graft]` so the scaling probes (`scratch.Sf30Probe`)
-    * measure candidate volume with the query's OWN key recipes rather
-    * than a re-derivation that can drift from them.
-    */
-  private[graft] def er1Keyed(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  /** The feed and registry with their block-key columns attached. */
+  private def er1Keyed(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val c = er1Registry(s, dir)
     val dirty = er1Feed(c)
       .withColumn("d_blk_phone", concat(col("d_nation").cast("string"),
@@ -3051,7 +3048,7 @@ object GraftQueries {
     * candidate volume stays within budget (this fixture: ~28/doc at
     * sf0.01, ~253/doc at sf0.1 — both exact, so the oracle compares
     * hash-exact), MinHash band screen + exact verify past it
-    * (engages at the sf1 rehearsal's ~2.8k/doc — `D18AutoProbe`).
+    * (engages at the sf1 rehearsal's ~2.8k/doc — SCALING.md round 10).
     */
   def d18Containment(s: SparkSession, dir: String): DataFrame =
     Dedup.ngramContainmentPairsAuto(tbl(s, dir, "documents"), "doc_id", "text",
@@ -3348,7 +3345,7 @@ object GraftQueries {
     // shuffle carries ≤3 (weight,id) pairs per node per task instead
     // of the full mirrored pair relation; reduce-side merge state is
     // ≤3 entries per node. Rank order (shared desc, v asc) is the same
-    // total order; probe-verified identical edges (GTopK2Probe),
+    // total order; verified identical edges (OPTIMIZATION_r13.md §2),
     // time-neutral at sf0.1 (the win is state/shuffle bounds at scale).
     val top3 = graft.functions.TopKByWeightAgg(3)
     shared
@@ -3584,8 +3581,8 @@ object GraftQueries {
     */
   def s17KnnGraph(s: SparkSession, dir: String): DataFrame = {
     val emb = tbl(s, dir, "embeddings")
-    // 4 hyperplane tables (round-10 retune from 3: RecallProbe min
-    // recall 0.40/0.40/0.50 across SFs vs 0.30/0.20/0.40 — one more
+    // 4 hyperplane tables (round-10 retune from 3, MEASUREMENTS.md round
+    // 10: min recall 0.40/0.40/0.50 across SFs vs 0.30/0.20/0.40 — one more
     // table buys the floor up to 0.35 for +1/3 bucket-join volume)
     val graph = Similarity.knnGraph(emb, k = 10, bits = 3, tables = 4)
     val q = emb.filter(col("vec_id") < 10)
@@ -4466,7 +4463,7 @@ object GraftQueries {
     * (`Multimodal.imageNearDups` → `imageNearDups64`): the previous
     * 16-bin hash saturated its 2^16 code space past ~10^4 images and
     * the TRUE hamming-≤2 pair set went quadratic (measured 101× pairs
-    * for 10× data, `MM6ScaleProbe`) — a contract-level scale bug, now
+    * for 10× data, SCALING.md round 10) — a contract-level scale bug, now
     * retired from the catalog along with its `scaling_allowlist`
     * entry. The fixture has no organic 64-bit near-dups (honest:
     * every image is genuinely distinct), so the gate plants

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import graft.anonymise.Anonymiser
 import graft.config.GraftConfig
 import graft.dialect.Dialect
-import graft.export.ExportPipeline
+import graft.export.{ExportPipeline, Subset}
 import graft.sources.{JdbcSource, ParquetSource, Source}
 
 /** CLI mirroring the reference's command surface
@@ -35,8 +35,8 @@ object Main {
       println(s"graft $version")
     case "export" :: rest => run(parseFlags(rest), export = true)
     case "sync" :: rest   => run(parseFlags(rest), export = false)
-    case "subset" :: rest => runSubset(parseFlags(rest))
-    case "forget" :: rest => runForget(parseFlags(rest))
+    case "subset" :: rest => runSubset(parseFlags(rest), forget = false)
+    case "forget" :: rest => runSubset(parseFlags(rest), forget = true)
     case "drift" :: oldDir :: newDir :: Nil =>
       val rc = runDrift(oldDir, newDir)
       if (rc != 0) sys.exit(rc)
@@ -77,17 +77,14 @@ object Main {
     f
   }
 
-  private def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  /** Runs `body` on the live session, or on a fresh `GraftSession` that
+    * is stopped afterwards — embedded callers (tests, notebooks, the
+    * benchmark) keep theirs, settings untouched.
+    */
+  private def withSession[T](body: SparkSession => T): T = {
+    val owned = GraftSession.existing.isEmpty
+    val spark = GraftSession.get()
+    try body(spark) finally if (owned) spark.stop()
   }
 
   private def buildSource(spark: SparkSession, cfg: GraftConfig, flag: String): Source =
@@ -110,12 +107,7 @@ object Main {
     // step 2: validation warnings, non-fatal (main.go:97-103)
     Anonymiser.validateRules(cfg).foreach(w => System.err.println(s"Warning: $w"))
 
-    // only stop a session this invocation created — embedded callers
-    // (tests, notebooks) keep theirs
-    val preExisting = org.apache.spark.sql.SparkSession.getDefaultSession.isDefined
-    val spark = buildSession()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    withSession { spark =>
       val source = buildSource(spark, cfg, flags.source)
       if (!export) {
         // sync: set-difference → extend config (main.go:230-315)
@@ -149,7 +141,7 @@ object Main {
             f"${stats.rowsExported} rows in $secs%.1fs " +
             f"(cores=${Runtime.getRuntime.availableProcessors})")
       }
-    } finally if (!preExisting) spark.stop()
+    }
   }
 
   /** `graft subset`: referentially-consistent sample → anonymise →
@@ -157,74 +149,44 @@ object Main {
     * anchor's sample key is the column other tables reference (the FK
     * catalog knows it); rows keep when their portable md5 bucket of
     * 100 falls below --pct.
+    *
+    * `graft forget` (`forget = true`): right-to-be-forgotten export —
+    * erase that victim set of the subject table (--anchor) together
+    * with every transitive FK descendant (`export.Subset.eraseCascade`),
+    * then dump the SURVIVING database through the same pipeline.
+    *
+    * Both refuse to write if the result left any dangling row.
     */
-  private def runSubset(flags: Flags): Unit = {
+  private def runSubset(flags: Flags, forget: Boolean): Unit = {
     val cfg = GraftConfig.load(flags.config)
     if (flags.anchor.isEmpty) { System.err.println("missing --anchor <table>"); sys.exit(2) }
     if (flags.out.isEmpty) { System.err.println("missing -o <out.sql>"); sys.exit(2) }
     require(flags.pct >= 1 && flags.pct <= 100, "--pct must be in 1..100")
-    val preExisting = org.apache.spark.sql.SparkSession.getDefaultSession.isDefined
-    val spark = buildSession()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    val (select, what, done) =
+      if (forget) (Subset.eraseCascade _, "erasure",
+        s"Forgot ${flags.pct}% of ${flags.anchor} (+ descendants)")
+      else (Subset.closure _, "subset closure",
+        s"Subset (anchor=${flags.anchor}, ${flags.pct}%)")
+    withSession { spark =>
       val source = buildSource(spark, cfg, flags.source)
       val fks = source.foreignKeys
       val anchorKey = fks.find(_.referencedTable == flags.anchor).map(_.referencedColumn)
         .getOrElse(source.columns(flags.anchor).head.name)
       val tables = source.tables.map(t => t -> source.read(t)).toMap
-      val kept = graft.export.Subset.closure(tables, fks, flags.anchor,
+      val kept = select(tables, fks, flags.anchor,
         graft.ops.Sampling.bucket(org.apache.spark.sql.functions.col(anchorKey), 100)
           < flags.pct)
-      val orphans = graft.export.Subset.orphanCounts(kept, fks)
+      val orphans = Subset.orphanCounts(kept, fks)
       require(orphans.values.forall(_ == 0L),
-        s"subset closure left dangling rows: $orphans — refusing to write")
+        s"$what left dangling rows: $orphans — refusing to write")
       val writer = new java.io.FileWriter(flags.out)
       val stats = try
         ExportPipeline.run(new graft.export.SubsetSource(source, kept), cfg,
           Dialect.forName(cfg.connection.dbType), writer, flags.batchSize)
       finally writer.close()
       System.err.println(
-        s"Subset (anchor=${flags.anchor}, ${flags.pct}%): exported " +
-          s"${stats.tablesExported} tables, ${stats.rowsExported} rows, 0 orphans")
-    } finally if (!preExisting) spark.stop()
-  }
-
-  /** `graft forget`: right-to-be-forgotten export — erase a victim set
-    * of the subject table (--anchor; --pct of its portable md5 buckets)
-    * together with every transitive FK descendant
-    * (`export.Subset.eraseCascade`), then dump the SURVIVING database
-    * through the unchanged anonymise + topo-order + export pipeline.
-    * Refuses to write if the erasure left any dangling row.
-    */
-  private def runForget(flags: Flags): Unit = {
-    val cfg = GraftConfig.load(flags.config)
-    if (flags.anchor.isEmpty) { System.err.println("missing --anchor <table>"); sys.exit(2) }
-    if (flags.out.isEmpty) { System.err.println("missing -o <out.sql>"); sys.exit(2) }
-    require(flags.pct >= 1 && flags.pct <= 100, "--pct must be in 1..100")
-    val preExisting = org.apache.spark.sql.SparkSession.getDefaultSession.isDefined
-    val spark = buildSession()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val source = buildSource(spark, cfg, flags.source)
-      val fks = source.foreignKeys
-      val subjectKey = fks.find(_.referencedTable == flags.anchor).map(_.referencedColumn)
-        .getOrElse(source.columns(flags.anchor).head.name)
-      val tables = source.tables.map(t => t -> source.read(t)).toMap
-      val kept = graft.export.Subset.eraseCascade(tables, fks, flags.anchor,
-        graft.ops.Sampling.bucket(org.apache.spark.sql.functions.col(subjectKey), 100)
-          < flags.pct)
-      val orphans = graft.export.Subset.orphanCounts(kept, fks)
-      require(orphans.values.forall(_ == 0L),
-        s"erasure left dangling rows: $orphans — refusing to write")
-      val writer = new java.io.FileWriter(flags.out)
-      val stats = try
-        ExportPipeline.run(new graft.export.SubsetSource(source, kept), cfg,
-          Dialect.forName(cfg.connection.dbType), writer, flags.batchSize)
-      finally writer.close()
-      System.err.println(
-        s"Forgot ${flags.pct}% of ${flags.anchor} (+ descendants): exported " +
-          s"${stats.tablesExported} tables, ${stats.rowsExported} rows, 0 orphans")
-    } finally if (!preExisting) spark.stop()
+        s"$done: exported ${stats.tablesExported} tables, ${stats.rowsExported} rows, 0 orphans")
+    }
   }
 
   /** `graft drift <old> <new>` — the o37 data-contract check between
@@ -232,11 +194,8 @@ object Main {
     * drifted rows marked; exits 1 when anything drifted (the CI-gate
     * convention).
     */
-  private[graft] def runDrift(oldPath: String, newPath: String): Int = {
-    val preExisting = org.apache.spark.sql.SparkSession.getDefaultSession.isDefined
-    val spark = buildSession()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+  private[graft] def runDrift(oldPath: String, newPath: String): Int =
+    withSession { spark =>
       val report = graft.analyse.Drift
         .driftReport(spark.read.parquet(oldPath), spark.read.parquet(newPath))
         .collect()
@@ -249,6 +208,5 @@ object Main {
       val drifted = report.count(_.getBoolean(6))
       System.err.println(s"drift: $drifted of ${report.length} checks drifted")
       if (drifted > 0) 1 else 0
-    } finally if (!preExisting) spark.stop()
-  }
+    }
 }

@@ -1272,7 +1272,7 @@ object Oracles {
     // d18's FORCED-SCREEN branch (candidate budget 0): the MinHash band
     // screen + exact-verify path, hash-gated against the SAME exact
     // oracle — green means the screen recovered every true pair at
-    // this SF, the recall claim D18AutoProbe makes at sf1, now
+    // this SF, the recall claim SCALING.md round 10 makes at sf1, now
     // oracle-recorded at the gated SFs
     "d18_containment_screen" -> containmentSql,
 
@@ -2854,7 +2854,7 @@ object Oracles {
     // s2 emits a deterministic per-query recall verdict (fixed
     // hyperplanes, tie-broken ranking) — the checkable contract is that
     // every query clears the measured floor (0.35; min recall 0.40
-    // across all fixture SFs, RecallProbe / MEASUREMENTS.md round 9)
+    // across all fixture SFs, MEASUREMENTS.md round 9)
     "s2_knn_lsh" ->
       "SELECT vec_id AS query_id, true AS recall_ok FROM embeddings WHERE vec_id < 10",
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Per-query physical-plan digests: one stable hash per catalog query,
@@ -68,15 +67,7 @@ object Plans {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outPath = if (args.length > 1) args(1) else "PLANS.json"
     val dump = sys.env.get("SPARK_GRAFT_PLANS_DUMP")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get()
     dump.foreach(d => new java.io.File(d).mkdirs())
     val entries = GraftQueries.all.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try {

@@ -1,7 +1,7 @@
 package graft.export
 
 import java.io.{BufferedWriter, Writer}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import graft.dialect.{Dialect, SqlValueCodec}
 import graft.analyse.TableMeta
 
@@ -91,7 +91,7 @@ class DumpWriter(
     if (batch.nonEmpty) writeRenderedInsert(meta.name, columnNames, batch)
   }
 
-  /** Multi-row INSERT from pre-rendered tuple texts. */
+  /** Multi-row INSERT from pre-rendered tuple texts (exporter.go:274-309). */
   private def writeRenderedInsert(table: String, columnNames: Seq[String],
                                   tuples: scala.collection.Seq[String]): Unit = {
     if (tuples.isEmpty) return
@@ -109,31 +109,6 @@ class DumpWriter(
   private def insertPrefix(table: String, columnNames: Seq[String]): String =
     "INSERT INTO " + dialect.quoteIdentifier(table) + " (" +
       columnNames.map(dialect.quoteIdentifier).mkString(", ") + ") VALUES\n"
-
-  /** Multi-row INSERT for ≤batchSize rows (exporter.go:274-309). */
-  def writeBatchInsert(table: String, columnNames: Seq[String], rows: Seq[Row]): Unit = {
-    if (rows.isEmpty) return
-    val sb = new StringBuilder
-    sb.append("INSERT INTO ").append(dialect.quoteIdentifier(table)).append(" (")
-    sb.append(columnNames.map(dialect.quoteIdentifier).mkString(", "))
-    sb.append(") VALUES\n")
-    var first = true
-    for (row <- rows) {
-      if (!first) sb.append(",\n")
-      first = false
-      sb.append("(")
-      var i = 0
-      while (i < columnNames.length) {
-        if (i > 0) sb.append(", ")
-        sb.append(DumpWriter.literal(row.get(i), dialect))
-        i += 1
-      }
-      sb.append(")")
-    }
-    sb.append(";\n")
-    w.write(sb.toString)
-    stats.rowsExported += rows.length
-  }
 
   def flush(): Unit = w.flush()
 }

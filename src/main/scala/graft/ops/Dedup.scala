@@ -107,7 +107,7 @@ object Dedup {
     * narrow chain runs on a single core. At real scale the source has
     * many splits and this is a cheap no-op-sized shuffle of raw text.
     */
-  private[graft] def withShingles(df: DataFrame, idCol: String, textCol: String, n: Int) = {
+  private def withShingles(df: DataFrame, idCol: String, textCol: String, n: Int) = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     // hash-partition by id (not round-robin): downstream per-doc
     // aggregations (minhash mins, simhash bit sums) then combine entirely
@@ -760,8 +760,8 @@ object Dedup {
     * falls far below the band curve can be missed. Exactness is traded
     * only when the exact plan's candidate volume has already exploded
     * past the budget — never silently: the routing is deterministic in
-    * the corpus statistics, and `D18AutoProbe` demonstrates both
-    * branches on the committed fixtures.
+    * the corpus statistics, and SCALING.md round 10 ("d18 gets a
+    * chooser") records both branches on the committed fixtures.
     */
   def ngramContainmentPairsAuto(df: DataFrame, idCol: String, textCol: String,
                                 threshold: Double = 0.9, n: Int = 3,
@@ -799,8 +799,8 @@ object Dedup {
     candidates > candidateBudgetPerDoc.toDouble * math.max(1L, candRow.getLong(1))
   }
 
-  /** Package-private chooser predicate — lets the scale probe assert
-    * WHICH branch [[ngramContainmentPairsAuto]] takes; delegates to the
+  /** Package-private chooser predicate — lets the spec assert WHICH
+    * branch [[ngramContainmentPairsAuto]] takes; delegates to the
     * same arithmetic the production chooser runs.
     */
   private[graft] def containmentExceedsBudget(

@@ -912,7 +912,7 @@ object Multimodal {
     * 16-bit form, the code space (2⁶⁴) cannot saturate at any
     * realistic corpus size, so the true pair set — and with it the
     * join output — stays proportional to genuine near-duplicates
-    * (measured linear on the sf1 rehearsal, `MM6ScaleProbe`).
+    * (measured linear on the sf1 rehearsal, SCALING.md round 10).
     */
   def imageNearDups64(assets: DataFrame, maxDist: Int = 2): DataFrame =
     nearDupsFromHashes64(imageAHash64(assets), maxDist)
@@ -1163,7 +1163,7 @@ object Multimodal {
     * 16-bin histogram hash, whose 2¹⁶ code space SATURATES past ~10⁴
     * images: the true hamming-≤2 pair set — the operator's own output
     * — then grows quadratically (measured 101× pairs for 10× data on
-    * the sf1 rehearsal, `MM6ScaleProbe`). No plan shape beats its own
+    * the sf1 rehearsal, SCALING.md round 10). No plan shape beats its own
     * output size, so the saturating hash cannot be the default; the
     * 64-bit code holds discrimination to ~10⁹ images and the measured
     * pair growth is linear. The 16-bin form survives as the explicit

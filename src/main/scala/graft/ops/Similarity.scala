@@ -1114,7 +1114,7 @@ object Similarity {
     * expected bucket load stays ~`targetBucket` regardless of n —
     * candidate volume is ≈ (1 + 2·probes)·n·targetBucket·tables,
     * LINEAR in n where the exact family's true-pair volume is ~n²
-    * (probed 103× pairs for 10× data at the sf10 decade, `D5Sf10Probe`).
+    * (103× pairs for 10× data at the sf10 decade, SCALING.md round 11).
     * No driver-side metadata: per-bucket counts come from a count
     * window, oversized buckets split into ≤`maxBlock` chunks by hashed
     * id (task memory bounded by 2·maxBlock vectors however degenerate

@@ -1,14 +1,18 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.graftshim.GraftShims.{toColumn, toExpression}
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+import graft.anonymise.Anonymiser
 import graft.functions.CosineSimilarity
+import graft.ops.{Dedup, Sampling, TextAnalysis}
 
 /** Session extensions registering the engine's native functions for SQL
   * use. Attach with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * `GraftSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`; DataFrame users
   * can instead call `graft.ops.Similarity.cosine` directly.
   *
@@ -26,60 +30,46 @@ import graft.functions.CosineSimilarity
   *    pseudonym (`anonymise.Anonymiser.pseudonym`);
   *  - `graft_clean_text(text)` — the t21 corpus cleaning chain
   *    (`ops.TextAnalysis.cleanedText`).
+  *
+  * Each `graft_*`/`jaccard` function IS its DataFrame definition,
+  * bridged to Catalyst through `graftshim`, so SQL and DataFrame users
+  * cannot drift apart. Arguments the definition takes as Scala values
+  * (the bucket modulus, the pseudonym salt) must be SQL constants.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  /** Catalyst tree of `Sampling.bucket`: pmod(conv(substr(md5(cast(id
-    * as string)), 1, 15), 16, 10)::long, modulus::long). Composed from
-    * built-in expressions — fully codegen'd, no UDF.
-    */
+  /** `Sampling.bucket`; the modulus must be a constant integer. */
   private[graft] def bucketExpr(id: Expression, modulus: Expression): Expression =
-    Pmod(
-      Cast(
-        Conv(
-          Substring(Md5(Cast(id, StringType)), Literal(1, IntegerType),
-            Literal(15, IntegerType)),
-          Literal(16, IntegerType), Literal(10, IntegerType)),
-        LongType),
-      Cast(modulus, LongType))
+    toExpression(Sampling.bucket(toColumn(id),
+      constant("graft_bucket", "modulus", "INT", modulus) {
+        case n: Int                  => n
+        case n: Long if n.isValidInt => n.toInt
+      }))
 
   private[graft] def jaccardExpr(a: Expression, b: Expression): Expression =
-    Divide(
-      Cast(Size(ArrayIntersect(a, b)), org.apache.spark.sql.types.DoubleType),
-      Cast(Size(ArrayUnion(a, b)), org.apache.spark.sql.types.DoubleType))
+    toExpression(Dedup.jaccard(toColumn(a), toColumn(b)))
 
-  /** Catalyst tree of `TextAnalysis.fingerprint`: md5(lower(trimmed,
-    * whitespace-collapsed text)) — the content identity every dedup
-    * screen keys on, exposed so SQL-frontend users produce the SAME
-    * fingerprints as the DataFrame pipeline (and the DuckDB twin).
-    * Composed from built-ins — fully codegen'd.
-    */
   private[graft] def fingerprintExpr(text: Expression): Expression =
-    Md5(Cast(Lower(RegExpReplace(StringTrim(text), Literal("\\s+"), Literal(" "))),
-      org.apache.spark.sql.types.BinaryType))
+    toExpression(TextAnalysis.fingerprint(toColumn(text)))
 
-  /** Catalyst tree of `Anonymiser.pseudonym`: substr(md5(concat(salt,
-    * cast(key as string))), 1, 16) — SQL users mint the SAME
-    * join-preserving pseudonyms as the DataFrame anonymiser (and the
-    * DuckDB twin). Composed from built-ins — fully codegen'd.
-    */
+  /** `Anonymiser.pseudonym`; the salt must be a constant. */
   private[graft] def pseudonymExpr(key: Expression, salt: Expression): Expression =
-    Substring(
-      Md5(Cast(Concat(Seq(Cast(salt, StringType), Cast(key, StringType))),
-        org.apache.spark.sql.types.BinaryType)),
-      Literal(1, IntegerType), Literal(16, IntegerType))
+    toExpression(Anonymiser.pseudonym(toColumn(key),
+      constant("graft_pseudonym", "salt", "STRING", Cast(salt, StringType)) {
+        case s: UTF8String => s.toString
+      }))
 
-  /** Catalyst tree of `TextAnalysis.cleanedText`: the three-stage
-    * cleaning chain (tag strip, control-char squash, space collapse,
-    * trim) with the same explicit-ASCII-range classes.
-    */
   private[graft] def cleanTextExpr(text: Expression): Expression =
-    StringTrim(
-      RegExpReplace(
-        RegExpReplace(
-          RegExpReplace(text, Literal("<[^>]*>"), Literal(" ")),
-          Literal("[\\x00-\\x1f\\x7f]"), Literal(" ")),
-        Literal(" +"), Literal(" ")))
+    toExpression(TextAnalysis.cleanedText(toColumn(text)))
+
+  /** A SQL argument the DataFrame definition takes as a Scala value: it
+    * must fold to a non-null constant `pick` accepts.
+    */
+  private def constant[T](fn: String, param: String, sqlType: String, e: Expression)(
+      pick: PartialFunction[Any, T]): T =
+    Some(e).filter(_.foldable).map(_.eval()).collect(pick).getOrElse(
+      throw new AnalysisException("NON_FOLDABLE_ARGUMENT",
+        Map("funcName" -> fn, "paramName" -> param, "paramType" -> sqlType)))
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((

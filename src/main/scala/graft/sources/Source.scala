@@ -126,7 +126,7 @@ object ParquetSource {
 
   /** Process-global parquet SCHEMA memo — metadata only, never data or
     * results: every `spark.read.parquet(path)` construction launches a
-    * footer-inference job (~65 ms measured, `SchemaCostProbe`: 50
+    * footer-inference job (~65 ms measured, OPTIMIZATION_r12.md §9: 50
     * inferred reads 3.7 s vs 0.33 s with an explicit schema), and a
     * catalog run constructs hundreds of scans over the same few
     * fixture files. The memo stores the INFERRED schema (field

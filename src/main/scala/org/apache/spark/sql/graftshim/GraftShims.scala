@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Column ↔ Expression bridge.
   *
@@ -14,7 +14,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
   */
 object GraftShims {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
-  def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** Converted eagerly, so the tree also stands where no Dataset
+    * converts it later — e.g. as a SQL function builder's result.
+    */
+  def toExpression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 
   /** True when the session's CacheManager holds no cached plans —
     * `sharedState`/`CacheManager` are `private[sql]`, so the

@@ -51,6 +51,18 @@ class CliSpec extends AnyFunSuite with SparkSuite {
     assert(!dump.contains("AUTOMOBILE"), "anonymised column leaked original values")
   }
 
+  test("graft export on an embedded caller's session leaves its settings alone") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try {
+      val out = Files.createTempFile("graft_cli_conf", ".sql").toString
+      Main.main(Array("export", "-c", config, "-o", out,
+        "--source", "parquet:/root/testdata/sf0.001"))
+      assert(spark.conf.get(key) == "3")
+    } finally spark.conf.set(key, before)
+  }
+
   test("graft export --dry-run plans without writing data") {
     val out = Files.createTempFile("graft_cli_dry", ".sql").toString
     Main.main(Array("export", "-c", config, "-o", out, "--dry-run",

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.StringWriter
 import graft.dialect._
+import graft.analyse.TableMeta
 import graft.export.{DumpWriter, ExportPipeline}
 import graft.sources.ParquetSource
 
@@ -75,12 +76,15 @@ class DumpWriterSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("small custom batch size re-batches correctly") {
+    import spark.implicits._
     val out = new StringWriter()
     val w = new DumpWriter(out, SqliteDialect, batchSize = 3)
-    val rows = (1 to 10).map(i =>
-      org.apache.spark.sql.Row(i, s"name$i"))
-    w.writeBatchInsert("t", Seq("id", "name"), rows.take(3))
-    w.writeBatchInsert("t", Seq("id", "name"), rows.slice(3, 6))
+    val df = (1 to 6).map(i => (i, s"name$i")).toDF("id", "name")
+    val tuples = DumpWriter.renderTuples(df, SqliteDialect).collect()
+    // a partition boundary inside the first batch: batching continues
+    // across it
+    w.exportTableParts(TableMeta("t", "CREATE TABLE t (id INTEGER, name TEXT);", Seq.empty,
+      () => 6L), Seq("id", "name"), Iterator(tuples.take(2), tuples.drop(2)))
     w.flush()
     val text = out.toString
     assert(text.linesIterator.count(_.startsWith("INSERT INTO")) == 2)

@@ -191,6 +191,25 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
     assert(sqlClean == Seq("Hi there world", "a a", ""))
   }
 
+  test("graft_bucket and graft_pseudonym reject a non-constant modulus or salt") {
+    import spark.implicits._
+    val ext = new graft.plans.GraftExtensions()
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_bucket", exprs => ext.bucketExpr(exprs(0), exprs(1)), "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_pseudonym", exprs => ext.pseudonymExpr(exprs(0), exprs(1)), "scala_udf")
+    (1 to 5).map(i => (i, s"s$i")).toDF("id", "salt").createOrReplaceTempView("args_test")
+    for (q <- Seq("SELECT graft_bucket(id, id) FROM args_test",
+                  "SELECT graft_bucket(id, NULL) FROM args_test",
+                  "SELECT graft_pseudonym(id, salt) FROM args_test")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+      assert(e.getCondition == "NON_FOLDABLE_ARGUMENT", q)
+    }
+    // a constant expression folds: same buckets as the literal
+    assert(spark.sql("SELECT graft_bucket(id, 10 * 100) = graft_bucket(id, 1000) FROM args_test")
+      .collect().forall(_.getBoolean(0)))
+  }
+
   test("TopKByWeightAgg equals sort-then-slice semantics across partitionings") {
     import spark.implicits._
     // group sizes 0..8 (below, at, and above k=3), weights with ties so

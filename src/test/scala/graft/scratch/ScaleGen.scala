@@ -1,6 +1,6 @@
 package graft.scratch
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Shared scratch-fixture generator for the scaling rehearsals
@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * query quadratically — the sweep would time the fixture's
   * duplication artifact, not the engine. A real 100× corpus is 100×
   * of *distinct* content; duplicated-content behaviour is a data
-  * property already probed separately (D4ScaleProbe, MM6ScaleProbe).
+  * property already measured separately (SCALING.md: the d4 root cause
+  * and the round-10 mm6 section).
   *
   * Each per-copy transform is a bijection applied uniformly within a
   * copy, so IN-COPY pair structure (shingle equality, pairwise cosine,
@@ -107,14 +108,7 @@ object ScaleGen {
 
   def run(out: String, copies: Int, outPartitions: Int, tagLen: Int = 2): Unit = {
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.get()
     val OFF = 1000000000L
 
     def replicate(name: String, keyCols: Seq[String],
