@@ -293,7 +293,7 @@ object GraftQueries {
       try {
         val dw = new DumpWriter(w, MySqlDialect, timestamp = () => "1970-01-01T00:00:00Z")
         dw.writeHeader()
-        dw.exportTable(src.tableMeta("orders"), Some(src.read("orders")))
+        dw.exportTables(Seq(src.tableMeta("orders") -> Some(src.read("orders"))))
         dw.writeFooter()
       } finally w.close()
       new java.io.FileOutputStream(marker).close()

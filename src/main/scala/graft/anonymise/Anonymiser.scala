@@ -20,25 +20,12 @@ import graft.config._
   * `column:value` — the table name is NOT part of the key, so
   * `users.email` and `orders.email` share mappings. The reference holds
   * this map in driver memory (its one scalability hazard, SURVEY.md §4);
-  * we get the same observable contract with zero state via seeded
-  * deterministic generation, or with a distinct→broadcast-join pipeline —
-  * both scale-out correct.
+  * we get the same observable contract with zero state: each fake is
+  * generated from a seed hashed from `column:value` (`seedCol`) — a
+  * stateless, shuffle-free, narrow per-row transform, consistent across
+  * tables, executors and runs by construction.
   */
 object Anonymiser {
-
-  /** Strategy for the consistency map (O11). */
-  sealed trait Consistency
-  /** fake = gen(hash64(column ":" value)) — stateless, shuffle-free,
-    * consistent across tables/executors/runs by construction. The 100 TB
-    * path: a narrow, codegen-friendly per-row transform.
-    */
-  case object SeededDeterministic extends Consistency
-  /** distinct values → generate fake per distinct → broadcast-join back.
-    * Reproduces the reference's "one fake per distinct original" shape as
-    * a distributed plan; same output as SeededDeterministic (the fake for
-    * a distinct value uses the same seeded generator).
-    */
-  case object BroadcastMap extends Consistency
 
   /** Consistent keyed pseudonym for an identifier column: the seeded-
     * deterministic o11 consistency recipe specialised to KEYS, where
@@ -192,8 +179,8 @@ object Anonymiser {
     case FakerRule(fn)  => fakerUdf(fn)(seedCol(columnName, col(columnName)))
   }
 
-  /** Apply a table's configured rules to a DataFrame (SeededDeterministic). */
-  def anonymise(df: DataFrame, tableConfig: TableConfig): DataFrame = {
+  /** Apply a table's configured rules to a DataFrame. */
+  def apply(df: DataFrame, tableConfig: TableConfig): DataFrame = {
     val present = df.schema.fields.map(f => f.name -> f.dataType).toMap
     tableConfig.columns.foldLeft(df) { case (acc, (name, rule)) =>
       present.get(name) match {
@@ -201,37 +188,6 @@ object Anonymiser {
         case Some(dt) => acc.withColumn(name, compileRule(name, dt, rule))
       }
     }
-  }
-
-  /** BroadcastMap variant: distinct originals → fake mapping → broadcast
-    * join. Only faker rules need the mapping; null/static rules are plain
-    * projections either way.
-    */
-  def anonymiseViaBroadcastMap(df: DataFrame, tableConfig: TableConfig): DataFrame = {
-    val present = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    tableConfig.columns.foldLeft(df) { case (acc, (name, rule)) =>
-      (present.get(name), rule) match {
-        case (None, _) => acc
-        case (Some(dt), NullRule | StaticRule(_)) =>
-          acc.withColumn(name, compileRule(name, dt, rule))
-        case (Some(_), FakerRule(fn)) =>
-          val mapping = df.select(col(name).as("__orig")).distinct()
-            .withColumn("__fake", fakerUdf(fn)(seedCol(name, col("__orig"))))
-          acc.join(broadcast(mapping), acc(name) <=> mapping("__orig"), "left")
-            .drop(name).drop("__orig")
-            .withColumnRenamed("__fake", name)
-            // drop+rename appends the column — restore the original order
-            // so both strategies produce schema-identical output (the
-            // dump writer renders columns positionally)
-            .select(acc.columns.map(col).toSeq: _*)
-      }
-    }
-  }
-
-  def apply(df: DataFrame, tableConfig: TableConfig,
-            strategy: Consistency = SeededDeterministic): DataFrame = strategy match {
-    case SeededDeterministic => anonymise(df, tableConfig)
-    case BroadcastMap        => anonymiseViaBroadcastMap(df, tableConfig)
   }
 
   /** Validation warnings for unknown faker functions (anonymiser.go:167-189). */

@@ -2,6 +2,7 @@ package graft.dialect
 
 import java.time.format.DateTimeFormatter
 import java.time.ZoneOffset
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 
 /** Value → SQL-literal codec, mirroring the reference's `formatValue` /
   * `escapeString` exactly (golden-tested against the reference's vectors).
@@ -99,7 +100,10 @@ object SqlValueCodec {
     case f: Float                 => formatFloat(f)
     case b: Array[Byte]           => formatBinary(b)
     case s: String                => escapeString(s)
-    case t: java.sql.Timestamp    => escapeString(formatInstant(t.toInstant))
+    // Spark's java.sql conversion rebases a timestamp before 1582 onto
+    // the Julian calendar; undo it, or `t.toInstant` is days off
+    case t: java.sql.Timestamp    => escapeString(formatInstant(
+      DateTimeUtils.microsToInstant(DateTimeUtils.fromJavaTimestamp(t))))
     case t: java.time.Instant     => escapeString(formatInstant(t))
     case t: java.time.LocalDateTime => // TIMESTAMP_NTZ external type
       escapeString(formatInstant(t.toInstant(ZoneOffset.UTC)))

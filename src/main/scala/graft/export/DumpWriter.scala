@@ -1,7 +1,11 @@
 package graft.export
 
 import java.io.{BufferedWriter, Writer}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import org.apache.spark.FutureAction
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import graft.dialect.{Dialect, SqlValueCodec}
 import graft.analyse.TableMeta
 
@@ -20,6 +24,11 @@ import graft.analyse.TableMeta
   * overlaps the current partition's sequential IO (guide §2.6 — the
   * plain toLocalIterator drain ran each partition as its own one-task
   * job only AFTER the previous partition was fully written).
+  *
+  * The companion owns the dump format — [[DumpWriter.renderTuple]] and
+  * [[DumpWriter.InsertWriter]] — and the parallel sink
+  * (`sources.SqlDumpSource`) writes through the same two, so both sinks
+  * emit the same bytes by construction.
   */
 final case class DumpStats(
     var tablesExported: Long = 0,
@@ -45,72 +54,39 @@ class DumpWriter(
     w.flush()
   }
 
-  /** Table section header: comment + DROP + CREATE (exporter.go:165-189). */
-  private def writeTableDdl(meta: TableMeta): Unit = {
-    w.write(s"\n--\n-- Table: ${meta.name}\n--\n\n")
-    w.write(dialect.dropTableStatement(meta.name) + "\n\n")
-    w.write(meta.createStmt + "\n\n")
-    stats.tablesExported += 1
-  }
-
-  /** Export one table: DDL always; data unless truncated. `data` must
-    * already have retain + anonymisation applied. Single-table callers
-    * get the same one-ahead prefetch the pipeline uses.
+  /** Export `tables` in the given (FK) order: each gets its comment +
+    * DROP + CREATE (exporter.go:165-189), then its rows as batched
+    * INSERTs, or none when its data is `None` (truncate,
+    * exporter.go:191-197). Data must already have retain +
+    * anonymisation applied. Every table's partitions drain through ONE
+    * [[TuplePrefetcher]], so the next partition's job runs while the
+    * current one is written — across table boundaries too — and INSERT
+    * batches run on across partition boundaries. If the writer or a
+    * render job throws, the job in flight is cancelled.
     */
-  def exportTable(meta: TableMeta, data: Option[DataFrame]): Unit =
-    data match {
-      case None =>
-        writeTableDdl(meta)
-        stats.tablesTruncated += 1 // truncate: schema only (exporter.go:191-197)
-      case Some(df) =>
-        val rendered = DumpWriter.renderTuples(df, dialect)
-        val fetcher = new TuplePrefetcher(Seq(rendered.rdd))
-        exportTableParts(meta, df.schema.fieldNames.toSeq, fetcher.parts(0))
+  def exportTables(tables: Seq[(TableMeta, Option[DataFrame])]): Unit = {
+    val rendered = tables.map { case (meta, data) =>
+      meta -> data.map(df => (df.columns.toSeq, DumpWriter.renderTuples(df, dialect).rdd))
     }
-
-  /** Export one table's data section from pre-rendered tuple texts
-    * arriving one partition array at a time (in partition order).
-    * Batching is continuous across partition boundaries, so the INSERT
-    * framing is byte-identical to draining a single row iterator.
-    */
-  def exportTableParts(meta: TableMeta, columnNames: Seq[String],
-                       parts: Iterator[Array[String]]): Unit = {
-    writeTableDdl(meta)
-    val batch = new scala.collection.mutable.ArrayBuffer[String](batchSize)
-    for (part <- parts) {
-      var i = 0
-      while (i < part.length) {
-        batch += part(i)
-        if (batch.length >= batchSize) {
-          writeRenderedInsert(meta.name, columnNames, batch)
-          batch.clear()
-        }
-        i += 1
+    val fetcher = new TuplePrefetcher(rendered.flatMap(_._2).map(_._2))
+    try for ((meta, data) <- rendered) {
+      w.write(s"\n--\n-- Table: ${meta.name}\n--\n\n")
+      w.write(dialect.dropTableStatement(meta.name) + "\n\n")
+      w.write(meta.createStmt + "\n\n")
+      stats.tablesExported += 1
+      data match {
+        case None => stats.tablesTruncated += 1
+        case Some((columns, rdd)) =>
+          val inserts = new DumpWriter.InsertWriter(w, dialect, meta.name, columns, batchSize)
+          for (_ <- rdd.partitions.indices) {
+            val part = fetcher.next()
+            part.foreach(inserts.write)
+            stats.rowsExported += part.length
+          }
+          inserts.close()
       }
-    }
-    if (batch.nonEmpty) writeRenderedInsert(meta.name, columnNames, batch)
+    } finally fetcher.close()
   }
-
-  /** Multi-row INSERT from pre-rendered tuple texts (exporter.go:274-309). */
-  private def writeRenderedInsert(table: String, columnNames: Seq[String],
-                                  tuples: scala.collection.Seq[String]): Unit = {
-    if (tuples.isEmpty) return
-    w.write(insertPrefix(table, columnNames))
-    var first = true
-    for (t <- tuples) {
-      if (!first) w.write(",\n")
-      first = false
-      w.write(t)
-    }
-    w.write(";\n")
-    stats.rowsExported += tuples.length
-  }
-
-  private def insertPrefix(table: String, columnNames: Seq[String]): String =
-    "INSERT INTO " + dialect.quoteIdentifier(table) + " (" +
-      columnNames.map(dialect.quoteIdentifier).mkString(", ") + ") VALUES\n"
-
-  def flush(): Unit = w.flush()
 }
 
 object DumpWriter {
@@ -120,83 +96,88 @@ object DumpWriter {
   /** Value → literal: the codec, except binary routes through the
     * dialect (PostgreSQL needs bytea hex-input, not the X'…' form).
     */
-  def literal(v: Any, dialect: Dialect): String = v match {
+  private def literal(v: Any, dialect: Dialect): String = v match {
     case b: Array[Byte] => dialect.binaryLiteral(b)
     case other          => SqlValueCodec.formatValue(other)
   }
 
-  /** Render each row's "(v1, v2, …)" tuple text ON THE EXECUTORS — the
-    * literal codec is the per-row CPU cost, and pre-rendering keeps the
-    * driver tail to pure sequential IO. The narrow map preserves row
-    * order, so draining partitions in order reproduces the input order.
+  /** A row's "(v1, v2, …)" tuple text (exporter.go:274-309). */
+  def renderTuple(row: Row, dialect: Dialect): String = {
+    val sb = new java.lang.StringBuilder(64)
+    sb.append('(')
+    var i = 0
+    while (i < row.length) {
+      if (i > 0) sb.append(", ")
+      sb.append(literal(row.get(i), dialect))
+      i += 1
+    }
+    sb.append(')').toString
+  }
+
+  /** Render each row's tuple text ON THE EXECUTORS — the literal codec
+    * is the per-row CPU cost, and pre-rendering keeps the driver tail to
+    * pure sequential IO. The narrow map preserves row order, so draining
+    * partitions in order reproduces the input order.
     */
   def renderTuples(df: DataFrame, dialect: Dialect): Dataset[String] = {
-    val ncols = df.schema.length
     val d = dialect // stable local for the closure
-    df.mapPartitions { rows =>
-      rows.map { row =>
-        val sb = new java.lang.StringBuilder(64)
-        sb.append('(')
-        var i = 0
-        while (i < ncols) {
-          if (i > 0) sb.append(", ")
-          sb.append(DumpWriter.literal(row.get(i), d))
-          i += 1
-        }
-        sb.append(')')
-        sb.toString
-      }
-    }(Encoders.STRING)
+    df.mapPartitions(_.map(renderTuple(_, d)))(Encoders.STRING)
+  }
+
+  /** Streaming multi-row INSERT writer (exporter.go:233-239, 274-309):
+    * the statement head before a batch's first tuple, `,\n` between
+    * tuples, `;\n` after every `batchSize`-th tuple and on close.
+    */
+  final class InsertWriter(w: Writer, dialect: Dialect, table: String,
+                           columns: Seq[String], batchSize: Int) {
+    private val head = "INSERT INTO " + dialect.quoteIdentifier(table) + " (" +
+      columns.map(dialect.quoteIdentifier).mkString(", ") + ") VALUES\n"
+    private var inBatch = 0
+
+    def write(tuple: String): Unit = {
+      w.write(if (inBatch == 0) head else ",\n")
+      w.write(tuple)
+      inBatch += 1
+      if (inBatch == batchSize) close()
+    }
+
+    def close(): Unit = if (inBatch > 0) {
+      w.write(";\n")
+      inBatch = 0
+    }
   }
 }
 
-/** One-partition-ahead prefetcher over an ordered sequence of rendered
-  * tuple RDDs (one per exported table). next() hands the writer the
-  * current partition and immediately submits the FOLLOWING partition's
-  * job — across table boundaries — so the cluster computes partition
-  * k+1 while the driver writes partition k. Driver memory is bounded at
-  * two partition arrays (current + in flight), the same order of bound
-  * as the plain toLocalIterator drain's one.
-  *
-  * Tables must be consumed fully and in sequence (the export loop's
-  * natural order); out-of-order consumption fails fast rather than
-  * silently interleaving output.
+/** One-partition-ahead prefetcher over the (table, partition) slots of
+  * the rendered tuple RDDs, consumed in order. next() waits for the
+  * current slot's job and immediately submits the FOLLOWING slot's —
+  * across table boundaries — so the cluster computes partition k+1
+  * while the driver writes partition k. Driver memory is bounded at two
+  * partition arrays (current + in flight), the same order of bound as
+  * the plain toLocalIterator drain's one. close() cancels the job in
+  * flight, so a failed export leaves no job running behind it.
   */
-private[export] final class TuplePrefetcher(
-    rdds: Seq[org.apache.spark.rdd.RDD[String]]) {
-  import scala.concurrent.Await
-  import scala.concurrent.duration.Duration
+private[export] final class TuplePrefetcher(rdds: Seq[RDD[String]]) {
+  private val slots = rdds.iterator.flatMap(r => r.partitions.indices.map(p => (r, p)))
+  private var inFlight: Option[FutureAction[Array[String]]] = None
 
-  /** Global (table, partition) slot order. */
-  private val slots: IndexedSeq[(Int, Int)] = rdds.zipWithIndex.flatMap {
-    case (r, t) => (0 until r.getNumPartitions).map(p => (t, p))
-  }.toIndexedSeq
-  private var cursor = 0
-  private var inFlight: Option[org.apache.spark.FutureAction[Array[String]]] = None
+  private def submitNext(): Unit =
+    inFlight = if (!slots.hasNext) None else {
+      val (rdd, p) = slots.next()
+      val holder = new Array[Array[String]](1)
+      Some(rdd.sparkContext.submitJob[String, Array[String], Array[String]](
+        rdd, _.toArray, Seq(p), (_, a) => holder(0) = a, holder(0)))
+    }
 
-  private def submit(slotIdx: Int): Unit = {
-    val (t, p) = slots(slotIdx)
-    val rdd = rdds(t)
-    val holder = new Array[Array[String]](1)
-    inFlight = Some(rdd.sparkContext.submitJob[String, Array[String], Array[String]](
-      rdd, _.toArray, Seq(p), (_, a) => holder(0) = a, holder(0)))
+  def next(): Array[String] = {
+    if (inFlight.isEmpty) submitNext() // cold start
+    val part = Await.result(inFlight.get, Duration.Inf)
+    submitNext()
+    part
   }
 
-  /** Partition arrays of table `t`, in partition order. */
-  def parts(t: Int): Iterator[Array[String]] = new Iterator[Array[String]] {
-    private val begin = slots.indexWhere(_._1 == t)
-    private val end = slots.lastIndexWhere(_._1 == t) + 1 // 0 slots → begin = -1, end = 0
-    private var next_ = math.max(begin, 0)
-    override def hasNext: Boolean = begin >= 0 && next_ < end
-    override def next(): Array[String] = {
-      require(next_ == cursor,
-        s"TuplePrefetcher consumed out of order: slot ${next_} vs cursor $cursor")
-      if (inFlight.isEmpty) submit(cursor) // cold start (first table, or after a skip-less begin)
-      val arr = Await.result(inFlight.get, Duration.Inf)
-      cursor += 1
-      next_ += 1
-      if (cursor < slots.size) submit(cursor) else inFlight = None
-      arr
-    }
+  def close(): Unit = {
+    inFlight.foreach(_.cancel())
+    inFlight = None
   }
 }

@@ -1,7 +1,6 @@
 package graft.export
 
 import java.io.Writer
-import org.apache.spark.sql.DataFrame
 import graft.analyse.{TableMeta, Topo}
 import graft.anonymise.Anonymiser
 import graft.config.{GraftConfig, RetainAfter, RetainAll, RetainCount, TableConfig}
@@ -44,40 +43,25 @@ object ExportPipeline {
     }
   }
 
-  /** Step 6: execute the plan into a dump writer. Every table's
-    * scan/retain/anonymise/render chain is declared up front and drained
-    * through ONE cross-table prefetcher, so the next partition's
-    * distributed compute always overlaps the driver's sequential write
-    * of the current one — including across table boundaries (the
-    * per-table drain otherwise idles the cluster while the driver
-    * writes a table's tail, guide §2.6).
+  /** Step 6: execute the plan into a dump writer: the header, every
+    * table's scan/retain/anonymise chain drained in plan order by
+    * [[DumpWriter.exportTables]] (one partition job in flight ahead of
+    * the write, across table boundaries, guide §2.6), the footer.
     */
   def run(source: Source, cfg: GraftConfig, dialect: Dialect, out: Writer,
           batchSize: Int = DumpWriter.DefaultBatchSize,
-          strategy: Anonymiser.Consistency = Anonymiser.SeededDeterministic,
           timestamp: () => String = () => java.time.OffsetDateTime.now.toString): DumpStats = {
     val writer = new DumpWriter(out, dialect, batchSize, timestamp)
     writer.writeHeader()
-    val planned = plan(source, cfg).map { p =>
-      val data: Option[DataFrame] =
+    writer.exportTables(plan(source, cfg).map { p =>
+      val data =
         if (p.config.exists(_.truncate)) None
         else {
           val retained = source.scan(p.meta.name, p.config.map(_.retain).getOrElse(RetainAll))
-          Some(p.config.map(tc => Anonymiser(retained, tc, strategy)).getOrElse(retained))
+          Some(p.config.map(Anonymiser(retained, _)).getOrElse(retained))
         }
-      (p, data)
-    }
-    val rendered = planned.collect {
-      case (_, Some(df)) => DumpWriter.renderTuples(df, dialect).rdd
-    }
-    val fetcher = new TuplePrefetcher(rendered)
-    var t = 0
-    for ((p, data) <- planned) data match {
-      case None => writer.exportTable(p.meta, None)
-      case Some(df) =>
-        writer.exportTableParts(p.meta, df.schema.fieldNames.toSeq, fetcher.parts(t))
-        t += 1
-    }
+      p.meta -> data
+    })
     writer.writeFooter()
     writer.stats
   }

@@ -1,5 +1,6 @@
 package graft.export
 
+import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.analyse.{ForeignKey, Topo}
@@ -43,48 +44,68 @@ object Subset {
               anchor: String, anchorFilter: Column): Map[String, DataFrame] = {
     require(tables.contains(anchor), s"closure: unknown anchor $anchor")
     val order = Topo.sortTablesByDependency(tables.keys.toSeq.sorted, fks)
-    val kept = scala.collection.mutable.Map(tables.toSeq: _*)
-    var restricted = Set(anchor)
+    val kept = mutable.Map(tables.toSeq: _*)
     // every restricted frame persists (graft.ops.OpCaches scope): each
     // is reused by later sweeps AND by the per-edge orphan audit — left
     // lazy, a single o29-style audit re-derives the whole closure chain
     // once per count (measured 12.9s -> ~2s on the sf0.1 audit)
     kept(anchor) = graft.ops.OpCaches.persist(tables(anchor).filter(anchorFilter))
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < tables.size + 1) {
-      changed = false
-      rounds += 1
-      // DOWN: parents first, so one sweep propagates transitively
-      for (t <- order if !restricted(t)) {
-        val parentEdges = fks.filter(f =>
-          f.table == t && f.referencedTable != t && restricted(f.referencedTable))
-        if (parentEdges.nonEmpty) {
-          kept(t) = graft.ops.OpCaches.persist(
-            parentEdges.foldLeft(kept(t)) { (df, f) =>
-              df.join(kept(f.referencedTable).select(col(f.referencedColumn).as("__pk")),
-                df(f.column) === col("__pk"), "left_semi")
-            })
-          restricted += t
-          changed = true
-        }
-      }
+    untilStable(tables.size, Set(anchor)) { before =>
+      val restricted = down(order, fks, kept, before)
       // UP: children first, so a dimension sees final restricted children
-      for (t <- order.reverse if !restricted(t)) {
+      order.reverse.filterNot(restricted).foldLeft(restricted) { (r, t) =>
         val childEdges = fks.filter(f =>
-          f.referencedTable == t && f.table != t && restricted(f.table))
-        if (childEdges.nonEmpty) {
+          f.referencedTable == t && f.table != t && r(f.table))
+        if (childEdges.isEmpty) r
+        else {
           val refCol = childEdges.head.referencedColumn
           val refs = childEdges.map(f => kept(f.table).select(col(f.column).as("__k")))
             .reduce(_ unionAll _).distinct()
           kept(t) = graft.ops.OpCaches.persist(
             kept(t).join(refs, col(refCol) === col("__k"), "left_semi"))
-          restricted += t
-          changed = true
+          r + t
         }
       }
     }
     kept.toMap
+  }
+
+  /** DOWN sweep, parents first so one sweep propagates transitively: an
+    * untouched table with an FK onto a `restricted` one keeps only the
+    * rows whose parent survived in `kept`. Returns `restricted` plus
+    * the tables it restricted.
+    */
+  private def down(order: Seq[String], fks: Seq[ForeignKey],
+                   kept: mutable.Map[String, DataFrame],
+                   restricted: Set[String]): Set[String] =
+    order.filterNot(restricted).foldLeft(restricted) { (r, t) =>
+      val parentEdges = fks.filter(f =>
+        f.table == t && f.referencedTable != t && r(f.referencedTable))
+      if (parentEdges.isEmpty) r
+      else {
+        kept(t) = graft.ops.OpCaches.persist(
+          parentEdges.foldLeft(kept(t)) { (df, f) =>
+            df.join(kept(f.referencedTable).select(col(f.referencedColumn).as("__pk")),
+              df(f.column) === col("__pk"), "left_semi")
+          })
+        r + t
+      }
+    }
+
+  /** Repeat `sweep` from `start` until the restricted set stops growing,
+    * at most `tables + 1` rounds (a DAG settles within #tables).
+    */
+  private def untilStable(tables: Int, start: Set[String])(
+      sweep: Set[String] => Set[String]): Unit = {
+    var restricted = start
+    var changed = true
+    var rounds = 0
+    while (changed && rounds < tables + 1) {
+      rounds += 1
+      val next = sweep(restricted)
+      changed = next.size > restricted.size
+      restricted = next
+    }
   }
 
   /** GDPR erasure cascade — the subsetting machinery INVERTED: given
@@ -104,28 +125,9 @@ object Subset {
                    root: String, victimFilter: Column): Map[String, DataFrame] = {
     require(tables.contains(root), s"eraseCascade: unknown root $root")
     val order = Topo.sortTablesByDependency(tables.keys.toSeq.sorted, fks)
-    val kept = scala.collection.mutable.Map(tables.toSeq: _*)
-    var touched = Set(root)
+    val kept = mutable.Map(tables.toSeq: _*)
     kept(root) = graft.ops.OpCaches.persist(tables(root).filter(!victimFilter))
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < tables.size + 1) {
-      changed = false
-      rounds += 1
-      for (t <- order if !touched(t)) {
-        val parentEdges = fks.filter(f =>
-          f.table == t && f.referencedTable != t && touched(f.referencedTable))
-        if (parentEdges.nonEmpty) {
-          kept(t) = graft.ops.OpCaches.persist(
-            parentEdges.foldLeft(kept(t)) { (df, f) =>
-              df.join(kept(f.referencedTable).select(col(f.referencedColumn).as("__pk")),
-                df(f.column) === col("__pk"), "left_semi")
-            })
-          touched += t
-          changed = true
-        }
-      }
-    }
+    untilStable(tables.size, Set(root))(down(order, fks, kept, _))
     kept.toMap
   }
 

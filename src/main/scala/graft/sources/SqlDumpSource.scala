@@ -8,7 +8,8 @@ import java.util
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -18,6 +19,8 @@ import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterT
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.export.DumpWriter
 
 /** DataSourceV2 batch READER for the engine's own SQL-dump format
   * (`export.DumpWriter` / reference exporter.go) — the round-trip half
@@ -278,10 +281,19 @@ private[sources] class SqlDumpTable(tableSchema: StructType, paths: Seq[String],
     require(paths.size == 1,
       s"sqldump: writing requires exactly one target directory, got ${paths.size}")
     val batch = Option(info.options.get("insertBatchSize"))
-      .map(_.toInt).getOrElse(graft.export.DumpWriter.DefaultBatchSize)
+      .map(_.toInt).getOrElse(DumpWriter.DefaultBatchSize)
     val dialect = graft.dialect.Dialect.forName(
       Option(info.options.get("dialect")).getOrElse("mysql"))
     val tbl = table.getOrElse("export")
+    info.schema().fields.foreach { f =>
+      f.dataType match {
+        case StringType | LongType | IntegerType | ShortType | ByteType | BooleanType |
+             DoubleType | FloatType | _: DecimalType | TimestampType | TimestampNTZType |
+             DateType | BinaryType =>
+        case other => throw new IllegalArgumentException(
+          s"sqldump: cannot write column ${f.name} of type ${other.sql}")
+      }
+    }
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
@@ -295,15 +307,20 @@ private[sources] class SqlDumpTable(tableSchema: StructType, paths: Seq[String],
 /** Parallel SQL-dump SINK — the 100 TB counterpart of the single
   * ordered-file `export.DumpWriter`: every input partition renders its
   * own `part-NNNNN.sql` of batched INSERT statements (executor-side,
-  * no driver funnel), the driver writes one `00_schema.sql` carrying
-  * the CREATE TABLE (named to sort first so the reader's schema
-  * inference finds it), and commit is rename-based two-phase — each
-  * task writes `.inprogress`, the job commit renames all parts and
-  * drops a `_SUCCESS` marker, task/job abort deletes temps. The same
-  * dump directory reads straight back through the scan side (each
-  * part file splits independently). Local-FS renames here; the
-  * protocol is exactly Hadoop's v1 committer shape, so a cluster port
-  * is a FileSystem-API swap, not a redesign.
+  * no driver funnel) through the ordered dump's own format —
+  * `DumpWriter.renderTuple` per row, `DumpWriter.InsertWriter` per
+  * file — so both sinks write the same tuples and statements by
+  * construction. Column types are checked when the write is planned:
+  * anything the codec cannot render (array, map, struct, …) is
+  * rejected there, naming the column. The driver writes one
+  * `00_schema.sql` carrying the CREATE TABLE (named to sort first so
+  * the reader's schema inference finds it), and commit is rename-based
+  * two-phase — each task writes `.inprogress`, the job commit renames
+  * all parts and drops a `_SUCCESS` marker, task/job abort deletes
+  * temps. The same dump directory reads straight back through the scan
+  * side (each part file splits independently). Local-FS renames here;
+  * the protocol is exactly Hadoop's v1 committer shape, so a cluster
+  * port is a FileSystem-API swap, not a redesign.
   */
 private[sources] class SqlDumpBatchWrite(dir: String, table: String,
                                          schema: StructType,
@@ -370,63 +387,17 @@ private[sources] final class SqlDumpDataWriter(
   // colliding; only the committed attempt's rename lands
   private val tmpFile = new File(dir, f".part-$queryId-$partitionId%05d-$taskId.sql.inprogress")
   private val out = new java.io.BufferedWriter(
-    new OutputStreamWriter(new FileOutputStream(tmpFile), UTF_8), 64 * 1024)
+    new OutputStreamWriter(new FileOutputStream(tmpFile), UTF_8), DumpWriter.WriterBufferBytes)
 
-  private val insertPrefix = "INSERT INTO " + dialect.quoteIdentifier(table) + " (" +
-    schema.fieldNames.map(dialect.quoteIdentifier).mkString(", ") + ") VALUES\n"
-  private var inBatch = 0
+  private val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+  private val inserts = new DumpWriter.InsertWriter(out, dialect, table,
+    schema.fieldNames.toSeq, batchSize)
 
-  override def write(row: InternalRow): Unit = {
-    if (inBatch == 0) out.write(insertPrefix) else out.write(",\n")
-    val sb = new java.lang.StringBuilder(64)
-    sb.append('(')
-    var i = 0
-    while (i < schema.length) {
-      if (i > 0) sb.append(", ")
-      sb.append(literal(row, i))
-      i += 1
-    }
-    sb.append(')')
-    out.write(sb.toString)
-    inBatch += 1
-    if (inBatch >= batchSize) { out.write(";\n"); inBatch = 0 }
-  }
-
-  /** Render field `i` as a SQL literal — `SqlValueCodec.formatValue`
-    * semantics lifted to Catalyst internal representations (UTF8String,
-    * micros, epoch days, Decimal), so the parallel sink and the serial
-    * DumpWriter emit byte-identical literals.
-    */
-  private def literal(row: InternalRow, i: Int): String = {
-    import graft.dialect.SqlValueCodec.escapeString
-    if (row.isNullAt(i)) "NULL"
-    else schema.fields(i).dataType match {
-      case StringType    => escapeString(row.getUTF8String(i).toString)
-      case LongType      => row.getLong(i).toString
-      case IntegerType   => row.getInt(i).toString
-      case ShortType     => row.getShort(i).toString
-      case ByteType      => row.getByte(i).toString
-      case BooleanType   => if (row.getBoolean(i)) "1" else "0"
-      case DoubleType    => graft.dialect.SqlValueCodec.formatValue(row.getDouble(i))
-      case FloatType     => graft.dialect.SqlValueCodec.formatValue(row.getFloat(i))
-      case d: DecimalType =>
-        row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString
-      case TimestampType | TimestampNTZType =>
-        val micros = row.getLong(i)
-        escapeString(graft.dialect.SqlValueCodec.formatInstant(
-          java.time.Instant.ofEpochSecond(
-            Math.floorDiv(micros, 1000000L),
-            Math.floorMod(micros, 1000000L) * 1000L)))
-      case DateType =>
-        escapeString(LocalDate.ofEpochDay(row.getInt(i).toLong).toString + " 00:00:00")
-      case BinaryType    => dialect.binaryLiteral(row.getBinary(i))
-      case other =>
-        throw new IllegalArgumentException(s"sqldump: cannot render $other")
-    }
-  }
+  override def write(row: InternalRow): Unit =
+    inserts.write(DumpWriter.renderTuple(toRow(row).asInstanceOf[Row], dialect))
 
   override def commit(): WriterCommitMessage = {
-    if (inBatch > 0) { out.write(";\n"); inBatch = 0 }
+    inserts.close()
     out.close()
     SqlDumpCommit(tmpFile.getPath, finalFile.getPath)
   }

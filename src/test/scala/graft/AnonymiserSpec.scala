@@ -53,19 +53,6 @@ class AnonymiserSpec extends AnyFunSuite with SparkSuite {
     assert(b.except(a).count() == 0)
   }
 
-  test("BroadcastMap strategy ≡ SeededDeterministic strategy") {
-    val tc = TableConfig(columns = Map("c_name" -> FakerRule("name")))
-    val viaSeed = Anonymiser(customer, tc, Anonymiser.SeededDeterministic)
-      .select("c_custkey", "c_name")
-    val viaMap = Anonymiser(customer, tc, Anonymiser.BroadcastMap)
-      .select("c_custkey", "c_name")
-    assert(viaSeed.except(viaMap).count() == 0)
-    assert(viaMap.except(viaSeed).count() == 0)
-    // schema-identical too: the dump writer renders positionally
-    assert(Anonymiser(customer, tc, Anonymiser.BroadcastMap).columns.toSeq ==
-      customer.columns.toSeq)
-  }
-
   test("unknown faker function → empty string (faker.go:45-52)") {
     val out = Anonymiser(customer, TableConfig(columns = Map("c_name" -> FakerRule("bogus"))))
     assert(out.filter(col("c_name") =!= "").count() == 0)

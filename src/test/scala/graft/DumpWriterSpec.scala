@@ -2,15 +2,21 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.StringWriter
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, concat, lit, udf}
 import graft.dialect._
-import graft.analyse.TableMeta
-import graft.export.{DumpWriter, ExportPipeline}
-import graft.sources.ParquetSource
+import graft.analyse.{ColumnInfo, ForeignKey, TableMeta}
+import graft.config.{Connection, GraftConfig, TableConfig}
+import graft.export.{DumpStats, DumpWriter, ExportPipeline}
+import graft.sources.{ParquetSource, Source}
 
 /** Dump framing contracts ported from the reference's exporter tests
   * (/root/reference/internal/exporter/exporter_test.go:116-347, :589+):
   * header/footer per dialect, DROP+CREATE before data, truncate
-  * suppresses INSERTs, batch splitting, anonymisation visible in output.
+  * suppresses INSERTs, batch splitting, anonymisation visible in output
+  * — plus the export drain's own contracts: output independent of the
+  * partitioning, and no job left running after a failed write.
   */
 class DumpWriterSpec extends AnyFunSuite with SparkSuite {
 
@@ -76,18 +82,100 @@ class DumpWriterSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("small custom batch size re-batches correctly") {
-    import spark.implicits._
     val out = new StringWriter()
     val w = new DumpWriter(out, SqliteDialect, batchSize = 3)
-    val df = (1 to 6).map(i => (i, s"name$i")).toDF("id", "name")
-    val tuples = DumpWriter.renderTuples(df, SqliteDialect).collect()
-    // a partition boundary inside the first batch: batching continues
-    // across it
-    w.exportTableParts(TableMeta("t", "CREATE TABLE t (id INTEGER, name TEXT);", Seq.empty,
-      () => 6L), Seq("id", "name"), Iterator(tuples.take(2), tuples.drop(2)))
-    w.flush()
+    // partitions [1, 2], [3, 4], [5, 6]: a partition boundary inside
+    // the first batch — batching continues across it
+    val df = spark.range(1, 7, 1, 3)
+      .select(col("id").cast("int").as("id"), concat(lit("name"), col("id")).as("name"))
+    assert(df.rdd.getNumPartitions == 3)
+    w.exportTables(Seq(TableMeta("t", "CREATE TABLE t (id INTEGER, name TEXT);", Seq.empty,
+      () => 6L) -> Some(df)))
+    w.writeFooter()
     val text = out.toString
     assert(text.linesIterator.count(_.startsWith("INSERT INTO")) == 2)
     assert(text.contains("(1, 'name1'),\n(2, 'name2'),\n(3, 'name3');"))
   }
+
+  private def exportFrames(tables: Map[String, DataFrame], cfg: GraftConfig,
+                           out: java.io.Writer, batchSize: Int = 1000): DumpStats =
+    ExportPipeline.run(new FramesSource(tables), cfg, SqliteDialect, out, batchSize,
+      timestamp = () => "1970-01-01T00:00:00Z")
+
+  test("export bytes do not depend on partitioning: 3 partitions per table = coalesce(1)") {
+    val parted = Map(
+      "a" -> spark.range(0, 22, 1, 3).select(col("id"), concat(lit("a'"), col("id")).as("s")),
+      "b" -> spark.range(0, 17, 1, 3).select(col("id"), (col("id") * 0.5).as("v")),
+      "c" -> spark.range(0, 5, 1, 3).toDF())
+    val cfg = GraftConfig(Connection("sqlite"), Map("c" -> TableConfig(truncate = true)))
+    def dump(tables: Map[String, DataFrame]): String = {
+      val out = new StringWriter()
+      exportFrames(tables, cfg, out, batchSize = 4)
+      out.toString
+    }
+    assert(parted.values.forall(_.rdd.getNumPartitions == 3))
+    // batch size 4 over partitions of 7/7/8 and 5/6/6 rows: batches cross
+    // partition boundaries, and each table ends on a partial batch, so a
+    // counter carried over a table boundary would shift every later batch
+    val text = dump(parted)
+    assert(text == dump(parted.map { case (t, df) => t -> df.coalesce(1) }))
+    assert(text.linesIterator.count(_.startsWith("INSERT INTO \"a\"")) == 6)
+    assert(text.linesIterator.count(_.startsWith("INSERT INTO \"b\"")) == 5)
+    assert(!text.contains("INSERT INTO \"c\"") && text.contains("CREATE TABLE \"c\""))
+  }
+
+  test("a failed write cancels the partition job in flight") {
+    // table a renders past the 64 KB write buffer, so its first data
+    // write reaches the failing Writer; that write waits until the
+    // prefetcher's job for table b is rendering (it renders until
+    // cancelled, or 60 s), then throws
+    val slow = udf { (id: Long) =>
+      SlowRender.started.countDown()
+      val ctx = TaskContext.get()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!ctx.isInterrupted() && System.nanoTime() < deadline) Thread.sleep(20)
+      id
+    }
+    val tables = Map(
+      "a" -> spark.range(0, 20000, 1, 1).toDF(),
+      "b" -> spark.range(0, 1, 1, 1).select(slow(col("id")).as("id")))
+    val failing = new java.io.Writer {
+      def write(cbuf: Array[Char], off: Int, len: Int): Unit = {
+        SlowRender.started.await(30, java.util.concurrent.TimeUnit.SECONDS)
+        throw new java.io.IOException("disk full")
+      }
+      def flush(): Unit = ()
+      def close(): Unit = ()
+    }
+    val tracker = spark.sparkContext.statusTracker
+    val before = tracker.getActiveJobIds.toSet
+    def leftover = tracker.getActiveJobIds.filterNot(before)
+    val e = intercept[java.io.IOException](
+      exportFrames(tables, GraftConfig(Connection("sqlite")), failing))
+    assert(e.getMessage == "disk full")
+    assert(SlowRender.started.getCount == 0, "table b's render never started")
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (leftover.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(leftover.isEmpty, "a partition job outlived the failed export: " +
+      leftover.flatMap(tracker.getJobInfo).map(j => j.jobId -> j.status).mkString(", "))
+  }
+}
+
+/** Raised by the slow render of the cancel case; a static, since task
+  * closures are serialized and a captured latch would be a copy.
+  */
+private object SlowRender {
+  val started = new java.util.concurrent.CountDownLatch(1)
+}
+
+/** A [[graft.sources.Source]] over in-memory frames, without FKs. */
+private final class FramesSource(frames: Map[String, DataFrame]) extends Source {
+  def spark: SparkSession = frames.values.head.sparkSession
+  def tables: Seq[String] = frames.keys.toSeq.sorted
+  def schemaDDL(table: String): String = Source.ddlFor(table, read(table).schema)
+  def columns(table: String): Seq[ColumnInfo] = read(table).schema.fields.toSeq.map { f =>
+    ColumnInfo(f.name, Source.sqlType(f.dataType), f.nullable)
+  }
+  def foreignKeys: Seq[ForeignKey] = Seq.empty
+  def read(table: String): DataFrame = frames(table)
 }

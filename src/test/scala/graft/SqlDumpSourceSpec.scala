@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,7 +31,7 @@ class SqlDumpSourceSpec extends AnyFunSuite with SparkSuite {
         timestamp = () => "1970-01-01T00:00:00Z")
       dw.writeHeader()
       val meta = TableMeta(table, Source.ddlFor(table, df.schema), Seq.empty, () => 0L)
-      dw.exportTable(meta, Some(df))
+      dw.exportTables(Seq(meta -> Some(df)))
       dw.writeFooter()
     } finally w.close()
     f
@@ -51,7 +52,10 @@ class SqlDumpSourceSpec extends AnyFunSuite with SparkSuite {
       (1L, 7, "plain", 3.25, true, java.sql.Date.valueOf("2024-02-29"),
         java.sql.Timestamp.valueOf("2024-02-29 13:45:09"), Option(9.5f)),
       (2L, -8, "it's quoted", -0.5, false, java.sql.Date.valueOf("1999-12-31"),
-        java.sql.Timestamp.valueOf("1970-01-01 00:00:01"), None)
+        java.sql.Timestamp.valueOf("1970-01-01 00:00:01"), None),
+      // before the 1582 Gregorian cutover: java.sql values are rebased
+      (3L, 0, "julian", 0.0, true, java.sql.Date.valueOf("1000-01-01"),
+        java.sql.Timestamp.valueOf("1000-01-01 12:00:00"), None)
     ).toDF("id", "n", "s", "d", "b", "dt", "ts", "f")
     val dump = writeDump(df, "t_types")
     val back = readBack(dump.getPath, "t_types")
@@ -163,8 +167,9 @@ class SqlDumpSourceSpec extends AnyFunSuite with SparkSuite {
       val dw = new DumpWriter(w, PostgresDialect, batchSize = 2,
         timestamp = () => "1970-01-01T00:00:00Z")
       dw.writeHeader()
-      dw.exportTable(TableMeta("ta", Source.ddlFor("ta", a.schema), Seq.empty, () => 0L), Some(a))
-      dw.exportTable(TableMeta("tb", Source.ddlFor("tb", b.schema), Seq.empty, () => 0L), Some(b))
+      dw.exportTables(Seq(
+        TableMeta("ta", Source.ddlFor("ta", a.schema), Seq.empty, () => 0L) -> Some(a),
+        TableMeta("tb", Source.ddlFor("tb", b.schema), Seq.empty, () => 0L) -> Some(b)))
       dw.writeFooter()
     } finally w.close()
     assert(rowSet(readBack(f.getPath, "ta")) == rowSet(a))
@@ -283,21 +288,55 @@ class SqlDumpSourceSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("parallel sink and serial DumpWriter render byte-identical tuple literals") {
-    import spark.implicits._
-    val df = Seq((7L, "esc'aped\ntext", 2.5, java.sql.Timestamp.valueOf("2001-02-03 04:05:06")))
-      .toDF("id", "s", "v", "ts")
-    val dir = Files.createTempDirectory("sqldump_parity").toFile
-    val out = new File(dir, "dump")
-    df.coalesce(1).write.format("graft.sources.SqlDumpSource")
-      .option("table", "t_parity").mode("append").save(out.getPath)
-    val serial = writeDump(df, "t_parity")
-    def tuples(f: File): Seq[String] = {
+    import java.sql.{Date, Timestamp}
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("s", StringType),
+      StructField("v", DoubleType), StructField("ts", TimestampType),
+      StructField("b", BooleanType), StructField("i8", ByteType),
+      StructField("i16", ShortType), StructField("i32", IntegerType),
+      StructField("f", FloatType), StructField("whole", DoubleType),
+      StructField("dec", DecimalType(12, 3)), StructField("dt", DateType),
+      StructField("ts_us", TimestampType), StructField("ntz", TimestampNTZType),
+      StructField("bin", BinaryType), StructField("nul", StringType)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      Row(7L, "esc'aped\ntext", 2.5, Timestamp.valueOf("2001-02-03 04:05:06"),
+        true, 1.toByte, (-2).toShort, 3, 1.5f, 3.0,
+        new java.math.BigDecimal("-12.345"), Date.valueOf("2024-02-29"),
+        Timestamp.valueOf("2001-02-03 04:05:06.123456"),
+        java.time.LocalDateTime.parse("2001-02-03T04:05:06.000789"),
+        Array[Byte](0, -1, 16, 97), null),
+      Row(8L, "", -0.25, Timestamp.valueOf("1969-12-31 23:59:59.5"),
+        false, (-128).toByte, 32767.toShort, Int.MinValue, -7.0f, -1e20,
+        new java.math.BigDecimal("0.001"), Date.valueOf("1970-01-01"),
+        null, java.time.LocalDateTime.parse("1999-12-31T23:59:59"),
+        Array.emptyByteArray, null)), schema)
+    def inserts(f: File): Seq[String] = {
       val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().filter(_.startsWith("(")).toList finally src.close()
+      try src.getLines().filter(l => l.startsWith("INSERT INTO ") || l.startsWith("(")).toList
+      finally src.close()
     }
-    val parPart = out.listFiles().filter(_.getName.startsWith("part-")).head
-    assert(tuples(parPart).map(_.stripSuffix(";").stripSuffix(",")) ==
-           tuples(serial).map(_.stripSuffix(";").stripSuffix(",")))
+    for (dialect <- Seq(MySqlDialect, PostgresDialect)) {
+      val out = new File(Files.createTempDirectory("sqldump_parity").toFile, "dump")
+      df.coalesce(1).write.format("graft.sources.SqlDumpSource")
+        .option("table", "t_parity").option("dialect", dialect.name)
+        .mode("append").save(out.getPath)
+      val serial = inserts(writeDump(df, "t_parity", dialect))
+      val parPart = out.listFiles().filter(_.getName.startsWith("part-")).head
+      assert(inserts(parPart) == serial, dialect.name)
+      assert(serial.length == 3 && serial(1).endsWith(", NULL),"), serial)
+    }
+    // a column the codec cannot render is refused when the write is
+    // planned — before any file is written — naming the column
+    val out = new File(Files.createTempDirectory("sqldump_reject").toFile, "dump")
+    val e = intercept[Exception](
+      df.select(col("id"), functions.array(col("i32")).as("arr"))
+        .write.format("graft.sources.SqlDumpSource")
+        .option("table", "t_arr").mode("append").save(out.getPath))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toList
+    assert(messages.exists(m => m != null && m.contains("column arr") &&
+      m.contains("ARRAY<INT>")), messages)
+    assert(!out.exists())
   }
 
   test("sqlite-dialect dump (double-quoted INSERT identifiers) reads back too") {
