@@ -13,8 +13,8 @@ import graft.sources.Source
   *
   * Spark lifecycle: each table compiles to a declarative DataFrame chain
   * (scan + pushdown-friendly filter/limit + Column-level anonymisation);
-  * Catalyst plans it, executors run it, and only the serial dump tail
-  * runs on the driver.
+  * Catalyst plans it, executors run it, and only the ordered write of
+  * the dump file runs on the driver's calling thread.
   */
 object ExportPipeline {
 
@@ -45,8 +45,11 @@ object ExportPipeline {
 
   /** Step 6: execute the plan into a dump writer: the header, every
     * table's scan/retain/anonymise chain drained in plan order by
-    * [[DumpWriter.exportTables]] (one partition job in flight ahead of
-    * the write, across table boundaries, guide §2.6), the footer.
+    * [[DumpWriter.exportTables]], the footer. The tables are planned on a
+    * small driver pool and up to one partition job per core runs at a
+    * time, across table boundaries, while `out` is written in order on
+    * the calling thread; driver memory holds at most W + 1 partitions,
+    * W = min(`defaultParallelism`, driver cores).
     */
   def run(source: Source, cfg: GraftConfig, dialect: Dialect, out: Writer,
           batchSize: Int = DumpWriter.DefaultBatchSize,

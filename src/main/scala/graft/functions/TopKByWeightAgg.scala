@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions.udaf
   *
   * Buffer layout: flat Array[Long] of 2k slots, interleaved
   * (negWeight, id) entries in ascending lexicographic order, padded with
-  * (Long.MaxValue, Long.MaxValue) sentinels. Precondition: weight ≥ 0
-  * (the negation must stay below the sentinel), which every count-valued
-  * weight satisfies. Ids may repeat across input rows; ranking is total
+  * (Long.MaxValue, Long.MaxValue) sentinels. Precondition, checked in
+  * `reduce`: weight ≥ 0 (the negation must stay below the sentinel, and
+  * `-Long.MinValue` overflows), which every count-valued weight
+  * satisfies. Ids may repeat across input rows; ranking is total
   * (no nondeterministic ties) whenever ids are unique per group, as in
   * the affinity projection.
   */
@@ -49,8 +50,10 @@ class TopKByWeightAgg(k: Int)
     buf
   }
 
-  override def reduce(buf: Array[Long], in: (Long, Long)): Array[Long] =
+  override def reduce(buf: Array[Long], in: (Long, Long)): Array[Long] = {
+    require(in._1 >= 0, s"TopKByWeightAgg weight must be >= 0, got weight ${in._1} for id ${in._2}")
     insert(buf, -in._1, in._2)
+  }
 
   override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
     val out = new Array[Long](2 * k)

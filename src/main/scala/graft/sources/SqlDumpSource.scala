@@ -599,10 +599,15 @@ private[sources] final class OffsetLineReader(in: java.io.InputStream) {
   private var eof = false
   var consumed: Long = 0L
 
+  /** A stream whose `read` returns 0 for a non-empty buffer breaks the
+    * InputStream contract and would make the caller spin forever.
+    */
   private def refill(): Unit = {
     len = in.read(chunk)
     pos = 0
     if (len < 0) { eof = true; len = 0 }
+    else if (len == 0)
+      throw new java.io.IOException(s"SQL dump stream read 0 bytes at stream byte offset $consumed")
   }
 
   /** Next line without its terminator; null at EOF. A final line with

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.StringWriter
 import org.apache.spark.TaskContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, concat, lit, udf}
 import graft.dialect._
@@ -16,7 +17,8 @@ import graft.sources.{ParquetSource, Source}
   * header/footer per dialect, DROP+CREATE before data, truncate
   * suppresses INSERTs, batch splitting, anonymisation visible in output
   * — plus the export drain's own contracts: output independent of the
-  * partitioning, and no job left running after a failed write.
+  * partitioning, several tables rendered at once, and no job or planning
+  * thread left running after a failed write or render.
   */
 class DumpWriterSpec extends AnyFunSuite with SparkSuite {
 
@@ -124,11 +126,58 @@ class DumpWriterSpec extends AnyFunSuite with SparkSuite {
     assert(!text.contains("INSERT INTO \"c\"") && text.contains("CREATE TABLE \"c\""))
   }
 
+  test("the export runs several tables' render jobs at once, with the same bytes") {
+    // each table's only partition sleeps 200 ms before its first row
+    val nap = udf { (id: Long) => if (id == 0) Thread.sleep(200); id }
+    val tables = (0 until 6).map { i =>
+      s"t$i" -> spark.range(0, 5 + i, 1, 1)
+        .select(nap(col("id")).as("id"), concat(lit(s"t$i'"), col("id")).as("s"))
+    }.toMap
+    val cfg = GraftConfig(Connection("sqlite"))
+    val tag = "dump-writer-concurrency"
+    val jobs = new ActiveJobs(tag)
+    val sc = spark.sparkContext
+    def dump(frames: Map[String, DataFrame]): String = {
+      val out = new StringWriter()
+      exportFrames(frames, cfg, out)
+      out.toString
+    }
+    sc.addSparkListener(jobs)
+    sc.addJobTag(tag)
+    val text =
+      try dump(tables)
+      finally sc.removeJobTag(tag)
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (!jobs.settled(tables.size) && System.nanoTime() < deadline) Thread.sleep(20)
+    sc.removeSparkListener(jobs)
+    assert(jobs.settled(tables.size), "the export's job events never all arrived")
+    assert(jobs.peak > 1, "the export ran one job at a time")
+    assert(jobs.peak <= sc.defaultParallelism)
+    assert(text == dump(tables.map { case (t, df) => t -> df.coalesce(1) }))
+  }
+
+  private def leftoverJobs(before: Set[Int]): Seq[String] = {
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    def left = tracker.getActiveJobIds.filterNot(before)
+    while (left.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    left.toSeq.flatMap(tracker.getJobInfo).map(j => s"${j.jobId} ${j.status}")
+  }
+
+  private def planThreads(): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    def alive = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("graft-export-plan-")).map(_.getName)
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (alive.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    alive
+  }
+
   test("a failed write cancels the partition job in flight") {
     // table a renders past the 64 KB write buffer, so its first data
     // write reaches the failing Writer; that write waits until the
-    // prefetcher's job for table b is rendering (it renders until
-    // cancelled, or 60 s), then throws
+    // render jobs of the slow tables b and c are both running (each
+    // renders until cancelled, or 60 s), then throws
     val slow = udf { (id: Long) =>
       SlowRender.started.countDown()
       val ctx = TaskContext.get()
@@ -138,7 +187,8 @@ class DumpWriterSpec extends AnyFunSuite with SparkSuite {
     }
     val tables = Map(
       "a" -> spark.range(0, 20000, 1, 1).toDF(),
-      "b" -> spark.range(0, 1, 1, 1).select(slow(col("id")).as("id")))
+      "b" -> spark.range(0, 1, 1, 1).select(slow(col("id")).as("id")),
+      "c" -> spark.range(0, 1, 1, 1).select(slow(col("id")).as("id")))
     val failing = new java.io.Writer {
       def write(cbuf: Array[Char], off: Int, len: Int): Unit = {
         SlowRender.started.await(30, java.util.concurrent.TimeUnit.SECONDS)
@@ -147,25 +197,63 @@ class DumpWriterSpec extends AnyFunSuite with SparkSuite {
       def flush(): Unit = ()
       def close(): Unit = ()
     }
-    val tracker = spark.sparkContext.statusTracker
-    val before = tracker.getActiveJobIds.toSet
-    def leftover = tracker.getActiveJobIds.filterNot(before)
+    val before = spark.sparkContext.statusTracker.getActiveJobIds.toSet
     val e = intercept[java.io.IOException](
       exportFrames(tables, GraftConfig(Connection("sqlite")), failing))
     assert(e.getMessage == "disk full")
-    assert(SlowRender.started.getCount == 0, "table b's render never started")
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (leftover.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(leftover.isEmpty, "a partition job outlived the failed export: " +
-      leftover.flatMap(tracker.getJobInfo).map(j => j.jobId -> j.status).mkString(", "))
+    assert(SlowRender.started.getCount == 0, "the slow renders were never both running")
+    val left = leftoverJobs(before)
+    assert(left.isEmpty, "a partition job outlived the failed export: " + left.mkString(", "))
+    val threads = planThreads()
+    assert(threads.isEmpty, "planning threads outlived the failed export: " + threads.mkString(", "))
+  }
+
+  test("a failed render fails the export and cancels the other tables' jobs") {
+    val boom = udf { (id: Long) =>
+      if (id == 2) throw new IllegalStateException("render of table c failed"); id
+    }
+    val tables = Seq("a", "b", "c", "d", "e").map { t =>
+      val id = if (t == "c") boom(col("id")) else col("id")
+      t -> spark.range(0, 10, 1, 1).select(id.as("id"))
+    }.toMap
+    val before = spark.sparkContext.statusTracker.getActiveJobIds.toSet
+    val e = intercept[Exception](
+      exportFrames(tables, GraftConfig(Connection("sqlite")), new StringWriter()))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("render of table c failed")),
+      causes.map(_.toString).mkString(" <- "))
+    val left = leftoverJobs(before)
+    assert(left.isEmpty, "a partition job outlived the failed export: " + left.mkString(", "))
   }
 }
 
-/** Raised by the slow render of the cancel case; a static, since task
+/** Raised by the slow renders of the cancel case; a static, since task
   * closures are serialized and a captured latch would be a copy.
   */
 private object SlowRender {
-  val started = new java.util.concurrent.CountDownLatch(1)
+  val started = new java.util.concurrent.CountDownLatch(2)
+}
+
+/** Records the most jobs carrying `tag` that were active at once. */
+private final class ActiveJobs(tag: String) extends SparkListener {
+  private val active = scala.collection.mutable.Set[Int]()
+  private var started, ended, maxActive = 0
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    val tags = Option(e.properties).map(_.getProperty("spark.job.tags", "")).getOrElse("")
+    if (tags.split(",").contains(tag)) {
+      active += e.jobId
+      started += 1
+      maxActive = math.max(maxActive, active.size)
+    }
+  }
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    if (active.remove(e.jobId)) ended += 1
+  }
+
+  def peak: Int = synchronized(maxActive)
+  def settled(jobs: Int): Boolean = synchronized(started == jobs && ended == jobs)
 }
 
 /** A [[graft.sources.Source]] over in-memory frames, without FKs. */

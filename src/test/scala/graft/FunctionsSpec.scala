@@ -233,4 +233,19 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
         assert(got(g) == want, s"group $g at $nPart partitions")
     }
   }
+
+  test("TopKByWeightAgg rejects a negative weight and still ranks weight 0") {
+    import spark.implicits._
+    val top2 = graft.functions.TopKByWeightAgg(2)
+    def top(rows: Seq[(Long, Long)]): Seq[Long] =
+      rows.toDF("w", "id").agg(top2(col("w"), col("id"))).as[Seq[Long]].head()
+    for (w <- Seq(-1L, Long.MinValue)) {
+      val e = intercept[Exception](top(Seq((3L, 1L), (w, 2L))))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage))
+      assert(messages.exists(_.contains(s"got weight $w")), s"weight $w: $e")
+    }
+    assert(top(Seq((0L, 5L), (0L, 4L), (2L, 9L))) == Seq(9L, 4L))
+    assert(top(Seq((0L, 7L))) == Seq(7L))
+  }
 }
