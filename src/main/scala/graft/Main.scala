@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.SparkSession
 import graft.anonymise.Anonymiser
 import graft.config.GraftConfig
@@ -87,6 +88,21 @@ object Main {
     try body(spark) finally if (owned) spark.stop()
   }
 
+  /** Exports `source` into `<out>.inprogress` and moves that onto `-o`,
+    * replacing any file there, once the footer is flushed. A failed
+    * export deletes it, so it never leaves a partial dump behind.
+    */
+  private def exportTo(flags: Flags, cfg: GraftConfig, source: Source): graft.export.DumpStats = {
+    val tmp = Paths.get(flags.out + ".inprogress")
+    try {
+      val writer = new java.io.FileWriter(tmp.toFile)
+      val stats = try ExportPipeline.run(source, cfg, Dialect.forName(cfg.connection.dbType),
+        writer, flags.batchSize) finally writer.close()
+      Files.move(tmp, Paths.get(flags.out), StandardCopyOption.REPLACE_EXISTING)
+      stats
+    } catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
+  }
+
   private def buildSource(spark: SparkSession, cfg: GraftConfig, flag: String): Source =
     if (flag.startsWith("parquet:")) ParquetSource(spark, flag.stripPrefix("parquet:"))
     else if (flag.startsWith("jdbc:")) {
@@ -129,11 +145,7 @@ object Main {
       } else {
         if (flags.out.isEmpty) { System.err.println("missing -o <out.sql>"); sys.exit(2) }
         val t0 = System.nanoTime()
-        val writer = new java.io.FileWriter(flags.out)
-        val stats = try
-          ExportPipeline.run(source, cfg, Dialect.forName(cfg.connection.dbType),
-            writer, flags.batchSize)
-        finally writer.close()
+        val stats = exportTo(flags, cfg, source)
         val secs = (System.nanoTime() - t0) / 1e9
         // end-of-run stats report (main.go:176-191)
         System.err.println(
@@ -179,11 +191,7 @@ object Main {
       val orphans = Subset.orphanCounts(kept, fks)
       require(orphans.values.forall(_ == 0L),
         s"$what left dangling rows: $orphans — refusing to write")
-      val writer = new java.io.FileWriter(flags.out)
-      val stats = try
-        ExportPipeline.run(new graft.export.SubsetSource(source, kept), cfg,
-          Dialect.forName(cfg.connection.dbType), writer, flags.batchSize)
-      finally writer.close()
+      val stats = exportTo(flags, cfg, new graft.export.SubsetSource(source, kept))
       System.err.println(
         s"$done: exported ${stats.tablesExported} tables, ${stats.rowsExported} rows, 0 orphans")
     }

@@ -348,7 +348,7 @@ object Oracles {
       val rows = Seq(
         "customer" -> "CREATE TABLE \"customer\" (\n  \"c_custkey\" BIGINT,\n  \"c_name\" TEXT,\n  \"c_nationkey\" INTEGER,\n  \"c_acctbal\" DOUBLE PRECISION,\n  \"c_mktsegment\" TEXT\n);",
         "documents" -> "CREATE TABLE \"documents\" (\n  \"doc_id\" BIGINT,\n  \"text\" TEXT,\n  \"lang\" TEXT,\n  \"source\" TEXT,\n  \"n_chars\" BIGINT\n);",
-        "embeddings" -> "CREATE TABLE \"embeddings\" (\n  \"vec_id\" BIGINT,\n  \"embedding\" ARRAY<REAL>,\n  \"label\" INTEGER\n);",
+        "embeddings" -> "CREATE TABLE \"embeddings\" (\n  \"vec_id\" BIGINT,\n  \"embedding\" TEXT,\n  \"label\" INTEGER\n);",
         "events" -> "CREATE TABLE \"events\" (\n  \"event_id\" BIGINT,\n  \"ts\" TIMESTAMP,\n  \"user_id\" BIGINT,\n  \"event_type\" TEXT,\n  \"value\" DOUBLE PRECISION,\n  \"props\" TEXT\n);",
         "lineitem" -> "CREATE TABLE \"lineitem\" (\n  \"l_orderkey\" BIGINT,\n  \"l_partkey\" BIGINT,\n  \"l_suppkey\" BIGINT,\n  \"l_linenumber\" INTEGER,\n  \"l_quantity\" DOUBLE PRECISION,\n  \"l_extendedprice\" DOUBLE PRECISION,\n  \"l_discount\" DOUBLE PRECISION,\n  \"l_tax\" DOUBLE PRECISION,\n  \"l_returnflag\" TEXT,\n  \"l_linestatus\" TEXT,\n  \"l_shipdate\" TIMESTAMP\n);",
         "nation" -> "CREATE TABLE \"nation\" (\n  \"n_nationkey\" INTEGER,\n  \"n_name\" TEXT,\n  \"n_regionkey\" INTEGER\n);",
@@ -371,7 +371,7 @@ object Oracles {
           |('documents',1,'doc_id','BIGINT',true),('documents',2,'text','TEXT',true),
           |('documents',3,'lang','TEXT',true),('documents',4,'source','TEXT',true),
           |('documents',5,'n_chars','BIGINT',true),
-          |('embeddings',1,'vec_id','BIGINT',true),('embeddings',2,'embedding','ARRAY<REAL>',true),
+          |('embeddings',1,'vec_id','BIGINT',true),('embeddings',2,'embedding','TEXT',true),
           |('embeddings',3,'label','INTEGER',true),
           |('events',1,'event_id','BIGINT',true),('events',2,'ts','TIMESTAMP',true),
           |('events',3,'user_id','BIGINT',true),('events',4,'event_type','TEXT',true),

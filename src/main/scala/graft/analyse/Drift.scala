@@ -3,6 +3,7 @@ package graft.analyse
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
+import graft.dialect.SqlValueCodec
 
 /** Dataset-version DRIFT detection — the data-contract check a
   * long-lived pipeline runs when a new version of a table lands:
@@ -13,8 +14,9 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructFiel
   * Output is LONG format, one row per (column, check):
   * `(col_name, check, v1_num, v2_num, v1_txt, v2_txt, drifted)` —
   * numeric checks use the `_num` pair, the type check the `_txt`
-  * pair. Integer-only statistics keep every value hash-exact across
-  * engines (no float rendering anywhere).
+  * pair (a type drifts when the Spark types differ; its text is the
+  * dump's DDL name, which two types can share). Integer-only statistics
+  * keep every value hash-exact across engines (no float rendering anywhere).
   *
   * Scale shape: the schema comparison is pure driver-side metadata
   * (two StructTypes); the statistics are ONE mergeable aggregate per
@@ -55,8 +57,8 @@ object Drift {
 
   def driftReport(v1: DataFrame, v2: DataFrame): DataFrame = {
     val spark = v1.sparkSession
-    val t1 = v1.schema.fields.map(f => f.name -> graft.sources.Source.sqlType(f.dataType)).toMap
-    val t2 = v2.schema.fields.map(f => f.name -> graft.sources.Source.sqlType(f.dataType)).toMap
+    val t1 = v1.schema.fields.map(f => f.name -> f.dataType).toMap
+    val t2 = v2.schema.fields.map(f => f.name -> f.dataType).toMap
     val allCols = (v1.schema.fieldNames ++ v2.schema.fieldNames).distinct.sorted
     val shared = allCols.filter(c => t1.contains(c) && t2.contains(c))
     val (rows1, p1) = profile(v1, shared)
@@ -68,7 +70,8 @@ object Drift {
       out += Row(c, "presence", if (in1) 1L else 0L, if (in2) 1L else 0L,
         null, null, in1 != in2)
       if (in1 && in2) {
-        out += Row(c, "type", null, null, t1(c), t2(c), t1(c) != t2(c))
+        out += Row(c, "type", null, null, SqlValueCodec.typeName(t1(c)),
+          SqlValueCodec.typeName(t2(c)), t1(c) != t2(c))
         val (n1, d1) = p1(c); val (n2, d2) = p2(c)
         out += Row(c, "null_count", n1, n2, null, null, n1 != n2)
         out += Row(c, "distinct_count", d1, d2, null, null, d1 != d2)

@@ -64,10 +64,14 @@ class DumpWriter(
     * hands them over in order; INSERT batches run on across partition
     * boundaries. Every `out` call is made on the calling thread. If the
     * writer, a table's planning or a render job throws, every job the
-    * export started is cancelled.
+    * export started is cancelled. A table with a column the dump cannot
+    * carry (`SqlValueCodec.requireWritable`) fails the export before any
+    * of its bytes is written or any job starts.
     */
   def exportTables(tables: Seq[(TableMeta, Option[DataFrame])]): Unit = {
-    val fetcher = new TuplePrefetcher(tables.flatMap(_._2), dialect)
+    val frames = tables.flatMap(_._2)
+    frames.foreach(df => SqlValueCodec.requireWritable(df.schema))
+    val fetcher = new TuplePrefetcher(frames, dialect)
     try for ((meta, data) <- tables) {
       w.write(s"\n--\n-- Table: ${meta.name}\n--\n\n")
       w.write(dialect.dropTableStatement(meta.name) + "\n\n")
@@ -91,14 +95,6 @@ object DumpWriter {
   val DefaultBatchSize = 1000   // exporter.go:16-17
   val WriterBufferBytes = 64 * 1024 // exporter.go:19-21
 
-  /** Value → literal: the codec, except binary routes through the
-    * dialect (PostgreSQL needs bytea hex-input, not the X'…' form).
-    */
-  private def literal(v: Any, dialect: Dialect): String = v match {
-    case b: Array[Byte] => dialect.binaryLiteral(b)
-    case other          => SqlValueCodec.formatValue(other)
-  }
-
   /** A row's "(v1, v2, …)" tuple text (exporter.go:274-309). */
   def renderTuple(row: Row, dialect: Dialect): String = {
     val sb = new java.lang.StringBuilder(64)
@@ -106,7 +102,7 @@ object DumpWriter {
     var i = 0
     while (i < row.length) {
       if (i > 0) sb.append(", ")
-      sb.append(literal(row.get(i), dialect))
+      sb.append(SqlValueCodec.formatValue(row.get(i), dialect))
       i += 1
     }
     sb.append(')').toString

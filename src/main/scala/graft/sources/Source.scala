@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.analyse.{ColumnInfo, ForeignKey, TableMeta}
 import graft.config.{Retain, RetainAll, RetainAfter, RetainCount}
+import graft.dialect.SqlValueCodec
 
 /** Source abstraction ≈ the reference's `Driver` interface
   * (/root/reference/internal/database/driver.go:38-69): catalog listing,
@@ -53,35 +54,16 @@ trait Source {
 
 object Source {
 
-  /** Map a Spark type to a portable SQL type string, mirroring the shape
-    * of the reference's Postgres DDL reconstruction (postgres.go:68-114),
-    * which renders types from catalog metadata (and, like it, loses
-    * FK/unique/index clauses — documented parity).
+  /** Reconstruct CREATE TABLE text from a StructType, with the dump's
+    * type names (`SqlValueCodec.typeName`). Like the reference's Postgres
+    * DDL reconstruction (postgres.go:68-114) it loses FK/unique/index
+    * clauses — documented parity.
     */
-  def sqlType(dt: DataType): String = dt match {
-    case BooleanType          => "BOOLEAN"
-    case ByteType             => "TINYINT"
-    case ShortType            => "SMALLINT"
-    case IntegerType          => "INTEGER"
-    case LongType             => "BIGINT"
-    case FloatType            => "REAL"
-    case DoubleType           => "DOUBLE PRECISION"
-    case d: DecimalType       => s"DECIMAL(${d.precision},${d.scale})"
-    case StringType           => "TEXT"
-    case BinaryType           => "BLOB"
-    case DateType             => "DATE"
-    case TimestampType        => "TIMESTAMP"
-    case TimestampNTZType     => "TIMESTAMP"
-    case ArrayType(et, _)     => s"ARRAY<${sqlType(et)}>"
-    case other                => other.sql
-  }
-
-  /** Reconstruct CREATE TABLE text from a StructType. */
   def ddlFor(table: String, schema: StructType,
              quote: String => String = id => "\"" + id + "\""): String = {
     val cols = schema.fields.map { f =>
       val nn = if (f.nullable) "" else " NOT NULL"
-      s"  ${quote(f.name)} ${sqlType(f.dataType)}$nn"
+      s"  ${quote(f.name)} ${SqlValueCodec.typeName(f.dataType)}$nn"
     }
     s"CREATE TABLE ${quote(table)} (\n${cols.mkString(",\n")}\n);"
   }
@@ -116,7 +98,7 @@ final case class ParquetSource(
 
   override def columns(table: String): Seq[ColumnInfo] =
     read(table).schema.fields.toSeq.map { f =>
-      ColumnInfo(f.name, Source.sqlType(f.dataType), f.nullable, None)
+      ColumnInfo(f.name, SqlValueCodec.typeName(f.dataType), f.nullable, None)
     }
 
   override def foreignKeys: Seq[ForeignKey] = fks

@@ -2,8 +2,6 @@ package graft.sources
 
 import java.io.{File, FileOutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.time.{LocalDate, LocalDateTime, ZoneOffset}
-import java.time.format.DateTimeFormatter
 import java.util
 
 import scala.collection.mutable.ArrayBuffer
@@ -18,8 +16,8 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull, LessThan, LessThanOrEqual, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
+import graft.dialect.SqlValueCodec
 import graft.export.DumpWriter
 
 /** DataSourceV2 batch READER for the engine's own SQL-dump format
@@ -34,6 +32,12 @@ import graft.export.DumpWriter
   *     .option("table", "customer")          // default: first CREATE TABLE
   *     .load("/path/to/dump.sql")            // file, or directory of .sql
   * }}}
+  *
+  * Every type question — which SQL type name maps to which Spark type,
+  * how a token decodes, how a pushed filter compares — is answered by
+  * `dialect.SqlValueCodec`, the same module the writers encode with. An
+  * array column was written as JSON array text under `TEXT`, so it
+  * reads back as a string; `from_json` recovers the array.
   *
   * Scale design — the dump format is line-structured by construction
   * (the writer renders one tuple per line and `SqlValueCodec` escapes
@@ -106,61 +110,6 @@ object SqlDumpSource {
       else Seq(f)
     }
 
-  /** Timestamp parser accepting the writer's optional micros suffix. */
-  private[graft] val tsParser: DateTimeFormatter =
-    new java.time.format.DateTimeFormatterBuilder()
-      .appendPattern("yyyy-MM-dd HH:mm:ss")
-      .optionalStart()
-      .appendFraction(java.time.temporal.ChronoField.NANO_OF_SECOND, 1, 6, true)
-      .optionalEnd()
-      .toFormatter
-
-  private[graft] def parseTimestampMicros(tok: String): Long = {
-    val inst = LocalDateTime.parse(tok, tsParser).toInstant(ZoneOffset.UTC)
-    inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-  }
-
-  private def isHex(s: String): Boolean = {
-    if (s.length % 2 != 0) return false
-    var i = 0
-    while (i < s.length) {
-      if (Character.digit(s.charAt(i), 16) < 0) return false
-      i += 1
-    }
-    true
-  }
-
-  private def fromHex(hex: String): Array[Byte] = {
-    val out = new Array[Byte](hex.length / 2)
-    var i = 0
-    while (i < out.length) {
-      out(i) = ((Character.digit(hex.charAt(2 * i), 16) << 4) |
-        Character.digit(hex.charAt(2 * i + 1), 16)).toByte
-      i += 1
-    }
-    out
-  }
-
-  /** Decode a binary literal: `X'…'` (mysql/sqlite raw token) or the
-    * bytea hex form `\x…` (postgres, after the tokenizer's unquote) —
-    * validated as well-formed hex, since `Character.digit` would turn a
-    * corrupted literal into silent garbage bytes; anything else (incl.
-    * malformed hex) falls back to the legacy UTF-8-bytes reading.
-    */
-  private[graft] def decodeBinary(tok: String): Array[Byte] = {
-    if (tok.length >= 3 && (tok.charAt(0) == 'X' || tok.charAt(0) == 'x') &&
-        tok.charAt(1) == '\'' && tok.last == '\'') {
-      val hex = tok.substring(2, tok.length - 1)
-      if (isHex(hex)) return fromHex(hex)
-    }
-    if (tok.length >= 2 && tok.charAt(0) == '\\' &&
-        (tok.charAt(1) == 'x' || tok.charAt(1) == 'X')) {
-      val hex = tok.substring(2)
-      if (isHex(hex)) return fromHex(hex)
-    }
-    tok.getBytes(UTF_8)
-  }
-
   /** Strip one layer of identifier quoting (backtick or double-quote,
     * either dialect) and undo the doubling.
     */
@@ -171,44 +120,6 @@ object SqlDumpSource {
     else if (t.length >= 2 && t.head == '"' && t.last == '"')
       t.substring(1, t.length - 1).replace("\"\"", "\"")
     else t
-  }
-
-  /** Inverse of `Source.sqlType` plus the dialect-native spellings the
-    * O2 DDL path emits (sized VARCHAR/CHAR, DATETIME, …).
-    */
-  private[sources] def dataTypeFor(sqlType: String): DataType = {
-    val t = sqlType.trim.toUpperCase
-    val base = t.takeWhile(c => c != '(' && c != ' ')
-    base match {
-      case "BOOLEAN" | "BOOL"                   => BooleanType
-      case "TINYINT"                            => ByteType
-      // postgres internal spellings (int2/4/8, float4/8) and the SERIAL
-      // pseudo-types appear verbatim in real pg_dump output
-      case "SMALLINT" | "INT2" | "SMALLSERIAL"  => ShortType
-      case "INTEGER" | "INT" | "MEDIUMINT" | "INT4" | "SERIAL" => IntegerType
-      case "BIGINT" | "INT8" | "BIGSERIAL"      => LongType
-      case "REAL" | "FLOAT" | "FLOAT4"          => FloatType
-      case "DOUBLE" | "FLOAT8"                  => DoubleType // DOUBLE [PRECISION]
-      case "DECIMAL" | "NUMERIC" =>
-        val ps = t.dropWhile(_ != '(').stripPrefix("(").takeWhile(_ != ')')
-        val parts = ps.split(',').map(_.trim)
-        if (parts.length == 2 && parts.forall(_.forall(_.isDigit)))
-          DecimalType(parts(0).toInt, parts(1).toInt)
-        else if (parts.length == 1 && parts(0).nonEmpty && parts(0).forall(_.isDigit))
-          DecimalType(parts(0).toInt, 0)
-        else DecimalType.SYSTEM_DEFAULT
-      case "TEXT" | "VARCHAR" | "CHAR" | "CHARACTER" | "CLOB"
-         | "TINYTEXT" | "MEDIUMTEXT" | "LONGTEXT"
-         | "NVARCHAR" | "NCHAR" | "BPCHAR"       => StringType
-      case "BLOB" | "BYTEA" | "BINARY" | "VARBINARY" => BinaryType
-      case "DATE"                               => DateType
-      // the dump format renders wall-clock text with no zone, so the
-      // faithful Spark type is TIMESTAMP_NTZ (micros are identical
-      // either way under the engine's fixed-UTC session convention)
-      case "TIMESTAMP" | "DATETIME"             => TimestampNTZType
-      case other =>
-        throw new IllegalArgumentException(s"sqldump: unmapped SQL type '$other'")
-    }
   }
 
   /** Schema from the dump's own CREATE TABLE statement: scan the file's
@@ -252,7 +163,7 @@ object SqlDumpSource {
                   .replaceAll("(?i)\\s+DEFAULT\\s+.*$", "")
                   .replaceAll("(?i)\\s+GENERATED\\s+.*$", "")
                   .replaceAll("(?i)\\s+PRIMARY\\s+KEY.*$", "")
-                fields += StructField(colName, dataTypeFor(typeText), nullable = !notNull)
+                fields += StructField(colName, SqlValueCodec.dataType(typeText), nullable = !notNull)
               }
               colLine = in.readLine()
             }
@@ -285,15 +196,7 @@ private[sources] class SqlDumpTable(tableSchema: StructType, paths: Seq[String],
     val dialect = graft.dialect.Dialect.forName(
       Option(info.options.get("dialect")).getOrElse("mysql"))
     val tbl = table.getOrElse("export")
-    info.schema().fields.foreach { f =>
-      f.dataType match {
-        case StringType | LongType | IntegerType | ShortType | ByteType | BooleanType |
-             DoubleType | FloatType | _: DecimalType | TimestampType | TimestampNTZType |
-             DateType | BinaryType =>
-        case other => throw new IllegalArgumentException(
-          s"sqldump: cannot write column ${f.name} of type ${other.sql}")
-      }
-    }
+    SqlValueCodec.requireWritable(info.schema())
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
@@ -310,9 +213,11 @@ private[sources] class SqlDumpTable(tableSchema: StructType, paths: Seq[String],
   * no driver funnel) through the ordered dump's own format —
   * `DumpWriter.renderTuple` per row, `DumpWriter.InsertWriter` per
   * file — so both sinks write the same tuples and statements by
-  * construction. Column types are checked when the write is planned:
-  * anything the codec cannot render (array, map, struct, …) is
-  * rejected there, naming the column. The driver writes one
+  * construction. Column types are checked when the write is planned,
+  * by the same `SqlValueCodec.requireWritable` the ordered export
+  * calls: a column the dump cannot carry (a map, a struct, an array of
+  * anything but numbers or booleans) is rejected there, naming the
+  * column. The driver writes one
   * `00_schema.sql` carrying the CREATE TABLE (named to sort first so
   * the reader's schema inference finds it), and commit is rename-based
   * two-phase — each task writes `.inprogress`, the job commit renames
@@ -458,79 +363,32 @@ private[sources] class SqlDumpScanBuilder(fullSchema: StructType, paths: Seq[Str
 }
 
 /** Exact tuple-level evaluation of pushed-down `sources.Filter`s for
-  * the dump reader. A filter column is decoded straight off the token
-  * (by the FULL schema's type, independent of output pruning) and
-  * compared in the domain Spark would compare in — long micros/days
-  * for temporals, exact string equality, numeric order otherwise.
+  * the dump reader. A filter column's token is decoded by the FULL
+  * schema's type (independent of output pruning) with the row path's
+  * own `SqlValueCodec.decode` and compared in Spark's own order
+  * (`SqlValueCodec.compare`), so a pushed filter decides exactly as the
+  * post-scan Filter would.
   */
 private[sources] object SqlDumpFilters {
 
   private def fieldType(schema: StructType, name: String): Option[DataType] =
     schema.fields.find(_.name == name).map(_.dataType)
 
-  private def orderable(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | ShortType | ByteType | DoubleType |
-         FloatType | BooleanType | DateType | TimestampType |
-         TimestampNTZType | _: DecimalType => true
-    case _ => false
-  }
+  private def pushable(schema: StructType, a: String, ordered: Boolean): Boolean =
+    fieldType(schema, a).exists(SqlValueCodec.pushable(_, ordered))
 
   def supports(schema: StructType, f: Filter): Boolean = f match {
-    case EqualTo(a, _) => fieldType(schema, a).exists(dt =>
-      orderable(dt) || dt == StringType)
-    case GreaterThan(a, _) => fieldType(schema, a).exists(orderable)
-    case GreaterThanOrEqual(a, _) => fieldType(schema, a).exists(orderable)
-    case LessThan(a, _) => fieldType(schema, a).exists(orderable)
-    case LessThanOrEqual(a, _) => fieldType(schema, a).exists(orderable)
+    case EqualTo(a, _) => pushable(schema, a, ordered = false)
+    case GreaterThan(a, _) => pushable(schema, a, ordered = true)
+    case GreaterThanOrEqual(a, _) => pushable(schema, a, ordered = true)
+    case LessThan(a, _) => pushable(schema, a, ordered = true)
+    case LessThanOrEqual(a, _) => pushable(schema, a, ordered = true)
     case IsNull(a) => fieldType(schema, a).isDefined
     case IsNotNull(a) => fieldType(schema, a).isDefined
     case And(l, r) => supports(schema, l) && supports(schema, r)
     case Or(l, r) => supports(schema, l) && supports(schema, r)
     case _ => false
   }
-
-  /** Spark filter literal → comparison double (numeric/temporal) —
-    * doubles order all supported domains exactly here because micros,
-    * days, and the fixture integrals... do NOT fit: use BigDecimal to
-    * stay exact for longs beyond 2^53.
-    */
-  private def toBig(v: Any): java.math.BigDecimal = v match {
-    case b: Boolean => if (b) java.math.BigDecimal.ONE else java.math.BigDecimal.ZERO
-    case b: Byte    => java.math.BigDecimal.valueOf(b.toLong)
-    case s: Short   => java.math.BigDecimal.valueOf(s.toLong)
-    case i: Int     => java.math.BigDecimal.valueOf(i.toLong)
-    case l: Long    => java.math.BigDecimal.valueOf(l)
-    case f: Float   => new java.math.BigDecimal(f.toString)
-    case d: Double  => java.math.BigDecimal.valueOf(d)
-    case d: java.math.BigDecimal => d
-    case d: BigDecimal => d.bigDecimal
-    case t: java.sql.Timestamp =>
-      java.math.BigDecimal.valueOf(
-        t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L)
-    case t: java.time.Instant =>
-      java.math.BigDecimal.valueOf(t.getEpochSecond * 1000000L + t.getNano / 1000L)
-    case t: java.time.LocalDateTime =>
-      val i = t.toInstant(ZoneOffset.UTC)
-      java.math.BigDecimal.valueOf(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    case d: java.sql.Date => java.math.BigDecimal.valueOf(d.toLocalDate.toEpochDay)
-    case d: LocalDate => java.math.BigDecimal.valueOf(d.toEpochDay)
-    case other => new java.math.BigDecimal(other.toString)
-  }
-
-  /** Decode a raw token into the comparison domain of its column type:
-    * Left(BigDecimal) for orderable, Right(String) for strings.
-    */
-  private def tokenValue(tok: String, dt: DataType): Either[java.math.BigDecimal, String] =
-    dt match {
-      case StringType => Right(tok)
-      case DateType => Left(java.math.BigDecimal.valueOf(
-        LocalDate.parse(tok.take(10)).toEpochDay))
-      case TimestampType | TimestampNTZType =>
-        Left(java.math.BigDecimal.valueOf(SqlDumpSource.parseTimestampMicros(tok)))
-      case BooleanType => Left(if (tok != "0") java.math.BigDecimal.ONE
-                               else java.math.BigDecimal.ZERO)
-      case _ => Left(new java.math.BigDecimal(tok))
-    }
 
   /** Evaluate one filter against the raw tokens of a statement, given
     * the statement's column-name → token-index map. SQL three-valued
@@ -543,16 +401,10 @@ private[sources] object SqlDumpFilters {
       colIdx.get(a).flatMap(i => if (i < tokens.length) Option(tokens(i)) else None)
     def cmp(a: String, v: Any): Option[Int] = for {
       t <- tok(a)
-      dt <- schema.fields.find(_.name == a).map(_.dataType)
-    } yield tokenValue(t, dt) match {
-      case Right(s) => s.compareTo(v.toString)
-      case Left(b)  => b.compareTo(toBig(v))
-    }
+      dt <- fieldType(schema, a)
+    } yield SqlValueCodec.compare(t, dt, v)
     f match {
-      case EqualTo(a, v) => schema.fields.find(_.name == a).map(_.dataType) match {
-        case Some(StringType) => tok(a).contains(v.toString)
-        case _ => cmp(a, v).contains(0)
-      }
+      case EqualTo(a, v)            => cmp(a, v).contains(0)
       case GreaterThan(a, v)        => cmp(a, v).exists(_ > 0)
       case GreaterThanOrEqual(a, v) => cmp(a, v).exists(_ >= 0)
       case LessThan(a, v)           => cmp(a, v).exists(_ < 0)
@@ -736,30 +588,10 @@ private[sources] final class SqlDumpPartitionReader(
     while (i < proj.length) {
       val pos = proj(i)
       val tok = if (pos >= 0 && pos < tokens.length) tokens(pos) else null
-      row.update(i, if (tok == null) null else convert(tok, required.fields(i).dataType))
+      row.update(i, if (tok == null) null else SqlValueCodec.decode(tok, required.fields(i).dataType))
       i += 1
     }
     row
-  }
-
-  private def convert(tok: String, dt: DataType): Any = dt match {
-    case StringType    => UTF8String.fromString(tok)
-    case LongType      => tok.toLong
-    case IntegerType   => tok.toInt
-    case ShortType     => tok.toShort
-    case ByteType      => tok.toByte
-    case DoubleType    => tok.toDouble
-    case FloatType     => tok.toFloat
-    case BooleanType   => tok != "0" // the codec renders booleans as 1/0
-    case d: DecimalType =>
-      org.apache.spark.sql.types.Decimal(BigDecimal(tok), d.precision, d.scale)
-    case TimestampType | TimestampNTZType =>
-      SqlDumpSource.parseTimestampMicros(tok)
-    case DateType =>
-      LocalDate.parse(tok.take(10)).toEpochDay.toInt
-    case BinaryType    => SqlDumpSource.decodeBinary(tok)
-    case other =>
-      throw new IllegalArgumentException(s"sqldump: cannot decode to $other")
   }
 }
 

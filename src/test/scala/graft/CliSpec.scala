@@ -175,6 +175,21 @@ class CliSpec extends AnyFunSuite with SparkSuite {
     assert(table("nation").count() == fixture("nation").count())
   }
 
+  test("graft export of a column the dump cannot carry fails and leaves no dump") {
+    import org.apache.spark.sql.functions.{col, lit, map}
+    val dir = Files.createTempDirectory("graft_cli_map").toString
+    spark.range(3).select(col("id"), map(lit("k"), col("id").cast("int")).as("attrs"))
+      .write.parquet(s"$dir/things.parquet")
+    val out = Paths.get(Files.createTempDirectory("graft_cli_map_out").toString, "out.sql")
+    val e = intercept[Exception](Main.main(Array("export", "-c", config, "-o", out.toString,
+      "--source", s"parquet:$dir")))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toList
+    assert(messages.exists(m => m != null && m.contains("attrs")), messages)
+    assert(!Files.exists(out), "a failed export left a dump behind")
+    assert(out.getParent.toFile.list().isEmpty, "a failed export left a partial file")
+  }
+
   test("drift: identical versions exit 0, an evolved version exits 1") {
     import org.apache.spark.sql.functions.{col, lit, when}
     val same = Main.runDrift("/root/testdata/sf0.001/customer.parquet",

@@ -102,4 +102,21 @@ class CodecSpec extends AnyFunSuite {
     assert(SqliteDialect.header.contains("PRAGMA foreign_keys = OFF;"))
     assert(SqliteDialect.footer.contains("PRAGMA foreign_keys = ON;"))
   }
+
+  test("numeric and boolean arrays dump as JSON text under TEXT; maps and structs are refused") {
+    import org.apache.spark.sql.types._
+    assert(SqlValueCodec.formatValue(Seq(0.019f, 0.5f)) == "'[0.019,0.5]'")
+    assert(SqlValueCodec.formatValue(Seq(1L, null, -3L)) == "'[1,null,-3]'")
+    assert(SqlValueCodec.formatValue(Seq(true, false)) == "'[true,false]'")
+    assert(SqlValueCodec.formatValue(Seq.empty[Double]) == "'[]'")
+    assert(SqlValueCodec.sqlType(ArrayType(FloatType)).contains("TEXT"))
+    assert(SqlValueCodec.sqlType(ArrayType(DecimalType(10, 2))).contains("TEXT"))
+    for (dt <- Seq(ArrayType(StringType), ArrayType(ArrayType(IntegerType)),
+                   MapType(StringType, IntegerType), new StructType().add("a", IntegerType))) {
+      assert(SqlValueCodec.sqlType(dt).isEmpty, dt)
+      val e = intercept[IllegalArgumentException](SqlValueCodec.requireWritable(
+        new StructType().add("id", LongType).add("c", dt)))
+      assert(e.getMessage.contains("column c") && e.getMessage.contains(dt.sql), e.getMessage)
+    }
+  }
 }

@@ -262,7 +262,7 @@ private final class FramesSource(frames: Map[String, DataFrame]) extends Source 
   def tables: Seq[String] = frames.keys.toSeq.sorted
   def schemaDDL(table: String): String = Source.ddlFor(table, read(table).schema)
   def columns(table: String): Seq[ColumnInfo] = read(table).schema.fields.toSeq.map { f =>
-    ColumnInfo(f.name, Source.sqlType(f.dataType), f.nullable)
+    ColumnInfo(f.name, SqlValueCodec.typeName(f.dataType), f.nullable)
   }
   def foreignKeys: Seq[ForeignKey] = Seq.empty
   def read(table: String): DataFrame = frames(table)

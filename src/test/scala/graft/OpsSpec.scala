@@ -2862,11 +2862,13 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   test("driftReport: schema and profile deltas, type changes flagged, all-integer stats") {
     import spark.implicits._
     import graft.analyse.Drift
-    val v1 = Seq((1L, "a", 10), (2L, "b", 20), (3L, null.asInstanceOf[String], 20))
-      .toDF("id", "name", "score")
-    // v2: 'name' dropped, 'tag' added, 'score' RETYPED to long, a row lost
-    val v2 = Seq((1L, 10L, "x"), (2L, 25L, "y"))
-      .toDF("id", "score", "tag")
+    val v1 = Seq((1L, "a", 10, Seq(1f)), (2L, "b", 20, Seq(2f)),
+        (3L, null.asInstanceOf[String], 20, Seq(2f)))
+      .toDF("id", "name", "score", "emb")
+    // v2: 'name' dropped, 'tag' added, 'score' RETYPED to long, 'emb'
+    // RETYPED to array<double>, a row lost
+    val v2 = Seq((1L, 10L, "x", Seq(1.0)), (2L, 25L, "y", Seq(2.0)))
+      .toDF("id", "score", "tag", "emb")
     val got = Drift.driftReport(v1, v2)
       .as[(String, String, Option[Long], Option[Long], Option[String], Option[String], Boolean)]
       .collect().map(r => (r._1, r._2) -> r).toMap
@@ -2877,6 +2879,8 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(got(("score", "type"))._5.contains("INTEGER"))
     assert(got(("score", "type"))._6.contains("BIGINT"))
     assert(got(("score", "type"))._7)
+    // both arrays dump as TEXT, yet the Spark types differ: still drifts
+    assert(got(("emb", "type")) == (("emb", "type", None, None, Some("TEXT"), Some("TEXT"), true)))
     assert(got(("score", "distinct_count")) ==
       (("score", "distinct_count", Some(2L), Some(2L), None, None, false)))
     assert(got(("name", "presence"))._7)

@@ -196,7 +196,7 @@ class PropertySpec extends AnyFunSuite {
     for (bs <- samples(bytesGen, 300)) {
       val line = "(" + SqlValueCodec.formatBinary(bs) + ", 'x');"
       val toks = graft.sources.SqlDumpPartitionReader.tokenize(line)
-      assert(graft.sources.SqlDumpSource.decodeBinary(toks(0)).toSeq == bs.toSeq)
+      assert(SqlValueCodec.decodeBinary(toks(0)).toSeq == bs.toSeq)
       assert(toks(1) == "x")
     }
   }
@@ -274,7 +274,7 @@ class PropertySpec extends AnyFunSuite {
       val inst = java.time.Instant.ofEpochSecond(
         Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)
       val text = SqlValueCodec.formatInstant(inst)
-      assert(graft.sources.SqlDumpSource.parseTimestampMicros(text) == micros,
+      assert(SqlValueCodec.parseTimestampMicros(text) == micros,
         s"micros $micros rendered '$text'")
     }
   }

@@ -50,25 +50,30 @@ class SqlDumpSourceSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     val df = Seq(
       (1L, 7, "plain", 3.25, true, java.sql.Date.valueOf("2024-02-29"),
-        java.sql.Timestamp.valueOf("2024-02-29 13:45:09"), Option(9.5f)),
+        java.sql.Timestamp.valueOf("2024-02-29 13:45:09"), Option(9.5f),
+        Seq(Option(0.019f), None, Option(-2.5f), Option(1e-7f), Option(Float.NaN),
+          Option(Float.NegativeInfinity))),
       (2L, -8, "it's quoted", -0.5, false, java.sql.Date.valueOf("1999-12-31"),
-        java.sql.Timestamp.valueOf("1970-01-01 00:00:01"), None),
+        java.sql.Timestamp.valueOf("1970-01-01 00:00:01"), None, Seq.empty[Option[Float]]),
       // before the 1582 Gregorian cutover: java.sql values are rebased
       (3L, 0, "julian", 0.0, true, java.sql.Date.valueOf("1000-01-01"),
-        java.sql.Timestamp.valueOf("1000-01-01 12:00:00"), None)
-    ).toDF("id", "n", "s", "d", "b", "dt", "ts", "f")
+        java.sql.Timestamp.valueOf("1000-01-01 12:00:00"), None, null)
+    ).toDF("id", "n", "s", "d", "b", "dt", "ts", "f", "arr")
     val dump = writeDump(df, "t_types")
     val back = readBack(dump.getPath, "t_types")
     // inferred schema: names and arity match the source
     assert(back.schema.fieldNames.toSeq == df.schema.fieldNames.toSeq)
     // compare everything as strings under the UTC session (the writer
-    // renders wall-clock text, so the read-back type is TIMESTAMP_NTZ)
-    def norm(d: DataFrame): Set[String] =
+    // renders wall-clock text, so the read-back type is TIMESTAMP_NTZ;
+    // an array is JSON text, read back as a string)
+    def norm(d: DataFrame, arr: org.apache.spark.sql.Column): Set[String] =
       d.select(col("id"), col("n"), col("s"), col("d"), col("b"),
         col("dt").cast("string"), col("ts").cast("timestamp_ntz").cast("string"),
-        col("f"))
+        col("f"), arr)
         .collect().map(_.toString).toSet
-    assert(norm(back) == norm(df))
+    assert(back.schema("arr").dataType == StringType)
+    assert(norm(back, functions.from_json(col("arr"), ArrayType(FloatType))) ==
+      norm(df, col("arr")))
   }
 
   test("escape gauntlet: quotes, backslashes, control chars, NULL") {
@@ -230,6 +235,31 @@ class SqlDumpSourceSpec extends AnyFunSuite with SparkSuite {
     assert(q4.collect().map(_.getString(0)).toSeq == Seq("n123"))
   }
 
+  test("filter pushdown decides like Spark on NaN, ±Infinity and a pre-1582 timestamp") {
+    import java.sql.Timestamp
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", DoubleType), StructField("ts", TimestampType)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, Double.NaN, Timestamp.valueOf("1000-01-01 12:00:00")),
+      Row(2L, Double.PositiveInfinity, Timestamp.valueOf("1000-01-02 12:00:00")),
+      Row(3L, Double.NegativeInfinity, Timestamp.valueOf("1000-01-04 12:00:00")),
+      Row(4L, 1.5, Timestamp.valueOf("1000-01-08 12:00:00")),
+      Row(5L, null, null)), schema)
+    val dump = writeDump(df, "t_edge")
+    // a user-supplied schema reads the dump's TIMESTAMP as TimestampType,
+    // whose filter literal is a Julian-rebased java.sql.Timestamp
+    val back = spark.read.format("graft.sources.SqlDumpSource").schema(schema)
+      .option("table", "t_edge").load(dump.getPath)
+    import org.apache.spark.sql.execution.FilterExec
+    for (p <- Seq(col("v") > 0, col("v") === 1.5, col("ts") > "1000-01-03")) {
+      val q = back.filter(p)
+      assert(q.queryExecution.executedPlan.collect { case f: FilterExec => f }.isEmpty,
+        q.queryExecution.executedPlan.toString)
+      assert(q.collect().map(_.getLong(0)).toSet == df.filter(p).collect().map(_.getLong(0)).toSet,
+        p.toString)
+    }
+  }
+
   test("NOT NULL columns in the dump DDL infer as non-nullable") {
     val dir = Files.createTempDirectory("sqldump_ddl").toFile
     val f = new File(dir, "d.sql")
@@ -297,19 +327,20 @@ class SqlDumpSourceSpec extends AnyFunSuite with SparkSuite {
       StructField("f", FloatType), StructField("whole", DoubleType),
       StructField("dec", DecimalType(12, 3)), StructField("dt", DateType),
       StructField("ts_us", TimestampType), StructField("ntz", TimestampNTZType),
-      StructField("bin", BinaryType), StructField("nul", StringType)))
+      StructField("bin", BinaryType), StructField("arr", ArrayType(DoubleType)),
+      StructField("nul", StringType)))
     val df = spark.createDataFrame(java.util.Arrays.asList(
       Row(7L, "esc'aped\ntext", 2.5, Timestamp.valueOf("2001-02-03 04:05:06"),
         true, 1.toByte, (-2).toShort, 3, 1.5f, 3.0,
         new java.math.BigDecimal("-12.345"), Date.valueOf("2024-02-29"),
         Timestamp.valueOf("2001-02-03 04:05:06.123456"),
         java.time.LocalDateTime.parse("2001-02-03T04:05:06.000789"),
-        Array[Byte](0, -1, 16, 97), null),
+        Array[Byte](0, -1, 16, 97), Seq(0.5, null, -1e20, 3.0), null),
       Row(8L, "", -0.25, Timestamp.valueOf("1969-12-31 23:59:59.5"),
         false, (-128).toByte, 32767.toShort, Int.MinValue, -7.0f, -1e20,
         new java.math.BigDecimal("0.001"), Date.valueOf("1970-01-01"),
         null, java.time.LocalDateTime.parse("1999-12-31T23:59:59"),
-        Array.emptyByteArray, null)), schema)
+        Array.emptyByteArray, Seq.empty, null)), schema)
     def inserts(f: File): Seq[String] = {
       val src = scala.io.Source.fromFile(f, "UTF-8")
       try src.getLines().filter(l => l.startsWith("INSERT INTO ") || l.startsWith("(")).toList
@@ -329,13 +360,13 @@ class SqlDumpSourceSpec extends AnyFunSuite with SparkSuite {
     // planned — before any file is written — naming the column
     val out = new File(Files.createTempDirectory("sqldump_reject").toFile, "dump")
     val e = intercept[Exception](
-      df.select(col("id"), functions.array(col("i32")).as("arr"))
+      df.select(col("id"), functions.map(col("s"), col("i32")).as("m"))
         .write.format("graft.sources.SqlDumpSource")
-        .option("table", "t_arr").mode("append").save(out.getPath))
+        .option("table", "t_map").mode("append").save(out.getPath))
     val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(_.getMessage).toList
-    assert(messages.exists(m => m != null && m.contains("column arr") &&
-      m.contains("ARRAY<INT>")), messages)
+    assert(messages.exists(m => m != null && m.contains("column m") &&
+      m.contains("MAP<STRING, INT>")), messages)
     assert(!out.exists())
   }
 
