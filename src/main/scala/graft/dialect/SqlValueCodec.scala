@@ -6,7 +6,8 @@ import java.time.format.{DateTimeFormatter, DateTimeFormatterBuilder}
 import java.time.temporal.ChronoField
 import java.util.HexFormat
 import scala.util.Try
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Literal, SpecializedGetters}
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
@@ -15,15 +16,18 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The SQL dump's one type mapping, in both directions. For each Spark
   * type it answers: can the dump carry it ([[sqlType]],
   * [[requireWritable]]), what is its DDL name ([[sqlType]], and
-  * [[dataType]] back), how is its literal written ([[formatValue]]),
-  * and how is a literal's token read back and compared ([[decode]],
-  * [[compare]]). The writer, both dump sinks, the dump reader and its
-  * filter pushdown all go through it, so they cannot disagree.
+  * [[dataType]] back), how is its literal written ([[writer]], one per
+  * column, chosen from the type), and how is a literal's token read
+  * back and compared ([[decode]], [[compare]]). The writer, both dump
+  * sinks, the dump reader and its filter pushdown all go through it, so
+  * they cannot disagree.
   *
   * The literal encoder mirrors the reference's `formatValue` /
   * `escapeString` (internal/exporter/exporter.go:312-349) exactly, and
   * is golden-tested against its contract vectors
-  * (exporter_test.go:377-439).
+  * (exporter_test.go:377-439). [[formatValue]] keeps that contract for
+  * external values: it converts one to its Catalyst form and writes it
+  * through the same writers.
   *
   * The dump carries every scalar type plus arrays of numbers or
   * booleans, which it writes as JSON array text in a TEXT column (read
@@ -103,6 +107,127 @@ object SqlValueCodec {
 
   // ---------------------------------------------------------------- encode
 
+  /** Appends the literal of the value at an ordinal of a row (or an
+    * array's element) to a builder.
+    */
+  type ValueWriter = (SpecializedGetters, Int, java.lang.StringBuilder) => Unit
+
+  /** The literal writer of a `dt` column for `dialect`, chosen once per
+    * column: it reads the Catalyst value straight off the row and
+    * appends its literal, `NULL` for a null. Its bytes are the literal
+    * contract of the reference's `formatValue` / `escapeString`
+    * (exporter.go:312-349), which [[formatValue]] keeps for external
+    * values. A map, a struct or an array of anything but numbers or
+    * booleans is refused.
+    */
+  def writer(dt: DataType, dialect: Dialect): ValueWriter = {
+    val value = valueWriter(dt, dialect)
+    (row, i, sb) => if (row.isNullAt(i)) sb.append("NULL") else value(row, i, sb)
+  }
+
+  private def valueWriter(dt: DataType, dialect: Dialect): ValueWriter = dt match {
+    case BooleanType => (r, i, sb) => sb.append(if (r.getBoolean(i)) '1' else '0')
+    case ByteType    => (r, i, sb) => sb.append(r.getByte(i).toInt)
+    case ShortType   => (r, i, sb) => sb.append(r.getShort(i).toInt)
+    case IntegerType => (r, i, sb) => sb.append(r.getInt(i))
+    case LongType    => (r, i, sb) => sb.append(r.getLong(i))
+    case FloatType   => (r, i, sb) => appendFloat(sb, r.getFloat(i))
+    case DoubleType  => (r, i, sb) => appendDouble(sb, r.getDouble(i))
+    case d: DecimalType =>
+      val (p, s) = (d.precision, d.scale)
+      (r, i, sb) => sb.append(r.getDecimal(i, p, s).toJavaBigDecimal.toPlainString)
+    case StringType  => (r, i, sb) => appendString(sb, r.getUTF8String(i))
+    case BinaryType  => (r, i, sb) => sb.append(dialect.binaryLiteral(r.getBinary(i)))
+    case DateType    => (r, i, sb) => {
+      sb.append('\'')
+      appendDate(sb, r.getInt(i))
+      sb.append(" 00:00:00'")
+    }
+    case TimestampType | TimestampNTZType => (r, i, sb) => {
+      sb.append('\'')
+      appendTimestamp(sb, r.getLong(i))
+      sb.append('\'')
+    }
+    // an array of numbers or booleans: JSON array text, '[0.019,0.5]'
+    // (NaN and ±Infinity as written here are accepted by `from_json`)
+    case ArrayType(et @ (_: NumericType | BooleanType | NullType), _) =>
+      val elem: ValueWriter =
+        if (et == BooleanType) (a, j, sb) => sb.append(a.getBoolean(j))
+        else valueWriter(et, dialect)
+      (r, i, sb) => {
+        val a = r.getArray(i)
+        sb.append("'[")
+        var j = 0
+        while (j < a.numElements()) {
+          if (j > 0) sb.append(',')
+          if (a.isNullAt(j)) sb.append("null") else elem(a, j, sb)
+          j += 1
+        }
+        sb.append("]'")
+      }
+    case NullType => (_, _, _) => () // never called: every value is null
+    case other =>
+      throw new IllegalArgumentException(s"sqldump: cannot write type ${other.sql}")
+  }
+
+  /** Go's `%v` for a double (shortest round-trip repr): a whole value
+    * below 1e15 prints without a fractional part, 5.0 → "5".
+    */
+  private def appendDouble(sb: java.lang.StringBuilder, d: Double): Unit = {
+    val l = d.toLong
+    if (l == d && math.abs(d) < 1e15) sb.append(l) else sb.append(d)
+  }
+
+  private def appendFloat(sb: java.lang.StringBuilder, f: Float): Unit = {
+    val l = f.toLong
+    if (l == f && math.abs(f) < 1e7f) sb.append(l) else sb.append(f)
+  }
+
+  /** Escape + single-quote a string: backslash, quote-doubling, and the
+    * control characters NUL, LF, CR, SUB — same set and same order as the
+    * reference (exporter.go:339-349).
+    */
+  def escapeString(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length + 2)
+    appendQuoted(sb, s)
+    sb.toString
+  }
+
+  private def appendQuoted(sb: java.lang.StringBuilder, s: String): Unit = {
+    sb.append('\'')
+    var i = 0
+    while (i < s.length) {
+      appendEscaped(sb, s.charAt(i))
+      i += 1
+    }
+    sb.append('\'')
+  }
+
+  /** [[escapeString]] of a Catalyst string: an ASCII one is escaped from
+    * its bytes; any other is decoded as the JVM decodes it.
+    */
+  private def appendString(sb: java.lang.StringBuilder, u: UTF8String): Unit =
+    if (!u.isFullAscii) appendQuoted(sb, u.toString)
+    else {
+      sb.append('\'')
+      var i = 0
+      while (i < u.numBytes) {
+        appendEscaped(sb, u.getByte(i).toChar)
+        i += 1
+      }
+      sb.append('\'')
+    }
+
+  private def appendEscaped(sb: java.lang.StringBuilder, c: Char): Unit = c match {
+    case '\\'     => sb.append("\\\\")
+    case '\''     => sb.append("''")
+    case '\u0000' => sb.append("\\0")
+    case '\n'     => sb.append("\\n")
+    case '\r'     => sb.append("\\r")
+    case '\u001a' => sb.append("\\Z")
+    case c        => sb.append(c)
+  }
+
   private val tsFmt =
     DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss").withZone(ZoneOffset.UTC)
 
@@ -118,6 +243,66 @@ object SqlValueCodec {
     if (micros == 0) base else f"$base.$micros%06d"
   }
 
+  /** [[formatInstant]] of epoch micros, from the micros themselves for
+    * the years 1–9999. No `java.sql.Timestamp` is involved, so a value in
+    * the days the 1582 Julian-Gregorian cutover skipped (10-05 to 10-14)
+    * writes as itself, as the dump reader reads it back.
+    */
+  private def appendTimestamp(sb: java.lang.StringBuilder, micros: Long): Unit = {
+    val secs = Math.floorDiv(micros, 1000000L)
+    val fraction = Math.floorMod(micros, 1000000L).toInt
+    val secOfDay = Math.floorMod(secs, 86400L).toInt
+    if (!appendDay(sb, Math.floorDiv(secs, 86400L)))
+      sb.append(formatInstant(DateTimeUtils.microsToInstant(micros)))
+    else {
+      sb.append(' ')
+      appendPadded(sb, secOfDay / 3600, 2)
+      sb.append(':')
+      appendPadded(sb, secOfDay / 60 % 60, 2)
+      sb.append(':')
+      appendPadded(sb, secOfDay % 60, 2)
+      if (fraction != 0) {
+        sb.append('.')
+        appendPadded(sb, fraction, 6)
+      }
+    }
+  }
+
+  /** A date's text: `yyyy-MM-dd` of its epoch day in the years 1–9999.
+    * Outside them, the text of its `java.sql.Date` the dump has always
+    * written (a year past 9999 keeps only its last four digits).
+    */
+  private def appendDate(sb: java.lang.StringBuilder, days: Int): Unit =
+    if (!appendDay(sb, days)) sb.append(DateTimeUtils.toJavaDate(days).toString)
+
+  /** Appends `yyyy-MM-dd` of an epoch day in the years 1–9999, or
+    * nothing and false outside them.
+    */
+  private def appendDay(sb: java.lang.StringBuilder, days: Long): Boolean = {
+    val date = LocalDate.ofEpochDay(days)
+    val year = date.getYear
+    year >= 1 && year <= 9999 && {
+      appendPadded(sb, year, 4)
+      sb.append('-')
+      appendPadded(sb, date.getMonthValue, 2)
+      sb.append('-')
+      appendPadded(sb, date.getDayOfMonth, 2)
+      true
+    }
+  }
+
+  /** A non-negative int, zero-padded to `width` digits. */
+  private def appendPadded(sb: java.lang.StringBuilder, v: Int, width: Int): Unit = {
+    var bound = 10
+    var digits = 1
+    while (digits < width) {
+      if (v < bound) sb.append('0')
+      bound *= 10
+      digits += 1
+    }
+    sb.append(v)
+  }
+
   /** Lower-case hex of a byte array. */
   def hex(b: Array[Byte]): String = HexFormat.of().formatHex(b)
 
@@ -129,81 +314,29 @@ object SqlValueCodec {
     */
   def formatBinary(b: Array[Byte]): String = "X'" + hex(b) + "'"
 
-  /** Escape + single-quote a string: backslash, quote-doubling, and the
-    * control characters NUL, LF, CR, SUB — same set and same order as the
-    * reference (exporter.go:339-349).
-    */
-  def escapeString(s: String): String = {
-    val sb = new StringBuilder(s.length + 2)
-    sb.append('\'')
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\\'   => sb.append("\\\\")
-        case '\''   => sb.append("''")
-        case '\u0000' => sb.append("\\0")
-        case '\n'   => sb.append("\\n")
-        case '\r'   => sb.append("\\r")
-        case '\u001a' => sb.append("\\Z")
-        case c      => sb.append(c)
-      }
-      i += 1
-    }
-    sb.append('\'')
-    sb.toString
-  }
-
-  /** Render a double like Go's `%v` (shortest round-trip repr; integral
-    * values print without a fractional part: 5.0 → "5", 3.14 → "3.14").
-    */
-  private def formatDouble(d: Double): String =
-    if (d.isWhole && math.abs(d) < 1e15 && !d.isInfinite) d.toLong.toString
-    else d.toString
-
-  private def formatFloat(f: Float): String =
-    if (f.isWhole && math.abs(f) < 1e7 && !f.isInfinite) f.toLong.toString
-    else f.toString
-
   /** Format any row value as a SQL literal (exporter.go:312-336), in the
     * reference's MySQL/SQLite form.
     */
   def formatValue(v: Any): String = formatValue(v, MySqlDialect)
 
-  /** Format any row value as a SQL literal for `dialect`: binary goes
-    * through [[Dialect.binaryLiteral]] (PostgreSQL needs bytea
-    * hex-input, not the X'…' form).
+  /** Format an external row value (as a `Row` holds it) as a SQL literal
+    * for `dialect`: converted to its Catalyst form, then written by the
+    * column [[writer]] of its type.
     */
-  def formatValue(v: Any, dialect: Dialect): String = v match {
-    case null                     => "NULL"
-    case None                     => "NULL"
-    case b: Boolean               => if (b) "1" else "0"
-    case i: Byte                  => i.toString
-    case i: Short                 => i.toString
-    case i: Int                   => i.toString
-    case i: Long                  => i.toString
-    case i: java.math.BigDecimal  => i.toPlainString
-    case i: BigDecimal            => i.bigDecimal.toPlainString
-    case d: Double                => formatDouble(d)
-    case f: Float                 => formatFloat(f)
-    case b: Array[Byte]           => dialect.binaryLiteral(b)
-    case s: String                => escapeString(s)
-    // Spark's java.sql conversion rebases a timestamp before 1582 onto
-    // the Julian calendar; undo it, or `t.toInstant` is days off
-    case t: java.sql.Timestamp    => escapeString(formatInstant(
-      DateTimeUtils.microsToInstant(DateTimeUtils.fromJavaTimestamp(t))))
-    case t: java.time.Instant     => escapeString(formatInstant(t))
-    case t: java.time.LocalDateTime => // TIMESTAMP_NTZ external type
-      escapeString(formatInstant(t.toInstant(ZoneOffset.UTC)))
-    case d: java.sql.Date         => escapeString(d.toString + " 00:00:00")
-    case d: java.time.LocalDate   => escapeString(d.toString + " 00:00:00")
-    // an array of numbers or booleans: JSON array text, '[0.019,0.5]'
-    // (NaN and ±Infinity as written here are accepted by `from_json`)
-    case a: scala.collection.Seq[_] => escapeString(a.map {
-      case null       => "null"
-      case b: Boolean => b.toString
-      case e          => formatValue(e)
-    }.mkString("[", ",", "]"))
-    case other                    => escapeString(other.toString)
+  def formatValue(v: Any, dialect: Dialect): String = {
+    val dt = externalType(v)
+    val sb = new java.lang.StringBuilder(16)
+    writer(dt, dialect)(InternalRow(CatalystTypeConverters.createToCatalystConverter(dt)(v)), 0, sb)
+    sb.toString
+  }
+
+  /** The Spark type of an external value: a sequence is an array of its
+    * first non-null element's type.
+    */
+  private def externalType(v: Any): DataType = v match {
+    case null | None                => NullType
+    case s: scala.collection.Seq[_] => ArrayType(s.find(_ != null).fold[DataType](NullType)(externalType))
+    case other                      => Literal(other).dataType
   }
 
   // ---------------------------------------------------------------- decode

@@ -7,6 +7,8 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.FutureAction
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.types.StructType
 import graft.dialect.{Dialect, SqlValueCodec}
 import graft.analyse.TableMeta
 
@@ -18,16 +20,22 @@ import graft.analyse.TableMeta
   * is written strictly in order, on the calling thread, through a 64 KB
   * buffered writer; everything before the write runs concurrently. The
   * write itself is not the bound: at sf0.01 on a 4-core host the 7.1 MB
-  * dump's write took about 0.012 s, while planning the 10 tables' render
-  * RDDs one after another took 0.25–0.35 s (each `Dataset.rdd` plans its
-  * table, about 25 ms) and running their 10 one-task jobs one after
-  * another took 0.44–0.61 s at a core utilisation of 0.07. So
+  * dump's write took about 0.005 s, while planning the 10 tables'
+  * render RDDs one after another took about 0.2 s (20 ms a table) and
+  * their 10 one-task jobs ran 0.34 s of executor time. So
   * [[TuplePrefetcher]] plans the tables on a small driver pool and keeps
   * up to one partition job per core in flight, while the writer takes
   * the partitions in (table, partition) order.
   *
-  * The companion owns the dump format — [[DumpWriter.renderTuple]] and
-  * [[DumpWriter.InsertWriter]] — and the parallel sink
+  * A table's tuples are rendered from the `InternalRow`s its executed
+  * plan produces ([[DumpWriter.tupleRdd]]), so no external `Row` is
+  * built and the plan has no object (de)serialiser stages to compile.
+  * At sf0.1 (893k rows, cached, 4 partitions, `local[4]`) rendering
+  * took 0.16 s on top of a 0.16 s scan; deserialising each row first
+  * ([[DumpWriter.renderTuples]]) took 0.44 s on top of it.
+  *
+  * The companion owns the dump format — [[DumpWriter.tupleRenderer]]
+  * and [[DumpWriter.InsertWriter]] — and the parallel sink
   * (`sources.SqlDumpSource`) writes through the same two, so both sinks
   * emit the same bytes by construction.
   */
@@ -95,27 +103,61 @@ object DumpWriter {
   val DefaultBatchSize = 1000   // exporter.go:16-17
   val WriterBufferBytes = 64 * 1024 // exporter.go:19-21
 
-  /** A row's "(v1, v2, …)" tuple text (exporter.go:274-309). */
-  def renderTuple(row: Row, dialect: Dialect): String = {
-    val sb = new java.lang.StringBuilder(64)
-    sb.append('(')
-    var i = 0
-    while (i < row.length) {
-      if (i > 0) sb.append(", ")
-      sb.append(SqlValueCodec.formatValue(row.get(i), dialect))
-      i += 1
+  /** A `schema` row's "(v1, v2, …)" tuple text (exporter.go:274-309),
+    * written straight from the Catalyst row by one
+    * [[SqlValueCodec.writer]] per column, chosen here once. The renderer
+    * reuses one builder, so each task or thread makes its own.
+    */
+  def tupleRenderer(schema: StructType, dialect: Dialect): InternalRow => String = {
+    val columns = schema.fields.map(f => SqlValueCodec.writer(f.dataType, dialect))
+    val sb = new java.lang.StringBuilder(128)
+    row => {
+      sb.setLength(0)
+      sb.append('(')
+      var i = 0
+      while (i < columns.length) {
+        if (i > 0) sb.append(", ")
+        columns(i)(row, i, sb)
+        i += 1
+      }
+      sb.append(')').toString
     }
-    sb.append(')').toString
   }
 
-  /** Render each row's tuple text ON THE EXECUTORS — the literal codec
-    * is the per-row CPU cost, and pre-rendering keeps the driver tail to
-    * pure sequential IO. The narrow map preserves row order, so draining
-    * partitions in order reproduces the input order.
+  /** Each row's tuple text, rendered ON THE EXECUTORS from the rows the
+    * frame's executed plan produces, so no external `Row` is built. The
+    * narrow map keeps row order, so draining the partitions in order
+    * reproduces the input order. The export drain runs this.
+    */
+  private[graft] def tupleRdd(df: DataFrame, dialect: Dialect): RDD[String] = {
+    val (schema, d) = (df.schema, dialect) // stable locals for the closure
+    df.queryExecution.toRdd.mapPartitions { rows =>
+      val render = tupleRenderer(schema, d)
+      rows.map(render)
+    }
+  }
+
+  /** The `Row` adapter of [[tupleRenderer]]: each row is converted to
+    * its Catalyst form first.
+    */
+  private def rowRenderer(schema: StructType, dialect: Dialect): Row => String = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val render = tupleRenderer(schema, dialect)
+    row => render(toCatalyst(row).asInstanceOf[InternalRow])
+  }
+
+  /** The tuple text of a row of a Dataset (it carries its schema). */
+  def renderTuple(row: Row, dialect: Dialect): String = rowRenderer(row.schema, dialect)(row)
+
+  /** [[tupleRdd]]'s text as a Dataset, rendered through the `Row`
+    * adapter: the frame's rows are deserialised first.
     */
   def renderTuples(df: DataFrame, dialect: Dialect): Dataset[String] = {
-    val d = dialect // stable local for the closure
-    df.mapPartitions(_.map(renderTuple(_, d)))(Encoders.STRING)
+    val (schema, d) = (df.schema, dialect) // stable locals for the closure
+    df.mapPartitions { rows =>
+      val render = rowRenderer(schema, d)
+      rows.map(render)
+    }(Encoders.STRING)
   }
 
   /** Streaming multi-row INSERT writer (exporter.go:233-239, 274-309):
@@ -146,7 +188,7 @@ object DumpWriter {
   * partitions to ONE writer thread in (table, partition) order.
   *
   *   - A driver pool of min(#frames, W) threads builds each frame's
-  *     [[DumpWriter.renderTuples]] RDD (Catalyst planning, plus any job
+  *     [[DumpWriter.tupleRdd]] (Catalyst planning, plus any job
   *     the planning starts, such as an adaptive query stage or a cache
   *     fill), under an export-private job group with the frame's session
   *     active.
@@ -198,7 +240,7 @@ private[export] final class TuplePrefetcher(frames: Seq[DataFrame], dialect: Dia
     try {
       sc.get.setJobGroup(group, "graft export: plan the dump of a table")
       SparkSession.setActiveSession(df.sparkSession)
-      val rdd = DumpWriter.renderTuples(df, dialect).rdd
+      val rdd = DumpWriter.tupleRdd(df, dialect)
       rdd.partitions
       synchronized { rdds(i) = rdd; submit(); notifyAll() }
     } catch {

@@ -58,7 +58,11 @@ object Subset {
           f.referencedTable == t && f.table != t && r(f.table))
         if (childEdges.isEmpty) r
         else {
-          val refCol = childEdges.head.referencedColumn
+          val refCols = childEdges.map(_.referencedColumn).distinct
+          require(refCols.size == 1,
+            s"subset: restricted children reference table $t through different columns " +
+              s"(${refCols.sorted.mkString(", ")}); the UP sweep keeps its rows by one column")
+          val refCol = refCols.head
           val refs = childEdges.map(f => kept(f.table).select(col(f.column).as("__k")))
             .reduce(_ unionAll _).distinct()
           kept(t) = graft.ops.OpCaches.persist(

@@ -6,8 +6,7 @@ import java.util
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -211,9 +210,10 @@ private[sources] class SqlDumpTable(tableSchema: StructType, paths: Seq[String],
   * ordered-file `export.DumpWriter`: every input partition renders its
   * own `part-NNNNN.sql` of batched INSERT statements (executor-side,
   * no driver funnel) through the ordered dump's own format —
-  * `DumpWriter.renderTuple` per row, `DumpWriter.InsertWriter` per
-  * file — so both sinks write the same tuples and statements by
-  * construction. Column types are checked when the write is planned,
+  * `DumpWriter.tupleRenderer` per row, straight from the `InternalRow`
+  * the write receives, and `DumpWriter.InsertWriter` per file — so both
+  * sinks write the same tuples and statements by construction. Column
+  * types are checked when the write is planned,
   * by the same `SqlValueCodec.requireWritable` the ordered export
   * calls: a column the dump cannot carry (a map, a struct, an array of
   * anything but numbers or booleans) is rejected there, naming the
@@ -294,12 +294,12 @@ private[sources] final class SqlDumpDataWriter(
   private val out = new java.io.BufferedWriter(
     new OutputStreamWriter(new FileOutputStream(tmpFile), UTF_8), DumpWriter.WriterBufferBytes)
 
-  private val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+  private val render = DumpWriter.tupleRenderer(schema, dialect)
   private val inserts = new DumpWriter.InsertWriter(out, dialect, table,
     schema.fieldNames.toSeq, batchSize)
 
   override def write(row: InternalRow): Unit =
-    inserts.write(DumpWriter.renderTuple(toRow(row).asInstanceOf[Row], dialect))
+    inserts.write(render(row))
 
   override def commit(): WriterCommitMessage = {
     inserts.close()

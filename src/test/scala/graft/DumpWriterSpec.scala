@@ -156,6 +156,44 @@ class DumpWriterSpec extends AnyFunSuite with SparkSuite {
     assert(text == dump(tables.map { case (t, df) => t -> df.coalesce(1) }))
   }
 
+  test("the export's InternalRow drain and renderTuples render the same tuples") {
+    // the sf0.01 fixture, next to the suite's own sf0.001
+    val fixtures = ParquetSource(spark, new java.io.File(sfDir).getParent + "/sf0.01")
+    assert(fixtures.tables.size == 10 && fixtures.tables.contains("embeddings"))
+    val frames = fixtures.tables.map(t => (t, fixtures.read(t), Seq(MySqlDialect))) :+
+      (("every type", EveryType.frame(spark), Seq(MySqlDialect, PostgresDialect)))
+    for ((name, df, dialects) <- frames; dialect <- dialects) {
+      val drained = DumpWriter.tupleRdd(df, dialect).collect().toSeq
+      val rendered = DumpWriter.renderTuples(df, dialect).collect().toSeq
+      assert(drained.nonEmpty, name)
+      assert(drained == rendered, s"$name ${dialect.name}")
+    }
+  }
+
+  test("the rendered plans keep a Project computing each faker, static and NULL column") {
+    import graft.config.{FakerRule, NullRule, StaticRule}
+    val source = ParquetSource(spark, sfDir)
+    val rules = Map(
+      "customer" -> TableConfig(columns = Map("c_name" -> FakerRule("name"),
+        "c_mktsegment" -> StaticRule("SEGMENT-94"))),
+      "events" -> TableConfig(retain = graft.config.RetainCount(100),
+        columns = Map("props" -> NullRule)))
+    for ((table, tc) <- rules; (column, rule) <- tc.columns) {
+      val marker = rule match {
+        case NullRule      => s"null AS $column#"
+        case StaticRule(v) => s"$v AS $column#"
+        case FakerRule(_)  => s" AS $column#"
+      }
+      val anon = graft.anonymise.Anonymiser(source.scan(table, tc.retain), tc)
+      for (plan <- Seq(DumpWriter.renderTuples(anon, SqliteDialect).queryExecution.executedPlan,
+                       anon.queryExecution.executedPlan)) {
+        val projects = plan.toString.linesIterator.filter(_.contains("Project [")).toSeq
+        assert(projects.exists(_.contains(marker)),
+          s"no projection computes `$marker` in\n$plan")
+      }
+    }
+  }
+
   private def leftoverJobs(before: Set[Int]): Seq[String] = {
     val tracker = spark.sparkContext.statusTracker
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
@@ -225,6 +263,42 @@ class DumpWriterSpec extends AnyFunSuite with SparkSuite {
     val left = leftoverJobs(before)
     assert(left.isEmpty, "a partition job outlived the failed export: " + left.mkString(", "))
   }
+}
+
+/** One frame with every type the dump carries: a row of plain values, a
+  * row of edge values (escapes, non-BMP text, NaN and ±Infinity, dates
+  * and timestamps before 1582) and a row of nulls in every column.
+  */
+private[graft] object EveryType {
+  import java.sql.{Date, Timestamp}
+  import java.time.LocalDateTime
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.types._
+
+  val schema: StructType = StructType(Seq(
+    StructField("b", BooleanType), StructField("i8", ByteType), StructField("i16", ShortType),
+    StructField("i32", IntegerType), StructField("i64", LongType), StructField("f", FloatType),
+    StructField("d", DoubleType), StructField("dec", DecimalType(12, 3)),
+    StructField("wide", DecimalType(38, 18)), StructField("s", StringType),
+    StructField("bin", BinaryType), StructField("dt", DateType), StructField("ts", TimestampType),
+    StructField("ntz", TimestampNTZType), StructField("ad", ArrayType(DoubleType)),
+    StructField("af", ArrayType(FloatType)), StructField("al", ArrayType(LongType)),
+    StructField("adec", ArrayType(DecimalType(5, 2))), StructField("ab", ArrayType(BooleanType))))
+
+  def frame(spark: SparkSession): DataFrame = spark.createDataFrame(java.util.Arrays.asList(
+    Row(true, 1.toByte, (-2).toShort, 3, 4L, 1.5f, 2.5, new java.math.BigDecimal("-12.345"),
+      new java.math.BigDecimal("0.000000000000000001"), "plain", Array[Byte](0, -1, 16, 97),
+      Date.valueOf("2024-02-29"), Timestamp.valueOf("2001-02-03 04:05:06.123456"),
+      LocalDateTime.parse("2001-02-03T04:05:06"), Seq(0.5, null, 3.0), Seq(0.019f, 1e7f),
+      Seq(1L, null, -3L), Seq(new java.math.BigDecimal("1.50"), null), Seq(true, null, false)),
+    Row(false, (-128).toByte, 32767.toShort, Int.MinValue, Long.MaxValue, Float.NaN,
+      Double.NegativeInfinity, new java.math.BigDecimal("0.001"),
+      new java.math.BigDecimal("-12345678901234567890.123456789012345678"),
+      "a\\b'c\u0000d\ne\rf\u001ag 𝄞 é", Array.emptyByteArray, Date.valueOf("1000-01-01"),
+      Timestamp.valueOf("1000-01-01 12:00:00.25"), LocalDateTime.parse("0001-01-01T00:00:00"),
+      Seq(Double.NaN, -0.0, 1e15), Seq(Float.PositiveInfinity, null), Seq.empty[Long],
+      Seq.empty[java.math.BigDecimal], Seq.empty[Boolean]),
+    Row.fromSeq(Seq.fill(schema.size)(null))), schema)
 }
 
 /** Raised by the slow renders of the cancel case; a static, since task

@@ -1930,6 +1930,31 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("subset closure: refuses a table its restricted children reference through two columns") {
+    import org.apache.spark.sql.{Row, types => T}
+    import org.apache.spark.sql.functions.col
+    def frame(cols: String*)(rows: Seq[Long]*): org.apache.spark.sql.DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*),
+        T.StructType(cols.map(T.StructField(_, T.LongType))))
+    // c1 references p by id and c2 by code; once the anchor restricts
+    // both children, p must keep the rows either of them references
+    val tables = Map(
+      "a"  -> frame("id")(Seq(1L), Seq(2L)),
+      "p"  -> frame("id", "code")(Seq(1L, 10L), Seq(2L, 20L)),
+      "c1" -> frame("id", "a_id", "p_id")(Seq(1L, 1L, 1L), Seq(2L, 2L, 2L)),
+      "c2" -> frame("id", "a_id", "p_code")(Seq(1L, 1L, 20L), Seq(2L, 2L, 10L)))
+    val fks = Seq(
+      graft.analyse.ForeignKey("c1", "a_id", "a", "id"),
+      graft.analyse.ForeignKey("c2", "a_id", "a", "id"),
+      graft.analyse.ForeignKey("c1", "p_id", "p", "id"),
+      graft.analyse.ForeignKey("c2", "p_code", "p", "code"))
+    try {
+      val e = intercept[IllegalArgumentException](
+        graft.export.Subset.closure(tables, fks, "a", col("id") === 1L))
+      assert(e.getMessage.contains("table p") && e.getMessage.contains("(code, id)"), e.getMessage)
+    } finally graft.ops.OpCaches.releaseAll()
+  }
+
   test("sq8: recall@10 beats PQ and clears the 0.7 verdict floor") {
     def recallOf(ann: org.apache.spark.sql.DataFrame): Double = {
       val exact = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 10), 10)

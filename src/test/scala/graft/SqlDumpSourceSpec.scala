@@ -346,15 +346,24 @@ class SqlDumpSourceSpec extends AnyFunSuite with SparkSuite {
       try src.getLines().filter(l => l.startsWith("INSERT INTO ") || l.startsWith("(")).toList
       finally src.close()
     }
-    for (dialect <- Seq(MySqlDialect, PostgresDialect)) {
+    // the sink's and the serial writer's INSERT lines for `frame`
+    def both(frame: DataFrame, dialect: Dialect): (Seq[String], Seq[String]) = {
       val out = new File(Files.createTempDirectory("sqldump_parity").toFile, "dump")
-      df.coalesce(1).write.format("graft.sources.SqlDumpSource")
+      frame.coalesce(1).write.format("graft.sources.SqlDumpSource")
         .option("table", "t_parity").option("dialect", dialect.name)
         .mode("append").save(out.getPath)
-      val serial = inserts(writeDump(df, "t_parity", dialect))
+      val serial = inserts(writeDump(frame, "t_parity", dialect))
       val parPart = out.listFiles().filter(_.getName.startsWith("part-")).head
-      assert(inserts(parPart) == serial, dialect.name)
+      (inserts(parPart), serial)
+    }
+    for (dialect <- Seq(MySqlDialect, PostgresDialect)) {
+      val (parallel, serial) = both(df, dialect)
+      assert(parallel == serial, dialect.name)
       assert(serial.length == 3 && serial(1).endsWith(", NULL),"), serial)
+      // every type the dump carries, with a null in each column
+      val (everyParallel, everySerial) = both(EveryType.frame(spark), dialect)
+      assert(everyParallel == everySerial, dialect.name)
+      assert(everySerial.length == 4 && everySerial(3).startsWith("(NULL, NULL"), everySerial)
     }
     // a column the codec cannot render is refused when the write is
     // planned — before any file is written — naming the column
