@@ -268,12 +268,12 @@ object SqlValueCodec {
     }
   }
 
-  /** A date's text: `yyyy-MM-dd` of its epoch day in the years 1–9999.
-    * Outside them, the text of its `java.sql.Date` the dump has always
-    * written (a year past 9999 keeps only its last four digits).
+  /** A date's text: `yyyy-MM-dd` of its epoch day, with the ISO signed
+    * year outside the years 1–9999 (`+10000-01-01`, as a timestamp of that
+    * year writes), which [[decode]] reads back.
     */
   private def appendDate(sb: java.lang.StringBuilder, days: Int): Unit =
-    if (!appendDay(sb, days)) sb.append(DateTimeUtils.toJavaDate(days).toString)
+    if (!appendDay(sb, days)) sb.append(LocalDate.ofEpochDay(days).toString)
 
   /** Appends `yyyy-MM-dd` of an epoch day in the years 1–9999, or
     * nothing and false outside them.
@@ -385,7 +385,7 @@ object SqlValueCodec {
     case BooleanType   => tok != "0" // the encoder writes booleans as 1/0
     case d: DecimalType => Decimal(BigDecimal(tok), d.precision, d.scale)
     case TimestampType | TimestampNTZType => parseTimestampMicros(tok)
-    case DateType      => LocalDate.parse(tok.take(10)).toEpochDay.toInt
+    case DateType      => LocalDate.parse(tok.takeWhile(_ != ' ')).toEpochDay.toInt
     case BinaryType    => decodeBinary(tok)
     case other =>
       throw new IllegalArgumentException(s"sqldump: cannot decode to $other")

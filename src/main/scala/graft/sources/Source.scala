@@ -136,19 +136,10 @@ object ParquetSource {
     (root.toAbsolutePath.normalize.toString, n, bytes, mtime)
   }
 
-  /** `SPARK_GRAFT_SCHEMA_MEMO=off` disables the memo — the A/B knob
-    * that keeps this catalog-wide lever attributable (its share of any
-    * whole-suite delta can be re-measured every round, mirroring
-    * SPARK_GRAFT_CODEGEN_CACHE on the codegen-cache lever).
-    */
-  private val memoEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_SCHEMA_MEMO").contains("off")
-
   /** Parquet read with the schema served from [[schemaMemo]] when the
     * file set is unchanged; plain inferred read (memoising) otherwise.
     */
   def readParquet(spark: SparkSession, path: String): DataFrame = {
-    if (!memoEnabled) return spark.read.parquet(path)
     if (schemaMemo.size > 1024) schemaMemo.clear() // stale-fixture bound
     // inference output depends on session flags (TIMESTAMP(NANOS) →
     // long only under the legacy flag), so the flag is part of the key:

@@ -26,4 +26,12 @@ object GraftShims {
   def cacheManagerIsEmpty(spark: org.apache.spark.sql.SparkSession): Boolean =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty
+
+  /** Blocks until the listener bus has delivered every event posted so
+    * far (at most 10 s, then a `TimeoutException`) — e.g. the
+    * `QueryExecutionListener` callback of an action that just returned.
+    * `SparkContext.listenerBus` is `private[spark]`.
+    */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

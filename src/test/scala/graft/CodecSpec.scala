@@ -204,9 +204,9 @@ class CodecSpec extends AnyFunSuite {
       (DateType, day(1582, 10, 15), "'1582-10-15 00:00:00'"),
       (DateType, day(1, 1, 1), "'0001-01-01 00:00:00'"),
       (DateType, day(9999, 12, 31), "'9999-12-31 00:00:00'"),
-      // a year past 9999 keeps only its last four digits (java.sql.Date text)
-      (DateType, day(10000, 1, 1), "'0000-01-01 00:00:00'"),
-      (DateType, day(12345, 6, 7), "'2345-06-07 00:00:00'"),
+      // a year past 9999 writes its ISO signed year, as a timestamp does
+      (DateType, day(10000, 1, 1), "'+10000-01-01 00:00:00'"),
+      (DateType, day(12345, 6, 7), "'+12345-06-07 00:00:00'"),
       (ArrayType(DoubleType), arr(0.5, null, -1e20, 3.0, Double.NaN, Double.NegativeInfinity, -0.0, 1e15),
         "'[0.5,null,-1.0E20,3,NaN,-Infinity,0,1.0E15]'"),
       (ArrayType(FloatType), arr(0.019f, null, 1e7f, 9999999.0f, Float.PositiveInfinity),

@@ -57,7 +57,12 @@ class SqlDumpSourceSpec extends AnyFunSuite with SparkSuite {
         java.sql.Timestamp.valueOf("1970-01-01 00:00:01"), None, Seq.empty[Option[Float]]),
       // before the 1582 Gregorian cutover: java.sql values are rebased
       (3L, 0, "julian", 0.0, true, java.sql.Date.valueOf("1000-01-01"),
-        java.sql.Timestamp.valueOf("1000-01-01 12:00:00"), None, null)
+        java.sql.Timestamp.valueOf("1000-01-01 12:00:00"), None, null),
+      // years past 9999 carry a signed five-digit year
+      (4L, 1, "y10k", 1.0, false, java.sql.Date.valueOf(java.time.LocalDate.of(10000, 1, 1)),
+        java.sql.Timestamp.valueOf("2000-01-01 00:00:00"), None, null),
+      (5L, 2, "y12345", 2.0, true, java.sql.Date.valueOf(java.time.LocalDate.of(12345, 6, 7)),
+        java.sql.Timestamp.valueOf("2000-01-01 00:00:00"), None, null)
     ).toDF("id", "n", "s", "d", "b", "dt", "ts", "f", "arr")
     val dump = writeDump(df, "t_types")
     val back = readBack(dump.getPath, "t_types")

@@ -7,22 +7,28 @@ field holding the raw run output) or the engine's own one-line
 
 Usage: bench_delta.py OLD.json NEW.json [threshold]
   threshold (default 1.5): flag queries whose NEW/OLD ratio exceeds it.
+Exit 2 if the two files were timed differently (see bench_artifact.py).
 """
 import json
 import re
 import sys
 
+from bench_artifact import require_same_timing, timing
+
 
 def load(path):
+    """(key -> seconds, timing) of an artifact or a driver wrapper."""
     with open(path) as f:
         doc = json.load(f)
     if "queries" in doc:
-        return {k: v for k, v in doc["queries"].items() if v >= 0}
+        return {k: v for k, v in doc["queries"].items() if v >= 0}, timing(doc)
     # driver wrapper: parse the tail's JSON fragment and/or stderr lines
     tail = doc.get("tail", "")
+    m = re.search(r'"timing":"(\w+)"', tail)
+    timed = m.group(1) if m else "count"
     # non-query numeric JSON keys that the fragment regex would otherwise
     # swallow (e.g. "value": the whole-suite total)
-    NOT_QUERIES = {"value", "sf", "n", "rc", "cpus"}
+    NOT_QUERIES = {"value", "sf", "n", "rc", "cpus", "nodes", "exchanges"}
     out = {}
     for m in re.finditer(r'"([a-z0-9_]+)":(-?[0-9.]+)', tail):
         v = float(m.group(2))
@@ -40,13 +46,14 @@ def load(path):
             stderr_min[k] = v
     for k, v in stderr_min.items():
         out.setdefault(k, v)
-    return out
+    return out, timed
 
 
 def main():
     if len(sys.argv) < 3:
         sys.exit(__doc__)
-    old, new = load(sys.argv[1]), load(sys.argv[2])
+    (old, old_timing), (new, new_timing) = load(sys.argv[1]), load(sys.argv[2])
+    require_same_timing(old_timing, new_timing, sys.argv[1], sys.argv[2])
     threshold = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
     shared = sorted(set(old) & set(new))
     print(f"old: {len(old)} queries ({sum(old.values()):.1f}s)  "

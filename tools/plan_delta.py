@@ -1,37 +1,45 @@
 #!/usr/bin/env python3
-"""Diff two PLANS_r{N}.json artifacts (graft.Plans output).
+"""Diff the plan digests of two graft.Bench artifacts.
 
-Usage: tools/plan_delta.py PLANS_rA.json PLANS_rB.json
+Usage: tools/plan_delta.py OLD.json NEW.json
 
-Splits a bench-ratio shift into plan drift vs environment drift: queries
-whose digest is unchanged ran byte-identical (normalized) plans — any
-timing delta on them is host/JIT epoch, not a regression. Queries listed
-under CHANGED deserve a real look (rerun graft.Plans with
-SPARK_GRAFT_PLANS_DUMP=dir on both commits and diff the .txt trees).
+Each file is graft.Bench output (BENCH_full.json); its "plans" map holds
+one structural digest per key, taken from the same noop execution as
+the key's time: MD5 over the final physical plan's operators (class,
+join type and build side, exchange partitioning and partition count,
+AQE shuffle-read coalescing), with AQE's wrappers unwrapped, a Union's
+children in digest order, and no expression text, ids, paths, literals
+or seeds. Two executions of one plan shape digest alike, so a key whose
+digest is unchanged ran the same plan and any timing delta on it is
+host/JIT epoch, not a regression. Keys listed under CHANGED deserve a
+real look: rerun graft.Bench with --plans-dir DIR and those keys on
+both commits, and diff DIR/<key>.txt.
 
-Caveat: DISTINCT-AGGREGATE plans (q_profile, and the countDistinct in
-the o23–o27/o30 roundtrip checks) can change digest when UNRELATED
-catalog edits — or even catalog-run execution order within one
-process — shift expression-id allocation — Spark's
-RewriteDistinctAggregates groups distinct columns and ORDERS the
-Expand/grouping keys in exprId-dependent order, permuting labels and
-key order beyond what textual scrubbing can hide. The tell: node and
-Exchange counts are identical and the tree diff shows the same keys,
-functions and children in a different order.
-Digests are reproducible for a fixed code state (verified two-process
-identical); the dump-and-diff workflow above distinguishes that
-relabeling from real drift in one look.
+The digest embeds each shuffle's partition count, which follows the core
+count (SPARK_GRAFT_CPUS) and the input size; compare artifacts made
+with the same cores and fixture.
+
+Exit 2 if the files were timed differently (the older PLANS_r*.json
+files are regex-scrubbed count-era digests, see bench_artifact.py);
+exit 1 if any digest changed or NEW has an errored key; else 0.
 """
-import json
 import sys
+
+from bench_artifact import load, require_same_timing, timing
+
+
+def plans(doc):
+    # an older PLANS_r*.json file is the bare key -> digest map
+    return doc.get("plans", doc)
 
 
 def main() -> int:
     if len(sys.argv) != 3:
         print(__doc__.strip())
         return 2
-    a = json.load(open(sys.argv[1]))
-    b = json.load(open(sys.argv[2]))
+    da, db = load(sys.argv[1]), load(sys.argv[2])
+    require_same_timing(timing(da), timing(db), sys.argv[1], sys.argv[2])
+    a, b = plans(da), plans(db)
     added = sorted(set(b) - set(a))
     removed = sorted(set(a) - set(b))
     shared = sorted(set(a) & set(b))

@@ -14,25 +14,24 @@ reported with its note but never gates — the allowlist IS the
 down the cause, which is the point.
 
 Also fails on: errors recorded in either bench file, or an sf0.1 query
-missing from the sf1 sweep (silent coverage loss).
+missing from the sf1 sweep (silent coverage loss). Exit 2 if the two
+files were timed differently (see bench_artifact.py).
 """
 import json, os, statistics, sys
+
+from bench_artifact import load, require_same_timing, timing
 
 THRESHOLD = 11.0     # 10x data + 10% grace: anything above is super-linear
 MIN_SECONDS = 0.2    # sub-200ms queries are scheduling noise at both SFs
 
 
-def load(path):
-    txt = open(path).read()
-    j = json.loads(txt[txt.index("{"):])
-    return j["queries"], j.get("errors", [])
-
-
 def main(small_path, big_path):
     here = os.path.dirname(os.path.abspath(__file__))
     allow = json.load(open(os.path.join(here, "scaling_allowlist.json")))
-    qs, es = load(small_path)
-    qb, eb = load(big_path)
+    small, big = load(small_path), load(big_path)
+    require_same_timing(timing(small), timing(big), small_path, big_path)
+    qs, es = small["queries"], small.get("errors", [])
+    qb, eb = big["queries"], big.get("errors", [])
     rc = 0
     if es or eb:
         print(f"FAIL: bench errors small={es} big={eb}")

@@ -5,19 +5,18 @@ NOT part of the shipped Scala library — round tooling.
 Usage: python3 tools/scaling_report.py bench_sf0.1.json bench_sf1.json
 Prints a markdown table of per-query times and the sf1/sf0.1 ratio,
 sorted by ratio descending, with a data-growth reference line (10x).
+Exit 2 if the two files were timed differently (see bench_artifact.py).
 """
-import json, sys
+import sys
+
+from bench_artifact import load, require_same_timing, timing
 
 
-def load(path):
-    txt = open(path).read()
-    j = json.loads(txt[txt.index("{"):])
-    return j["queries"], j.get("errors", [])
-
-
-def main(small, big):
-    qs, es = load(small)
-    qb, eb = load(big)
+def main(small_path, big_path):
+    small, big = load(small_path), load(big_path)
+    require_same_timing(timing(small), timing(big), small_path, big_path)
+    qs, es = small["queries"], small.get("errors", [])
+    qb, eb = big["queries"], big.get("errors", [])
     if es or eb:
         print(f"ERRORS small={es} big={eb}")
     rows = []

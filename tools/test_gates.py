@@ -1,0 +1,76 @@
+"""Exit-code tests for the round gates over tiny bench artifacts.
+
+Run from the repository root: python3 -m unittest tools/test_gates.py
+"""
+import json
+import os
+import subprocess
+import sys
+import tempfile
+import unittest
+
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+
+
+def artifact(times, errors=(), timing="noop", hashes=None):
+    """A graft.Bench artifact; each key's digest is "h-<key>" unless given."""
+    hashes = hashes or {}
+    doc = {"metric": "total", "value": sum(v for v in times.values() if v > 0),
+           "unit": "sec", "queries": times, "errors": list(errors),
+           "sf": "/fixture", "plans": {
+               k: {"hash": hashes.get(k, "h-" + k), "nodes": 3, "exchanges": 1}
+               for k in times}}
+    if timing is not None:
+        doc["timing"] = timing
+    return doc
+
+
+BASE = {"k1": 1.0, "k2": 2.0, "k3": 0.5}
+
+
+class GateExitCodes(unittest.TestCase):
+    def setUp(self):
+        self.dir = tempfile.TemporaryDirectory()
+
+    def tearDown(self):
+        self.dir.cleanup()
+
+    def run_tool(self, tool, old, new):
+        paths = []
+        for name, doc in (("old.json", old), ("new.json", new)):
+            path = os.path.join(self.dir.name, name)
+            with open(path, "w") as f:
+                json.dump(doc, f)
+            paths.append(path)
+        return subprocess.run([sys.executable, os.path.join(TOOLS, tool), *paths],
+                              capture_output=True, text=True).returncode
+
+    def test_clean_pair_passes(self):
+        self.assertEqual(self.run_tool("regression_gate.py", artifact(BASE), artifact(BASE)), 0)
+
+    def test_error_in_new_fails(self):
+        new = artifact(dict(BASE, k2=-1.0), errors=["k2"])
+        self.assertEqual(self.run_tool("regression_gate.py", artifact(BASE), new), 1)
+
+    def test_missing_key_fails(self):
+        new = artifact({k: v for k, v in BASE.items() if k != "k3"})
+        self.assertEqual(self.run_tool("regression_gate.py", artifact(BASE), new), 1)
+
+    def test_unchanged_digest_slowdown_fails(self):
+        new = artifact(dict(BASE, k1=1.6))
+        self.assertEqual(self.run_tool("regression_gate.py", artifact(BASE), new), 1)
+
+    def test_changed_digest_slowdown_is_reported_not_gated(self):
+        new = artifact(dict(BASE, k1=1.6), hashes={"k1": "other"})
+        self.assertEqual(self.run_tool("regression_gate.py", artifact(BASE), new), 0)
+
+    def test_mixed_timing_is_refused_by_every_tool(self):
+        legacy = artifact(BASE, timing=None)  # no field: timed by count()
+        for tool in ("regression_gate.py", "scaling_gate.py", "plan_delta.py",
+                     "bench_delta.py", "scaling_report.py"):
+            with self.subTest(tool=tool):
+                self.assertEqual(self.run_tool(tool, legacy, artifact(BASE)), 2)
+
+
+if __name__ == "__main__":
+    unittest.main()
