@@ -1668,12 +1668,29 @@ object GraftQueries {
     Similarity.randomProjection(tbl(s, dir, "embeddings"), dOut = 16)
       .select(col("id").as("vec_id"), col("dim"), col("value"))
 
+  /** The ANN keys' recall verdict: one row per query in `q` (its
+    * `vec_id`s), `recall_ok` = the share of its exact brute-force top-10
+    * over `emb` that `ann` (query_id, neighbor_id) found is ≥ `floor`.
+    * A deterministic row, so DuckDB checks it like any other.
+    */
+  private def recallVerdict(emb: DataFrame, q: DataFrame, ann: DataFrame,
+                            floor: Double): DataFrame = {
+    val exact = Similarity.bruteForceTopK(emb, q, k = 10)
+    val hits = ann.select("query_id", "neighbor_id")
+      .join(exact.select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"))
+      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
+    q.select(col("vec_id").as("query_id"))
+      .join(hits, Seq("query_id"), "left")
+      .select(col("query_id"),
+        (coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0 >= floor).as("recall_ok"))
+  }
+
   /** LSH-bucketed ANN top-k with an oracle-checkable contract: the ANN
     * result is joined against the exact brute-force top-10 INSIDE the
-    * query, and each query row emits whether recall@10 clears the 0.2
-    * floor (≥ 2 true neighbours found while probing 9 of 16 buckets
+    * query, and each query row emits whether recall@10 clears the 0.35
+    * floor (≥ 4 true neighbours found while probing 9 of 16 buckets
     * with the query-adaptive multi-probe sequence; measured min recall
-    * 0.4 at both sf0.01 and sf0.1 — two hits of safety margin).
+    * 0.4 at sf0.001, sf0.01 and sf0.1, MEASUREMENTS.md round 9).
     * Everything is deterministic (fixed hyperplanes, tie-broken
     * windows), so the verdict row is stable and DuckDB-checkable — the
     * same soundness-bound trick as `q_approx_distinct`. The fixture
@@ -1686,14 +1703,7 @@ object GraftQueries {
     val emb = tbl(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val ann = Similarity.lshTopK(emb, q, k = 10, bits = 4, probes = 8)
-    val exact = Similarity.bruteForceTopK(emb, q, k = 10)
-    val hits = ann.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    q.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0 >= 0.35).as("recall_ok"))
+    recallVerdict(emb, q, ann, 0.35)
   }
 
   /** IVF ANN run at nprobe = nlist: exhaustive probing makes it exact
@@ -1721,14 +1731,7 @@ object GraftQueries {
       graft.ops.VectorIndex.buildIvf(emb, _, nlist = 64))
     val q = emb.filter(col("vec_id") < 10)
     val ann = graft.ops.VectorIndex.queryIvf(s, out, q, k = 10, nprobe = 8)
-    val exact = Similarity.bruteForceTopK(emb, q, k = 10)
-    val hits = ann.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    q.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0 >= 0.25).as("recall_ok"))
+    recallVerdict(emb, q, ann, 0.25)
   }
 
   /** Product-quantization ANN with the s2-style oracle contract: PQ
@@ -1742,14 +1745,7 @@ object GraftQueries {
     val emb = tbl(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val ann = Similarity.pqTopK(emb, q, k = 10, m = 16, codebookBits = 6)
-    val exact = Similarity.bruteForceTopK(emb, q, k = 10)
-    val hits = ann.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    q.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0 >= 0.25).as("recall_ok"))
+    recallVerdict(emb, q, ann, 0.25)
   }
 
   /** S9 [EXT] — two-stage ANN: s4's PQ ADC stage nominates a 50-deep
@@ -1764,14 +1760,7 @@ object GraftQueries {
     val q = emb.filter(col("vec_id") < 10)
     val ann = Similarity.pqRerankTopK(emb, q, k = 10, shortlist = 50,
       m = 16, codebookBits = 6)
-    val exact = Similarity.bruteForceTopK(emb, q, k = 10)
-    val hits = ann.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    q.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0 >= 0.65).as("recall_ok"))
+    recallVerdict(emb, q, ann, 0.65)
   }
 
   /** S10 [EXT] — diversity sampling: cluster-balanced subset via
@@ -1803,14 +1792,7 @@ object GraftQueries {
     // min recall 0.60/0.50/0.40 across SFs vs 0.30/0.30/0.20 — the floor rises to
     // 0.35 for double the probed cells, still 1/4 of the inverted file)
     val ann = graft.ops.VectorIndex.queryIvf(s, out, q, k = 10, nprobe = 16)
-    val exact = Similarity.bruteForceTopK(emb, q, k = 10)
-    val hits = ann.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    q.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0 >= 0.35).as("recall_ok"))
+    recallVerdict(emb, q, ann, 0.35)
   }
 
   /** S12 [EXT] — scalar-quantised (int8) ANN: per-dimension byte
@@ -1823,14 +1805,7 @@ object GraftQueries {
     val emb = tbl(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val ann = Similarity.sq8TopK(emb, q, k = 10)
-    val exact = Similarity.bruteForceTopK(emb, q, k = 10)
-    val hits = ann.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    q.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0 >= 0.85).as("recall_ok"))
+    recallVerdict(emb, q, ann, 0.85)
   }
 
   /** S13 [EXT] — filtered vector search: exact top-k among label-0
@@ -1954,14 +1929,7 @@ object GraftQueries {
     val q = emb.filter(col("vec_id") < 10)
     val ann = Similarity.ivfPqTopK(emb, q, k = 10, nlist = 8, nprobe = 6,
       m = 8, codebookBits = 8)
-    val exact = Similarity.bruteForceTopK(emb, q, k = 10)
-    val hits = ann.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    q.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0 >= 0.25).as("recall_ok"))
+    recallVerdict(emb, q, ann, 0.25)
   }
 
   /** The media → features → ANN composition a training-data pipeline
@@ -3585,18 +3553,8 @@ object GraftQueries {
     // 10: min recall 0.40/0.40/0.50 across SFs vs 0.30/0.20/0.40 — one more
     // table buys the floor up to 0.35 for +1/3 bucket-join volume)
     val graph = Similarity.knnGraph(emb, k = 10, bits = 3, tables = 4)
-    val q = emb.filter(col("vec_id") < 10)
-    val exact = Similarity.bruteForceTopK(emb, q, k = 10)
-    val hits = graph.select(col("src").as("query_id"),
-        col("dst").as("neighbor_id"))
-      .join(exact.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    q.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0 >= 0.35)
-          .as("recall_ok"))
+    recallVerdict(emb, emb.filter(col("vec_id") < 10),
+      graph.select(col("src").as("query_id"), col("dst").as("neighbor_id")), 0.35)
   }
 
   /** Q_CONFORMAL [EXT] — split-conformal prediction interval

@@ -146,9 +146,6 @@ object DumpWriter {
     row => render(toCatalyst(row).asInstanceOf[InternalRow])
   }
 
-  /** The tuple text of a row of a Dataset (it carries its schema). */
-  def renderTuple(row: Row, dialect: Dialect): String = rowRenderer(row.schema, dialect)(row)
-
   /** [[tupleRdd]]'s text as a Dataset, rendered through the `Row`
     * adapter: the frame's rows are deserialised first.
     */

@@ -28,6 +28,11 @@ object Experiment {
   /** χ²₀.₉₅,₁ × 1000 — the exact rational threshold the verdict uses. */
   val ChiSqCritX1000: Long = 3841L
 
+  /** The DECIMAL(38,0) cast the exact statistics multiply counts in,
+    * so no realistic cohort size overflows.
+    */
+  private def dec(c: Column): Column = c.cast("decimal(38,0)")
+
   /** 2×2 conversion test: users split into variants by the md5 bucket
     * of `userCol` mod 2; a user converts when they have ≥ 1
     * `convertType` event. Output is ONE row: per-variant cohort and
@@ -59,7 +64,6 @@ object Experiment {
   def abChisq(events: DataFrame, userCol: String = "user_id",
               typeCol: String = "event_type",
               convertType: String = "purchase"): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     conversionCells(events, userCol, typeCol, convertType)
       // empty-cohort guard: a degenerate md5 coin (tiny or skewed
       // cohorts) must report a NULL rate, not divide by zero — the
@@ -220,7 +224,6 @@ object Experiment {
     val fab = Sampling.runningTotal(fa, Seq(col("v")), "nb_v")
       .withColumnRenamed("running_total", "fb")
     val tot = broadcast(per.agg(sum("na_v").as("n_a"), sum("nb_v").as("n_b")))
-    def dec(c: Column) = c.cast("decimal(38,0)")
     // the K = D·n_a·n_b statistic and the n_a·n_b denominator are
     // products of two cohort counts: in LongType they silently wrap
     // once n_a·n_b exceeds 2⁶³ (~3×10⁹ rows per arm), so every product
@@ -258,7 +261,6 @@ object Experiment {
     * row function), one two-row mergeable pivot, a single verdict row.
     */
   def srmCheck(events: DataFrame, userCol: String = "user_id"): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     events.select(col(userCol).as("u")).distinct()
       .withColumn("variant", Sampling.bucket(col("u"), 2))
       .agg(
@@ -457,7 +459,6 @@ object Experiment {
         .select(col(c),
           (col("running_total") * 2 - col("__c") + 1).as(s"r$c"))
     }
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val moments = pairs
       .join(doubledRanks("x"), "x").join(doubledRanks("y"), "y")
       .agg(count(lit(1)).as("n"), sum(col("rx") * col("ry")).as("sxy"),
@@ -515,7 +516,6 @@ object Experiment {
     */
   def labelerAgreement(a: DataFrame, aId: String, aLabel: String,
                        b: DataFrame, bId: String, bLabel: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val joined = a.select(col(aId).as("__id"), col(aLabel).cast("boolean").as("__a"))
       .join(b.select(col(bId).as("__id"), col(bLabel).cast("boolean").as("__b")),
         "__id")

@@ -1,19 +1,31 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Two paths:
-  *  - `bruteForceTopK`: exact top-k cosine for a (small, broadcast) query
-  *    set against the full corpus — the scan side never shuffles
-  *    (queries are broadcast, top-k is a per-query window).
-  *  - `lshTopK`: random-hyperplane LSH (Charikar 2002) — bucket by the
-  *    sign-bit signature and only score within matching (multi-probed)
-  *    buckets. The scale path: candidate scoring cost drops by ~2^bits;
-  *    approximate by design (recall measured against brute force in the
-  *    test suite).
+  * Every top-k operator is a CANDIDATE GENERATOR followed by one shared
+  * score-and-rank stage ([[rankTopK]]). A generator decides which
+  * (query, neighbour) pairs are scored at all:
+  *  - exact scans: `bruteForceTopK` (queries broadcast against the full
+  *    corpus) and `filteredTopK` (the same over a pre-filtered corpus);
+  *  - bucket and cell joins: `lshTopK` (random-hyperplane LSH, Charikar
+  *    2002, with query-adaptive multi-probe), `ivfTopK` (k-means cells,
+  *    exact at nprobe = nlist), `VectorIndex.queryIvf` (the same cells
+  *    persisted on disk), `knnGraph` (LSH bucket self-joins, every node
+  *    a query);
+  *  - compressed scans: `sq8TopK` (one byte per dimension), `pqTopK` and
+  *    `ivfPqTopK` (product-quantization codes scored by asymmetric
+  *    lookup, flat or per IVF cell), `pqRerankTopK` (a PQ shortlist
+  *    re-scored exactly).
+  * [[rankTopK]] then drops self hits, scores the survivors and keeps
+  * each query's k best by (sim DESC, neighbour id) — one ranking policy,
+  * so equal sims break ties the same way in every operator.
+  * Approximate generators trade recall for scan volume (measured
+  * against brute force in the test suite and in the catalog verdicts).
   *
   * Kernel note: scoring avoids `zip_with`/`aggregate` higher-order
   * folds (interpreted, ~100ns/element with boxing — dominates at
@@ -52,6 +64,29 @@ object Similarity {
     toColumn(graft.functions.CosineSimilarity(toExpression(a), toExpression(b)))
   }
 
+  /** Left-to-right double dot product over the common prefix. */
+  private def dot(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0; var d = 0
+    val n = math.min(a.length, b.length)
+    while (d < n) { s += a(d).toDouble * b(d).toDouble; d += 1 }
+    s
+  }
+
+  /** Euclidean norm, left-to-right double fold. */
+  private def norm(v: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
+    math.sqrt(s)
+  }
+
+  /** Unit-normalised double copy (all zeros for a zero vector). */
+  private def normalise(v: Array[Float]): Array[Double] = {
+    val n = norm(v)
+    val out = new Array[Double](v.length)
+    if (n > 0) { var i = 0; while (i < v.length) { out(i) = v(i) / n; i += 1 } }
+    out
+  }
+
   /** Euclidean squared distance over the common prefix. */
   private def dist2(a: Array[Double], b: Array[Double]): Double = {
     var d = 0.0; var i = 0
@@ -73,8 +108,11 @@ object Similarity {
     best
   }
 
+  /** Lloyd iterations every quantizer in this file trains with. */
+  private val LloydIters = 10
+
   /** Deterministic driver-side Lloyd k-means over a bounded sample:
-    * evenly-strided init, fixed iteration count, lowest-index
+    * evenly-strided init, [[LloydIters]] iterations, lowest-index
     * tie-breaks, all double math — fully reproducible with no stored
     * model and no RNG. Shared by the PQ codebook trainer and the IVF
     * coarse quantizer (it replaced the MLlib `KMeans.fit`, whose fixed
@@ -82,13 +120,13 @@ object Similarity {
     * cluster quality only affects ANN recall/speed, never exactness).
     * k is capped by the sample size so tiny inputs still train.
     */
-  private[ops] def lloyd(pts: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
+  private[ops] def lloyd(pts: Array[Array[Double]], k: Int): Array[Array[Double]] = {
     require(pts.nonEmpty, "lloyd: empty training sample")
     val kk = math.max(1, math.min(k, pts.length))
     val dim = pts.head.length
     var cents = Array.tabulate(kk)(c => pts((c.toLong * pts.length / kk).toInt).clone())
     var it = 0
-    while (it < iters) {
+    while (it < LloydIters) {
       val sums = Array.fill(cents.length)(new Array[Double](dim))
       val counts = new Array[Long](cents.length)
       for (p <- pts) {
@@ -111,24 +149,65 @@ object Similarity {
     cents
   }
 
+  /** IVF coarse quantizer over a one-column frame of vectors, trained on
+    * a bounded sample (the standard IVF recipe: ~256 vectors per cell
+    * suffice) — k-means over the FULL corpus would be 10 extra
+    * whole-corpus passes at 100 TB. Shared by `ivfTopK` and
+    * `cosineNearDupPairs`; `VectorIndex.buildIvf` draws its own
+    * hash-ordered sample so the on-disk layout is reproducible.
+    */
+  private def trainCells(vecs: DataFrame, nlist: Int): Array[Array[Double]] = {
+    import vecs.sparkSession.implicits._
+    lloyd(vecs.as[Array[Float]].limit(math.max(nlist * 256, 4096)).collect()
+      .map(_.map(_.toDouble)), nlist)
+  }
+
+  /** The cell-assign UDF: a vector's nearest centroid, the centroids
+    * broadcast once. Every IVF path assigns through it.
+    */
+  private[ops] def assignCell(spark: SparkSession, cents: Array[Array[Double]]): UserDefinedFunction = {
+    val bc = spark.sparkContext.broadcast(cents)
+    udf((v: Array[Float]) => nearestCentroid(bc.value, v.map(_.toDouble)))
+  }
+
+  /** The probe-cells UDF: a query's `nprobe` nearest cells by centroid
+    * cosine (stable sort, so equal cosines keep index order).
+    */
+  private[ops] def probeCells(centroids: Array[Array[Float]], nprobe: Int): UserDefinedFunction =
+    udf((qv: Array[Float]) =>
+      centroids.zipWithIndex
+        .map { case (cc, i) => (i, cosineKernel(qv, cc)) }
+        .sortBy(-_._2).take(nprobe).map(_._1))
+
+  /** The shared score-and-rank stage every top-k operator ends in: drop
+    * self hits (`neighbor` = `query`), score each candidate with `sim`,
+    * keep each query's k best by (sim DESC, neighbour id) with `rank` an
+    * int from 1. The id tie-break makes equal sims rank alike in every
+    * operator. Columns named in `keep` ride along after
+    * (query, rank, neighbour).
+    */
+  private[ops] def rankTopK(cands: DataFrame, sim: Column, k: Int,
+                            query: String = "query_id", neighbor: String = "neighbor_id",
+                            keep: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy(col(query)).orderBy(col("sim").desc, col(neighbor))
+    cands.filter(col(neighbor) =!= col(query))
+      .withColumn("sim", sim)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(Seq(col(query), col("rank").cast("int").as("rank"), col(neighbor)) ++
+        keep.map(col): _*)
+  }
+
   /** Exact top-k neighbours for the query rows against the corpus.
-    * Queries are broadcast (small by contract); ranking uses a window
-    * partitioned by query with a deterministic (sim DESC, id) order.
+    * Queries are broadcast (small by contract), so the scan side never
+    * shuffles; every corpus vector is a candidate.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"), col("neighbor_id"))
+    rankTopK(c.crossJoin(broadcast(q)), cosine(col("qv"), col("cv")), k)
   }
 
   /** MMR (maximal marginal relevance, Carbonell & Goldstein 1998)
@@ -152,18 +231,13 @@ object Similarity {
               k: Int = 5, idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && k <= shortlist, "mmrTopK: need 1 <= k <= shortlist")
-    import org.apache.spark.sql.expressions.Window
     val spark = corpus.sparkSession
     import spark.implicits._
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .repartition(spark.sparkContext.defaultParallelism)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    val sl = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= shortlist)
+    val sl = rankTopK(c.crossJoin(broadcast(q)), cosine(col("qv"), col("cv")), shortlist,
+        keep = Seq("sim", "cv"))
       .select(col("query_id"), col("neighbor_id"), col("sim"), col("cv"))
     sl.as[(Long, Long, Double, Array[Float])]
       .groupByKey(_._1)
@@ -208,33 +282,40 @@ object Similarity {
       .toDF("query_id", "pick_rank", "neighbor_id")
   }
 
+  /** Hybrid retrieval's fixed shape: the first 10 documents are the
+    * queries, each side keeps its 50 best, and ranks fuse with the
+    * customary RRF constant 60.
+    */
+  private val RrfQueries = 10
+  private val RrfPerSide = 50
+  private val RrfK = 60
+
   /** Hybrid retrieval with reciprocal-rank fusion — the standard
     * two-tower serving shape: a LEXICAL shortlist (distinct-token
     * overlap with the query document, integer-exact) and a VECTOR
     * shortlist (the s1 exact cosine ranking) fuse by RRF,
-    * `Σ 10⁶ div (rrfK + rank)`, a document absent from one side
+    * `Σ 10⁶ div (RrfK + rank)`, a document absent from one side
     * contributing 0 from it — which is exactly how production hybrid
     * search fuses two top-R lists. Integer micro-units end to end, so
     * the fused ranking is bit-reproducible and SQL-oracle-checkable.
+    * The queries are the documents with id < [[RrfQueries]].
     *
     * Scale shape: the corpus is scanned once per side (token pairs
     * distinct once; embeddings once against broadcast queries); each
     * side's shortlist cut is a query-partitioned window (state = one
-    * row) and the fusion operates on 2·perSide rows per query —
+    * row) and the fusion operates on 2·[[RrfPerSide]] rows per query —
     * constant-bounded. In production the per-side candidates come from
     * the banded/IVF shortlists (s2/s3/s8) instead of the exact scan;
     * the fusion stage is unchanged.
     */
-  def hybridRrf(docs: DataFrame, emb: DataFrame, nQueries: Int = 10,
-                perSide: Int = 50, k: Int = 10, rrfK: Int = 60): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val vec = bruteForceTopK(emb, emb.filter(col("vec_id") < nQueries), perSide)
+  def hybridRrf(docs: DataFrame, emb: DataFrame, k: Int = 10): DataFrame = {
+    val vec = bruteForceTopK(emb, emb.filter(col("vec_id") < RrfQueries), RrfPerSide)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("rank_vec"))
     val docTokens = docs.select(col("doc_id"),
         explode(TextAnalysis.tokens(col("text"))).as("token"))
       .distinct()
-    val qTokens = docTokens.filter(col("doc_id") < nQueries)
+    val qTokens = docTokens.filter(col("doc_id") < RrfQueries)
       .select(col("doc_id").as("query_id"), col("token"))
     val overlap = docTokens.join(broadcast(qTokens), "token")
       .filter(col("doc_id") =!= col("query_id"))
@@ -242,12 +323,12 @@ object Similarity {
     val wl = Window.partitionBy("query_id")
       .orderBy(col("n_shared").desc, col("doc_id"))
     val lex = overlap.withColumn("rank_lex", row_number().over(wl))
-      .filter(col("rank_lex") <= perSide)
+      .filter(col("rank_lex") <= RrfPerSide)
       .select("query_id", "doc_id", "rank_lex")
     val fused = vec.join(lex, Seq("query_id", "doc_id"), "full_outer")
       .withColumn("rrf_micro",
-        coalesce(expr(s"1000000L DIV ($rrfK + rank_vec)"), lit(0L)) +
-          coalesce(expr(s"1000000L DIV ($rrfK + rank_lex)"), lit(0L)))
+        coalesce(expr(s"1000000L DIV ($RrfK + rank_vec)"), lit(0L)) +
+          coalesce(expr(s"1000000L DIV ($RrfK + rank_lex)"), lit(0L)))
     val wf = Window.partitionBy("query_id")
       .orderBy(col("rrf_micro").desc, col("doc_id"))
     fused.withColumn("rank", row_number().over(wf))
@@ -289,6 +370,27 @@ object Similarity {
     if (top % 2 == 0) 1 else -1
   }
 
+  /** ±1 matrices by (rows, vector length), built once per JVM. */
+  private val signMatrices =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Array[Int]]]()
+
+  /** The portable-sign projection `out[i] = Σ_j sign(i·n+j) · v[j]`
+    * (n = v's length, j ascending) for i < `rows` — the one projection
+    * [[randomProjection]] emits and [[signBuckets]] takes signs of.
+    */
+  private def signProject(rows: Int)(v: Array[Float]): Array[Double] = {
+    val n = v.length
+    val m = signMatrices.computeIfAbsent((rows, n),
+      _ => Array.tabulate(rows, n)((i, j) => portableSign(i * n + j)))
+    Array.tabulate(rows) { i =>
+      val signs = m(i)
+      var acc = 0.0
+      var j = 0
+      while (j < n) { acc += v(j).toDouble * signs(j); j += 1 }
+      acc
+    }
+  }
+
   /** Sparse-sign random projection (Achlioptas 2003 / the JL transform
     * in its cheapest form): `out[i] = Σ_j sign(i·dIn+j) · v[j]` with a
     * deterministic ±1 matrix from [[portableSign]]. The standard cheap
@@ -307,17 +409,7 @@ object Similarity {
   def randomProjection(df: DataFrame, dOut: Int,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
-    val project = udf { (v: Array[Float]) =>
-      Array.tabulate(dOut) { i =>
-        var acc = 0.0
-        var j = 0
-        while (j < v.length) {
-          acc += v(j).toDouble * portableSign(i * v.length + j)
-          j += 1
-        }
-        acc
-      }
-    }
+    val project = udf((v: Array[Float]) => signProject(dOut)(v))
     Partitioning.ensureParallelism(
         df.select(col(idCol).as("id"), col(vecCol).as("v")))
       .select(col("id"), posexplode(project(col("v"))).as(Seq("dim", "value")))
@@ -339,18 +431,10 @@ object Similarity {
                   vecCol: String = "embedding"): DataFrame = {
     require(bits > 0 && bits < 31, "signBuckets: bits must be in 1..30")
     val bucket = udf { (v: Array[Float]) =>
+      val p = signProject(bits)(v)
       var b = 0
       var i = 0
-      while (i < bits) {
-        var acc = 0.0
-        var j = 0
-        while (j < v.length) {
-          acc += v(j).toDouble * portableSign(i * v.length + j)
-          j += 1
-        }
-        if (acc >= 0.0) b |= (1 << i)
-        i += 1
-      }
+      while (i < bits) { if (p(i) >= 0.0) b |= (1 << i); i += 1 }
       b
     }
     Partitioning.ensureParallelism(df)
@@ -379,34 +463,54 @@ object Similarity {
       idCol, "bucket", perBucket)
 
   /** Deterministic pseudo-random hyperplanes: component [i][d] from a
-    * splitmix64 stream — reproducible with no stored model. `seed`
-    * selects an independent table (seed 0 = the historical planes, so
-    * every existing signature stays stable).
+    * splitmix64 stream of (seed, i, d) — reproducible with no stored
+    * model. `seed` selects an independent table (seed 0 = the
+    * historical planes). A component does not depend on `dim`, so the
+    * planes for two vector lengths agree on their common prefix.
     */
-  def hyperplanes(bits: Int, dim: Int): Array[Array[Double]] =
-    hyperplanes(bits, dim, 0L)
-
-  def hyperplanes(bits: Int, dim: Int, seed: Long): Array[Array[Double]] =
+  private def hyperplanes(bits: Int, dim: Int, seed: Long): Array[Array[Double]] =
     Array.tabulate(bits, dim) { (i, d) =>
       val h = graft.anonymise.Faker.mix64(
         seed * 77777777777L + i.toLong * 1000003L + d + 1)
       h.toDouble / Long.MaxValue.toDouble
     }
 
-  /** Sign-bit signature of a vector against precomputed hyperplanes. */
-  def signatureKernel(planes: Array[Array[Double]])(v: Array[Float]): Long = {
-    var sig = 0L
+  /** Hyperplanes by (bits, seed, vector length), built once per JVM. */
+  private val planeTables =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Long, Int), Array[Array[Double]]]()
+
+  /** Table `seed`'s `bits` hyperplanes as long as `v`: every LSH kernel
+    * cuts a vector on ALL of its components, whatever its length.
+    */
+  private def planesFor(bits: Int, seed: Long, v: Array[Float]): Array[Array[Double]] =
+    planeTables.computeIfAbsent((bits, seed, v.length), _ => hyperplanes(bits, v.length, seed))
+
+  /** Signed margins ⟨v, p_i⟩ against each hyperplane. */
+  private def margins(planes: Array[Array[Double]], v: Array[Float]): Array[Double] = {
+    val s = new Array[Double](planes.length)
     var i = 0
     while (i < planes.length) {
       val p = planes(i)
-      var s = 0.0; var d = 0
+      var acc = 0.0; var d = 0
       val n = math.min(p.length, v.length)
-      while (d < n) { s += v(d) * p(d); d += 1 }
-      if (s >= 0) sig |= (1L << i)
+      while (d < n) { acc += v(d) * p(d); d += 1 }
+      s(i) = acc
       i += 1
     }
+    s
+  }
+
+  /** Sign-bit signature: bit i set when margin i is ≥ 0. */
+  private def signOf(s: Array[Double]): Long = {
+    var sig = 0L
+    var i = 0
+    while (i < s.length) { if (s(i) >= 0) sig |= (1L << i); i += 1 }
     sig
   }
+
+  /** Sign-bit signature of a vector against precomputed hyperplanes. */
+  private def signatureKernel(planes: Array[Array[Double]])(v: Array[Float]): Long =
+    signOf(margins(planes, v))
 
   /** Query-adaptive multi-probe sequence (Lv et al., VLDB 2007): the
     * query's own bucket, then the buckets reachable by flipping the
@@ -416,20 +520,10 @@ object Similarity {
     * bits, so directed probing buys far more recall per probed bucket
     * than flipping fixed bit positions. Returns 1 + `probes` buckets.
     */
-  def probeKernel(planes: Array[Array[Double]], probes: Int)(v: Array[Float]): Array[Long] = {
+  private def probeKernel(planes: Array[Array[Double]], probes: Int)(v: Array[Float]): Array[Long] = {
     val bits = planes.length
-    val s = new Array[Double](bits)
-    var sig = 0L
-    var i = 0
-    while (i < bits) {
-      val p = planes(i)
-      var acc = 0.0; var d = 0
-      val n = math.min(p.length, v.length)
-      while (d < n) { acc += v(d) * p(d); d += 1 }
-      s(i) = acc
-      if (acc >= 0) sig |= (1L << i)
-      i += 1
-    }
+    val s = margins(planes, v)
+    val sig = signOf(s)
     val order = Array.range(0, bits).sortBy(b => math.abs(s(b)))
     val out = scala.collection.mutable.ArrayBuffer[Long](sig)
     var bi = 0
@@ -443,18 +537,16 @@ object Similarity {
     out.toArray
   }
 
-  /** ANN top-k: score only within the query's LSH bucket plus its
-    * query-adaptive multi-probe buckets (`probeKernel`). Approximate:
-    * candidates sharing no probed bucket are missed — the price of
-    * dropping the cross join.
+  /** ANN top-k: candidates are the corpus vectors in the query's LSH
+    * bucket plus its query-adaptive multi-probe buckets
+    * ([[probeKernel]]). Approximate: candidates sharing no probed
+    * bucket are missed — the price of dropping the cross join.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              bits: Int = 12, probes: Int = 1, dim: Int = 64,
+              bits: Int = 12, probes: Int = 1,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val planes = hyperplanes(bits, dim)
-    val sigUdf = udf(signatureKernel(planes) _)
-    val probeUdf = udf(probeKernel(planes, probes) _)
+    val sigUdf = udf((v: Array[Float]) => signatureKernel(planesFor(bits, 0L, v))(v))
+    val probeUdf = udf((v: Array[Float]) => probeKernel(planesFor(bits, 0L, v), probes)(v))
     val c = corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
@@ -462,14 +554,7 @@ object Similarity {
     val q = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("bucket", explode(probeUdf(col("qv"))))
-    val scored = c.join(broadcast(q), "bucket")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"), col("neighbor_id"))
+    rankTopK(c.join(broadcast(q), "bucket"), cosine(col("qv"), col("cv")), k)
   }
 
   /** ALL-CORPUS kNN GRAPH construction — every vector's approximate
@@ -479,7 +564,8 @@ object Similarity {
     * candidates come from LSH bucket SELF-JOINS instead: `tables`
     * independent sign-LSH tables (different hyperplane seeds), a pair
     * is a candidate when ANY table buckets it with the node, pairs
-    * dedup by max-sim aggregate, then a per-node top-k window.
+    * dedup by max-sim aggregate, then the shared per-node top-k rank
+    * (every node is a query, `src`).
     * Approximate: a true neighbour sharing no bucket in any table is
     * missed — the recall price of never materialising n².
     *
@@ -493,77 +579,47 @@ object Similarity {
     * candidate volume scales as n·E[bucket load], not n².
     */
   def knnGraph(corpus: DataFrame, k: Int, bits: Int = 6, tables: Int = 2,
-               dim: Int = 64, idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && bits >= 1 && tables >= 1, "knnGraph: bad knobs")
     val c0 = OpCaches.persist(
       corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
         .repartition(corpus.sparkSession.sparkContext.defaultParallelism))
     val cand = (0 until tables).map { t =>
-      val sigUdf = udf(signatureKernel(hyperplanes(bits, dim, t.toLong)) _)
+      val sigUdf = udf((v: Array[Float]) => signatureKernel(planesFor(bits, t.toLong, v))(v))
       val a = c0.withColumn("bucket", sigUdf(col("v")))
       a.select(col("bucket"), col("id").as("src"), col("v").as("sv"))
         .join(a.select(col("bucket"), col("id").as("dst"), col("v").as("dv")),
           Seq("bucket"))
-        .filter(col("src") =!= col("dst"))
         .select(col("src"), col("dst"), cosine(col("sv"), col("dv")).as("sim"))
     }.reduce(_ unionByName _)
-    // a pair found by several tables has the SAME sim — max() is dedup
+    // a pair found by several tables has the SAME sim — max() is dedup;
+    // rankTopK's src ≠ dst filter is pushed below the aggregate into
+    // each table's join by the optimizer
     val pairs = cand.groupBy("src", "dst").agg(max("sim").as("sim"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("sim").desc, col("dst"))
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("src"), col("rank").cast("int").as("rank"), col("dst"))
+    rankTopK(pairs, col("sim"), k, query = "src", neighbor = "dst")
   }
 
   /** IVF (inverted-file) ANN top-k: a coarse k-means quantizer assigns
-    * every corpus vector to its nearest centroid cell; a query scores
-    * only the vectors in its `nprobe` nearest cells. The other classic
-    * ANN scale path next to LSH — better cell balance when the data IS
-    * clustered, degrades gracefully to brute force as nprobe → nlist.
-    * Coarse quantizer = the in-house deterministic Lloyd over a bounded
-    * sample (no MLlib fit, no Vectors conversion pass).
+    * every corpus vector to its nearest centroid cell; a query's
+    * candidates are the vectors in its `nprobe` nearest cells. The
+    * other classic ANN scale path next to LSH — better cell balance
+    * when the data IS clustered, exact at nprobe = nlist. Coarse
+    * quantizer = [[trainCells]] (no MLlib fit, no Vectors conversion
+    * pass); assignment still covers every corpus vector.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nlist: Int = 16, nprobe: Int = 4,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = corpus.sparkSession
-    import spark.implicits._
     val c = corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .repartition(spark.sparkContext.defaultParallelism)
-    // Train the coarse quantizer on a bounded sample (the standard IVF
-    // recipe: ~256 vectors per cell suffice) — k-means at 10 iters
-    // over the FULL corpus would be 10 extra whole-corpus passes at
-    // 100 TB. Assignment below still covers every corpus vector.
-    val sample = c.select("cv").as[Array[Float]]
-      .limit(math.max(nlist * 256, 4096)).collect()
-      .map(_.map(_.toDouble))
-    val cents = lloyd(sample, nlist, iters = 10)
-    val bcCents = spark.sparkContext.broadcast(cents)
-    val assignCell = udf((v: Array[Float]) =>
-      nearestCentroid(bcCents.value, v.map(_.toDouble)))
-    val assigned = c.withColumn("cell", assignCell(col("cv")))
-    val centroids = cents.map(_.map(_.toFloat))
-    // query → its nprobe nearest cells by centroid cosine
-    val probeCells = udf((qv: Array[Float]) =>
-      centroids.zipWithIndex
-        .map { case (cc, i) => (i, cosineKernel(qv, cc)) }
-        .sortBy(-_._2).take(nprobe).map(_._1))
+    val cents = trainCells(c.select("cv"), nlist)
+    val assigned = c.withColumn("cell", assignCell(spark, cents)(col("cv")))
     val q = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("cell", explode(probeCells(col("qv"))))
-    val scored = assigned.join(broadcast(q), "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"), col("neighbor_id"))
+      .withColumn("cell", explode(probeCells(cents.map(_.map(_.toFloat)), nprobe)(col("qv"))))
+    rankTopK(assigned.join(broadcast(q), "cell"), cosine(col("qv"), col("cv")), k)
   }
 
   /** FILTERED vector search — the attribute-constrained top-k every
@@ -581,18 +637,12 @@ object Similarity {
   def filteredTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                    corpusFilter: Column,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = Partitioning.ensureParallelism(
       corpus.filter(corpusFilter)
         .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val scored = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"), col("neighbor_id"))
+    // an inner join; rankTopK's self-exclusion becomes its condition
+    rankTopK(c.join(broadcast(q)), cosine(col("qv"), col("cv")), k)
   }
 
   /** Scalar-quantised (SQ8) ANN — the standard compression point
@@ -613,7 +663,6 @@ object Similarity {
     */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = corpus.sparkSession
     val c = Partitioning.ensureParallelism(
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")))
@@ -647,15 +696,86 @@ object Similarity {
     }
     val enc = c.select(col("neighbor_id"), encode(col("cv")).as("codes"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val scored = enc.join(broadcast(q),
-        col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", score(col("qv"), col("codes")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"), col("neighbor_id"))
+    rankTopK(enc.join(broadcast(q)), score(col("qv"), col("codes")), k)
   }
+
+  /** Product-quantizer training recipe: Lloyd over the `PqSampleRows`
+    * lowest-id corpus vectors.
+    */
+  private val PqSampleRows = 4096
+
+  /** A trained product quantizer: per-subspace codebooks (up to `kCent`
+    * centroids each) over consecutive `subDim`-wide slices of a
+    * unit-normalised vector. Shared by [[pqTopK]] (codes of the vector)
+    * and [[ivfPqTopK]] (codes of its residual to the IVF cell).
+    */
+  private final case class ProductQuantizer(books: Array[Array[Array[Double]]],
+                                            subDim: Int, kCent: Int) {
+    /** One byte code per subspace: its nearest codebook centroid. */
+    def encode(v: Array[Double]): Array[Byte] =
+      Array.tabulate(books.length)(s => nearestCentroid(books(s), slice(v, s, subDim)).toByte)
+
+    /** The ADC lookup table: exact ⟨q_s, centroid⟩ per (subspace, code). */
+    def lut(nq: Array[Double]): Array[Double] = {
+      val out = new Array[Double](books.length * kCent)
+      var s = 0
+      while (s < books.length) {
+        val qs = slice(nq, s, subDim)
+        var c = 0
+        while (c < books(s).length) {
+          val cent = books(s)(c)
+          var d = 0.0; var i = 0
+          val n = math.min(qs.length, cent.length)
+          while (i < n) { d += qs(i) * cent(i); i += 1 }
+          out(s * kCent + c) = d
+          c += 1
+        }
+        s += 1
+      }
+      out
+    }
+  }
+
+  /** The bounded, deterministic PQ training sample: the
+    * [[PqSampleRows]] lowest-id vectors, unit-normalised.
+    */
+  private def pqSample(corpus: DataFrame, idCol: String, vecCol: String,
+                       op: String): Array[Array[Double]] = {
+    import corpus.sparkSession.implicits._
+    val sample = corpus.select(col(idCol).cast("long"), col(vecCol))
+      .as[(Long, Array[Float])].orderBy(col(idCol)).limit(PqSampleRows)
+      .collect().map { case (_, v) => normalise(v) }
+    require(sample.nonEmpty, s"$op: empty corpus")
+    sample
+  }
+
+  /** Subspace `s` of `v`: components [s·subDim, (s+1)·subDim). */
+  private def slice(v: Array[Double], s: Int, subDim: Int): Array[Double] =
+    java.util.Arrays.copyOfRange(v, s * subDim, math.min((s + 1) * subDim, v.length))
+
+  /** `m` per-subspace codebooks of 2^codebookBits centroids, each a
+    * deterministic Lloyd over the training vectors' slices.
+    */
+  private def trainPq(vs: Array[Array[Double]], m: Int, codebookBits: Int): ProductQuantizer = {
+    val kCent = 1 << codebookBits
+    val subDim = math.max(1, vs.head.length / m)
+    ProductQuantizer(Array.tabulate(m)(s => lloyd(vs.map(slice(_, s, subDim)), kCent)), subDim, kCent)
+  }
+
+  /** A query's ADC lookup table under the broadcast quantizer. */
+  private def lutOf(bcPq: Broadcast[ProductQuantizer]): UserDefinedFunction =
+    udf((v: Array[Float]) => bcPq.value.lut(normalise(v)))
+
+  /** The ADC kernel: a candidate's score is the cell term `qc` plus one
+    * lookup per code byte. Array (not Seq) params: primitive
+    * deserialisation, no per-call boxing.
+    */
+  private def adc(kCent: Int): UserDefinedFunction =
+    udf { (codes: Array[Byte], lut: Array[Double], qc: Double) =>
+      var s = 0; var acc = qc
+      while (s < codes.length) { acc += lut(s * kCent + (codes(s) & 0xff)); s += 1 }
+      acc
+    }
 
   /** Product-quantization ANN (Jégou, Douze, Schmid, TPAMI 2011): split
     * each (unit-normalised) vector into `m` subspaces, learn a
@@ -669,91 +789,26 @@ object Similarity {
     * float-vector dot product.
     *
     * Fully deterministic (and hence oracle-able): sample = lowest
-    * `sampleRows` ids, centroid init = evenly-strided sample rows,
+    * [[PqSampleRows]] ids, centroid init = evenly-strided sample rows,
     * Lloyd iterations with lowest-index tie-breaks, all double math.
     * Approximate by design — `s4_knn_pq` asserts a measured recall
     * floor against the exact result inside the query, like `s2`.
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-             m: Int = 8, codebookBits: Int = 4, iters: Int = 10,
-             sampleRows: Int = 4096,
+             m: Int = 8, codebookBits: Int = 4,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val kCent = 1 << codebookBits
-
-    def normalise(v: Array[Float]): Array[Double] = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      val n = math.sqrt(s)
-      val out = new Array[Double](v.length)
-      if (n > 0) { i = 0; while (i < v.length) { out(i) = v(i) / n; i += 1 } }
-      out
-    }
-
-    // bounded, deterministic training sample
-    val sample = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])].orderBy(col(idCol)).limit(sampleRows)
-      .collect().map { case (_, v) => normalise(v) }
-    require(sample.nonEmpty, "pqTopK: empty corpus")
-    val dim = sample.head.length
-    val subDim = math.max(1, dim / m)
-
-    def slice(v: Array[Double], s: Int): Array[Double] =
-      java.util.Arrays.copyOfRange(v, s * subDim, math.min((s + 1) * subDim, v.length))
-
-    // per-subspace deterministic Lloyd (shared trainer, evenly-strided init)
-    val codebooks: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(s => lloyd(sample.map(slice(_, s)), kCent, iters))
-    val bcCodebooks = spark.sparkContext.broadcast(codebooks)
-
-    val encode = udf { (v: Array[Float]) =>
-      val cb = bcCodebooks.value
-      val nv = normalise(v)
-      Array.tabulate(cb.length)(s => nearestCentroid(cb(s), slice(nv, s)).toByte)
-    }
-    val lutOf = udf { (v: Array[Float]) =>
-      val cb = bcCodebooks.value
-      val nv = normalise(v)
-      val lut = new Array[Double](cb.length * kCent)
-      var s = 0
-      while (s < cb.length) {
-        val qs = slice(nv, s)
-        var c = 0
-        while (c < cb(s).length) {
-          val cent = cb(s)(c)
-          var d = 0.0; var i = 0
-          val n = math.min(qs.length, cent.length)
-          while (i < n) { d += qs(i) * cent(i); i += 1 }
-          lut(s * kCent + c) = d
-          c += 1
-        }
-        s += 1
-      }
-      lut
-    }
-    // Array (not Seq) params: primitive deserialisation, no per-call boxing
-    val adc = udf { (codes: Array[Byte], lut: Array[Double]) =>
-      var s = 0; var acc = 0.0
-      while (s < codes.length) { acc += lut(s * kCent + (codes(s) & 0xff)); s += 1 }
-      acc
-    }
-
+    val pq = trainPq(pqSample(corpus, idCol, vecCol, "pqTopK"), m, codebookBits)
+    val bcPq = spark.sparkContext.broadcast(pq)
+    val encode = udf((v: Array[Float]) => bcPq.value.encode(normalise(v)))
     // corpus → 8-byte codes once (narrow); queries (small) broadcast
     // with their exact lookup tables; the scan touches codes only
     val coded = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("neighbor_id"), encode(col("cv")).as("codes"))
-    val q = queries.select(col(idCol).as("query_id"), lutOf(col(vecCol)).as("lut"))
-    val scored = coded.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", adc(col("codes"), col("lut")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"), col("neighbor_id"))
+    val q = queries.select(col(idCol).as("query_id"), lutOf(bcPq)(col(vecCol)).as("lut"))
+    rankTopK(coded.crossJoin(broadcast(q)),
+      adc(pq.kCent)(col("codes"), col("lut"), lit(0.0)), k)
   }
 
   /** Two-stage ANN with exact re-ranking (the production "refine" pass
@@ -777,7 +832,6 @@ object Similarity {
   def pqRerankTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                    shortlist: Int = 50, m: Int = 8, codebookBits: Int = 4,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
     val short = pqTopK(corpus, queries, shortlist, m, codebookBits,
       idCol = idCol, vecCol = vecCol)
@@ -785,12 +839,21 @@ object Similarity {
     val cand = short.select("query_id", "neighbor_id").join(qv, "query_id")
     val rescored = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
       .join(broadcast(cand), "neighbor_id")
-      .withColumn("sim", cosine(col("__qv"), col("__cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"), col("neighbor_id"))
+    rankTopK(rescored, cosine(col("__qv"), col("__cv")), k)
+  }
+
+  /** `nv − c(cell)` for nv's nearest centroid `cell` (components past a
+    * centroid's length keep nv's value).
+    */
+  private def residualOf(cents: Array[Array[Double]], nv: Array[Double]): (Int, Array[Double]) = {
+    val c = nearestCentroid(cents, nv)
+    val cent = cents(c)
+    val r = new Array[Double](nv.length)
+    var i = 0
+    while (i < nv.length) {
+      r(i) = nv(i) - (if (i < cent.length) cent(i) else 0.0); i += 1
+    }
+    (c, r)
   }
 
   /** IVF-PQ ANN (IVFADC — Jégou, Douze, Schmid, TPAMI 2011 §IV): the
@@ -821,119 +884,40 @@ object Similarity {
     */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 nlist: Int = 16, nprobe: Int = 4,
-                m: Int = 8, codebookBits: Int = 4, iters: Int = 10,
-                sampleRows: Int = 4096,
+                m: Int = 8, codebookBits: Int = 4,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val kCent = 1 << codebookBits
-
-    def normalise(v: Array[Float]): Array[Double] = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      val n = math.sqrt(s)
-      val out = new Array[Double](v.length)
-      if (n > 0) { i = 0; while (i < v.length) { out(i) = v(i) / n; i += 1 } }
-      out
-    }
-
-    // bounded, deterministic training sample (lowest ids, as in pqTopK)
-    val sample = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])].orderBy(col(idCol)).limit(sampleRows)
-      .collect().map { case (_, v) => normalise(v) }
-    require(sample.nonEmpty, "ivfPqTopK: empty corpus")
-    val dim = sample.head.length
-    val subDim = math.max(1, dim / m)
-    def slice(v: Array[Double], s: Int): Array[Double] =
-      java.util.Arrays.copyOfRange(v, s * subDim, math.min((s + 1) * subDim, v.length))
-
-    val cents = lloyd(sample, nlist, iters)
-    def residualOf(nv: Array[Double]): (Int, Array[Double]) = {
-      val c = nearestCentroid(cents, nv)
-      val cent = cents(c)
-      val r = new Array[Double](nv.length)
-      var i = 0
-      while (i < nv.length) {
-        r(i) = nv(i) - (if (i < cent.length) cent(i) else 0.0); i += 1
-      }
-      (c, r)
-    }
-    val codebooks: Array[Array[Array[Double]]] = {
-      val res = sample.map(residualOf(_)._2)
-      Array.tabulate(m)(s => lloyd(res.map(slice(_, s)), kCent, iters))
-    }
-    val bcModel = spark.sparkContext.broadcast((cents, codebooks))
-
+    val sample = pqSample(corpus, idCol, vecCol, "ivfPqTopK")
+    val cents = lloyd(sample, nlist)
+    val pq = trainPq(sample.map(residualOf(cents, _)._2), m, codebookBits)
+    val bcCents = spark.sparkContext.broadcast(cents)
+    val bcPq = spark.sparkContext.broadcast(pq)
     val encode = udf { (v: Array[Float]) =>
-      val (cs, cb) = bcModel.value
-      val nv = normalise(v)
-      val c = nearestCentroid(cs, nv)
-      val cent = cs(c)
-      val r = new Array[Double](nv.length)
-      var i = 0
-      while (i < nv.length) {
-        r(i) = nv(i) - (if (i < cent.length) cent(i) else 0.0); i += 1
-      }
-      val codes = Array.tabulate(cb.length)(s =>
-        nearestCentroid(cb(s), slice(r, s)).toByte)
-      (c, codes)
+      val (c, r) = residualOf(bcCents.value, normalise(v))
+      (c, bcPq.value.encode(r))
     }
     // per-query probe list: nprobe best cells by exact ⟨q, centroid⟩,
     // index-ascending tie-break — deterministic
     val probeOf = udf { (v: Array[Float]) =>
-      val (cs, _) = bcModel.value
       val nq = normalise(v)
-      cs.zipWithIndex.map { case (cc, i) =>
+      bcCents.value.zipWithIndex.map { case (cc, i) =>
         var d = 0.0; var j = 0
         val n = math.min(nq.length, cc.length)
         while (j < n) { d += nq(j) * cc(j); j += 1 }
         (i, d)
       }.sortBy { case (i, d) => (-d, i) }.take(nprobe)
     }
-    val lutOf = udf { (v: Array[Float]) =>
-      val (_, cb) = bcModel.value
-      val nq = normalise(v)
-      val lut = new Array[Double](cb.length * kCent)
-      var s = 0
-      while (s < cb.length) {
-        val qs = slice(nq, s)
-        var c = 0
-        while (c < cb(s).length) {
-          val cent = cb(s)(c)
-          var d = 0.0; var i = 0
-          val n = math.min(qs.length, cent.length)
-          while (i < n) { d += qs(i) * cent(i); i += 1 }
-          lut(s * kCent + c) = d
-          c += 1
-        }
-        s += 1
-      }
-      lut
-    }
-    val adc = udf { (codes: Array[Byte], lut: Array[Double], qc: Double) =>
-      var s = 0; var acc = qc
-      while (s < codes.length) { acc += lut(s * kCent + (codes(s) & 0xff)); s += 1 }
-      acc
-    }
-
     val coded = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .repartition(spark.sparkContext.defaultParallelism)
       .withColumn("cc", encode(col("cv")))
       .select(col("neighbor_id"), col("cc._1").as("cell"), col("cc._2").as("codes"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("lut", lutOf(col("qv")))
+      .withColumn("lut", lutOf(bcPq)(col("qv")))
       .select(col("query_id"), col("lut"), explode(probeOf(col("qv"))).as("pc"))
       .select(col("query_id"), col("lut"),
         col("pc._1").as("cell"), col("pc._2").as("qc"))
-    val scored = coded.join(broadcast(q), "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", adc(col("codes"), col("lut"), col("qc")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"), col("neighbor_id"))
+    rankTopK(coded.join(broadcast(q), "cell"),
+      adc(pq.kCent)(col("codes"), col("lut"), col("qc")), k)
   }
 
   /** Angle (radians) between two float vectors, double-precision with
@@ -980,17 +964,10 @@ object Similarity {
     val parallelism = spark.sparkContext.defaultParallelism
     val vecs = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .repartition(parallelism)
-    // bounded-sample quantizer training (same recipe as ivfTopK); lloyd
-    // caps k at the sample size so tiny inputs still train
-    val sample = vecs.select("v").as[Array[Float]]
-      .limit(math.max(nlist * 256, 4096)).collect()
-      .map(_.map(_.toDouble))
-    val cents = lloyd(sample, nlist, iters = 10)
-    val bcCents = spark.sparkContext.broadcast(cents)
-    val assignCell = udf((v: Array[Float]) =>
-      nearestCentroid(bcCents.value, v.map(_.toDouble)))
+    // lloyd caps k at the sample size so tiny inputs still train
+    val cents = trainCells(vecs.select("v"), nlist)
     val centroids = cents.map(_.map(_.toFloat))
-    val assigned = OpCaches.persist(vecs.withColumn("cell", assignCell(col("v"))))
+    val assigned = OpCaches.persist(vecs.withColumn("cell", assignCell(spark, cents)(col("v"))))
     // per-cell metadata (nlist rows — metadata-scale driver traffic, not
     // the corpus): member count + angular radius around the centroid
     val angleToCentroid = udf((cell: Int, v: Array[Float]) => angleKernel(v, centroids(cell)))
@@ -1073,12 +1050,7 @@ object Similarity {
                                     same: Boolean, threshold: Double): Seq[(Long, Long, Double)] = {
     val a = ma.toArray.sortBy(_._1)
     val b = if (same) a else mb.toArray.sortBy(_._1)
-    def norms(m: Array[(Long, Array[Float], Boolean)]): Array[Double] = m.map { case (_, v, _) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val na = norms(a); val nb = if (same) na else norms(b)
+    val na = a.map(m => norm(m._2)); val nb = if (same) na else b.map(m => norm(m._2))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     var i = 0
     while (i < a.length) {
@@ -1087,11 +1059,7 @@ object Similarity {
       while (j < b.length) {
         val (idb, vb, baseb) = b(j)
         if (basea || baseb) {
-          var dot = 0.0
-          var d = 0
-          val n = math.min(va.length, vb.length)
-          while (d < n) { dot += va(d).toDouble * vb(d).toDouble; d += 1 }
-          val sim = dot / (na(i) * nb(j))
+          val sim = dot(va, vb) / (na(i) * nb(j))
           if (sim >= threshold && ida != idb)
             out += (if (ida < idb) (ida, idb, sim) else (idb, ida, sim))
         }
@@ -1102,30 +1070,35 @@ object Similarity {
     out.toSeq
   }
 
+  /** Hyperplane tables of the LSH pair path. */
+  private val AnnTables = 8
+  /** Expected bucket load the LSH pair path sizes `bits` for. */
+  private val AnnTargetBucket = 256
+
   /** APPROXIMATE cosine near-dup pairs — the sub-quadratic scale path
     * next to the exact [[cosineNearDupPairs]]: candidates come from
-    * sign-LSH bucket self-joins (`tables` independent hyperplane
+    * sign-LSH bucket self-joins ([[AnnTables]] independent hyperplane
     * tables, the s17 `knnGraph` recipe), every candidate is verified
     * with the exact kernel, so output pairs are TRUE pairs — the
     * approximation is recall only (a qualifying pair bucketed apart in
     * every table is missed).
     *
     * Scale shape: `bits` is derived from the corpus count so the
-    * expected bucket load stays ~`targetBucket` regardless of n —
-    * candidate volume is ≈ (1 + 2·probes)·n·targetBucket·tables,
+    * expected bucket load stays ~[[AnnTargetBucket]] regardless of n —
+    * candidate volume is ≈ (1 + 2·probes)·n·load·tables,
     * LINEAR in n where the exact family's true-pair volume is ~n²
     * (103× pairs for 10× data at the sf10 decade, SCALING.md round 11).
     * No driver-side metadata: per-bucket counts come from a count
     * window, oversized buckets split into ≤`maxBlock` chunks by hashed
     * id (task memory bounded by 2·maxBlock vectors however degenerate
     * a bucket gets), blocks pair within their bucket only, and each
-    * vector moves through the shuffle `tables` times — never once per
+    * vector moves through the shuffle once per table — never once per
     * candidate. Pairs found by several tables dedup by a mergeable
     * (id_a, id_b) max aggregate, as in `knnGraph`.
     *
     * Recall honesty (Charikar 2002: P[bit agrees] = 1 − θ/π): holding
-    * recall CONSTANT while n grows requires tables ~ n^ρ — with fixed
-    * `tables`, per-pair recall decays as bits grow, fastest for
+    * recall CONSTANT while n grows requires tables ~ n^ρ — with the
+    * fixed table count, per-pair recall decays as bits grow, fastest for
     * low-cosine pairs (θ → π/2 is the regime where no sub-quadratic
     * method helps). Symmetric multi-probing (`probes` low-margin flip
     * buckets per vector per table, [[probeKernel]], scored only
@@ -1136,25 +1109,21 @@ object Similarity {
     * (1+2·probes)× candidate cost instead of the ~2^probes× of more
     * tables. Production near-dup thresholds (θ small) keep per-table
     * collision high and recall flat; the catalog key gates a measured
-    * pooled recall floor at the oracle SFs and the knob trade-off is
+    * pooled recall floor at the oracle SFs and the probes trade-off is
     * documented in MEASUREMENTS.md rather than promised.
     */
   def cosineNearDupPairsAnn(df: DataFrame, threshold: Double,
-                            tables: Int = 8, targetBucket: Int = 256,
-                            maxBlock: Int = 4096, dim: Int = 64,
-                            probes: Int = -1,
+                            maxBlock: Int = 4096, probes: Int = -1,
                             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(tables >= 1 && targetBucket >= 1 && maxBlock >= 1,
-      "cosineNearDupPairsAnn: bad knobs")
+    require(maxBlock >= 1, "cosineNearDupPairsAnn: bad knobs")
     val spark = df.sparkSession
     import spark.implicits._
-    // size bits so E[bucket load] ~ targetBucket: the vectorized-reader
+    // size bits so E[bucket load] ~ AnnTargetBucket: the vectorized-reader
     // count is row-group-metadata cheap on a parquet scan, and the
     // DECISION (like the d5 chooser's) is exact, never sampled
     val n = df.count()
     val bits = math.max(3, math.min(20,
-      math.ceil(math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2.0)).toInt))
+      math.ceil(math.log(math.max(1.0, n.toDouble / AnnTargetBucket)) / math.log(2.0)).toInt))
     // probes < 0 ⇒ derive from bits (the expectedCandidates = -1
     // convention): as bits grow, per-table collision decays and 1-bit
     // misses dominate, so the probe budget should grow WITH bits —
@@ -1162,16 +1131,14 @@ object Similarity {
     // at bits 3/7/10 where the fixed pure-base form read 0.877/0.268
     // (MEASUREMENTS.md round 12).
     val nProbes = if (probes >= 0) probes else math.max(2, bits / 2)
-    val allPlanes: Array[Array[Array[Double]]] =
-      Array.tabulate(tables)(t => hyperplanes(bits, dim, t.toLong))
     // per table: the vector's OWN bucket (base) plus its `probes`
     // query-adaptive low-margin flip buckets ([[probeKernel]] — Lv et
     // al., VLDB 2007). probes = 0 reproduces the pure base-bucket form.
     val sigsUdf = udf { (v: Array[Float]) =>
       val out = Array.newBuilder[(Int, Long, Boolean)]
       var t = 0
-      while (t < allPlanes.length) {
-        val bks = probeKernel(allPlanes(t), nProbes)(v)
+      while (t < AnnTables) {
+        val bks = probeKernel(planesFor(bits, t.toLong, v), nProbes)(v)
         var i = 0
         while (i < bks.length) { out += ((t, bks(i), i == 0)); i += 1 }
         t += 1
@@ -1274,28 +1241,16 @@ object Similarity {
     val parallelism = spark.sparkContext.defaultParallelism
     val vecs = df.select(col(idCol).cast("long"), col(vecCol)).as[(Long, Array[Float])]
     val corpus = vecs.collect().sortBy(_._1)
-    val norms = corpus.map { case (_, v) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((corpus, norms))
+    val bc = spark.sparkContext.broadcast((corpus, corpus.map(c => norm(c._2))))
     vecs.repartition(parallelism).flatMap { case (ida, va) =>
       val (corp, ns) = bc.value
-      var na = 0.0
-      var i = 0
-      while (i < va.length) { na += va(i).toDouble * va(i).toDouble; i += 1 }
-      val sqna = math.sqrt(na)
+      val sqna = norm(va)
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
       var j = 0
       while (j < corp.length) {
         val (idb, vb) = corp(j)
         if (idb > ida) {
-          var dot = 0.0
-          var d = 0
-          val n = math.min(va.length, vb.length)
-          while (d < n) { dot += va(d).toDouble * vb(d).toDouble; d += 1 }
-          val sim = dot / (sqna * ns(j))
+          val sim = dot(va, vb) / (sqna * ns(j))
           if (sim >= threshold) out += ((ida, idb, sim))
         }
         j += 1

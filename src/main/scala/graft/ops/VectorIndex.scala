@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   *    `nprobe/nlist` of the corpus bytes (plan-asserted in `PlanSpec`)
   *  - `centroids/`       nlist rows (cell, centroid) — metadata scale
   *
-  * Training follows the ivfTopK recipe: deterministic strided-init
+  * Training follows the ivfTopK recipe (and shares its quantizer's
+  * Lloyd trainer and cell-assign UDF): deterministic strided-init
   * Lloyd over a bounded DETERMINISTIC sample (~256 vectors/cell, the
   * lowest-xxhash64(id) vectors — a content-addressed pseudo-random
   * draw that is identical across runs regardless of input split
@@ -37,11 +38,8 @@ object VectorIndex {
       .limit(math.max(nlist * 256, 4096))
       .select("cv").as[Array[Float]].collect()
       .map(_.map(_.toDouble))
-    val cents = Similarity.lloyd(sample, nlist, iters = 10)
-    val bc = spark.sparkContext.broadcast(cents)
-    val assign = udf((v: Array[Float]) =>
-      Similarity.nearestCentroid(bc.value, v.map(_.toDouble)))
-    c.withColumn("cell", assign(col("cv")))
+    val cents = Similarity.lloyd(sample, nlist)
+    c.withColumn("cell", Similarity.assignCell(spark, cents)(col("cv")))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
     cents.zipWithIndex
       .map { case (v, i) => (i, v.map(_.toFloat)) }.toSeq
@@ -70,44 +68,30 @@ object VectorIndex {
     val centroids = spark.read.parquet(s"$dir/centroids")
       .as[(Int, Array[Float])].collect().sortBy(_._1)
       .map(_._2.map(_.toDouble))
-    val bc = spark.sparkContext.broadcast(centroids)
-    val assign = udf((v: Array[Float]) =>
-      Similarity.nearestCentroid(bc.value, v.map(_.toDouble)))
     batch.select(col(idCol).as("vid"), col(vecCol).as("cv"))
-      .withColumn("cell", assign(col("cv")))
+      .withColumn("cell", Similarity.assignCell(spark, centroids)(col("cv")))
       .write.mode("append").partitionBy("cell").parquet(s"$dir/cells")
   }
 
   /** Top-k cosine against the prebuilt index. The probed-cell set is
     * bounded by nlist (metadata scale), so collecting it to drive the
     * partition-pruning filter costs nothing; queries broadcast into
-    * the pruned scan exactly like `ivfTopK`'s in-memory path.
+    * the pruned scan and rank through `ivfTopK`'s probe and rank stages.
     */
   def queryIvf(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
                nprobe: Int = 4,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val centroids = spark.read.parquet(s"$dir/centroids")
       .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
-    val probeCells = udf((qv: Array[Float]) =>
-      centroids.zipWithIndex
-        .map { case (cc, i) => (i, Similarity.cosineKernel(qv, cc)) }
-        .sortBy(-_._2).take(nprobe).map(_._1))
     val q = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("cell", explode(probeCells(col("qv"))))
+      .withColumn("cell", explode(Similarity.probeCells(centroids, nprobe)(col("qv"))))
     val probed = q.select("cell").distinct().as[Int].collect().toSeq
     val scan = spark.read.parquet(s"$dir/cells")
       .filter(col("cell").isin(probed: _*))
-    val scored = scan.join(broadcast(q), "cell")
-      .filter(col("vid") =!= col("query_id"))
-      .withColumn("sim", Similarity.cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("vid").as("neighbor_id"))
+    Similarity.rankTopK(scan.join(broadcast(q), "cell"),
+        Similarity.cosine(col("qv"), col("cv")), k, neighbor = "vid")
+      .withColumnRenamed("vid", "neighbor_id")
   }
 }

@@ -129,6 +129,58 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(recall >= 0.6, s"recall=$recall (found $hits of ${base.length} planted dups)")
   }
 
+  test("LSH buckets on every dimension of a 128-dim vector, not the first 64") {
+    import spark.implicits._
+    // the query (id 0) and its true neighbour (id 1) agree on the large
+    // last 64 components and are opposite on the small first 64; the
+    // distractors (ids 2..5) copy the query's first 64 and negate the
+    // last 64. Hyperplanes cut on all 128 components put 0 and 1 in one
+    // bucket; planes cut on the first 64 only would pair 0 with the
+    // distractors and never with 1.
+    val head = Array.tabulate(64)(j => ((j % 7) - 3 + 0.5f) * 0.01f)
+    val tail = Array.tabulate(64)(j => 10f + (j % 5))
+    val vecs = Seq(
+      0L -> (head ++ tail),
+      1L -> (head.map(-_) ++ tail)) ++
+      (2L to 5L).map(id => id -> (head.map(_ * id) ++ tail.map(-_)))
+    val df = vecs.toDF("vec_id", "embedding")
+    val got = Similarity.lshTopK(df, df.filter(col("vec_id") === 0L), k = 1,
+        bits = 8, probes = 0)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
+    assert(got.toSeq == Seq((0L, 1L)))
+  }
+
+  test("exact top-k operators agree row for row: ties by neighbour id, no self hit, int rank") {
+    import spark.implicits._
+    // 12 vectors, each base vector three times, so sims tie within a
+    // base; k = 4 cuts query 0's list inside the tie group {1, 5, 9}
+    val base = Array(Array(1f, 0f, 0f, 0f), Array(1f, 1f, 0f, 0f),
+      Array(0f, 1f, 1f, 0f), Array(1f, 0f, 1f, 1f))
+    val vecs = (0L until 12L).map(id => id -> base((id % 4).toInt))
+    val corpus = vecs.toDF("vec_id", "embedding")
+    val queries = corpus.filter(col("vec_id") < 3)
+    val k = 4
+    val want = (0L until 3L).flatMap { qid =>
+      vecs.filter(_._1 != qid)
+        .map { case (id, v) => (id, Similarity.cosineKernel(base((qid % 4).toInt), v)) }
+        .sortBy { case (id, sim) => (-sim, id) }.take(k)
+        .zipWithIndex.map { case ((id, _), r) => (qid, r + 1, id) }
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_topk_parity").toString
+    graft.ops.VectorIndex.buildIvf(corpus, dir, nlist = 3)
+    val ops = Seq(
+      "bruteForceTopK" -> Similarity.bruteForceTopK(corpus, queries, k),
+      "ivfTopK" -> Similarity.ivfTopK(corpus, queries, k, nlist = 3, nprobe = 3),
+      "filteredTopK" -> Similarity.filteredTopK(corpus, queries, k, corpusFilter = lit(true)),
+      "queryIvf" -> graft.ops.VectorIndex.queryIvf(spark, dir, queries, k, nprobe = 3))
+    for ((name, df) <- ops) {
+      assert(df.schema("rank").dataType == org.apache.spark.sql.types.IntegerType, name)
+      val got = df.select("query_id", "rank", "neighbor_id").as[(Long, Int, Long)]
+        .collect().sorted.toSeq
+      assert(got == want, name)
+    }
+  }
+
   test("embedding near-dup pairs match per-pair kernel recomputation") {
     import spark.implicits._
     val pairs = Similarity.cosineNearDupPairs(emb, threshold = 0.4)
