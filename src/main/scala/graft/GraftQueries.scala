@@ -1467,7 +1467,7 @@ object GraftQueries {
     Dedup.contamination(
         tbl(s, dir, "documents")
           .filter(bucket(col("doc_id")) < 90 || bucket(col("doc_id")) >= 95),
-        "doc_id", "text", isEval = id => bucket(id) >= 95, n = 3, minShared = 5)
+        "doc_id", "text", isEval = id => bucket(id) >= 95, minShared = 5)
       .groupBy("eval_id")
       .agg(count(lit(1)).as("n_train_matches"),
         max(col("shared")).as("max_shared"),
@@ -1481,7 +1481,7 @@ object GraftQueries {
     */
   def d9WinnowingDups(s: SparkSession, dir: String): DataFrame =
     Dedup.winnowingNearDups(tbl(s, dir, "documents"), "doc_id", "text",
-      k = 5, window = 4, threshold = 0.5, portableHash = true)
+      threshold = 0.5, portableHash = true)
 
   /** Cluster-collapse dedup — the terminal op the whole near-dup
     * pipeline exists for: one canonical doc (the cluster-min id)
@@ -4418,7 +4418,7 @@ object GraftQueries {
 
   /** MM6 [EXT] — perceptual-hash image near-dup over REAL pixels,
     * re-pointed (round 11) at the 64-BIT aHash contract
-    * (`Multimodal.imageNearDups` → `imageNearDups64`): the previous
+    * (`Multimodal.nearDupsFromHashes64`): the previous
     * 16-bin hash saturated its 2^16 code space past ~10^4 images and
     * the TRUE hamming-≤2 pair set went quadratic (measured 101× pairs
     * for 10× data, SCALING.md round 10) — a contract-level scale bug, now
@@ -4449,9 +4449,9 @@ object GraftQueries {
   /** MM10 [EXT] — the REAL 64-bit average hash over decoded pixels
     * (`Multimodal.imageAHash64`): exact-integer 8×8 downsample + the
     * cross-multiplied mean test, every bit SQL-re-derived from the
-    * formula pixels. This is the perceptual-hash family's SCALE path —
-    * the 16-bin histogram hash (mm6) saturates its 2^16 code space
-    * past ~10^4 images (measured 20x at the sf1 step, true-output
+    * formula pixels. This is the only image near-dup hash: a 16-bin
+    * histogram hash (mm6 before round 11) saturates its 2^16 code
+    * space past ~10^4 images (measured 20x at the sf1 step, true-output
     * growth), a 64-bit code holds discrimination to ~10^9.
     */
   def mm10Ahash64(s: SparkSession, dir: String): DataFrame =

@@ -3,20 +3,28 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Deduplication operators over the `documents` table: exact,
-  * MinHash+LSH, SimHash, and exact n-gram Jaccard.
+/** Deduplication operators over the `documents` table.
   *
-  * Scale design (the 100 TB story):
-  *  - exact dedup is a single hash-aggregate on a digest key — one
-  *    shuffle of (16-byte key, id), with map-side partial aggregation;
-  *  - near-dup never computes all pairs: LSH banding buckets candidate
-  *    pairs so the join keys are (band, signature-slice) — the shuffle is
-  *    O(docs × bands), not O(docs²);
-  *  - candidates are then VERIFIED with the exact Jaccard on the two
-  *    shingle sets (`array_intersect`/`array_union`, codegen'd) — so the
-  *    LSH output equals the exact threshold join (up to the banding
-  *    recall bound, ≥ 1-4e-8 at the configured threshold), which is what
-  *    makes the operator oracle-checkable.
+  * Exact dedup is a single hash-aggregate on a digest key: one shuffle
+  * of (16-byte key, id), with map-side partial aggregation.
+  *
+  * Every near-dup join is a CANDIDATE GENERATOR followed by shared
+  * stages, so each generator only decides which pairs to propose:
+  *  - shingling ([[shingles]], `withShingles`) and one `xxhash64` per
+  *    shingle (`shingleHashes`) feed MinHash and SimHash alike;
+  *  - MinHash generators (d2, d6, d18's screen) share one LSH
+  *    band-bucket stage (`bandBuckets`) and differ only in the member
+  *    a bucket collects and how its pairs expand;
+  *  - SimHash (d3) and the 64-bit image hash (mm6) share one
+  *    pigeonhole Hamming join (`hammingPairs`);
+  *  - the exact count plans (d4, d18, d9) share one token self-join
+  *    co-occurrence count (`cooccurrence`), and the d4/d18 choosers one
+  *    candidate-volume measure (`countPlanWithinBudget`);
+  *  - candidates are VERIFIED on the two shingle sets joined back
+  *    (`withShingleArrays`): exact Jaccard (`verifyByJaccard`) or
+  *    exact containment (`verifyByContainment`), so a near-dup join's
+  *    output equals the exact threshold join up to the blocking
+  *    recall, which is what makes it oracle-checkable.
   *
   * Execution-shape note: signatures are computed via explode →
   * codegen'd xxhash64 → groupBy partial-aggregate, NOT via nested
@@ -27,6 +35,21 @@ import org.apache.spark.sql.functions._
   * codegen and the only shuffle is the doc-keyed aggregate.
   */
 object Dedup {
+
+  /** Word n-gram size of every shingle-based near-dup operator. */
+  private val ShingleN = 3
+
+  /** MinHash signature length: 16 bands × 4 rows for the d2/d6 joins,
+    * 32 bands × 2 rows for d18's wider screen.
+    */
+  private val MinHashK = 64
+
+  /** Largest estimated eval-gram payload [[contamination]] broadcasts. */
+  private val EvalBroadcastMaxBytes = 64L << 20
+
+  /** [[cdcChunkStats]]: boundary gram size and expected chunk length. */
+  private val CdcGram = 3
+  private val CdcDivisor = 16
 
   /** Distinct word n-gram shingles, first-occurrence order. Whitespace
     * tokenisation identical to `TextAnalysis.tokens` (split `\s+`, drop
@@ -65,15 +88,13 @@ object Dedup {
     u(text)
   }
 
-  /** Exact dedup: group by content digest, keep the smallest id as the
-    * canonical representative. One shuffle on a 16-byte key.
+  /** Exact dedup: group by normalised-content digest
+    * (`TextAnalysis.fingerprint`), keep the smallest id as the canonical
+    * representative. One shuffle on a 16-byte key.
     */
-  def exact(df: DataFrame, idCol: String, textCol: String,
-            normalised: Boolean = true): DataFrame = {
-    val key = if (normalised) TextAnalysis.fingerprint(col(textCol)) else md5(col(textCol))
-    df.groupBy(key.as("fingerprint"))
+  def exact(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.groupBy(TextAnalysis.fingerprint(col(textCol)).as("fingerprint"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("dup_count"))
-  }
 
   /** Exact-dedup keep-canonical over FULL rows: for each distinct
     * dedup key, the surviving row is the one with the smallest id —
@@ -107,7 +128,7 @@ object Dedup {
     * narrow chain runs on a single core. At real scale the source has
     * many splits and this is a cheap no-op-sized shuffle of raw text.
     */
-  private def withShingles(df: DataFrame, idCol: String, textCol: String, n: Int) = {
+  private def withShingles(df: DataFrame, idCol: String, textCol: String) = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     // hash-partition by id (not round-robin): downstream per-doc
     // aggregations (minhash mins, simhash bit sums) then combine entirely
@@ -115,116 +136,83 @@ object Dedup {
     // of one partial row per (doc, partition)
     df.select(col(idCol).as("id"), col(textCol).as("t"))
       .repartition(parallelism, col("id"))
-      .select(col("id"), shingles(col("t"), n).as("sh"))
+      .select(col("id"), shingles(col("t"), ShingleN).as("sh"))
       .filter(size(col("sh")) > 0)
   }
 
-  /** MinHash signatures as k plain columns (Broder 1997): explode the
-    * shingles, hash each ONCE with xxhash64, then derive the k-member
-    * hash family arithmetically (h_i = a_i·h + b_i with odd a_i — the
-    * classic multiply-shift universal family) so each extra family
-    * member costs one codegen'd multiply-add instead of re-hashing the
-    * string bytes. Per-doc min of each — one partial+final aggregate on
-    * doc id. Output: (id, sig_0 … sig_{k-1}).
+  /** `(id, h)`: each shingle of `sh` hashed ONCE with codegen'd
+    * xxhash64 — the input of every MinHash and SimHash signature. The
+    * signature families derive their members from `h` (the 8-byte
+    * long), never by re-hashing the string bytes.
     */
-  def minhashSignatures(sh: DataFrame, k: Int): DataFrame = {
-    val exploded = sh.select(col("id"), explode(col("sh")).as("s"))
+  private def shingleHashes(sh: DataFrame): DataFrame =
+    sh.select(col("id"), explode(col("sh")).as("s"))
       .select(col("id"), xxhash64(col("s")).as("h"))
-    // family member i re-hashes the 8-byte long (not the string), and
-    // avoids multiply-add mixing which overflows under ANSI mode
-    val mins = (0 until k).map(i => min(xxhash64(col("h"), lit(i))).as(s"sig_$i"))
-    exploded.groupBy("id").agg(mins.head, mins.tail: _*)
+
+  /** The LSH band-bucket stage of every MinHash generator: per-doc
+    * band keys (`MinHashBandsAgg`, one partial+final aggregate on doc
+    * id), stacked with their band index, grouped per (band index, band
+    * hash) bucket. Each bucket collects `member` (a named expression
+    * over `id`) into the sorted array `ms`; singleton buckets are
+    * dropped. One shuffle (the bucket groupBy) over O(docs × bands)
+    * tiny rows.
+    */
+  private def bandBuckets(sh: DataFrame, rowsPerBand: Int, member: Column): DataFrame = {
+    val minhashBands = graft.functions.MinHashBandsAgg(MinHashK, rowsPerBand)
+    val banded = shingleHashes(sh)
+      .groupBy("id").agg(minhashBands(col("h")).as("bands"))
+      .select(member, posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
+    banded.groupBy("band_idx", "band_hash")
+      .agg(sort_array(collect_list(col(banded.columns.head))).as("ms"))
+      .filter(size(col("ms")) > 1)
   }
 
-  /** LSH band-key columns from the signature columns: band j hashes its
-    * `rowsPerBand` signature slots together (plus j so bands don't
-    * collide across indices).
+  /** Candidate pairs from LSH banding: every pair of docs sharing a
+    * band bucket, `id_a < id_b`. ONE signature computation — a band-key
+    * self-join would re-run the whole signature pipeline for its second
+    * side. In-bucket pair expansion is O(Σ bucket²), bounded by LSH
+    * bucket sizes, not table size.
     */
-  private def bandCols(k: Int, rowsPerBand: Int): Seq[Column] =
-    (0 until k / rowsPerBand).map { j =>
-      val slots = (0 until rowsPerBand).map(r => col(s"sig_${j * rowsPerBand + r}"))
-      xxhash64(slots :+ lit(j): _*).as(s"band_$j")
-    }
-
-  /** Candidate pairs from LSH banding: stack band keys, group docs per
-    * (band index, band hash) bucket, expand in-bucket pairs. One shuffle
-    * (the bucket groupBy) over O(docs × bands) tiny rows, ONE signature
-    * computation — a band-key self-join would re-run the whole signature
-    * pipeline for its second side. In-bucket pair expansion is
-    * O(Σ bucket²), bounded by LSH bucket sizes, not table size.
-    */
-  def minhashCandidates(sh: DataFrame, k: Int = 64, rowsPerBand: Int = 4): DataFrame = {
-    val minhashBands = graft.functions.MinHashBandsAgg(k, rowsPerBand)
-    val buckets = sh.select(col("id"), explode(col("sh")).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("h"))
-      .groupBy("id").agg(minhashBands(col("h")).as("bands"))
-      .select(col("id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-      .groupBy("band_idx", "band_hash")
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
+  def minhashCandidates(sh: DataFrame, rowsPerBand: Int = 4): DataFrame = {
+    val buckets = bandBuckets(sh, rowsPerBand, col("id"))
     // all ordered pairs within a bucket: for each position i, pair with
     // every later element (lambda references only bound vars — cheap)
     val pairs = buckets.select(explode(flatten(
-      transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + lit(2), size(col("ids"))),
+      transform(col("ms"), (x, i) =>
+        transform(slice(col("ms"), i + lit(2), size(col("ms"))),
           y => struct(x.as("id_a"), y.as("id_b")))))).as("p"))
     pairs.select(col("p.id_a"), col("p.id_b")).distinct()
   }
 
-  private def verifyByJaccard(cands: DataFrame, sh: DataFrame, threshold: Double): DataFrame =
+  /** The verify stage's input: each candidate pair joined back to its
+    * two shingle arrays, `sh_a` and `sh_b`.
+    */
+  private def withShingleArrays(cands: DataFrame, sh: DataFrame): DataFrame =
     cands
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+
+  private def verifyByJaccard(cands: DataFrame, sh: DataFrame, threshold: Double): DataFrame =
+    withShingleArrays(cands, sh)
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
 
-  /** MinHash LSH near-dup join, verified: candidates whose EXACT shingle
-    * Jaccard ≥ threshold. Output is deterministic and equals the exact
-    * threshold join (LSH recall at J≥0.8 with 16×4 banding ≈ 1-4e-8).
+  /** MinHash LSH near-dup join, verified: candidates whose EXACT 3-gram
+    * shingle Jaccard ≥ threshold. Output is deterministic and equals the
+    * exact threshold join (LSH recall at J≥0.8 with 16×4 banding over a
+    * 64-member signature ≈ 1-4e-8).
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      threshold: Double = 0.8, n: Int = 3,
-                      k: Int = 64, rowsPerBand: Int = 4): DataFrame = {
+                      threshold: Double = 0.8): DataFrame = {
     // sh appears three times in the final plan (signature pipeline + the
     // two verify joins); persist so tokenisation/shingling runs once.
     // Registered with OpCaches so the session driver can release it
     // after the query's action instead of waiting for LRU eviction.
-    val sh = OpCaches.persist(withShingles(df, idCol, textCol, n))
-    verifyByJaccard(minhashCandidates(sh, k, rowsPerBand), sh, threshold)
+    val sh = OpCaches.persist(withShingles(df, idCol, textCol))
+    verifyByJaccard(minhashCandidates(sh), sh, threshold)
   }
 
-  /** Connected components over near-dup pairs — turns pairwise matches
-    * into DUP CLUSTERS so a pipeline can keep one canonical doc per
-    * component. Min-label propagation PLUS pointer jumping as a
-    * DataFrame fixpoint: each round (a) takes the min label across
-    * edges, then (b) path-doubles by replacing every label with its
-    * label's label — so label chains halve each round and convergence
-    * is O(log diameter) rounds (the classic Shiloach-Vishkin /
-    * large-star idea), not O(diameter). Each round is two equi-joins +
-    * one metadata-scale convergence count; a 64-node chain converges
-    * in 7 rounds (spec-asserted), so maxIter=25 covers components of
-    * diameter ≈ 2^24.
-    *
-    * Output: (doc_id, cluster_id = min doc id in the component), one
-    * row per doc that appears in ≥ 1 pair.
-    *
-    * Durability: when a checkpoint dir is available — passed as
-    * `checkpointDir`, or already configured on the SparkContext — each
-    * round is materialised RELIABLY as parquet under a unique
-    * subdirectory (survives executor loss, the right mode for long
-    * fixpoints on a real cluster), keeping at most two rounds on disk:
-    * a round's files are deleted as soon as the round after next is
-    * safely written (`Dataset.checkpoint` was rejected here — it
-    * requires mutating the GLOBAL SparkContext checkpoint dir, and
-    * Spark never deletes reliable checkpoints by default, so a long
-    * fixpoint would accumulate a full labels copy per round). The final
-    * round's parquet backs the returned DataFrame; callers may delete
-    * the subdirectory when done with the result. Without a checkpoint
-    * dir it falls back to `localCheckpoint` (executor-local blocks:
-    * faster, but lost partitions are unrecoverable mid-fixpoint — fine
-    * for single-JVM and short-lived jobs).
-    */
   /** Convergence telemetry of the last `clusters` run in this process:
     * rounds to fixpoint and labels changed per round. At 100× data the
     * fixpoint's behavior (O(log diameter) rounds expected) is the thing
@@ -234,26 +222,6 @@ object Dedup {
   final case class ClusterStats(rounds: Int, changedPerRound: Seq[Long])
   @volatile var lastClusterStats: Option[ClusterStats] = None
 
-  /** `driverMaxEdges`: cost-based plan chooser. A near-dup pair graph is
-    * usually TINY relative to its corpus (pairs are the output of a
-    * threshold join), and the distributed fixpoint's per-round cost is
-    * fixed overhead (two joins + a checkpoint per round, ~7 rounds) that
-    * dwarfs a small graph's actual work. At or below the budget the
-    * symmetrized edge list is collected and solved with union-find on
-    * the driver — O(E α(E)), exact same labels (component min). Driver
-    * footprint at the full 1M-edge cap: tuple array + boxed
-    * HashMap ≈ 150-250 MB transient — the default budget is the cap
-    * heap-derived downward on small drivers ([[DriverBudget]]), so a
-    * 1 GB driver walks ~300k edges, never OOMs. Above it, the O(log d)-round
-    * distributed fixpoint runs unchanged — the 100 TB path. The count
-    * that decides is free at fixpoint time: the edge list is persisted
-    * either way, and the count materialises the cache the first round
-    * would have built anyway. Pass 0 to force the distributed path.
-    * The driver path requires BIGINT ids (it would change both label
-    * semantics — numeric vs lexicographic min — and the output schema
-    * for other types); non-long ids always take the distributed path,
-    * which is type-agnostic.
-    */
   /** Indexed-array union-find over an in-memory edge list (the
     * walkedPageRank discipline): ids interned once into dense ints,
     * union by SIZE for balanced trees (union-by-min-value builds
@@ -313,6 +281,57 @@ object Dedup {
       .toDF("doc_id", "cluster_id")
   }
 
+  /** Connected components over near-dup pairs — turns pairwise matches
+    * into DUP CLUSTERS so a pipeline can keep one canonical doc per
+    * component. Min-label propagation PLUS pointer jumping as a
+    * DataFrame fixpoint: each round (a) takes the min label across
+    * edges, then (b) path-doubles by replacing every label with its
+    * label's label — so label chains halve each round and convergence
+    * is O(log diameter) rounds (the classic Shiloach-Vishkin /
+    * large-star idea), not O(diameter). Each round is two equi-joins +
+    * one metadata-scale convergence count; a 64-node chain converges
+    * in 7 rounds (spec-asserted), so maxIter=25 covers components of
+    * diameter ≈ 2^24.
+    *
+    * Output: (doc_id, cluster_id = min doc id in the component), one
+    * row per doc that appears in ≥ 1 pair.
+    *
+    * Durability: when a checkpoint dir is available — passed as
+    * `checkpointDir`, or already configured on the SparkContext — each
+    * round is materialised RELIABLY as parquet under a unique
+    * subdirectory (survives executor loss, the right mode for long
+    * fixpoints on a real cluster), keeping at most two rounds on disk:
+    * a round's files are deleted as soon as the round after next is
+    * safely written (`Dataset.checkpoint` was rejected here — it
+    * requires mutating the GLOBAL SparkContext checkpoint dir, and
+    * Spark never deletes reliable checkpoints by default, so a long
+    * fixpoint would accumulate a full labels copy per round). The final
+    * round's parquet backs the returned DataFrame; callers may delete
+    * the subdirectory when done with the result. Without a checkpoint
+    * dir it falls back to `localCheckpoint` (executor-local blocks:
+    * faster, but lost partitions are unrecoverable mid-fixpoint — fine
+    * for single-JVM and short-lived jobs).
+    *
+    * `driverMaxEdges`: cost-based plan chooser. A near-dup pair graph is
+    * usually TINY relative to its corpus (pairs are the output of a
+    * threshold join), and the distributed fixpoint's per-round cost is
+    * fixed overhead (two joins + a checkpoint per round, ~7 rounds) that
+    * dwarfs a small graph's actual work. At or below the budget the
+    * symmetrized edge list is collected and solved with union-find on
+    * the driver — O(E α(E)), exact same labels (component min). Driver
+    * footprint at the full 1M-edge cap: tuple array + boxed
+    * HashMap ≈ 150-250 MB transient — the default budget is the cap
+    * heap-derived downward on small drivers ([[DriverBudget]]), so a
+    * 1 GB driver walks ~300k edges, never OOMs. Above it, the O(log d)-round
+    * distributed fixpoint runs unchanged — the 100 TB path. The count
+    * that decides is free at fixpoint time: the edge list is persisted
+    * either way, and the count materialises the cache the first round
+    * would have built anyway. Pass 0 to force the distributed path.
+    * The driver path requires BIGINT ids (it would change both label
+    * semantics — numeric vs lexicographic min — and the output schema
+    * for other types); non-long ids always take the distributed path,
+    * which is type-agnostic.
+    */
   def clusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                maxIter: Int = 25, checkpointDir: Option[String] = None,
                driverMaxEdges: Long = DriverBudget.clusterEdges(1L << 20)): DataFrame = {
@@ -444,18 +463,11 @@ object Dedup {
     */
   def minhashNearDupsIncremental(df: DataFrame, idCol: String, textCol: String,
                                  isNew: Column => Column,
-                                 threshold: Double = 0.8, n: Int = 3,
-                                 k: Int = 64, rowsPerBand: Int = 4): DataFrame = {
-    val sh = OpCaches.persist(withShingles(df, idCol, textCol, n))
-    val minhashBands = graft.functions.MinHashBandsAgg(k, rowsPerBand)
-    val buckets = sh.select(col("id"), explode(col("sh")).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("h"))
-      .groupBy("id").agg(minhashBands(col("h")).as("bands"))
-      .select(col("id"), isNew(col("id")).as("nw"),
-        posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-      .groupBy("band_idx", "band_hash")
-      .agg(sort_array(collect_list(struct(col("id"), col("nw")))).as("ms"))
-      .filter(size(filter(col("ms"), m => m.getField("nw"))) > 0 && size(col("ms")) > 1)
+                                 threshold: Double = 0.8): DataFrame = {
+    val sh = OpCaches.persist(withShingles(df, idCol, textCol))
+    val buckets = bandBuckets(sh, rowsPerBand = 4,
+        member = named_struct(lit("id"), col("id"), lit("nw"), isNew(col("id"))).as("m"))
+      .filter(exists(col("ms"), m => m.getField("nw")))
     // anchor expansion on new members: each new doc pairs with every
     // other bucket member; (least, greatest) + distinct dedupes the
     // new-new double count
@@ -468,7 +480,7 @@ object Dedup {
     verifyByJaccard(pairs, sh, threshold)
   }
 
-  /** Exact n-gram Jaccard threshold join, count-based: explode shingles,
+  /** Exact 3-gram Jaccard threshold join, count-based: explode shingles,
     * self-join on the shingle, count co-occurrences per pair (this IS the
     * intersection size, since shingle sets are distinct), then join the
     * per-doc set sizes and filter on |∩| / (|A|+|B|-|∩|). One wide
@@ -483,20 +495,19 @@ object Dedup {
     * candidates.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        threshold: Double = 0.8, n: Int = 3): DataFrame =
-    ngramJaccardPairsOnShingles(withShingles(df, idCol, textCol, n), threshold)
+                        threshold: Double = 0.8): DataFrame =
+    ngramJaccardPairsOnShingles(withShingles(df, idCol, textCol), threshold)
 
-  /** Jaccard-threshold pairs from a pre-exploded `(id, token)` relation
+  /** Co-occurrence counts from a pre-exploded `(id, token)` relation
     * plus per-id set sizes `(id, n)`: self-join on the token, count
-    * co-occurrences (= |∩|, since token sets are distinct per id), join
-    * the sizes, score |∩| / (na + nb − |∩|). Shared by the n-gram
-    * count-based plan and the winnowing fingerprint join — one place
-    * for the tie/overflow/threshold semantics.
+    * co-occurrences per pair (= |∩|, since token sets are distinct per
+    * id), join both sizes. Output `(id_a, id_b, i, na, nb)` with
+    * `id_a < id_b`. Shared by the n-gram Jaccard count plan, the containment
+    * count plan and the winnowing fingerprint join — one place for the
+    * join and its partitioning; each caller adds only its score.
     */
-  private def jaccardFromExploded(ex: DataFrame, sizes: DataFrame,
-                                  tokenCol: String, threshold: Double,
-                                  outCol: String,
-                                  expectedCandidates: Double = -1.0): DataFrame = {
+  private def cooccurrence(ex: DataFrame, sizes: DataFrame, tokenCol: String,
+                           expectedCandidates: Double = -1.0): DataFrame = {
     // Candidate-volume-aware join partitioning. A token self-join is
     // EXPLOSIVE — output Σ df(df−1)/2 candidates, unbounded relative to
     // its input — but AQE sizes the join's task count from the PRE-join
@@ -525,20 +536,39 @@ object Dedup {
     inter
       .join(sizes.select(col("id").as("id_a"), col("n").as("na")), "id_a")
       .join(sizes.select(col("id").as("id_b"), col("n").as("nb")), "id_b")
-      .withColumn(outCol,
+  }
+
+  /** [[cooccurrence]] over the exploded shingle sets of `sh`. */
+  private def shingleCooccurrence(sh: DataFrame,
+                                  expectedCandidates: Double = -1.0): DataFrame =
+    cooccurrence(
+      sh.select(col("id"), explode(col("sh")).as("s")),
+      sh.select(col("id"), size(col("sh")).as("n")),
+      "s", expectedCandidates)
+
+  /** Jaccard |∩| / (na + nb − |∩|) over [[cooccurrence]] rows, kept at
+    * ≥ `threshold`: one place for the tie/overflow/threshold semantics.
+    */
+  private def jaccardFromCounts(co: DataFrame, threshold: Double,
+                                outCol: String): DataFrame =
+    co.withColumn(outCol,
         col("i").cast("double") / (col("na") + col("nb") - col("i")).cast("double"))
       .filter(col(outCol) >= threshold)
       .select("id_a", "id_b", outCol)
-  }
 
   private def ngramJaccardPairsOnShingles(sh: DataFrame, threshold: Double,
                                           expectedCandidates: Double = -1.0): DataFrame =
-    jaccardFromExploded(
-      sh.select(col("id"), explode(col("sh")).as("s")),
-      sh.select(col("id"), size(col("sh")).as("n")),
-      "s", threshold, "jaccard", expectedCandidates)
+    jaccardFromCounts(shingleCooccurrence(sh, expectedCandidates), threshold, "jaccard")
 
-  /** Exact n-gram Jaccard with PPJoin-style prefix filtering (Bayardo,
+  /** `(s, df_s)`: the document frequency of every shingle of `sh` —
+    * the rarest-first order of the prefix plan and the input of the
+    * choosers' candidate-volume measure.
+    */
+  private def shingleFreq(sh: DataFrame): DataFrame =
+    sh.select(explode(col("sh")).as("s"))
+      .groupBy("s").agg(count(lit(1)).as("df_s"))
+
+  /** Exact 3-gram Jaccard with PPJoin-style prefix filtering (Bayardo,
     * Ma, Srikant: "Scaling Up All Pairs Similarity Search", WWW 2007):
     * identical output to `ngramJaccardPairs`, far fewer candidates.
     *
@@ -568,11 +598,9 @@ object Dedup {
     * pairs.
     */
   def ngramJaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
-                              threshold: Double = 0.8, n: Int = 3): DataFrame = {
-    val sh = OpCaches.persist(withShingles(df, idCol, textCol, n))
-    val freq = sh.select(col("id"), explode(col("sh")).as("s"))
-      .groupBy("s").agg(count(lit(1)).as("df_s"))
-    ngramJaccardPairsPrefixOnShingles(sh, freq, threshold)
+                              threshold: Double = 0.8): DataFrame = {
+    val sh = OpCaches.persist(withShingles(df, idCol, textCol))
+    ngramJaccardPairsPrefixOnShingles(sh, shingleFreq(sh), threshold)
   }
 
   private def ngramJaccardPairsPrefixOnShingles(
@@ -593,7 +621,27 @@ object Dedup {
     verifyByJaccard(cands, sh, threshold)
   }
 
-  /** Exact n-gram Jaccard threshold join with a cost-based plan choice —
+  /** The cost measure of both count-plan choosers (d4, d18): the count
+    * join's EXACT candidate volume Σ_s df(s)·(df(s)−1)/2, from the
+    * shingle frequency table `freq` of `sh`, or None once it exceeds
+    * `candidateBudgetPerDoc` per document. Candidate volume and doc
+    * count come from ONE action (single-row aggregates cross-joined):
+    * the pre-pass pays one job, not two serial ones, and the caches it
+    * reads materialise concurrently. Double arithmetic: Σ df² on a
+    * web-scale corpus overflows LONG.
+    */
+  private def countPlanWithinBudget(freq: DataFrame, sh: DataFrame,
+                                    candidateBudgetPerDoc: Long): Option[Double] = {
+    val candRow = freq.agg(
+      sum(col("df_s").cast("double") * (col("df_s") - 1).cast("double") / 2.0).as("c"))
+      .crossJoin(sh.agg(count(lit(1)).as("n")))
+      .first()
+    val candidates = if (candRow.isNullAt(0)) 0.0 else candRow.getDouble(0)
+    val nDocs = math.max(1L, candRow.getLong(1))
+    if (candidates > candidateBudgetPerDoc.toDouble * nDocs) None else Some(candidates)
+  }
+
+  /** Exact 3-gram Jaccard threshold join with a cost-based plan choice —
     * the shipped default. Both plans produce identical output
     * (spec-asserted); which one is FAST depends on the shingle
     * frequency distribution:
@@ -616,28 +664,17 @@ object Dedup {
     * prefix plan.
     */
   def ngramJaccardPairsAuto(df: DataFrame, idCol: String, textCol: String,
-                            threshold: Double = 0.8, n: Int = 3,
+                            threshold: Double = 0.8,
                             candidateBudgetPerDoc: Long = 4096,
                             maxPairsPerDoc: Option[Int] = None): DataFrame = {
-    val sh = OpCaches.persist(withShingles(df, idCol, textCol, n))
-    val freq = OpCaches.persist(
-      sh.select(col("id"), explode(col("sh")).as("s"))
-        .groupBy("s").agg(count(lit(1)).as("df_s")))
-    // double arithmetic: Σ df² on a web-scale corpus overflows LONG.
-    // Candidate volume and doc count in ONE action (single-row
-    // aggregates cross-joined): the chooser pre-pass pays one job,
-    // not two serial ones, and both caches materialise concurrently.
-    val candRow = freq.agg(
-      sum(col("df_s").cast("double") * (col("df_s") - 1).cast("double") / 2.0).as("c"))
-      .crossJoin(sh.agg(count(lit(1)).as("n")))
-      .first()
-    val candidates = if (candRow.isNullAt(0)) 0.0 else candRow.getDouble(0)
-    val nDocs = math.max(1L, candRow.getLong(1))
-    val out = if (candidates <= candidateBudgetPerDoc.toDouble * nDocs) {
-      freq.unpersist()
-      ngramJaccardPairsOnShingles(sh, threshold, expectedCandidates = candidates)
-    } else
-      ngramJaccardPairsPrefixOnShingles(sh, freq, threshold)
+    val sh = OpCaches.persist(withShingles(df, idCol, textCol))
+    val freq = OpCaches.persist(shingleFreq(sh))
+    val out = countPlanWithinBudget(freq, sh, candidateBudgetPerDoc) match {
+      case Some(candidates) =>
+        freq.unpersist()
+        ngramJaccardPairsOnShingles(sh, threshold, expectedCandidates = candidates)
+      case None => ngramJaccardPairsPrefixOnShingles(sh, freq, threshold)
+    }
     maxPairsPerDoc.fold(out)(k => capPairsPerDoc(out, col("jaccard"), k))
   }
 
@@ -704,25 +741,16 @@ object Dedup {
     * corpus is long-tailed.
     */
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
-                            threshold: Double = 0.9, n: Int = 3): DataFrame =
-    containmentOnShingles(OpCaches.persist(withShingles(df, idCol, textCol, n)),
+                            threshold: Double = 0.9): DataFrame =
+    containmentOnShingles(OpCaches.persist(withShingles(df, idCol, textCol)),
       threshold)
 
-  private def containmentOnShingles(sh: DataFrame, threshold: Double): DataFrame = {
-    val ex = sh.select(col("id"), explode(col("sh")).as("s"))
-    val sizes = sh.select(col("id"), size(col("sh")).as("n"))
-    val inter = ex.as("a").join(ex.as("b"),
-        col("a.s") === col("b.s") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.select(col("id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("n").as("nb")), "id_b")
+  private def containmentOnShingles(sh: DataFrame, threshold: Double): DataFrame =
+    shingleCooccurrence(sh)
       .withColumn("c_ab", col("i").cast("double") / col("na").cast("double"))
       .withColumn("c_ba", col("i").cast("double") / col("nb").cast("double"))
       .filter(greatest(col("c_ab"), col("c_ba")) >= threshold)
       .select("id_a", "id_b", "c_ab", "c_ba")
-  }
 
   /** EXACT containment verify over candidate pairs only: join back to
     * the shingle arrays, |∩| via `array_intersect`, both directional
@@ -731,9 +759,7 @@ object Dedup {
     */
   private def verifyByContainment(cands: DataFrame, sh: DataFrame,
                                   threshold: Double): DataFrame =
-    cands
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+    withShingleArrays(cands, sh)
       .withColumn("i", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
       .withColumn("c_ab", col("i").cast("double") / size(col("sh_a")).cast("double"))
       .withColumn("c_ba", col("i").cast("double") / size(col("sh_b")).cast("double"))
@@ -751,12 +777,12 @@ object Dedup {
     * Past the budget it routes through a MinHash band SCREEN first
     * (the d2 recipe: band-bucket collisions propose candidates, exact
     * containment verifies them — [[verifyByContainment]]), with wide
-    * banding (32 bands × 2 rows at the k=64 default) so the S-curve
-    * catches pairs down to J ≈ 0.3 with ~95% probability. This is the
-    * documented long-tail trade, stated honestly: containment's prefix
-    * bound only covers the CONTAINED side (no PPJoin symmetry — see
-    * [[ngramContainmentPairs]]), so the only sub-quadratic screen is
-    * probabilistic, and a short-in-long pair whose symmetric Jaccard
+    * banding (32 bands × 2 rows of the 64-member signature) so the
+    * S-curve catches pairs down to J ≈ 0.3 with ~95% probability. This
+    * is the documented long-tail trade, stated honestly: containment's
+    * prefix bound only covers the CONTAINED side (no PPJoin symmetry —
+    * see [[ngramContainmentPairs]]), so the only sub-quadratic screen
+    * is probabilistic, and a short-in-long pair whose symmetric Jaccard
     * falls far below the band curve can be missed. Exactness is traded
     * only when the exact plan's candidate volume has already exploded
     * past the budget — never silently: the routing is deterministic in
@@ -764,55 +790,44 @@ object Dedup {
     * chooser") records both branches on the committed fixtures.
     */
   def ngramContainmentPairsAuto(df: DataFrame, idCol: String, textCol: String,
-                                threshold: Double = 0.9, n: Int = 3,
+                                threshold: Double = 0.9,
                                 candidateBudgetPerDoc: Long = 1024,
-                                k: Int = 64, rowsPerBand: Int = 2,
                                 maxPairsPerDoc: Option[Int] = None): DataFrame = {
-    val sh = OpCaches.persist(withShingles(df, idCol, textCol, n))
+    val sh = OpCaches.persist(withShingles(df, idCol, textCol))
     val out = if (!exceedsCandidateBudget(sh, candidateBudgetPerDoc))
       containmentOnShingles(sh, threshold)
     else
-      verifyByContainment(minhashCandidates(sh, k, rowsPerBand), sh, threshold)
+      verifyByContainment(minhashCandidates(sh, rowsPerBand = 2), sh, threshold)
     // opt-in output budget (the d4 capPairsPerDoc contract): rank by
     // the dominant direction — the same statistic the threshold gates
     maxPairsPerDoc.fold(out)(kk =>
       capPairsPerDoc(out, greatest(col("c_ab"), col("c_ba")), kk))
   }
 
-  /** The count-join plan's EXACT candidate volume Σ df·(df−1)/2 against
-    * a per-doc budget — one arithmetic for the production chooser AND
-    * the probe predicate below, so the probe can never assert a branch
-    * the chooser no longer takes.
+  /** d18's branch predicate: the d4 chooser's cost measure
+    * ([[countPlanWithinBudget]]) over a fresh frequency aggregate — one
+    * arithmetic for the production chooser AND the probe predicate
+    * below, so the probe can never assert a branch the chooser no
+    * longer takes.
     */
   private def exceedsCandidateBudget(sh: DataFrame,
-                                     candidateBudgetPerDoc: Long): Boolean = {
-    // double arithmetic: Σ df² on a web-scale corpus overflows LONG.
-    // Candidate volume and doc count in ONE action (the d4 chooser's
-    // fused pre-pass): one job instead of two serial ones.
-    val candRow = sh.select(explode(col("sh")).as("s"))
-      .groupBy("s").agg(count(lit(1)).as("df_s"))
-      .agg(sum(col("df_s").cast("double") * (col("df_s") - 1).cast("double") / 2.0)
-        .as("c"))
-      .crossJoin(sh.agg(count(lit(1)).as("n")))
-      .first()
-    val candidates = if (candRow.isNullAt(0)) 0.0 else candRow.getDouble(0)
-    candidates > candidateBudgetPerDoc.toDouble * math.max(1L, candRow.getLong(1))
-  }
+                                     candidateBudgetPerDoc: Long): Boolean =
+    countPlanWithinBudget(shingleFreq(sh), sh, candidateBudgetPerDoc).isEmpty
 
   /** Package-private chooser predicate — lets the spec assert WHICH
     * branch [[ngramContainmentPairsAuto]] takes; delegates to the
     * same arithmetic the production chooser runs.
     */
   private[graft] def containmentExceedsBudget(
-      df: DataFrame, idCol: String, textCol: String, n: Int,
+      df: DataFrame, idCol: String, textCol: String,
       candidateBudgetPerDoc: Long): Boolean =
-    exceedsCandidateBudget(withShingles(df, idCol, textCol, n),
+    exceedsCandidateBudget(withShingles(df, idCol, textCol),
       candidateBudgetPerDoc)
 
   /** Benchmark-contamination check — the decontamination pass every
     * training-data pipeline runs before a model ships: for each document
     * in a (small) eval/benchmark set, find the training documents that
-    * share ≥ `minShared` word n-grams with it. Exact (no hashing of the
+    * share ≥ `minShared` word 3-grams with it. Exact (no hashing of the
     * gram key — a hash collision could merge two distinct grams and
     * break oracle equality).
     *
@@ -832,17 +847,17 @@ object Dedup {
     * alone would let millions of long grams through as hundreds of
     * broadcast MB; the estimate (gram bytes + per-row id/overhead) is
     * computed in the same single pass as the row count. An oversized
-    * eval side falls back to a plain shuffle equi-join on the gram.
+    * eval side (estimate over 64 MB) falls back to a plain shuffle
+    * equi-join on the gram.
     *
     * Output: (eval_id, train_id, shared) with shared ≥ minShared.
     */
   def contamination(df: DataFrame, idCol: String, textCol: String,
-                    isEval: Column => Column, n: Int = 3, minShared: Long = 1,
-                    broadcastMaxEvalBytes: Long = 64L << 20): DataFrame = {
+                    isEval: Column => Column, minShared: Long = 1): DataFrame = {
     def grams(side: DataFrame, as: String) =
       Partitioning.ensureParallelism(
           side.select(col(idCol).as("id"), col(textCol).as("t")))
-        .select(col("id").as(as), explode(shingles(col("t"), n)).as("s"))
+        .select(col("id").as(as), explode(shingles(col("t"), ShingleN)).as("s"))
     // persist the (by-assumption tiny) eval grams: the guard's size
     // aggregate and the join both consume them — without this the eval
     // side is scanned and shingled twice
@@ -860,21 +875,20 @@ object Dedup {
     // constant-factor overhead so the budget stays conservative
     val estBytes = sizeRow.getLong(0) + 24L * sizeRow.getLong(1)
     val joined =
-      if (estBytes <= broadcastMaxEvalBytes) trainSh.join(broadcast(evalSh), "s")
+      if (estBytes <= EvalBroadcastMaxBytes) trainSh.join(broadcast(evalSh), "s")
       else trainSh.join(evalSh, "s")
     joined.groupBy("eval_id", "train_id")
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
   }
 
-  /** 64-bit SimHash signatures (Charikar 2002): explode shingles, hash
-    * once (codegen), then one narrow typed aggregate holding the 64
-    * per-bit ±1 counters (`SimHashAgg`). Output: (id, sig). One
-    * aggregate shuffle on id with map-side partial merge.
+  /** 64-bit SimHash signatures (Charikar 2002): the shingle hashes,
+    * then one narrow typed aggregate holding the 64 per-bit ±1 counters
+    * (`SimHashAgg`). Output: (id, sig). One aggregate shuffle on id
+    * with map-side partial merge.
     */
   def simhashSignatures(sh: DataFrame): DataFrame =
-    sh.select(col("id"), explode(col("sh")).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("h"))
+    shingleHashes(sh)
       .groupBy("id").agg(graft.functions.SimHashAgg.column(col("h")).as("sig"))
 
   /** The 64-wide `sum(when(bit))` aggregate form of
@@ -883,56 +897,75 @@ object Dedup {
     * `SimHashAgg`).
     */
   def simhashSignaturesWide(sh: DataFrame): DataFrame = {
-    val exploded = sh.select(col("id"), explode(col("sh")).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("h"))
     val bitSums = (0 until 64).map { b =>
       sum(when(shiftrightunsigned(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1)
         .otherwise(-1)).as(s"bit_$b")
     }
-    val agged = exploded.groupBy("id").agg(bitSums.head, bitSums.tail: _*)
+    val agged = shingleHashes(sh).groupBy("id").agg(bitSums.head, bitSums.tail: _*)
     val sig = (0 until 64).map { b =>
       when(col(s"bit_$b") > 0, lit(1L << b)).otherwise(lit(0L))
     }.reduce((a, c) => a.bitwiseOR(c))
     agged.select(col("id"), sig.as("sig"))
   }
 
-  /** SimHash near-dup join with pigeonhole blocking: split the 64-bit
-    * signature into 4 × 16-bit pieces; any pair with Hamming ≤ 3 must
-    * agree on at least one piece, so joining per piece finds ALL such
-    * pairs (exact blocking, not probabilistic). Verified with exact
-    * Jaccard so output is deterministic (at threshold 1.0, identical
-    * shingle sets ⇒ identical signatures ⇒ recall is exactly 1).
+  /** Pigeonhole Hamming join over 64-bit codes `(id, h)`: split each
+    * code into `maxDist + 1` bands of near-equal width; two codes within
+    * `maxDist` bits differ in at most `maxDist` bands, so they agree
+    * EXACTLY on at least one, and band-equality joins find ALL such
+    * pairs (exact blocking, not probabilistic). Only candidates pay the
+    * popcount check. Output `(id_a, id_b, hamming)`, one row per pair
+    * with `id_a < id_b` and `hamming ≤ maxDist`. The SimHash join (d3)
+    * and the image aHash join (mm6) both run it.
+    */
+  private[graft] def hammingPairs(codes: DataFrame, maxDist: Int): DataFrame = {
+    val nBands = maxDist + 1
+    val bandCols = (0 until nBands).map { b =>
+      val lo = b * 64 / nBands
+      val hi = (b + 1) * 64 / nBands
+      // mask via unsigned shifts: (h >>> lo) & ((1 << width) - 1); at
+      // maxDist = 0 the single band IS the whole code (width 64, where
+      // 1L << 64 would wrap — mask with -1 instead)
+      val mask = if (hi - lo >= 64) -1L else (1L << (hi - lo)) - 1
+      shiftrightunsigned(col("h"), lo).bitwiseAND(lit(mask))
+    }
+    val bands = codes.select(col("id"), col("h"),
+      posexplode(array(bandCols: _*)).as(Seq("band", "band_val")))
+    bands.as("a").join(bands.as("b"),
+        col("a.band") === col("b.band") &&
+        col("a.band_val") === col("b.band_val") &&
+        col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        bit_count(col("a.h").bitwiseXOR(col("b.h"))).cast("int").as("hamming"))
+      .filter(col("hamming") <= maxDist)
+      .distinct() // a pair may agree on several bands
+  }
+
+  /** SimHash near-dup join: candidates from the pigeonhole Hamming join
+    * ([[hammingPairs]]) over the 64-bit signatures — `maxHamming + 1`
+    * bands, so every pair within `maxHamming` bits is a candidate —
+    * verified with exact Jaccard so output is deterministic (at
+    * threshold 1.0, identical shingle sets ⇒ identical signatures ⇒
+    * recall is exactly 1).
     */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3, threshold: Double = 0.8,
-                      n: Int = 3): DataFrame = {
+                      maxHamming: Int = 3, threshold: Double = 0.8): DataFrame = {
     // sh feeds the signature pipeline AND both verify joins — persist
     // or the shingle kernel runs three times (same note as
     // minhashNearDups; measured ~3× on d3)
-    val sh = OpCaches.persist(withShingles(df, idCol, textCol, n))
-    val sigs = simhashSignatures(sh)
-    val pieceCols = (0 until 4).map(p =>
-      shiftrightunsigned(col("sig"), p * 16).bitwiseAND(lit(0xffffL)))
-    val pieces = sigs.select(col("id"), col("sig"),
-      posexplode(array(pieceCols: _*)).as(Seq("piece_idx", "piece")))
-    val cands = pieces.as("a").join(pieces.as("b"),
-        col("a.piece_idx") === col("b.piece_idx") &&
-        col("a.piece") === col("b.piece") &&
-        col("a.id") < col("b.id"))
-      .filter(bit_count(col("a.sig").bitwiseXOR(col("b.sig"))) <= maxHamming)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    verifyByJaccard(cands, sh, threshold)
+    val sh = OpCaches.persist(withShingles(df, idCol, textCol))
+    val sigs = simhashSignatures(sh).select(col("id"), col("sig").as("h"))
+    verifyByJaccard(hammingPairs(sigs, maxHamming).select("id_a", "id_b"), sh, threshold)
   }
 
   /** Winnowing near-dup join (the MOSS recipe — Schleimer, Wilkerson,
     * Aiken, SIGMOD 2003): pairs whose winnowing FINGERPRINT sets have
     * Jaccard ≥ `threshold`. The fingerprints are
-    * `TextAnalysis.winnowingFingerprints` (k-token shingles, min hash
-    * per `window` positions), so each doc is represented by ~1/window
-    * of its shingles — the candidate self-join runs over that reduced
+    * `TextAnalysis.winnowingFingerprints` at its defaults (5-token
+    * shingles, min hash per 4 positions), so each doc is represented by
+    * ~1/4 of its shingles — the candidate self-join runs over that reduced
     * set, and winnowing's guarantee (any shared run of ≥ window+k−1
-    * tokens shares a fingerprint) bounds what the reduction can miss.
+    * tokens, here 8, shares a fingerprint) bounds what the reduction
+    * can miss.
     *
     * The similarity measured IS fingerprint overlap — MOSS's own score
     * — which makes the operator exact over its fingerprint sets and
@@ -946,13 +979,13 @@ object Dedup {
     * same way `ngramJaccardPairsAuto` does.
     */
   def winnowingNearDups(df: DataFrame, idCol: String, textCol: String,
-                        k: Int = 5, window: Int = 4, threshold: Double = 0.5,
+                        threshold: Double = 0.5,
                         portableHash: Boolean = false): DataFrame = {
     val fps = OpCaches.persist(
-      TextAnalysis.winnowingFingerprints(df, idCol, textCol, k, window, portableHash))
-    jaccardFromExploded(
-      fps, fps.groupBy("id").agg(count(lit(1)).as("n")),
-      "fp", threshold, "fp_jaccard")
+      TextAnalysis.winnowingFingerprints(df, idCol, textCol, portableHash = portableHash))
+    jaccardFromCounts(
+      cooccurrence(fps, fps.groupBy("id").agg(count(lit(1)).as("n")), "fp"),
+      threshold, "fp_jaccard")
   }
 
   /** Bloom-prefiltered incremental exact-dedup screen: which docs of a
@@ -980,16 +1013,15 @@ object Dedup {
     * mostly dups), falls back to the plain shuffle anti-join — same
     * output, spec-asserted.
     *
-    * `expectedHistItems` sizes the bloom; -1 sizes it by the UNFILTERED
-    * table count — an upper bound on the history rows, and metadata-only
-    * on a parquet source where a `hist.count()` would be a real filtered
-    * scan (over-sizing a bloom only lowers its fpp). `fpp` trades bloom
-    * bits against false-candidate broadcast volume.
+    * The bloom is sized by the UNFILTERED table count — an upper bound
+    * on the history rows, and metadata-only on a parquet source where a
+    * `hist.count()` would be a real filtered scan (over-sizing a bloom
+    * only lowers its fpp). `fpp` trades bloom bits against
+    * false-candidate broadcast volume.
     */
   def bloomScreenNew(df: DataFrame, idCol: String, textCol: String,
                      isNew: Column => Column,
                      fpp: Double = 0.01,
-                     expectedHistItems: Long = -1L,
                      broadcastMaxCandidates: Long = 1000000L): DataFrame = {
     val outCols = df.columns.map(col).toIndexedSeq
     val fp = TextAnalysis.fingerprint(col(textCol))
@@ -998,7 +1030,7 @@ object Dedup {
     val histFp = hist.select(fp.as("fp"))
     val batch = src.filter(isNew(col(idCol))).withColumn("fp", fp)
 
-    val nHist = if (expectedHistItems >= 0) expectedHistItems else df.count()
+    val nHist = df.count()
     // empty-safe construction (BloomJoin.buildFilter): an empty history
     // is a legitimate first-ingest case where the right answer is a
     // sketch that contains nothing
@@ -1153,8 +1185,8 @@ object Dedup {
   }
 
   /** Non-overlapping `seg`-token segments of a document (last one may be
-    * shorter). Same tight-JVM-kernel rationale as `shingleKernel`
-    * (`Dedup.scala:54-62`): a `transform`/`slice` composition
+    * shorter). Same tight-JVM-kernel rationale as [[shingles]]: a
+    * `transform`/`slice` composition
     * re-evaluates the tokenisation per produced element.
     */
   private[graft] def segmentKernel(t: String, seg: Int): Array[String] = {
@@ -1234,19 +1266,19 @@ object Dedup {
   /** Content-defined chunking + cross-document chunk dedup — the
     * storage-dedup technique (rsync/LBFS/restic) applied to corpus
     * text: a chunk boundary falls AFTER token t whenever the portable
-    * hash of the k-token gram ENDING at t is ≡ 0 mod `divisor`, so
+    * hash of the 3-token gram ENDING at t is ≡ 0 mod 16, so
     * boundaries depend only on local content — an insertion early in
     * a document shifts every fixed-width segment (defeating d16-style
     * segment dedup) but leaves all later CDC chunks byte-identical,
     * which is exactly why CDC finds shared material fixed windows
-    * miss. Expected chunk length ≈ `divisor` tokens.
+    * miss. Expected chunk length ≈ 16 tokens.
     *
     * Shape: ONE shuffle of the token relation (the per-document
     * window computes gram hashes via lead, boundary flags via lag,
     * and chunk ids via a running boundary count — all in the same
     * window pass); chunks then aggregate per (doc, chunk) on the
     * SAME partitioning, and the cross-document dedup is one mergeable
-    * aggregate on the chunk hash (chunk-scale, ~1/divisor of the
+    * aggregate on the chunk hash (chunk-scale, ~1/16 of the
     * token relation) joined back. Per-doc window state is bounded by
     * document length, the d13/t5 contract.
     *
@@ -1255,11 +1287,9 @@ object Dedup {
     * distinct documents.
     */
   def cdcChunkStats(df: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text",
-                    k: Int = 3, divisor: Int = 16): DataFrame = {
+                    textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(k >= 2, "cdcChunkStats: gram size must be >= 2")
-    require(divisor >= 2, "cdcChunkStats: divisor must be >= 2")
+    val k = CdcGram
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val toks = df.select(col(idCol).as("id"), col(textCol).as("t"))
       .repartition(parallelism, col("id"))
@@ -1275,7 +1305,7 @@ object Dedup {
     // boundary AFTER token t ⇔ the gram ENDING at t (started k-1 back)
     // hashed ≡ 0; chunk id = boundaries strictly before t
     val bEnd = lag(col("gh"), k - 1).over(w).isNotNull &&
-      pmod(lag(col("gh"), k - 1).over(w), lit(divisor.toLong)) === 0
+      pmod(lag(col("gh"), k - 1).over(w), lit(CdcDivisor.toLong)) === 0
     val chunked = withHash
       .withColumn("b", when(bEnd, 1L).otherwise(0L))
       .withColumn("chunk_id",

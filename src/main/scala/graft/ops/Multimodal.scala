@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Decode boundaries, honestly labelled:
   *   - IMAGE pixels are REAL: payloads are genuine PNGs
   *     ([[imageAssetsFromDocuments]]) and every pixel kernel
-  *     ([[imageFeatures]], [[imagePerceptualHash]], [[resizeImages]],
+  *     ([[imageFeatures]], [[imageAHash64]], [[resizeImages]],
   *     [[videoFrameHists]]) reads them back with `javax.imageio`.
   *   - AUDIO samples are REAL: payloads are genuine PCM WAVs and
   *     [[decodeAudioLevels]] decodes them with `javax.sound.sampled`;
@@ -828,37 +828,6 @@ object Multimodal {
       }.toDF("asset_id", "width", "height", "out_width", "out_height", "resized_sum")
   }
 
-  /** Perceptual hash over REAL decoded pixels — the aHash recipe
-    * (average hash, the simplest of the pHash family): histogram the
-    * ImageIO-decoded grayscale values into 16 buckets (bucket =
-    * pixel >> 4), set bit i iff bucket i is STRICTLY above the mean.
-    * The mean test is integer cross-multiplied (`h_i · 16 > n_pixels`),
-    * so the hash is exact integer arithmetic end to end and the SQL
-    * twin reproduces every bit from the formula pixels. Narrow
-    * per-partition kernel, no shuffle.
-    */
-  def imagePerceptualHash(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, payload) =>
-          Option(decodeGray(payload)).map { case (_, _, px) =>
-            val h = new Array[Long](16)
-            px.foreach(v => h(v >> 4) += 1L)
-            val total = px.length.toLong
-            var sig = 0
-            var i = 0
-            while (i < 16) {
-              if (h(i) * 16L > total) sig |= (1 << i)
-              i += 1
-            }
-            (id, sig)
-          }
-        }
-      }.toDF("asset_id", "phash")
-  }
-
   /** The REAL 64-bit average hash (aHash proper): nearest-neighbour
     * downsample to 8×8 with the exact integer box recipe
     * ([[resizeImages]]'s `src = out·in div 8` sampling), then bit i set
@@ -866,13 +835,13 @@ object Multimodal {
     * cross-multiplied (`px·64 > Σpx`), so every bit is exact integer
     * arithmetic the SQL twin reproduces from the formula pixels.
     *
-    * This is the SCALE path of the perceptual-hash family: the 16-bin
-    * histogram hash ([[imagePerceptualHash]]) has only 2¹⁶ codes, so
-    * past ~10⁴ images the code space saturates and the true
-    * hamming-≤k pair set grows quadratically (measured: mm6 at 20× for
-    * 10× data on the sf1 rehearsal — true output, not plan shape). A
-    * 64-bit code space holds discrimination to ~10⁹ images; banding
-    * carries over unchanged (8 bands of 8 bits pigeonhole hamming ≤7).
+    * This is the perceptual hash of the image near-dup path. A 16-bin
+    * histogram hash has only 2¹⁶ codes, so past ~10⁴ images its code
+    * space saturates and the true hamming-≤k pair set grows
+    * quadratically (measured: mm6 at 20× for 10× data on the sf1
+    * rehearsal — true output, not plan shape); a 64-bit code space
+    * holds discrimination to ~10⁹ images, with the same pigeonhole
+    * banding (8 bands of 8 bits pigeonhole hamming ≤7).
     * Narrow per-partition kernel, payloads never shuffle.
     */
   def imageAHash64(assets: DataFrame): DataFrame = {
@@ -904,15 +873,16 @@ object Multimodal {
       }.toDF("asset_id", "ahash64")
   }
 
-  /** Near-duplicate image pairs on the 64-bit aHash — the scale form
-    * of [[imageNearDups]]: split the 64-bit code into `maxDist + 1`
-    * bands (pigeonhole: any pair within `maxDist` agrees exactly on
-    * one band), candidates from band-equality joins, only candidates
-    * pay the popcount check. Exact for the hash metric. Unlike the
-    * 16-bit form, the code space (2⁶⁴) cannot saturate at any
-    * realistic corpus size, so the true pair set — and with it the
-    * join output — stays proportional to genuine near-duplicates
-    * (measured linear on the sf1 rehearsal, SCALING.md round 10).
+  /** Near-duplicate image pairs within `maxDist` hamming distance on
+    * the 64-bit aHash: the pigeonhole Hamming join
+    * (`Dedup.hammingPairs` — `maxDist + 1` bands, candidates from
+    * band-equality joins, only candidates pay the popcount check).
+    * Exact for the hash metric: every pair at distance ≤ maxDist
+    * appears once (`asset_a < asset_b`). The code space (2⁶⁴) cannot
+    * saturate at any realistic corpus size, so the true pair set — and
+    * with it the join output — stays proportional to genuine
+    * near-duplicates (measured linear on the sf1 rehearsal, SCALING.md
+    * round 10).
     */
   def imageNearDups64(assets: DataFrame, maxDist: Int = 2): DataFrame =
     nearDupsFromHashes64(imageAHash64(assets), maxDist)
@@ -925,34 +895,9 @@ object Multimodal {
   def nearDupsFromHashes64(hashes: DataFrame, maxDist: Int = 2): DataFrame = {
     val ah = OpCaches.persist(
       Partitioning.ensureParallelism(
-        hashes.select(col("asset_id"), col("ahash64"))))
-    val nBands = maxDist + 1
-    val bandCols = (0 until nBands).map { b =>
-      val lo = b * 64 / nBands
-      val hi = (b + 1) * 64 / nBands
-      // mask via unsigned shifts: (hash >>> lo) & ((1 << width) - 1);
-      // at maxDist = 0 the single band IS the whole hash (width 64,
-      // where 1L << 64 would wrap — mask with -1 instead)
-      val mask = if (hi - lo >= 64) -1L else (1L << (hi - lo)) - 1
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("ahash64"), lo)
-          .bitwiseAND(lit(mask)).as("band_val"))
-    }
-    val bands = ah.select(col("asset_id"), col("ahash64"),
-      explode(array(bandCols: _*)).as("bd"))
-      .select(col("asset_id"), col("ahash64"),
-        col("bd.band").as("band"), col("bd.band_val").as("band_val"))
-    bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.band_val") === col("y.band_val") &&
-          col("x.asset_id") < col("y.asset_id"))
-      .select(col("x.asset_id").as("asset_a"), col("x.ahash64").as("ha"),
-        col("y.asset_id").as("asset_b"), col("y.ahash64").as("hb"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int"))
-      .filter(col("hamming") <= maxDist)
-      .select(col("asset_a"), col("asset_b"), col("hamming"))
+        hashes.select(col("asset_id").as("id"), col("ahash64").as("h"))))
+    Dedup.hammingPairs(ah, maxDist)
+      .select(col("id_a").as("asset_a"), col("id_b").as("asset_b"), col("hamming"))
   }
 
   /** Frame-sample spec for video rows: every `everyMs` up to duration —
@@ -1155,67 +1100,5 @@ object Multimodal {
           }
         }
       }.toDF("asset_id", "n_samples", "peak_abs", "sum_sq")
-  }
-
-  /** Near-duplicate IMAGE pairs within `maxDist` hamming distance —
-    * the public default, routed through the 64-bit aHash
-    * ([[imageNearDups64]]). Until round 11 this defaulted to the
-    * 16-bin histogram hash, whose 2¹⁶ code space SATURATES past ~10⁴
-    * images: the true hamming-≤2 pair set — the operator's own output
-    * — then grows quadratically (measured 101× pairs for 10× data on
-    * the sf1 rehearsal, SCALING.md round 10). No plan shape beats its own
-    * output size, so the saturating hash cannot be the default; the
-    * 64-bit code holds discrimination to ~10⁹ images and the measured
-    * pair growth is linear. The 16-bin form survives as the explicit
-    * fixture-scale legacy [[imageNearDups16]].
-    */
-  def imageNearDups(assets: DataFrame, maxDist: Int = 2): DataFrame =
-    imageNearDups64(assets, maxDist)
-
-  /** LEGACY fixture-scale form — near-dup pairs on the 16-BIN histogram
-    * hash ([[imagePerceptualHash]]), the d3 pigeonhole recipe on media:
-    * split the `bins`-bit hash into `maxDist + 1` bands; two hashes
-    * within `maxDist` must agree EXACTLY on at least one band
-    * (pigeonhole), so candidates come from band-equality joins and only
-    * candidates pay the hamming check. Output is exact for the hash
-    * metric: every pair at distance ≤ maxDist appears once
-    * (`asset_a < asset_b`).
-    *
-    * DO NOT run this past ~10⁴ images: the 2¹⁶ code space saturates
-    * and the TRUE pair set goes quadratic (measured, `SCALING.md`) —
-    * that is a property of the 16-bit contract itself, not of the
-    * plan, which is why [[imageNearDups]] now defaults to the 64-bit
-    * hash. Kept for histogram-similarity use cases at bounded scale
-    * (the 16-bin hash matches on global tone, not layout).
-    */
-  def imageNearDups16(assets: DataFrame, maxDist: Int = 2): DataFrame = {
-    val bins = 16
-    val ph = OpCaches.persist(
-      Partitioning.ensureParallelism(
-        imagePerceptualHash(assets)
-          .select(col("asset_id"), col("phash"))))
-    val nBands = maxDist + 1
-    val bandCols = (0 until nBands).map { b =>
-      val lo = b * bins / nBands
-      val hi = (b + 1) * bins / nBands
-      struct(lit(b).as("band"),
-        shiftright(col("phash"), lo).bitwiseAND(lit((1 << (hi - lo)) - 1))
-          .as("band_val"))
-    }
-    val bands = ph.select(col("asset_id"), col("phash"),
-      explode(array(bandCols: _*)).as("bd"))
-      .select(col("asset_id"), col("phash"),
-        col("bd.band").as("band"), col("bd.band_val").as("band_val"))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.band_val") === col("y.band_val") &&
-          col("x.asset_id") < col("y.asset_id"))
-      .select(col("x.asset_id").as("asset_a"), col("x.phash").as("ph_a"),
-        col("y.asset_id").as("asset_b"), col("y.phash").as("ph_b"))
-      .distinct() // a pair may collide on several bands
-    cand.withColumn("hamming",
-        bit_count(col("ph_a").bitwiseXOR(col("ph_b"))).cast("int"))
-      .filter(col("hamming") <= maxDist)
-      .select(col("asset_a"), col("asset_b"), col("hamming"))
   }
 }

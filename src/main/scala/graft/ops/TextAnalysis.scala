@@ -156,7 +156,7 @@ object TextAnalysis {
 
   /** Positional (ordered, with repeats) k-token shingles — winnowing
     * needs sequence order, unlike `Dedup.shingles`' distinct sets. Same
-    * tight JVM kernel rationale (Dedup.scala:54-62): a
+    * tight JVM kernel rationale ([[Dedup.shingles]]): a
     * `transform`/`slice` composition re-tokenises per element,
     * interpreted — the repo's documented 100× HOF trap.
     */
@@ -186,11 +186,11 @@ object TextAnalysis {
     * robust to local edits. Output: one (id, fp) row per distinct
     * selected hash; docs with fewer than k tokens produce no rows.
     *
-    * Plan shape (the `minhashSignatures` recipe, not nested HOFs): one
-    * shingle kernel pass → posexplode → each shingle hashed ONCE by a
-    * codegen'd expression → windowed min → distinct. The explicit
-    * hash-repartition on id makes the window and the distinct both
-    * reuse that partitioning — exactly one shuffle of the raw text,
+    * Plan shape (the `Dedup.simhashSignatures` recipe, not nested
+    * HOFs): one shingle kernel pass → posexplode → each shingle hashed
+    * ONCE by a codegen'd expression → windowed min → distinct. The
+    * explicit hash-repartition on id makes the window and the distinct
+    * both reuse that partitioning — exactly one shuffle of the raw text,
     * then narrow all the way down.
     *
     * `portableHash = true` swaps xxhash64 for the top 60 bits of md5 —

@@ -99,7 +99,7 @@ object DocsStream {
     * have no shingles and emit NULL (no bands, never matched).
     *
     * Lambdas here reference only their bound variables, so the
-    * documented HOF re-evaluation trap (`Dedup.scala:54-62`) does not
+    * documented HOF re-evaluation trap ([[graft.ops.Dedup.shingles]]) does not
     * bite: the shingle kernel runs once per row, each slot's transform
     * is one md5 per (shingle, slot).
     */

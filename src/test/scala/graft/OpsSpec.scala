@@ -831,7 +831,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       (101L, "totally unrelated eval document text goes here"),// eval: no 3-gram overlap
     ).toDF("doc_id", "text")
     val out = Dedup.contamination(corpus, "doc_id", "text",
-        isEval = id => id >= 100, n = 3, minShared = 1)
+        isEval = id => id >= 100, minShared = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // naive recount: shared distinct 3-grams between docs 100 and 1
     val expect = Dedup.shingleKernel("alpha beta gamma delta epsilon zeta iota kappa", 3).toSet
@@ -2149,8 +2149,8 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // budget predicate arithmetic: the fixture documents sit within the
     // shipped 1024/doc budget at sf0.01 (measured ~28/doc), so d18 runs
     // the EXACT plan under the correctness gate
-    assert(!Dedup.containmentExceedsBudget(docs, "doc_id", "text", 3, 1024))
-    assert(Dedup.containmentExceedsBudget(dups, "doc_id", "text", 3, 0))
+    assert(!Dedup.containmentExceedsBudget(docs, "doc_id", "text", 1024))
+    assert(Dedup.containmentExceedsBudget(dups, "doc_id", "text", 0))
     graft.ops.OpCaches.releaseAll()
   }
 
@@ -2187,30 +2187,26 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(res.exists(_ % 5 == 0), "appended vectors should be findable")
   }
 
-  test("imageNearDups16: pigeonhole banding == brute-force hamming over real-pixel hashes") {
+  test("simhashNearDups at maxHamming = 8 == brute-force hamming over the signatures") {
     import spark.implicits._
-    val assets = Multimodal.imageAssetsFromDocuments(docs)
-    val got = Multimodal.imageNearDups16(assets, maxDist = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    // brute force over the hashes (fixture-scale only)
-    val ph = Multimodal.imagePerceptualHash(assets)
-      .select("asset_id", "phash").as[(Long, Int)].collect()
-    assert(ph.length == docs.count(), "every PNG payload must decode")
+    val sh = docs.select(col("doc_id").as("id"), Dedup.shingles(col("text"), 3).as("sh"))
+      .filter(size(col("sh")) > 0)
+    val sigs = Dedup.simhashSignatures(sh).as[(Long, Long)].collect()
     val want = (for {
-      (a, pa) <- ph; (b, pb) <- ph if a < b
-      d = Integer.bitCount(pa ^ pb) if d <= 2
-    } yield (a, b, d)).toSet
+      (a, sa) <- sigs; (b, sb) <- sigs if a < b
+      if java.lang.Long.bitCount(sa ^ sb) <= 8
+    } yield (a, b)).toSet
+    // fixed 4 x 16-bit blocking only proposes pairs that agree on a
+    // whole piece; the pigeonhole join's maxHamming + 1 bands must also
+    // find a pair that differs in every piece
+    def pieces(x: Long) = (0 until 4).map(p => (x >>> (16 * p)) & 0xffffL)
+    val sig = sigs.toMap
+    assert(want.exists { case (a, b) =>
+        pieces(sig(a)).zip(pieces(sig(b))).forall { case (x, y) => x != y } },
+      "fixture should hold a pair within 8 bits that differs in all four 16-bit pieces")
+    val got = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 8, threshold = 0.0)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(got == want)
-    assert(want.nonEmpty, "fixture should produce some near-dup pairs")
-    // the hashes must actually discriminate (the documented trap: a
-    // degenerate pixel source collapses every hash and the pair set
-    // goes quadratic)
-    assert(ph.map(_._2).distinct.length > 50, "real-pixel hashes should spread")
-    // the PUBLIC default is the 64-bit scale path (round 11 — the
-    // 16-bin code space saturates past ~10^4 images): imageNearDups
-    // must be row-identical to imageNearDups64, never the 16-bin form
-    assert(Multimodal.imageNearDups(assets, maxDist = 2).collect().toSeq.sortBy(_.toString)
-      == Multimodal.imageNearDups64(assets, maxDist = 2).collect().toSeq.sortBy(_.toString))
     graft.ops.OpCaches.releaseAll()
   }
 

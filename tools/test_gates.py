@@ -36,13 +36,20 @@ class GateExitCodes(unittest.TestCase):
         self.dir.cleanup()
 
     def run_tool(self, tool, old, new):
-        paths = []
-        for name, doc in (("old.json", old), ("new.json", new)):
-            path = os.path.join(self.dir.name, name)
-            with open(path, "w") as f:
-                json.dump(doc, f)
-            paths.append(path)
-        return subprocess.run([sys.executable, os.path.join(TOOLS, tool), *paths],
+        return self.run_sides(tool, [old], [new])
+
+    def run_sides(self, tool, olds, news):
+        """Run `tool` with each side's artifacts as a comma-separated list."""
+        args = []
+        for side, docs in (("old", olds), ("new", news)):
+            paths = []
+            for i, doc in enumerate(docs):
+                path = os.path.join(self.dir.name, f"{side}{i}.json")
+                with open(path, "w") as f:
+                    json.dump(doc, f)
+                paths.append(path)
+            args.append(",".join(paths))
+        return subprocess.run([sys.executable, os.path.join(TOOLS, tool), *args],
                               capture_output=True, text=True).returncode
 
     def test_clean_pair_passes(self):
@@ -63,6 +70,17 @@ class GateExitCodes(unittest.TestCase):
     def test_changed_digest_slowdown_is_reported_not_gated(self):
         new = artifact(dict(BASE, k1=1.6), hashes={"k1": "other"})
         self.assertEqual(self.run_tool("regression_gate.py", artifact(BASE), new), 0)
+
+    def test_plan_delta_compares_digest_sets_over_runs(self):
+        # a build-side flip key: the old runs saw both digests
+        olds = [artifact(BASE), artifact(BASE, hashes={"k1": "flip"})]
+        inside = [artifact(BASE, hashes={"k1": "flip"}), artifact(BASE)]
+        outside = [artifact(BASE), artifact(BASE, hashes={"k1": "new"})]
+        self.assertEqual(self.run_sides("plan_delta.py", olds, inside), 0)
+        self.assertEqual(self.run_sides("plan_delta.py", olds, outside), 1)
+        # one file per side is the pairwise comparison
+        self.assertEqual(self.run_tool("plan_delta.py", artifact(BASE),
+                                       artifact(BASE, hashes={"k1": "flip"})), 1)
 
     def test_mixed_timing_is_refused_by_every_tool(self):
         legacy = artifact(BASE, timing=None)  # no field: timed by count()
