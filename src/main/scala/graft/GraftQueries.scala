@@ -110,7 +110,7 @@ object GraftQueries {
   /** O5: COUNT(*) per table (parquet: metadata-only count). */
   def o5RowCounts(s: SparkSession, dir: String): DataFrame = {
     val src = ParquetSource(s, dir)
-    // all 9 column-less counts in ONE action (the o43/o34 union-of-
+    // all 9 column-less counts in ONE action (the o29/o34 union-of-
     // aggregates pattern): a per-table .count() loop runs nine serial
     // one-task jobs; unioned, the scheduler overlaps them — each
     // subtree is still the metadata-speed column-less parquet count
@@ -520,15 +520,15 @@ object GraftQueries {
     val fks = graft.sources.ParquetSource.fixtureForeignKeys
     val kept = graft.export.Subset.closure(tables, fks, "orders",
       graft.ops.Sampling.bucket(col("o_orderkey"), 10) === 0)
-    // kept counts AND orphan anti-join counts in ONE action (the
-    // o43/orphanCounts union-of-aggregates pattern over the whole
-    // audit): one job whose independent subtrees overlap, instead of
-    // two serial jobs over the same cached closure chain
+    // kept counts AND the per-edge orphan counts (`Subset.orphanEdges`,
+    // one (edge, key) aggregate) in ONE action: one job whose independent
+    // subtrees overlap, instead of two serial jobs over the same cached
+    // closure chain
     val countFrames = names.map(t => kept(t).agg(count(lit(1)).as("__n"))
       .select(lit(t).as("__t"), lit("c").as("__k"), col("__n")))
-    val orphanFrames = graft.export.Subset.orphanCountFrames(kept, fks)
-      .map(_.select(col("__t"), lit("o").as("__k"), col("__n")))
-    val rows = (countFrames ++ orphanFrames).reduce(_ unionAll _)
+    val orphans = graft.export.Subset.orphanEdges(kept, fks)
+      .select(col("table_name").as("__t"), lit("o").as("__k"), col("n_orphans").as("__n"))
+    val rows = (countFrames :+ orphans).reduce(_ unionAll _)
       .groupBy("__t", "__k").agg(sum("__n").as("__s")).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     names.map(t => (t, rows((t, "c")), rows.getOrElse((t, "o"), 0L)))
@@ -2383,20 +2383,19 @@ object GraftQueries {
     val kept = graft.export.Subset.eraseCascade(tables, fks, "customer",
       graft.ops.Sampling.bucket(col("c_custkey"), 20) === 0)
     // ALL the audit numbers — 16 before/after counts AND the per-edge
-    // orphan anti-join counts — in ONE action (the o43/orphanCounts
-    // union-of-aggregates pattern, extended to the whole audit): the
-    // scheduler overlaps every independent subtree inside one job,
-    // where counts-then-orphans ran two serial jobs over the same
-    // cached closure chain
+    // orphan counts (`Subset.orphanEdges`, one (edge, key) aggregate) —
+    // in ONE action: the scheduler overlaps every independent subtree
+    // inside one job, where counts-then-orphans ran two serial jobs over
+    // the same cached closure chain
     val countFrames = names.map { t =>
       tables(t).agg(count(lit(1)).as("__n"))
         .select(lit(t).as("__t"), lit("b").as("__k"), col("__n"))
         .unionAll(kept(t).agg(count(lit(1)).as("__n"))
           .select(lit(t).as("__t"), lit("a").as("__k"), col("__n")))
     }
-    val orphanFrames = graft.export.Subset.orphanCountFrames(kept, fks)
-      .map(_.select(col("__t"), lit("o").as("__k"), col("__n")))
-    val rows = (countFrames ++ orphanFrames).reduce(_ unionAll _)
+    val orphans = graft.export.Subset.orphanEdges(kept, fks)
+      .select(col("table_name").as("__t"), lit("o").as("__k"), col("n_orphans").as("__n"))
+    val rows = (countFrames :+ orphans).reduce(_ unionAll _)
       .groupBy("__t", "__k").agg(sum("__n").as("__s")).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     names.map { t =>
@@ -4344,24 +4343,18 @@ object GraftQueries {
 
   /** Referential-integrity audit over the declared FK graph (the
     * reference's own o4 metadata): per FK edge, the count of child
-    * rows whose non-null key has no parent — each edge one left-anti
-    * join + mergeable count, the schema-scale loop a FK-aware exporter
+    * rows whose non-null key has no parent — the subset audit
+    * (`Subset.orphanEdges`, one (edge, key) aggregate) over the
+    * unrestricted tables, the schema-scale check a FK-aware exporter
     * runs before trusting topological order (the FK surface of
     * reference internal/database/driver.go:18-55, which O15's topo
     * sort consumes — this op audits that the declared edges hold).
     */
   def o43FkOrphans(s: SparkSession, dir: String): DataFrame = {
-    val src = sources.ParquetSource(s, dir)
-    src.foreignKeys.map { fk =>
-      tbl(s, dir, fk.table).select(col(fk.column).as("__k"))
-        .filter(col("__k").isNotNull)
-        .join(tbl(s, dir, fk.referencedTable)
-            .select(col(fk.referencedColumn).as("__p")),
-          col("__k") === col("__p"), "left_anti")
-        .agg(count(lit(1)).as("n_orphans"))
-        .select(lit(fk.table).as("table_name"), lit(fk.column).as("column_name"),
-          lit(fk.referencedTable).as("referenced_table"), col("n_orphans"))
-    }.reduce(_.unionAll(_)).orderBy("table_name", "column_name")
+    val fks = sources.ParquetSource(s, dir).foreignKeys
+    val tables = fks.flatMap(f => Seq(f.table, f.referencedTable)).distinct
+      .map(t => t -> tbl(s, dir, t)).toMap
+    graft.export.Subset.orphanEdges(tables, fks).orderBy("table_name", "column_name")
   }
 
   /** MM1 [EXT] — REAL container metadata over genuine mixed-media

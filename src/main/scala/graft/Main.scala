@@ -185,15 +185,18 @@ object Main {
       val anchorKey = fks.find(_.referencedTable == flags.anchor).map(_.referencedColumn)
         .getOrElse(source.columns(flags.anchor).head.name)
       val tables = source.tables.map(t => t -> source.read(t)).toMap
-      val kept = select(tables, fks, flags.anchor,
-        graft.ops.Sampling.bucket(org.apache.spark.sql.functions.col(anchorKey), 100)
-          < flags.pct)
-      val orphans = Subset.orphanCounts(kept, fks)
-      require(orphans.values.forall(_ == 0L),
-        s"$what left dangling rows: $orphans — refusing to write")
-      val stats = exportTo(flags, cfg, new graft.export.SubsetSource(source, kept))
-      System.err.println(
-        s"$done: exported ${stats.tablesExported} tables, ${stats.rowsExported} rows, 0 orphans")
+      // the persisted closure frames live only as long as this command
+      try {
+        val kept = select(tables, fks, flags.anchor,
+          graft.ops.Sampling.bucket(org.apache.spark.sql.functions.col(anchorKey), 100)
+            < flags.pct)
+        val orphans = Subset.orphanCounts(kept, fks)
+        require(orphans.values.forall(_ == 0L),
+          s"$what left dangling rows: $orphans — refusing to write")
+        val stats = exportTo(flags, cfg, new graft.export.SubsetSource(source, kept))
+        System.err.println(
+          s"$done: exported ${stats.tablesExported} tables, ${stats.rowsExported} rows, 0 orphans")
+      } finally graft.ops.OpCaches.releaseAll()
     }
   }
 

@@ -1,8 +1,10 @@
 package graft.export
 
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.EqualTo
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.analyse.{ForeignKey, Topo}
 
 /** Referentially-consistent subsetting — the MINIMISER's hard half:
@@ -29,14 +31,16 @@ import graft.analyse.{ForeignKey, Topo}
   *    the next DOWN sweep restricts them against the now-small parent
   *    instead.
   *
-  * Scale shape: every step is a LEFT SEMI join whose build side is a
-  * key projection of an already-restricted table — exactly the shape
-  * AQE turns into a broadcast once the anchor sample is small; fact
-  * tables are never shuffled more than once per incident FK edge, and
-  * nothing data-dependent ever sits on the driver (the loop is over FK
-  * METADATA). Correct closure is not assumed: [[orphanCounts]] proves
-  * zero dangling rows per table, and the o29 catalog entry carries
-  * those counts through the oracle gate.
+  * Scale shape: every sweep step is a LEFT SEMI join whose build side
+  * is a key projection of an already-restricted table — exactly the
+  * shape AQE turns into a broadcast once the anchor sample is small;
+  * fact tables are never shuffled more than once per incident FK edge,
+  * and nothing data-dependent ever sits on the driver (the loop is over
+  * FK METADATA). Correct closure is not assumed: [[orphanCounts]]
+  * proves zero dangling rows per table with one aggregate over
+  * (edge, key) that moves only key columns, through one shuffle and no
+  * broadcast (`danglingKeys`), and the o29 catalog entry carries those
+  * counts through the oracle gate.
   */
 object Subset {
 
@@ -46,9 +50,9 @@ object Subset {
     val order = Topo.sortTablesByDependency(tables.keys.toSeq.sorted, fks)
     val kept = mutable.Map(tables.toSeq: _*)
     // every restricted frame persists (graft.ops.OpCaches scope): each
-    // is reused by later sweeps AND by the per-edge orphan audit — left
-    // lazy, a single o29-style audit re-derives the whole closure chain
-    // once per count (measured 12.9s -> ~2s on the sf0.1 audit)
+    // is reused by later sweeps AND by the orphan audit — left lazy, a
+    // single o29-style audit re-derives the whole closure chain once per
+    // edge (measured 12.9s -> ~2s on the sf0.1 audit)
     kept(anchor) = graft.ops.OpCaches.persist(tables(anchor).filter(anchorFilter))
     untilStable(tables.size, Set(anchor)) { before =>
       val restricted = down(order, fks, kept, before)
@@ -63,6 +67,8 @@ object Subset {
             s"subset: restricted children reference table $t through different columns " +
               s"(${refCols.sorted.mkString(", ")}); the UP sweep keeps its rows by one column")
           val refCol = refCols.head
+          // the distinct stays: without it a 20M-row build side with duplicate
+          // keys ran this semi-join as a SortMergeJoin over raw keys, 5-7x slower
           val refs = childEdges.map(f => kept(f.table).select(col(f.column).as("__k")))
             .reduce(_ unionAll _).distinct()
           kept(t) = graft.ops.OpCaches.persist(
@@ -137,38 +143,88 @@ object Subset {
 
   /** Per-table dangling-FK row counts over a subset — the closure
     * proof: every count must be zero for the subset to restore under
-    * enabled constraints. All per-edge anti-join counts are unioned
-    * into ONE action (the o43 pattern): independent subtrees of a
-    * single job run concurrently under Spark's scheduler, where a
-    * driver loop of per-edge `.count()`s would serialize the cluster
-    * one broadcast join at a time.
+    * enabled constraints. One action: the dangling groups of
+    * `danglingKeys` summed per edge (on a clean subset the last stage
+    * reads empty and AQE skips the result job), mapped to their child
+    * table on the driver.
     */
   def orphanCounts(kept: Map[String, DataFrame],
                    fks: Seq[ForeignKey]): Map[String, Long] = {
-    val perEdge = orphanCountFrames(kept, fks)
-    val zero = kept.map { case (t, _) => t -> 0L }
-    if (perEdge.isEmpty) zero
-    else zero ++ perEdge.reduce(_ unionAll _)
-      .groupBy("__t").agg(sum("__n").as("__s"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (edges, dangling) = danglingKeys(kept, fks)
+    kept.map { case (t, _) => t -> 0L } ++ dangling.reduceOption(_ unionAll _).toSeq
+      .flatMap(_.groupBy("__e").agg(sum("__n")).collect())
+      .groupMapReduce(r => edges(r.getInt(0)).table)(_.getLong(1))(_ + _)
   }
 
-  /** The un-collected form of [[orphanCounts]]: one `(__t, __n)`
-    * single-row aggregate per FK edge. Callers that also need row
-    * counts (o29/o34) union these with their count aggregates into ONE
-    * action, so the whole audit — closure chains, orphan anti-joins,
-    * per-table counts — runs as a single job whose independent
-    * subtrees the scheduler overlaps, instead of two serial jobs.
+  /** One row per FK edge whose two tables are both in `kept`:
+    * `(table_name, column_name, referenced_table, n_orphans)`, the
+    * child rows whose non-null key has no parent row (0 on a clean
+    * edge), from `danglingKeys`. Callers that also need row counts
+    * (o29/o34) union this frame with their count aggregates into ONE
+    * action; o43 reads it over the unrestricted tables.
     */
-  def orphanCountFrames(kept: Map[String, DataFrame],
-                        fks: Seq[ForeignKey]): Seq[DataFrame] =
-    kept.toSeq.flatMap { case (t, df) =>
-      fks.filter(f => f.table == t && kept.contains(f.referencedTable)).map { f =>
-        df.join(kept(f.referencedTable).select(col(f.referencedColumn).as("__pk")),
-          df(f.column) === col("__pk"), "left_anti")
-          .agg(count(lit(1)).as("__n")).select(lit(t).as("__t"), col("__n"))
-      }
+  def orphanEdges(kept: Map[String, DataFrame], fks: Seq[ForeignKey]): DataFrame = {
+    val (edges, dangling) = danglingKeys(kept, fks)
+    // one zero row per edge, so a clean edge reads 0
+    val zeros = SparkSession.active.range(0, edges.size, 1, 1)
+      .select(col("id").cast("int").as("__e"), lit(0L).as("__n"))
+    def named(f: ForeignKey => String) = typedLit(edges.map(f)).getItem(col("__e"))
+    (dangling :+ zeros).reduce(_ unionAll _)
+      .groupBy("__e").agg(sum("__n").as("n_orphans"))
+      .select(named(_.table).as("table_name"), named(_.column).as("column_name"),
+        named(_.referencedTable).as("referenced_table"), col("n_orphans"))
+  }
+
+  /** The FK edges whose two tables are both in `kept`, and the dangling
+    * `(__e, __n)` groups of their keys: `__e` indexes the edge, `__n`
+    * counts the child rows of one key no parent row has. A NULL foreign
+    * key dangles nowhere, as under a SQL FK constraint.
+    *
+    * One aggregate over (edge, key), not one anti-join per edge: each
+    * edge contributes its child's key column as `(edge, key, n = 1,
+    * parent = false)` and its parent's referenced column as `(edge, key,
+    * n = 0, parent = true)`; a group without a parent row dangles. Only
+    * key columns move, through one shuffle with a map-side partial
+    * aggregate and no broadcast, so a fact table's FK columns shuffle
+    * once as distinct (edge, key) pairs instead of once per edge. Keys
+    * compare in the type `===` would use: integral keys widen to bigint
+    * (exact), and every other comparison type gets its own aggregate.
+    */
+  private def danglingKeys(kept: Map[String, DataFrame],
+                           fks: Seq[ForeignKey]): (Seq[ForeignKey], Seq[DataFrame]) = {
+    val edges = fks.filter(f => kept.contains(f.table) && kept.contains(f.referencedTable))
+    val keyed = edges.zipWithIndex.map { case (f, e) =>
+      val (child, parent) = (kept(f.table), kept(f.referencedTable))
+      val kt = compareType(child.schema(f.column).dataType,
+        parent.schema(f.referencedColumn).dataType)
+      def rows(df: DataFrame, key: String, isParent: Boolean) = df.select(lit(e).as("__e"),
+        col(key).cast(kt).as("__k"), lit(if (isParent) 0L else 1L).as("__n"),
+        lit(isParent).as("__p"))
+      // NULLs drop before the cast on the child side (a NULL FK
+      // references nothing), after it on the parent side (a NULL key
+      // matches nothing), so a key the cast nulls still dangles
+      kt -> rows(child.filter(col(f.column).isNotNull), f.column, isParent = false)
+        .unionAll(rows(parent, f.referencedColumn, isParent = true).filter(col("__k").isNotNull))
     }
+    (edges, keyed.map(_._1).distinct.map { kt =>
+      keyed.collect { case (`kt`, df) => df }.reduce(_ unionAll _)
+        .groupBy("__e", "__k").agg(sum("__n").as("__n"), max("__p").as("__p"))
+        .filter(!col("__p")).select("__e", "__n")
+    })
+  }
+
+  /** The type `child === parent` compares in: integral pairs widen to
+    * bigint; any other pair as Spark's type coercion resolves it.
+    */
+  private def compareType(child: DataType, parent: DataType): DataType = {
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    if (integral(child) && integral(parent)) LongType
+    else if (child == parent) child
+    else SparkSession.active.range(0)
+      .select(lit(null).cast(child) === lit(null).cast(parent))
+      .queryExecution.analyzed.expressions.head
+      .collectFirst { case e: EqualTo => e.left.dataType }.get
+  }
 }
 
 /** A [[graft.sources.Source]] view restricted to a referentially-

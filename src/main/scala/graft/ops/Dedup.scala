@@ -145,7 +145,7 @@ object Dedup {
     * signature families derive their members from `h` (the 8-byte
     * long), never by re-hashing the string bytes.
     */
-  private def shingleHashes(sh: DataFrame): DataFrame =
+  private[graft] def shingleHashes(sh: DataFrame): DataFrame =
     sh.select(col("id"), explode(col("sh")).as("s"))
       .select(col("id"), xxhash64(col("s")).as("h"))
 
@@ -890,23 +890,6 @@ object Dedup {
   def simhashSignatures(sh: DataFrame): DataFrame =
     shingleHashes(sh)
       .groupBy("id").agg(graft.functions.SimHashAgg.column(col("h")).as("sig"))
-
-  /** The 64-wide `sum(when(bit))` aggregate form of
-    * `simhashSignatures` — kept for the equality spec; the UDAF form
-    * replaces it in the shipped path (wide-codegen rationale in
-    * `SimHashAgg`).
-    */
-  def simhashSignaturesWide(sh: DataFrame): DataFrame = {
-    val bitSums = (0 until 64).map { b =>
-      sum(when(shiftrightunsigned(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1)
-        .otherwise(-1)).as(s"bit_$b")
-    }
-    val agged = shingleHashes(sh).groupBy("id").agg(bitSums.head, bitSums.tail: _*)
-    val sig = (0 until 64).map { b =>
-      when(col(s"bit_$b") > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce((a, c) => a.bitwiseOR(c))
-    agged.select(col("id"), sig.as("sig"))
-  }
 
   /** Pigeonhole Hamming join over 64-bit codes `(id, h)`: split each
     * code into `maxDist + 1` bands of near-equal width; two codes within

@@ -19,13 +19,13 @@ object GraftShims {
     */
   def toExpression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 
-  /** True when the session's CacheManager holds no cached plans —
+  /** The number of cached plans in the session's CacheManager —
     * `sharedState`/`CacheManager` are `private[sql]`, so the
-    * cache-discipline spec reads them through this shim.
+    * cache-discipline specs read it through this shim.
     */
-  def cacheManagerIsEmpty(spark: org.apache.spark.sql.SparkSession): Boolean =
+  def cachedEntries(spark: org.apache.spark.sql.SparkSession): Int =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager.isEmpty
+      .sharedState.cacheManager.numCachedEntries
 
   /** Blocks until the listener bus has delivered every event posted so
     * far (at most 10 s, then a `TimeoutException`) — e.g. the

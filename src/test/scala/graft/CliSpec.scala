@@ -117,8 +117,11 @@ class CliSpec extends AnyFunSuite with SparkSuite {
         |      c_name: "{{faker.name}}"
         |""".stripMargin)
     val out = Files.createTempFile("graft_cli_subset", ".sql").toString
+    val cachedBefore = org.apache.spark.sql.graftshim.GraftShims.cachedEntries(spark)
     Main.main(Array("subset", "-c", cfg, "-o", out, "--anchor", "orders",
       "--pct", "20", "--source", "parquet:/root/testdata/sf0.001"))
+    // the closure's persisted frames are released when the command ends
+    assert(org.apache.spark.sql.graftshim.GraftShims.cachedEntries(spark) == cachedBefore)
     val dump = Files.readString(Paths.get(out))
     assert(dump.contains("INSERT INTO \"orders\"") &&
       dump.contains("INSERT INTO \"lineitem\""))

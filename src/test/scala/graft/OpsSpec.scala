@@ -1085,7 +1085,17 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       .filter(size(col("sh")) > 0)
     val udafSigs = Dedup.simhashSignatures(sh)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val wideSigs = Dedup.simhashSignaturesWide(sh)
+    // the 64-wide `sum(when(bit))` aggregate form: one ±1 counter per
+    // bit over the same shingle hashes, the reference the UDAF replaces
+    val bitSums = (0 until 64).map { b =>
+      sum(when(shiftrightunsigned(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1)
+        .otherwise(-1)).as(s"bit_$b")
+    }
+    val sig = (0 until 64).map { b =>
+      when(col(s"bit_$b") > 0, lit(1L << b)).otherwise(lit(0L))
+    }.reduce((a, c) => a.bitwiseOR(c))
+    val wideSigs = Dedup.shingleHashes(sh).groupBy("id").agg(bitSums.head, bitSums.tail: _*)
+      .select(col("id"), sig.as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(udafSigs == wideSigs)
   }
@@ -1202,10 +1212,10 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     graft.ops.OpCaches.releaseAll() // drain registrations from earlier tests
     Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.8).count()
     Dedup.ngramJaccardPairsAuto(docs, "doc_id", "text", threshold = 0.8).count()
-    assert(!GraftShims.cacheManagerIsEmpty(spark),
+    assert(GraftShims.cachedEntries(spark) > 0,
       "ops should persist intermediates while their query runs")
     graft.ops.OpCaches.releaseAll()
-    assert(GraftShims.cacheManagerIsEmpty(spark),
+    assert(GraftShims.cachedEntries(spark) == 0,
       "releaseAll must leave the storage pool empty")
   }
 
@@ -1879,6 +1889,46 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       }.toMap
       assert(gotStrip == wantStrip, s"trial=$trial k=$k strip")
     }
+  }
+
+  test("orphan audit: counts exactly the non-null dangling keys per edge and per table") {
+    import org.apache.spark.sql.{Row, types => T}
+    import graft.analyse.ForeignKey
+    import graft.export.Subset
+    def frame(fields: (String, T.DataType)*)(rows: Seq[Any]*) =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*),
+        T.StructType(fields.map { case (n, t) => T.StructField(n, t) }))
+    val tables = Map(
+      "p" -> frame("id" -> T.LongType)(Seq(1L), Seq(2L), Seq(3L)),
+      "s" -> frame("code" -> T.StringType)(Seq("a"), Seq("b")),
+      // two edges: INT pid onto BIGINT p.id, STRING sc onto s.code
+      "c" -> frame("pid" -> T.IntegerType, "sc" -> T.StringType)(
+        Seq(1, "a"), Seq(4, "a"), Seq(4, "z"), Seq(null, "b"), Seq(2, null), Seq(5, "z")),
+      // a clean edge, plus a NULL key
+      "d" -> frame("pid" -> T.LongType)(Seq(1L), Seq(3L), Seq(null)),
+      // DECIMAL(10,0) onto DECIMAL(12,2): `===` compares 7 and 7.00 equal
+      "q" -> frame("amt" -> T.DecimalType(12, 2))(
+        Seq(new java.math.BigDecimal("7.00")), Seq(new java.math.BigDecimal("8.50"))),
+      "e" -> frame("qa" -> T.DecimalType(10, 0))(
+        Seq(new java.math.BigDecimal("7")), Seq(new java.math.BigDecimal("9"))))
+    val fks = Seq(ForeignKey("c", "pid", "p", "id"), ForeignKey("c", "sc", "s", "code"),
+      ForeignKey("d", "pid", "p", "id"), ForeignKey("e", "qa", "q", "amt"))
+    def antiCount(f: ForeignKey): Long =
+      tables(f.table).select(col(f.column).as("k")).filter(col("k").isNotNull)
+        .join(tables(f.referencedTable).select(col(f.referencedColumn).as("r")),
+          col("k") === col("r"), "left_anti").count()
+    val want = fks.map(f => (f.table, f.column, f.referencedTable) -> antiCount(f)).toMap
+    assert(want.values.toSeq.sorted == Seq(0L, 1L, 2L, 3L), want.toString)
+    val edges = Subset.orphanEdges(tables, fks)
+    assert(edges.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty,
+      "the audit is one aggregate, not a join per edge")
+    val got = edges.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
+    assert(got == want)
+    val counts = Subset.orphanCounts(tables, fks)
+    assert(counts("d") == 0L, s"a NULL foreign key is not dangling: $counts")
+    assert(counts == Map("p" -> 0L, "s" -> 0L, "q" -> 0L, "c" -> 5L, "d" -> 0L, "e" -> 1L))
   }
 
   test("eraseCascade: victims and descendants gone, survivors and dimensions intact, still closed") {
