@@ -7,7 +7,7 @@ import graft.anonymise.{Anonymiser, Faker}
 import graft.config._
 import graft.dialect.{MySqlDialect, SqliteDialect, SqlValueCodec}
 import graft.export.{DumpWriter, ExportPipeline}
-import graft.ops.{AsOfJoin, BloomJoin, Cdc, Dedup, Multimodal, Partitioning, RangeJoin, Sampling, Similarity, Skew, TextAnalysis}
+import graft.ops.{AsOfJoin, BloomJoin, Cdc, Dedup, DriverBudget, Multimodal, Partitioning, RangeJoin, Sampling, Similarity, Skew, TextAnalysis}
 import graft.sources.ParquetSource
 import graft.streaming.EventsStream
 
@@ -1838,7 +1838,7 @@ object GraftQueries {
     // small drivers (DriverBudget: needs ≥ 2^21·288B·16 ≈ 9.7GB of
     // driver heap for the full cap) and declines past it either way
     g1SupplierRankImpl(s, dir,
-      driverWalkMaxEdges = graft.ops.DriverBudget.graphWalkEdges(1L << 21))
+      driverWalkMaxEdges = DriverBudget.graphWalkEdges(1L << 21))
 
   /** Package-private so `PlanSpec` can assert the DISTRIBUTED superstep
     * plan's cache-reuse property with the fixture-scale driver walk
@@ -1867,32 +1867,30 @@ object GraftQueries {
     // front end drops from ~1.1s (agg 0.7 + probe 0.15 + collect 0.26)
     // to the 0.25s raw collect + ~0.1s driver fold.
     val maxRaw = driverWalkMaxEdges / 2 // each raw row yields 2 walk edges
-    val walked: Option[DataFrame] =
-      if (maxRaw <= 0 || maxRaw > Int.MaxValue - 2L) None
-      // o_orderkey is unique, so the inner join emits at most one row
-      // per lineitem row — lineitem's metadata-only parquet count is an
-      // EXACT upper bound on the raw relation, making the over-budget
-      // decline free instead of paying a wasted 1M-row executeTake
-      // (measured 10.9s at sf1, where the walk always declines)
-      else if (li.count() > maxRaw) None
+    // o_orderkey is unique, so the inner join emits at most one row
+    // per lineitem row — lineitem's metadata-only parquet count is an
+    // EXACT upper bound on the raw relation, making the over-budget
+    // decline free instead of paying a wasted 1M-row executeTake
+    // (measured 10.9s at sf1, where the walk always declines)
+    val probe = if (maxRaw <= 0 || li.count() > maxRaw) None else DriverBudget.probe(kv, maxRaw)
+    val walked: Option[DataFrame] = probe.flatMap { rows =>
+      if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
       else {
-        val rows = kv.head(maxRaw.toInt + 1)
-        if (rows.length > maxRaw ||
-            rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-        else {
-          val agg = new scala.collection.mutable.HashMap[(Long, Long), Long]
-          rows.foreach { r =>
-            val k = (r.getLong(0), r.getLong(1))
-            agg.update(k, agg.getOrElse(k, 0L) + 1L)
-          }
-          val tup = new Array[(Long, Long, Long)](agg.size * 2)
-          var i = 0
-          agg.foreach { case ((a, b), w) =>
-            tup(i) = (a, b, w); tup(i + 1) = (b, a, w); i += 2
-          }
-          graft.ops.Graph.walkLongEdges(s, tup, iters = 3)
+        val agg = new scala.collection.mutable.HashMap[(Long, Long), Long]
+        rows.foreach { r =>
+          val k = (r.getLong(0), r.getLong(1))
+          agg.update(k, agg.getOrElse(k, 0L) + 1L)
         }
+        val tup = new Array[(Long, Long, Long)](agg.size * 2)
+        var i = 0
+        agg.foreach { case ((a, b), w) =>
+          tup(i) = (a, b, w); tup(i + 1) = (b, a, w); i += 2
+        }
+        graft.ops.Graph.walkLongEdges(s, tup, iters = 3)
       }
+    }
+    DriverBudget.recordWalk("g1SupplierRank", probe.map(_.length.toLong), maxRaw,
+      walked.isDefined)
     // distributed construction: the pair aggregate persists so the
     // symmetrising union reads it once instead of re-running the fact
     // join per branch. (An explode-before-one-aggregate symmetrisation

@@ -3,6 +3,7 @@ package graft.anonymise
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import graft.ops.DriverBudget
 
 /** K-anonymity ENFORCEMENT — the transform half of the minimiser story.
   * `GraftQueries.o28KAnonymity` only *measures* class sizes; this op
@@ -38,9 +39,9 @@ object Generalise {
   /** Census sizes up to this walk on the driver; the same order of
     * magnitude the mapping broadcast tolerates. The 2²⁰ cap is
     * heap-derived downward on small drivers
-    * ([[graft.ops.DriverBudget]]).
+    * ([[DriverBudget]]).
     */
-  def DriverWalkMaxClasses: Long = graft.ops.DriverBudget.bins(1L << 20)
+  def DriverWalkMaxClasses: Long = DriverBudget.bins(1L << 20)
 
   /** Rewrite `df`'s quasi-identifier to the finest ladder level that
     * satisfies k-anonymity.
@@ -70,14 +71,15 @@ object Generalise {
     val L = levels.length
     val nullMsg = "kAnonymize: ladder expressions must be non-null (a " +
       "null QI value would drop its rows through null-join semantics)"
-    // ONE guarded collect both sizes the census and feeds the driver
-    // walk: ≤ bound rows come back, bound+1 means "too big, go
-    // distributed" without a separate count() action
-    // clamp: a caller passing a huge bound must not overflow the limit
-    val probeBound = math.min(driverWalkMaxClasses, Int.MaxValue - 1L).toInt
-    val probe = census.limit(probeBound + 1).collect()
+    // ONE bounded probe both sizes the census and feeds the driver
+    // walk: "over budget" means "too big, go distributed" without a
+    // separate count() action
+    val walk = DriverBudget.probe(census, driverWalkMaxClasses)
+    DriverBudget.recordWalk("kAnonymize", walk.map(_.length.toLong),
+      driverWalkMaxClasses, walk.isDefined)
     val mapping: DataFrame =
-      if (probe.length <= driverWalkMaxClasses) {
+      if (walk.isDefined) {
+        val probe = walk.get
         // driver walk: the census is broadcast-scale by contract, so
         // holding it on the driver adds no new limit — and the walk
         // becomes L in-memory partitions instead of ~3L scheduled stages

@@ -213,15 +213,6 @@ object Dedup {
     verifyByJaccard(minhashCandidates(sh), sh, threshold)
   }
 
-  /** Convergence telemetry of the last `clusters` run in this process:
-    * rounds to fixpoint and labels changed per round. At 100× data the
-    * fixpoint's behavior (O(log diameter) rounds expected) is the thing
-    * to watch — these counters make it observable from logs/monitoring
-    * without rerunning anything. Written once, at the end of each run.
-    */
-  final case class ClusterStats(rounds: Int, changedPerRound: Seq[Long])
-  @volatile var lastClusterStats: Option[ClusterStats] = None
-
   /** Indexed-array union-find over an in-memory edge list (the
     * walkedPageRank discipline): ids interned once into dense ints,
     * union by SIZE for balanced trees (union-by-min-value builds
@@ -236,7 +227,7 @@ object Dedup {
     * labels either way.
     */
   private def driverUnionFind(spark: org.apache.spark.sql.SparkSession,
-                              e: Array[(Long, Long)]): DataFrame = {
+                              e: Array[org.apache.spark.sql.Row]): DataFrame = {
     import spark.implicits._
     val m = e.length
     val index = new scala.collection.mutable.LongMap[Int](m * 2)
@@ -246,7 +237,7 @@ object Dedup {
     })
     val ea = new Array[Int](m); val eb = new Array[Int](m)
     var p = 0
-    while (p < m) { ea(p) = idxOf(e(p)._1); eb(p) = idxOf(e(p)._2); p += 1 }
+    while (p < m) { ea(p) = idxOf(e(p).getLong(0)); eb(p) = idxOf(e(p).getLong(1)); p += 1 }
     val n = vals.length
     val parent = Array.tabulate(n)(identity)
     val rank = new Array[Int](n)
@@ -274,7 +265,6 @@ object Dedup {
       if (vals(k) < minOf(r)) minOf(r) = vals(k)
       k += 1
     }
-    lastClusterStats = Some(ClusterStats(0, Seq.empty)) // 0 = driver path
     val order = Array.range(0, n)
     val sorted = order.sortBy(vals(_))
     sorted.toSeq.map(ix => (vals(ix), minOf(find(ix))))
@@ -317,20 +307,19 @@ object Dedup {
     * threshold join), and the distributed fixpoint's per-round cost is
     * fixed overhead (two joins + a checkpoint per round, ~7 rounds) that
     * dwarfs a small graph's actual work. At or below the budget the
-    * symmetrized edge list is collected and solved with union-find on
-    * the driver — O(E α(E)), exact same labels (component min). Driver
-    * footprint at the full 1M-edge cap: tuple array + boxed
-    * HashMap ≈ 150-250 MB transient — the default budget is the cap
-    * heap-derived downward on small drivers ([[DriverBudget]]), so a
-    * 1 GB driver walks ~300k edges, never OOMs. Above it, the O(log d)-round
-    * distributed fixpoint runs unchanged — the 100 TB path. The count
-    * that decides is free at fixpoint time: the edge list is persisted
-    * either way, and the count materialises the cache the first round
-    * would have built anyway. Pass 0 to force the distributed path.
-    * The driver path requires BIGINT ids (it would change both label
-    * semantics — numeric vs lexicographic min — and the output schema
-    * for other types); non-long ids always take the distributed path,
-    * which is type-agnostic.
+    * edge list is collected and solved with union-find on the driver —
+    * O(E α(E)), exact same labels (component min). Driver footprint at
+    * the full 1M-edge cap ≈ 150-250 MB transient; the default budget is
+    * heap-derived downward on small drivers ([[DriverBudget]]). Above
+    * it, the O(log d)-round distributed fixpoint runs unchanged — the
+    * 100 TB path. At most two bounded probes decide
+    * ([[DriverBudget.probe]]): the raw pairs (fit when 2·|pairs| ≤
+    * budget), then the persisted symmetrized-distinct edges, whose rows
+    * feed the walk. Pass 0 to force the distributed path. The driver
+    * path requires BIGINT ids (numeric vs lexicographic min, and the
+    * output schema); other ids take the type-agnostic distributed
+    * path. The choice, and the fixpoint's labels changed per round, are
+    * recorded as the "clusters" [[DriverBudget.Decision]].
     */
   def clusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                maxIter: Int = 25, checkpointDir: Option[String] = None,
@@ -346,32 +335,28 @@ object Dedup {
       pairs.select(col(idA).as("src"), col(idB).as("dst")))
     val idsAreLong = pp.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
+    // a probe's rows walk only when no id is null
+    def walk(rows: Array[org.apache.spark.sql.Row], size: Long): Option[DataFrame] =
+      if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+      else {
+        DriverBudget.recordWalk("clusters", Some(size), driverMaxEdges, walked = true)
+        Some(driverUnionFind(spark, rows))
+      }
     // FAST driver path: union-find components are direction- and
-    // multiplicity-invariant, so the UF can run on the RAW pair
-    // projection — no mirror, no distinct exchange, no second persist.
-    // One bounded head sizes the pair list; 2·|pairs| bounds the
-    // symmetrized-distinct edge count, so `2·|pairs| ≤ budget` is a
-    // conservative subset of the original edge-count criterion (a
-    // duplicate-heavy pair list past it still reaches the original
-    // edges-count check below and may walk from there).
-    if (driverMaxEdges > 0 && idsAreLong) {
-      val bound = math.min(driverMaxEdges, Int.MaxValue - 2L).toInt
-      val probe = pp.head(bound + 1)
-      if (probe.length * 2L <= driverMaxEdges &&
-          probe.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-        return driverUnionFind(spark,
-          probe.map(r => (r.getLong(0), r.getLong(1))))
-    }
+    // multiplicity-invariant, so the UF can run on the RAW pairs (no
+    // mirror, no distinct exchange) when 2·|pairs|, a bound on the
+    // symmetrized-distinct edge count, fits the budget.
+    val rawProbe = if (idsAreLong) DriverBudget.probe(pp, driverMaxEdges / 2) else None
+    val rawWalk = rawProbe.flatMap(rows => walk(rows, 2L * rows.length))
+    if (rawWalk.isDefined) return rawWalk.get
     val edges = pp
       .union(pp.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (driverMaxEdges > 0 && idsAreLong && edges.count() <= driverMaxEdges) {
-      import spark.implicits._
-      val e = edges.as[(Long, Long)].collect()
-      edges.unpersist()
-      return driverUnionFind(spark, e)
-    }
+    val edgeProbe =
+      if (idsAreLong && rawProbe.isEmpty) DriverBudget.probe(edges, driverMaxEdges) else None
+    val edgeWalk = edgeProbe.flatMap(rows => walk(rows, rows.length.toLong))
+    if (edgeWalk.isDefined) { edges.unpersist(); return edgeWalk.get }
     // eager materialisation, NOT persist: each round's plan embeds the
     // previous round's tree ~4× (neighbor join + self-join + convergence
     // check), so without lineage truncation Catalyst analysis time grows
@@ -417,7 +402,6 @@ object Dedup {
       // checkpoint, and the number IS the convergence telemetry
       val changed = prop.filter(col("label") =!= col("old")).count()
       changedLog += changed
-      System.err.println(s"[graft] clusters round=$it changed=$changed")
       if (changed == 0) {
         converged = true
         labels = prop.select(col("id"), col("label"))
@@ -435,6 +419,9 @@ object Dedup {
       it += 1
     }
     edges.unpersist()
+    DriverBudget.record(DriverBudget.Decision("clusters",
+      edgeProbe.map(_.length.toLong).orElse(rawProbe.map(2L * _.length)), driverMaxEdges,
+      DriverBudget.Distributed, changedLog.toSeq))
     // an unconverged exit means under-merged labels — silently wrong
     // output with no diagnosable cause downstream, so fail loudly
     // (maxIter=25 covers component diameters up to ~2^24; hitting this
@@ -443,7 +430,6 @@ object Dedup {
       throw new IllegalStateException(
         s"cluster label propagation did not converge within $maxIter rounds; " +
           "raise maxIter or inspect the pair graph for pathological diameter")
-    lastClusterStats = Some(ClusterStats(it, changedLog.toSeq))
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
@@ -628,17 +614,22 @@ object Dedup {
     * count come from ONE action (single-row aggregates cross-joined):
     * the pre-pass pays one job, not two serial ones, and the caches it
     * reads materialise concurrently. Double arithmetic: Σ df² on a
-    * web-scale corpus overflows LONG.
+    * web-scale corpus overflows LONG. Records `op`'s decision: branch
+    * "count", or `overBranch` past the budget.
     */
-  private def countPlanWithinBudget(freq: DataFrame, sh: DataFrame,
+  private def countPlanWithinBudget(op: String, overBranch: String,
+                                    freq: DataFrame, sh: DataFrame,
                                     candidateBudgetPerDoc: Long): Option[Double] = {
     val candRow = freq.agg(
       sum(col("df_s").cast("double") * (col("df_s") - 1).cast("double") / 2.0).as("c"))
       .crossJoin(sh.agg(count(lit(1)).as("n")))
       .first()
     val candidates = if (candRow.isNullAt(0)) 0.0 else candRow.getDouble(0)
-    val nDocs = math.max(1L, candRow.getLong(1))
-    if (candidates > candidateBudgetPerDoc.toDouble * nDocs) None else Some(candidates)
+    val budget = candidateBudgetPerDoc.toDouble * math.max(1L, candRow.getLong(1))
+    val fits = candidates <= budget
+    DriverBudget.record(DriverBudget.Decision(op, Some(candidates.toLong), budget.toLong,
+      if (fits) "count" else overBranch))
+    if (fits) Some(candidates) else None
   }
 
   /** Exact 3-gram Jaccard threshold join with a cost-based plan choice —
@@ -655,13 +646,9 @@ object Dedup {
     *    prefix, so the head can't blow the candidate count — the plan
     *    that survives a 100× scale-up of a real web corpus.
     *
-    * The chooser computes the count-based plan's candidate volume
-    * EXACTLY from the shingle frequency aggregate (one narrow
-    * aggregate over the already-persisted shingle table — the same
-    * pre-pass AQE-style cost-based planning pays) and switches to the
-    * prefix plan once candidates exceed `candidateBudgetPerDoc` per
-    * document. The frequency table is computed once and reused by the
-    * prefix plan.
+    * The chooser ([[countPlanWithinBudget]]) switches to the prefix
+    * plan once candidates exceed `candidateBudgetPerDoc` per document;
+    * the frequency table it reads is reused by the prefix plan.
     */
   def ngramJaccardPairsAuto(df: DataFrame, idCol: String, textCol: String,
                             threshold: Double = 0.8,
@@ -669,7 +656,8 @@ object Dedup {
                             maxPairsPerDoc: Option[Int] = None): DataFrame = {
     val sh = OpCaches.persist(withShingles(df, idCol, textCol))
     val freq = OpCaches.persist(shingleFreq(sh))
-    val out = countPlanWithinBudget(freq, sh, candidateBudgetPerDoc) match {
+    val out = countPlanWithinBudget("ngramJaccardPairsAuto", "prefix", freq, sh,
+        candidateBudgetPerDoc) match {
       case Some(candidates) =>
         freq.unpersist()
         ngramJaccardPairsOnShingles(sh, threshold, expectedCandidates = candidates)
@@ -768,11 +756,8 @@ object Dedup {
 
   /** Containment pairs with a candidate-budget chooser — the d4
     * (`ngramJaccardPairsAuto`) treatment applied to the asymmetric
-    * metric. The count-join plan's candidate volume is EXACTLY
-    * Σ_s df(s)·(df(s)−1)/2; the chooser measures it from the shingle
-    * frequency aggregate (one narrow pre-pass, the same AQE-style cost
-    * probe d4 pays) and keeps the exact plan while it stays within
-    * `candidateBudgetPerDoc` per document.
+    * metric: the same measure ([[countPlanWithinBudget]]) keeps the
+    * exact count plan within `candidateBudgetPerDoc` per document.
     *
     * Past the budget it routes through a MinHash band SCREEN first
     * (the d2 recipe: band-bucket collisions propose candidates, exact
@@ -794,35 +779,16 @@ object Dedup {
                                 candidateBudgetPerDoc: Long = 1024,
                                 maxPairsPerDoc: Option[Int] = None): DataFrame = {
     val sh = OpCaches.persist(withShingles(df, idCol, textCol))
-    val out = if (!exceedsCandidateBudget(sh, candidateBudgetPerDoc))
-      containmentOnShingles(sh, threshold)
-    else
-      verifyByContainment(minhashCandidates(sh, rowsPerBand = 2), sh, threshold)
+    val out = countPlanWithinBudget("ngramContainmentPairsAuto", "screen",
+        shingleFreq(sh), sh, candidateBudgetPerDoc) match {
+      case Some(_) => containmentOnShingles(sh, threshold)
+      case None => verifyByContainment(minhashCandidates(sh, rowsPerBand = 2), sh, threshold)
+    }
     // opt-in output budget (the d4 capPairsPerDoc contract): rank by
     // the dominant direction — the same statistic the threshold gates
     maxPairsPerDoc.fold(out)(kk =>
       capPairsPerDoc(out, greatest(col("c_ab"), col("c_ba")), kk))
   }
-
-  /** d18's branch predicate: the d4 chooser's cost measure
-    * ([[countPlanWithinBudget]]) over a fresh frequency aggregate — one
-    * arithmetic for the production chooser AND the probe predicate
-    * below, so the probe can never assert a branch the chooser no
-    * longer takes.
-    */
-  private def exceedsCandidateBudget(sh: DataFrame,
-                                     candidateBudgetPerDoc: Long): Boolean =
-    countPlanWithinBudget(shingleFreq(sh), sh, candidateBudgetPerDoc).isEmpty
-
-  /** Package-private chooser predicate — lets the spec assert WHICH
-    * branch [[ngramContainmentPairsAuto]] takes; delegates to the
-    * same arithmetic the production chooser runs.
-    */
-  private[graft] def containmentExceedsBudget(
-      df: DataFrame, idCol: String, textCol: String,
-      candidateBudgetPerDoc: Long): Boolean =
-    exceedsCandidateBudget(withShingles(df, idCol, textCol),
-      candidateBudgetPerDoc)
 
   /** Benchmark-contamination check — the decontamination pass every
     * training-data pipeline runs before a model ships: for each document

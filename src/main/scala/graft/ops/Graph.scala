@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Graph analytics over DataFrame edge lists — the iterative-join
   * formulation (each superstep is one join + one aggregate), which is
@@ -89,17 +90,16 @@ object Graph {
   /** Guarded driver walk for pageRank — the g2/g5 chooser applied to
     * the superstep loop: a fixture-scale graph pays ~0.25s of scheduled
     * stage/codegen overhead PER SUPERSTEP in the unrolled join plan
-    * (g1: 5.3s at sf0.1 for a ~3k-edge graph), so one bounded `head`
-    * probe sizes the edge list and, when it fits, the identical integer
+    * (g1: 5.3s at sf0.1 for a ~3k-edge graph), so one count aggregate
+    * sizes the edge list (and finds null endpoints or weights) and,
+    * when it fits ([[DriverBudget.fits]]), the identical integer
     * recursion runs in memory: contributions `(rank·w) DIV wsum`,
     * update `150000 + (85·Σ) DIV 100` — Long truncating division and
     * exact multiply/add, spec-asserted walk == distributed. Declines
     * (`None` → distributed plan) on: more than `maxEdges` edges, null
     * endpoints or weights (the distributed plan's join/agg
-    * null-dropping is subtle — not worth mirroring), non-integral/
-    * non-string node ids (HashMap equality vs Spark grouping equality
-    * can diverge on -0.0 doubles and differently-scaled decimals),
-    * zero out-weight sums (division semantics stay the distributed
+    * null-dropping is subtle — not worth mirroring), ids the type
+    * guard rejects ([[walkableIds]]), zero out-weight sums (division semantics stay the distributed
     * plan's), and Long OVERFLOW anywhere in the recursion: the session
     * may run ANSI (Spark 4 default — the distributed plan throws the
     * same way) or non-ANSI (where `rank_micro * w` silently wraps);
@@ -110,27 +110,13 @@ object Graph {
     * `e` must be the normalised (src, dst, w:long) relation — pageRank
     * persists it before probing, so a declined walk has already warmed
     * the cache the distributed plan reads (no second construction
-    * pass of the caller's edge derivation).
+    * pass of the caller's edge derivation). Records the "pageRank"
+    * [[DriverBudget.Decision]].
     */
   private def walkedPageRank(e: DataFrame, iters: Int,
                              maxEdges: Long): Option[DataFrame] = {
-    if (maxEdges <= 0) return None
-    val spark = e.sparkSession
-    import org.apache.spark.sql.types._
     val fields = e.schema.fields
-    val nodeType = fields(0).dataType
-    // TYPE GUARD, now on the SCHEMA (one column = one runtime class, so
-    // the per-value inspection the old walk paid was redundant): the
-    // walk only trusts its own node identity for integral and string
-    // ids, where HashMap/array equality provably matches Spark grouping
-    // equality. Decimals (scale-sensitive equality), floats (-0.0/NaN),
-    // dates, binary — decline to the distributed plan.
-    def integral(dt: DataType): Boolean = dt == LongType ||
-      dt == IntegerType || dt == ShortType || dt == ByteType
-    val nodesIntegral = integral(nodeType) && integral(fields(1).dataType)
-    if (!nodesIntegral &&
-        !(nodeType == StringType && fields(1).dataType == StringType))
-      return None
+    val ids = walkableIds(fields(0).dataType, fields(1).dataType)
     // ONE cache-building aggregate answers edge count AND null
     // presence (count(col) skips nulls — a mismatch vs count(*) means
     // some endpoint/weight is null, which declines: the distributed
@@ -139,13 +125,20 @@ object Graph {
     // (1, 4, 16, …) — sequential job launches — while this is one
     // fully-parallel pass that also materialises the whole cache, so a
     // DECLINED walk hands the distributed plan a fully-warm cache.
+    val cnts = if (maxEdges <= 0 || ids.isEmpty) None
+      else Some(e.agg(count(lit(1)), count(col(fields(0).name)),
+        count(col(fields(1).name)), count(col(fields(2).name))).head())
+    val n = cnts.map(_.getLong(0))
+    val nullFree = cnts.exists(c => (1 to 3).forall(c.getLong(_) == c.getLong(0)))
+    if (!nullFree || !DriverBudget.fits(n.get, maxEdges)) {
+      DriverBudget.recordWalk("pageRank", n, maxEdges, walked = false)
+      return None
+    }
+    val spark = e.sparkSession
+    val m = n.get.toInt
+    val nodeType = fields(0).dataType
     val c0 = col(fields(0).name); val c1 = col(fields(1).name)
     val cw = col(fields(2).name)
-    val cnts = e.agg(count(lit(1)), count(c0), count(c1), count(cw)).head()
-    val n = cnts.getLong(0)
-    if (n > maxEdges || n > Int.MaxValue - 2L) return None
-    if (cnts.getLong(1) != n || cnts.getLong(2) != n || cnts.getLong(3) != n)
-      return None
     // INDEXED-ARRAY recursion (round 11): the original HashMap[Any,_]
     // form spent most of g1's wall time boxing through
     // iters × |edges| map lookups (measured ~1.5s of the 2.4s at
@@ -159,8 +152,7 @@ object Graph {
     // cheaper rows, primitive index — and the output column casts back
     // to the declared node type (values originated there, so the cast
     // is exact); strings keep the generic Row path.
-    val m = n.toInt
-    if (nodesIntegral) {
+    val walked = if (ids.get) {
       import spark.implicits._
       val tup = e.select(c0.cast("long"), c1.cast("long"), cw)
         .as[(Long, Long, Long)].collect()
@@ -184,6 +176,25 @@ object Graph {
       }
       runWalk(spark, srcI, dstI, w, vals.toIndexedSeq, nodeType, nodeType, iters)
     }
+    DriverBudget.recordWalk("pageRank", n, maxEdges, walked.isDefined)
+    walked
+  }
+
+  /** The walks' TYPE GUARD, on the SCHEMA (one column = one runtime
+    * class): Some(true) for integral ids of one type, Some(false) for
+    * string ids, None otherwise. Only for those does HashMap/array
+    * equality and the walks' ordering provably match Spark's grouping
+    * and least/greatest; decimals (scale-sensitive equality, BigDecimal
+    * vs string order), floats (-0.0/NaN), dates, binary and mixed
+    * integral widths (a boxed Integer never equals a boxed Long) decline
+    * to the distributed plan.
+    */
+  private def walkableIds(a: DataType, b: DataType): Option[Boolean] = {
+    def integral(dt: DataType): Boolean = dt == LongType ||
+      dt == IntegerType || dt == ShortType || dt == ByteType
+    if (a == b && integral(a)) Some(true)
+    else if (a == StringType && b == StringType) Some(false)
+    else None
   }
 
   /** The indexed-array walk over an ALREADY-COLLECTED Long edge list —
@@ -196,10 +207,9 @@ object Graph {
     * overflow — the caller falls back to the distributed plan and ITS
     * (session-configured) semantics.
     */
-  private[graft] def walkLongEdges(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def walkLongEdges(spark: SparkSession,
                                    tup: Array[(Long, Long, Long)], iters: Int,
-                                   declaredType: org.apache.spark.sql.types.DataType =
-                                     org.apache.spark.sql.types.LongType): Option[DataFrame] = {
+                                   declaredType: DataType = LongType): Option[DataFrame] = {
     val m = tup.length
     val srcI = new Array[Int](m); val dstI = new Array[Int](m)
     val w = new Array[Long](m)
@@ -214,8 +224,7 @@ object Graph {
       srcI(p) = idxOf(t._1); dstI(p) = idxOf(t._2); w(p) = t._3
       p += 1
     }
-    runWalk(spark, srcI, dstI, w, vals.toIndexedSeq,
-      org.apache.spark.sql.types.LongType, declaredType, iters)
+    runWalk(spark, srcI, dstI, w, vals.toIndexedSeq, LongType, declaredType, iters)
   }
 
   /** The shared recursion + result build behind both walk entry points:
@@ -223,13 +232,10 @@ object Graph {
     * ArithmeticException or zero out-weight sum (decline — never a
     * third overflow behaviour next to ANSI-throw and non-ANSI-wrap).
     */
-  private def runWalk(spark: org.apache.spark.sql.SparkSession,
+  private def runWalk(spark: SparkSession,
                       srcI: Array[Int], dstI: Array[Int], w: Array[Long],
-                      nodeVals: IndexedSeq[Any],
-                      builtType0: org.apache.spark.sql.types.DataType,
-                      nodeType: org.apache.spark.sql.types.DataType,
+                      nodeVals: IndexedSeq[Any], builtType: DataType, nodeType: DataType,
                       iters: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.types._
     val m = srcI.length
     val total = nodeVals.length
     val isSrc = new Array[Boolean](total)
@@ -279,14 +285,13 @@ object Graph {
     }
     // integral ids were interned as Long — emit LongType and cast back
     // to the declared node type (exact: the values originated there)
-    val builtType = builtType0
     val schema = StructType(Seq(
       StructField("node", builtType, nullable = true),
       StructField("rank_micro", LongType, nullable = true)))
-    val rows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList(total)
+    val rows: java.util.List[Row] = new java.util.ArrayList(total)
     var o = 0
     while (o < total) {
-      if (isSrc(o)) rows.add(org.apache.spark.sql.Row(nodeVals(o), rank(o)))
+      if (isSrc(o)) rows.add(Row(nodeVals(o), rank(o)))
       o += 1
     }
     val built = spark.createDataFrame(rows, schema)
@@ -331,36 +336,28 @@ object Graph {
     }
   }
 
-  /** Guarded driver walk for the triangle core (the kHop/RobustStats
-    * chooser): a fixture-scale graph pays seconds of scheduled-stage
-    * overhead in the distributed wedge join (measured: g2 5.2s / g5
-    * 3.4s at sf0.1 for a ~3k-edge affinity graph), so ONE bounded
-    * `head` probe sizes the edge list and, when it fits, the identical
-    * degree-oriented wedge algorithm runs in memory. Returns
-    * (n_edges, degree map, triangle list) over generic node values —
-    * `None` sends callers to the distributed plan. The walk IS the
-    * same algorithm (normalise u<v distinct → degree → orient by
-    * (deg, id) → wedge + close), asserted spec-identical to the
-    * distributed fallback on a seeded graph.
+  /** Guarded driver walk for the triangle core: a fixture-scale graph
+    * pays seconds of scheduled-stage overhead in the distributed wedge
+    * join (measured: g2 5.2s / g5 3.4s at sf0.1 for a ~3k-edge affinity
+    * graph), so when the ids pass [[walkableIds]] ONE bounded probe
+    * sizes the edge list and, when it fits, the identical
+    * degree-oriented wedge algorithm (normalise u<v distinct → degree →
+    * orient by (deg, id) → wedge + close, spec-identical to the
+    * distributed plan) runs in memory. Returns (n_edges, degree map,
+    * triangle list), or `None` for the distributed plan; records the
+    * "triangles" [[DriverBudget.Decision]].
     */
   private def walkedTriangles(edges: DataFrame, srcCol: String, dstCol: String,
                               driverWalkMaxEdges: Long)
       : Option[(Long, Map[Any, Long], Seq[(Any, Any, Any)])] = {
-    if (driverWalkMaxEdges <= 0) return None
-    val bound = math.min(driverWalkMaxEdges, Int.MaxValue - 2L).toInt
-    val probe = edges.select(col(srcCol), col(dstCol)).head(bound + 1)
-    if (probe.length > driverWalkMaxEdges) return None
-    // TYPE GUARD: the walk only trusts its own node ordering for
-    // integral and string ids, where it provably matches Spark's
-    // least/greatest. Anything else — decimals (BigDecimal vs its
-    // string form), floats (NaN ordering), dates, binary — routes to
-    // the distributed plan rather than risk a divergent orientation.
-    def isIntegral(a: Any): Boolean = a.isInstanceOf[Long] || a.isInstanceOf[Int] ||
-      a.isInstanceOf[Short] || a.isInstanceOf[Byte]
-    val nodes = probe.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
-      .filter(_ != null).toSeq
-    val allIntegral = nodes.forall(isIntegral)
-    if (!allIntegral && !nodes.forall(_.isInstanceOf[String])) return None
+    val proj = edges.select(col(srcCol), col(dstCol))
+    val ids = walkableIds(proj.schema(0).dataType, proj.schema(1).dataType)
+    val probed = ids.flatMap(_ => DriverBudget.probe(proj, driverWalkMaxEdges))
+    DriverBudget.recordWalk("triangles", probed.map(_.length.toLong), driverWalkMaxEdges,
+      probed.isDefined)
+    if (probed.isEmpty) return None
+    val probe = probed.get
+    val allIntegral = ids.get
     def lt(a: Any, b: Any): Boolean =
       if (allIntegral) a.asInstanceOf[Number].longValue < b.asInstanceOf[Number].longValue
       else a.asInstanceOf[String] < b.asInstanceOf[String]
@@ -467,19 +464,15 @@ object Graph {
         // least(src, dst), so its nullability is src OR dst nullable
         val srcF = edges.select(col(srcCol)).schema.head
         val dstF = edges.select(col(dstCol)).schema.head
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", srcF.dataType,
-            nullable = srcF.nullable || dstF.nullable),
-          org.apache.spark.sql.types.StructField("degree",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("n_triangles",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("coeff_pm",
-            org.apache.spark.sql.types.LongType, nullable = true)))
+        val schema = StructType(Seq(
+          StructField("node", srcF.dataType, nullable = srcF.nullable || dstF.nullable),
+          StructField("degree", LongType, nullable = false),
+          StructField("n_triangles", LongType, nullable = false),
+          StructField("coeff_pm", LongType, nullable = true)))
         val rows = degs.toSeq.map { case (n, d) =>
           val t = triPerNode.getOrElse(n, 0L)
           val coeff: Any = if (d >= 2) Long.box(t * 2000 / (d * (d - 1))) else null
-          org.apache.spark.sql.Row(n, d, t, coeff)
+          Row(n, d, t, coeff)
         }
         spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       case None =>
@@ -520,18 +513,21 @@ object Graph {
     require(maxHops >= 1 && maxHops <= 20, "kHop: maxHops must be in 1..20")
     val spark = edges.sparkSession
     val eProj = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // guarded driver walk (the RobustStats/Generalise chooser): a
-    // DataFrame round over a small graph costs seconds in scheduled-
-    // stage overhead (measured 9.2s for 3 rounds on ~3k cached edges
-    // vs 0.1s walked) — ONE bounded executeTake sizes the edge list
-    // and, when graph AND seeds fit, the whole BFS runs in memory.
+    // guarded driver walk: a DataFrame round over a small graph costs
+    // seconds in scheduled-stage overhead (measured 9.2s for 3 rounds on
+    // ~3k cached edges vs 0.1s walked), so when the edges and then the
+    // seeds fit one bounded probe each, the whole BFS runs in memory.
     // Node values are read generically and the output carries the
     // edge relation's own node type, so both walks type identically.
-    val bound = math.min(driverWalkMaxEdges, Int.MaxValue - 2L).toInt
-    val probeEdges = if (driverWalkMaxEdges > 0) eProj.head(bound + 1) else Array.empty[org.apache.spark.sql.Row]
-    if (driverWalkMaxEdges > 0 && probeEdges.length <= driverWalkMaxEdges) {
-      val seedRows = seeds.select(col(seedCol).as("node")).head(bound + 1)
-      if (seedRows.length <= driverWalkMaxEdges) {
+    val probes = for {
+      es <- DriverBudget.probe(eProj, driverWalkMaxEdges)
+      ss <- DriverBudget.probe(seeds.select(col(seedCol).as("node")), driverWalkMaxEdges)
+    } yield (es, ss)
+    DriverBudget.recordWalk("kHop",
+      probes.map { case (es, ss) => math.max(es.length, ss.length).toLong },
+      driverWalkMaxEdges, probes.isDefined)
+    probes match {
+      case Some((probeEdges, seedRows)) =>
         val adj = probeEdges.toSeq.groupBy(_.get(0))
           .map { case (k, rs) => k -> rs.map(_.get(1)) }
         val hops = scala.collection.mutable.LinkedHashMap[Any, Int]()
@@ -543,16 +539,12 @@ object Graph {
           next.foreach(n => hops(n) = h)
           frontier = next
         }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            eProj.schema("src").dataType, nullable = true),
-          org.apache.spark.sql.types.StructField("hop",
-            org.apache.spark.sql.types.IntegerType, nullable = false)))
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            hops.toSeq.map { case (n, h) => org.apache.spark.sql.Row(n, h) }, 1),
-          schema)
-      }
+        val schema = StructType(Seq(
+          StructField("node", eProj.schema("src").dataType, nullable = true),
+          StructField("hop", IntegerType, nullable = false)))
+        return spark.createDataFrame(spark.sparkContext.parallelize(
+          hops.toSeq.map { case (n, h) => Row(n, h) }, 1), schema)
+      case None => ()
     }
     // distributed fallback — the 100 TB shape: edges repartitioned by
     // src and sorted ONCE (every round's sort-merge join streams the

@@ -66,13 +66,14 @@ object RobustStats {
     val hist = OpCaches.persist(
       df.select(segCol.as("seg"), valueCol.cast("long").as("v"))
         .groupBy("seg", "v").agg(count(lit(1)).as("cnt")))
-    // guarded driver walk: ONE collect sizes the histogram and, when it
-    // fits, computes every order statistic in-memory — the distributed
-    // path below is the fallback for unbounded value domains
-    // clamp: a caller passing a huge bound must not overflow the limit
-    val probeBound = math.min(driverWalkMaxBins, Int.MaxValue - 1L).toInt
-    val probeRows = hist.limit(probeBound + 1).collect()
-    if (probeRows.length <= driverWalkMaxBins) {
+    // guarded driver walk: ONE bounded probe sizes the histogram and,
+    // when it fits, computes every order statistic in-memory — the
+    // distributed path below is the fallback for unbounded value domains
+    val probe = DriverBudget.probe(hist, driverWalkMaxBins)
+    DriverBudget.recordWalk("madOutlierSummary", probe.map(_.length.toLong),
+      driverWalkMaxBins, probe.isDefined)
+    if (probe.isDefined) {
+      val probeRows = probe.get
       val spark = df.sparkSession
       def m2Of(bins: Seq[(Long, Long)]): Long = {
         // bins: (v, cnt) sorted by v; low-mid + high-mid value

@@ -1193,14 +1193,8 @@ object Similarity {
     *    pruning; pays a fixed quantizer-training cost that only
     *    amortises on corpora the broadcast path couldn't hold anyway.
     *
-    * The chooser's statistic costs O(broadcastMaxRows), NOT a corpus
-    * scan: Catalyst plan statistics when the node knows its row count
-    * (zero jobs), else a `head(max+1)` probe — `executeTake` starts on
-    * ONE partition and scales up (×`spark.sql.limit.scaleUpFactor`)
-    * only until it holds max+1 rows, so a 100 TB corpus answers "too
-    * big" after reading a bounded handful of partitions instead of
-    * every row-group footer. Either way the DECISION is exact, never
-    * sampled.
+    * The chooser ([[fitsInBroadcast]]) costs O(broadcastMaxRows), NOT a
+    * corpus scan, and its decision is exact, never sampled.
     */
   def cosineNearDupPairsAuto(df: DataFrame, threshold: Double,
                              idCol: String = "vec_id", vecCol: String = "embedding",
@@ -1212,18 +1206,23 @@ object Similarity {
 
   /** True iff `df` has ≤ `maxRows` rows, decided without a full scan:
     * exact plan statistics when available, otherwise a bounded
-    * `head(maxRows+1)` probe (incremental executeTake — NOT
+    * [[DriverBudget.probe]] (incremental executeTake — NOT
     * `limit().count()`, whose LocalLimit still launches a task per
-    * partition). Package-visible for the spec that asserts the probe's
-    * task count stays independent of partition count.
+    * partition). Records the "fitsInBroadcast" decision. Package-visible
+    * for the spec that asserts the probe's task count stays independent
+    * of partition count.
     */
-  private[graft] def fitsInBroadcast(df: DataFrame, idCol: String, maxRows: Long): Boolean =
-    df.queryExecution.optimizedPlan.stats.rowCount match {
-      case Some(n) => n <= BigInt(maxRows)
+  private[graft] def fitsInBroadcast(df: DataFrame, idCol: String, maxRows: Long): Boolean = {
+    val (size, fits) = df.queryExecution.optimizedPlan.stats.rowCount match {
+      case Some(n) => (Some(n.min(BigInt(Long.MaxValue)).toLong), n <= BigInt(maxRows))
       case None =>
-        val probe = math.min(maxRows, Int.MaxValue - 2L).toInt + 1
-        df.select(idCol).head(probe).length <= maxRows
+        val probe = DriverBudget.probe(df.select(idCol), maxRows)
+        (probe.map(_.length.toLong), probe.isDefined)
     }
+    DriverBudget.record(DriverBudget.Decision("fitsInBroadcast", size, maxRows,
+      if (fits) "broadcast" else "blocked"))
+    fits
+  }
 
   /** Exact cosine near-dup pairs, broadcast form — the small-corpus fast
     * path: for a corpus whose (id, vector, norm) fits in executor memory,

@@ -57,9 +57,10 @@ object TimeSeries {
     * their value; gap buckets take the straight line between the
     * surrounding observations. The grid spans first..last observation
     * per key, so every gap has both neighbours. Same scale shape as
-    * [[forwardFill]] — the two extra window aggregates (previous /
-    * next observed bucket) share the one key-partitioned, span-bounded
-    * window ordering.
+    * [[forwardFill]]: the previous observation is a running window
+    * aggregate in bucket order, the next one a running aggregate in
+    * reverse bucket order — two key-partitioned sorts, each linear in
+    * a key's grid.
     *
     * The arithmetic is written as exactly
     * `v_p + (v_n − v_p) · ((b − b_p) / (b_n − b_p))` in double — the
@@ -79,15 +80,19 @@ object TimeSeries {
     val spans = obs.groupBy("k").agg(min("b").as("b0"), max("b").as("b1"))
     val grid = spans.select(col("k"),
       explode(sequence(col("b0"), col("b1"), lit(1L))).as("b"))
-    val ord = Window.partitionBy("k").orderBy("b")
-    val back = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    // RUNNING frames both ways (`b` is unique per key: no ties): a frame
+    // ending at UNBOUNDED FOLLOWING recomputes the rest of the partition
+    // for every row, quadratic in a key's grid length
+    val back = Window.partitionBy("k").orderBy(col("b"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val fwd = Window.partitionBy("k").orderBy(col("b").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val obsB = when(col("v_obs").isNotNull, col("b"))
     grid.join(obs, Seq("k", "b"), "left")
       .withColumn("bp", max(obsB).over(back))
       .withColumn("bn", min(obsB).over(fwd))
       .withColumn("vp", last(col("v_obs"), ignoreNulls = true).over(back))
-      .withColumn("vn", first(col("v_obs"), ignoreNulls = true).over(fwd))
+      .withColumn("vn", last(col("v_obs"), ignoreNulls = true).over(fwd))
       .select(col("k").as(keyCol),
         timestamp_seconds(col("b") * stepSec).as("bucket_ts"),
         when(col("v_obs").isNotNull, col("v_obs"))

@@ -178,10 +178,16 @@ class AnonymiserSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("kAnonymize: driver walk and distributed walk produce the identical mapping") {
+    import graft.ops.DriverBudget
     val viaDriver = graft.anonymise.Generalise.kAnonymize(ladderFixture, ladder, k = 3)
+    // four finest classes: a, b, c and d
+    assert(DriverBudget.last("kAnonymize").get == DriverBudget.Decision("kAnonymize",
+      Some(4L), graft.anonymise.Generalise.DriverWalkMaxClasses, DriverBudget.Driver))
     // bound 0 forces the distributed census walk
     val viaDist = graft.anonymise.Generalise.kAnonymize(ladderFixture, ladder,
       k = 3, driverWalkMaxClasses = 0L)
+    assert(DriverBudget.last("kAnonymize").get ==
+      DriverBudget.Decision("kAnonymize", None, 0L, DriverBudget.Distributed))
     assert(viaDriver.exceptAll(viaDist).count() == 0)
     assert(viaDist.exceptAll(viaDriver).count() == 0)
   }

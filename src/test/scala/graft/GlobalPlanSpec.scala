@@ -90,6 +90,32 @@ class GlobalPlanSpec extends AnyFunSuite with SparkSuite {
       s"stale provenBounded entries: ${(provenBounded -- boundedSeen).mkString(", ")}")
   }
 
+  /** Every node of `p`, through the AQE wrappers. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case qs: QueryStageExec => nodes(qs.plan)
+    case _ => p.children.flatMap(nodes)
+  })
+
+  test("no catalog window frame ends at UNBOUNDED FOLLOWING unless it starts at UNBOUNDED PRECEDING") {
+    // Spark recomputes such a frame over the rest of the partition for
+    // every row — quadratic in the partition; a frame open at both ends
+    // is computed once per partition, and a running frame in reverse
+    // order gives the same "rest of the partition" aggregate linearly
+    import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding, WindowExpression}
+    val bad = allPlans.flatMap { case (name, plan) =>
+      nodes(plan).collect { case w: WindowExec => w }
+        .flatMap(_.windowExpression.flatMap(_.collect {
+          case we: WindowExpression => we.windowSpec.frameSpecification
+        }))
+        .collect {
+          case f @ SpecifiedWindowFrame(_, lower, UnboundedFollowing) if lower != UnboundedPreceding =>
+            s"$name: ${f.sql}"
+        }.distinct
+    }
+    assert(bad.isEmpty, s"frames ending at UNBOUNDED FOLLOWING in:\n  ${bad.mkString("\n  ")}")
+  }
+
   /** Queries whose non-equi join is the DESIGNED shape beyond the
     * single-row rule — each entry must name why the build side is
     * bounded. (Single-row builds — a totals/bloom/sketch aggregate

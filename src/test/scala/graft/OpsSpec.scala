@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ops.{Cdc, Dedup, Multimodal, RangeJoin, Sampling, Similarity, TextAnalysis}
+import graft.ops.{Cdc, Dedup, DriverBudget, Multimodal, RangeJoin, Sampling, Similarity, TextAnalysis}
 
 /** Behavioural specs for the LLM-pipeline operators: LSH candidate
   * recall against exact baselines, ANN recall vs brute force, kernel
@@ -11,6 +11,9 @@ import graft.ops.{Cdc, Dedup, Multimodal, RangeJoin, Sampling, Similarity, TextA
 class OpsSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+
+  /** The branch the chooser `op` recorded on its latest call. */
+  private def branchOf(op: String): String = DriverBudget.last(op).get.branch
   private lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   test("scd2Merge: intervals chain, change wins at equal effective point") {
@@ -66,11 +69,22 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("simhash at J=1.0 finds exactly the identical-shingle-set pairs") {
-    val sim = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 3, threshold = 1.0)
+    import spark.implicits._
+    // no two fixture documents share a shingle set, so plant some:
+    // copies under new ids, and two different texts with one 3-gram set
+    val planted = docs.select("doc_id", "text")
+      .unionByName(docs.filter(col("doc_id") < 3)
+        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+      .unionByName(Seq((2000001L, "x y z x y z"), (2000002L, "x y z x y z x y z"))
+        .toDF("doc_id", "text"))
+    val sim = Dedup.simhashNearDups(planted, "doc_id", "text", maxHamming = 3, threshold = 1.0)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", threshold = 1.0)
+    val exact = Dedup.ngramJaccardPairs(planted, "doc_id", "text", threshold = 1.0)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(Set((0L, 1000000L), (1L, 1000001L), (2L, 1000002L), (2000001L, 2000002L))
+      .subsetOf(exact), s"planted pairs missing from the exact join: $exact")
     assert(sim == exact)
+    graft.ops.OpCaches.releaseAll()
   }
 
   test("exact dedup: dup_count sums to row count; canonical ids unique") {
@@ -1112,12 +1126,12 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       s"chain component must all take min label 1: $out")
     assert(out(7L) == 7L && out(8L) == 7L)
     // convergence telemetry: recorded rounds, last round changed nothing
-    val stats = Dedup.lastClusterStats.get
-    assert(stats.rounds >= 1 && stats.rounds <= 25)
-    assert(stats.changedPerRound.length == stats.rounds)
-    assert(stats.changedPerRound.last == 0L,
+    val stats = DriverBudget.last("clusters").get
+    assert(stats.branch == DriverBudget.Distributed && stats.size.isEmpty, stats)
+    assert(stats.rounds.nonEmpty && stats.rounds.length <= 25)
+    assert(stats.rounds.last == 0L,
       s"final round must be the no-change fixpoint check: $stats")
-    assert(stats.changedPerRound.init.forall(_ > 0L),
+    assert(stats.rounds.init.forall(_ > 0L),
       s"every non-final round must have made progress: $stats")
   }
 
@@ -1131,6 +1145,8 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out.size == 64)
     assert(out.values.forall(_ == 1L), s"deep chain did not fully converge: $out")
+    assert(branchOf("clusters") == DriverBudget.Distributed)
+    assert(DriverBudget.last("clusters").get.rounds.length <= 8)
   }
 
   test("dup clusters: driver union-find path equals the distributed fixpoint") {
@@ -1143,10 +1159,12 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     }.filter { case (a, b) => a != b }.toDF("id_a", "id_b")
     val viaDriver = Dedup.clusters(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Dedup.lastClusterStats.get.rounds == 0, "small graph must take the driver path")
+    assert(branchOf("clusters") == DriverBudget.Driver, "small graph must take the driver path")
+    assert(DriverBudget.last("clusters").get.rounds.isEmpty)
     val viaFixpoint = Dedup.clusters(pairs, driverMaxEdges = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Dedup.lastClusterStats.get.rounds > 0, "forced path must be distributed")
+    assert(branchOf("clusters") == DriverBudget.Distributed, "forced path must be distributed")
+    assert(DriverBudget.last("clusters").get.rounds.nonEmpty)
     assert(viaDriver == viaFixpoint)
   }
 
@@ -1158,7 +1176,9 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val dupHeavy = Seq.fill(20)((1L, 2L)).toDF("id_a", "id_b")
     val viaDedupCheck = Dedup.clusters(dupHeavy, driverMaxEdges = 10).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Dedup.lastClusterStats.get.rounds == 0,
+    // the decision comes from the distinct-edge probe: 2 edges of 10
+    assert(DriverBudget.last("clusters").get ==
+      DriverBudget.Decision("clusters", Some(2L), 10L, DriverBudget.Driver),
       "distinct edges fit the budget — must still walk on the driver")
     assert(viaDedupCheck == Map(1L -> 1L, 2L -> 1L))
     // genuinely oversized budget: both gates fail, distributed fixpoint
@@ -1171,9 +1191,18 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaOversized = Dedup.clusters(pairs, driverMaxEdges = 5).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Dedup.lastClusterStats.get.rounds > 0,
+    assert(branchOf("clusters") == DriverBudget.Distributed,
       "an oversized graph must fall through to the distributed fixpoint")
+    assert(DriverBudget.last("clusters").get.size.isEmpty, "over budget is 'more than'")
     assert(viaOversized == viaDriver)
+    // a null id fits the budget but cannot walk: the distributed fixpoint
+    // labels it, on the default budget exactly as when forced
+    val withNull = Seq((Option(1L), Option(2L)), (None, Option(3L))).toDF("id_a", "id_b")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => Option(r.get(0)) -> Option(r.get(1))).toSet
+    val nullDefault = labels(Dedup.clusters(withNull))
+    assert(DriverBudget.last("clusters").get.branch == DriverBudget.Distributed)
+    assert(nullDefault == labels(Dedup.clusters(withNull, driverMaxEdges = 0)))
   }
 
   test("winnowing near-dups: copies score 1.0, edits stay high, disjoint docs absent") {
@@ -1260,9 +1289,11 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // default budget: this templated fixture stays under it → count-based branch
     val auto = Dedup.ngramJaccardPairsAuto(docs, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b")
+    assert(branchOf("ngramJaccardPairsAuto") == "count")
     // budget 0 forces the PPJoin prefix branch
     val forced = Dedup.ngramJaccardPairsAuto(docs, "doc_id", "text", threshold = 0.5,
       candidateBudgetPerDoc = 0).select("id_a", "id_b")
+    assert(branchOf("ngramJaccardPairsAuto") == "prefix")
     assert(auto.exceptAll(naive).count() == 0 && naive.exceptAll(auto).count() == 0,
       "auto (count-based branch) diverged from naive")
     assert(forced.exceptAll(naive).count() == 0 && naive.exceptAll(forced).count() == 0,
@@ -1567,9 +1598,18 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       assert(started.get() < 32,
         s"probe launched ${started.get()} tasks — looks like a full scan")
     } finally spark.sparkContext.removeSparkListener(listener)
+    assert(DriverBudget.last("fitsInBroadcast").get ==
+      DriverBudget.Decision("fitsInBroadcast", None, 100L, "blocked"))
     // decision flips exactly at the boundary (still bounded probes)
     assert(Similarity.fitsInBroadcast(df, "vec_id", maxRows = 10000))
+    assert(DriverBudget.last("fitsInBroadcast").get ==
+      DriverBudget.Decision("fitsInBroadcast", Some(10000L), 10000L, "broadcast"))
     assert(!Similarity.fitsInBroadcast(df, "vec_id", maxRows = 9999))
+    assert(branchOf("fitsInBroadcast") == "blocked")
+    // exact plan statistics decide without a job, and are recorded too
+    assert(!Similarity.fitsInBroadcast(spark.range(50).toDF(), "id", maxRows = 49))
+    assert(DriverBudget.last("fitsInBroadcast").get ==
+      DriverBudget.Decision("fitsInBroadcast", Some(50L), 49L, "blocked"))
   }
 
   test("upsampleByWeight: multiplicity arithmetic, copy numbering, zero-weight drop") {
@@ -2180,11 +2220,13 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // generous budget -> the chooser takes the exact plan: identical set
     assert(rows(Dedup.ngramContainmentPairsAuto(dups, "doc_id", "text", 0.9,
       candidateBudgetPerDoc = 1L << 40)) == exact)
+    assert(branchOf("ngramContainmentPairsAuto") == "count")
     // zero budget forces the MinHash screen: high-J pairs all survive
     // the 32x2 band curve (collision prob 1 - (1-J^2)^32 ~= 1 here) and
     // the verify stage recomputes the SAME IEEE ratios -> identical set
     assert(rows(Dedup.ngramContainmentPairsAuto(dups, "doc_id", "text", 0.9,
       candidateBudgetPerDoc = 0)) == exact)
+    assert(branchOf("ngramContainmentPairsAuto") == "screen")
     // the screen is a candidate SUBSET by construction: on the
     // short-quoted-in-long corpus (J tiny, containment 1.0) the screened
     // result never invents pairs the exact plan lacks
@@ -2196,11 +2238,12 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       candidateBudgetPerDoc = 0))
     assert(screenedQ.subsetOf(exactQ),
       s"screen must never invent pairs: $screenedQ vs $exactQ")
-    // budget predicate arithmetic: the fixture documents sit within the
-    // shipped 1024/doc budget at sf0.01 (measured ~28/doc), so d18 runs
-    // the EXACT plan under the correctness gate
-    assert(!Dedup.containmentExceedsBudget(docs, "doc_id", "text", 1024))
-    assert(Dedup.containmentExceedsBudget(dups, "doc_id", "text", 0))
+    // the fixture documents sit within the shipped 1024/doc budget
+    // (measured ~28/doc at sf0.01), so d18 runs the EXACT plan under the
+    // correctness gate
+    Dedup.ngramContainmentPairsAuto(docs, "doc_id", "text", 0.9)
+    val d18 = DriverBudget.last("ngramContainmentPairsAuto").get
+    assert(d18.branch == "count" && d18.size.get <= d18.budget, d18)
     graft.ops.OpCaches.releaseAll()
   }
 
@@ -2513,6 +2556,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       val got = graft.ops.Graph.triangleCount(
         rnd.shuffle(noisy).toDF("src", "dst"))
         .collect().head
+      assert(branchOf("triangles") == DriverBudget.Driver, s"trial=$trial")
       val es = base.toSet
       def has(a: Long, b: Long) = es((math.min(a, b), math.max(a, b)))
       val want = (for {
@@ -2525,6 +2569,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       // wedge join (forced with driverWalkMaxEdges = 0), schema and all
       val dist = graft.ops.Graph.triangleCount(
         rnd.shuffle(noisy).toDF("src", "dst"), driverWalkMaxEdges = 0L)
+      assert(branchOf("triangles") == DriverBudget.Distributed, s"trial=$trial")
       assert(dist.collect().head == got, s"trial=$trial walk != distributed")
       assert(dist.schema == graft.ops.Graph.triangleCount(
         rnd.shuffle(noisy).toDF("src", "dst")).schema)
@@ -2548,6 +2593,9 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       .select(col("src").cast("decimal(10,2)").as("src"),
         col("dst").cast("decimal(10,2)").as("dst"))
     val got = graft.ops.Graph.triangleCount(decDf).collect().head
+    assert(DriverBudget.last("triangles").get ==
+      DriverBudget.Decision("triangles", None, DriverBudget.graphWalkEdges(1L << 17),
+        DriverBudget.Distributed), "the type guard must decline decimal ids")
     assert(got.getLong(0) == 4L && got.getLong(1) == 6L && got.getLong(2) == 4L)
     // distributed-forced run agrees exactly (the guard really took it)
     assert(graft.ops.Graph.triangleCount(decDf, driverWalkMaxEdges = 0L)
@@ -2556,8 +2604,15 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // distributed plan (regression anchor for the guard's accept side)
     val intDf = (for { i <- 0 until 4; j <- i + 1 until 4 } yield (i.toLong, j.toLong))
       .toDF("src", "dst")
-    assert(graft.ops.Graph.triangleCount(intDf).collect().head ==
+    val walkedInt = graft.ops.Graph.triangleCount(intDf)
+    assert(branchOf("triangles") == DriverBudget.Driver)
+    assert(walkedInt.collect().head ==
       graft.ops.Graph.triangleCount(intDf, driverWalkMaxEdges = 0L).collect().head)
+    // INT src, BIGINT dst: least/greatest widen both to one node
+    // identity, so the triangle 1-2-3 has 3 nodes, not 6 boxed keys
+    val mixed = Seq((1, 2L), (2, 3L), (3, 1L)).toDF("src", "dst")
+    assert(graft.ops.Graph.triangleCount(mixed).collect().head.toSeq == Seq(3L, 3L, 1L))
+    assert(branchOf("triangles") == DriverBudget.Distributed)
     graft.ops.OpCaches.releaseAll()
   }
 
@@ -2577,6 +2632,8 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val df = sym.toDF("src", "dst", "w")
     val got = graft.ops.Graph.pageRank(df, iters = 3)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(DriverBudget.last("pageRank").get == DriverBudget.Decision("pageRank",
+      Some(sym.size.toLong), DriverBudget.graphWalkEdges(1L << 17), DriverBudget.Driver))
     // driver reference with identical integer arithmetic
     val outW = sym.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
     val ns = sym.map(_._1).distinct
@@ -2594,6 +2651,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // distributed superstep plan (forced with driverWalkMaxEdges = 0),
     // values, column names and types alike
     val dist = graft.ops.Graph.pageRank(df, iters = 3, driverWalkMaxEdges = 0L)
+    assert(branchOf("pageRank") == DriverBudget.Distributed)
     assert(dist.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == rank)
     val walkDf = graft.ops.Graph.pageRank(df, iters = 3)
     assert(walkDf.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -2601,7 +2659,10 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // null endpoints decline the walk: both paths still agree
     val withNull = sym.toDF("src", "dst", "w")
       .unionByName(Seq((null.asInstanceOf[String], "n1", 1L)).toDF("src", "dst", "w"))
-    assert(graft.ops.Graph.pageRank(withNull, iters = 2).collect().length ==
+    val nullWalk = graft.ops.Graph.pageRank(withNull, iters = 2)
+    assert(DriverBudget.last("pageRank").get.size.contains(sym.size + 1L) &&
+      branchOf("pageRank") == DriverBudget.Distributed, "a null endpoint must decline")
+    assert(nullWalk.collect().length ==
       graft.ops.Graph.pageRank(withNull, iters = 2, driverWalkMaxEdges = 0L)
         .collect().length)
     // Long-overflow edges (rank·w past 2^63) must DECLINE the walk —
@@ -2622,8 +2683,10 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       s"walk chooser changed overflow behaviour: $viaDefault vs $viaDist")
     // a budget below the edge count declines the walk; the distributed
     // plan returns the identical ranks (the small-driver path)
-    assert(graft.ops.Graph.pageRank(df, iters = 3, driverWalkMaxEdges = 5L)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == rank)
+    val small = graft.ops.Graph.pageRank(df, iters = 3, driverWalkMaxEdges = 5L)
+    assert(DriverBudget.last("pageRank").get == DriverBudget.Decision("pageRank",
+      Some(sym.size.toLong), 5L, DriverBudget.Distributed))
+    assert(small.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == rank)
   }
 
   test("capPairsPerDoc: salted two-phase == driver reference; binding budgets drop pairs") {
@@ -2669,6 +2732,49 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(DriverBudget.graphWalkEdges(1L << 17) <= (1L << 17))
     assert(DriverBudget.clusterEdges(1L << 20) <= (1L << 20))
     assert(DriverBudget.bins(1L << 20) <= (1L << 20))
+  }
+
+  test("DriverBudget.probe: judges the clamped bound; a budget <= 0 runs no job") {
+    val three = spark.range(0, 3, 1, 2).toDF("x")
+    assert(DriverBudget.probe(three, 3L).map(_.length).contains(3))
+    assert(DriverBudget.probe(three, 2L).isEmpty, "bound + 1 rows came back: over budget")
+    // a budget past the Int range clamps once (head's argument stays an
+    // Int), and the verdict is against the CLAMPED bound: a full
+    // bound + 1 probe never counts as fitting
+    assert(DriverBudget.probe(three, 1L << 40).map(_.length).contains(3))
+    Seq(Int.MaxValue.toLong, 1L << 31, 1L << 40, Long.MaxValue).foreach { b =>
+      val bound = DriverBudget.bound(b)
+      assert(bound < Int.MaxValue)
+      assert(DriverBudget.fits(bound, b) && !DriverBudget.fits(bound + 1L, b), s"budget $b")
+    }
+    // a budget <= 0 is over budget without running a job
+    val started = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => started.merge(g, 1, _ + _))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("probe-nonpositive", "budget <= 0")
+      assert(DriverBudget.probe(three, 0L).isEmpty)
+      assert(DriverBudget.probe(three, -5L).isEmpty)
+      assert(DriverBudget.probe(three.limit(0), 0L).isEmpty, "even an empty frame is over")
+      // a positive budget does run a job; the bus is ordered, so once
+      // it is seen any earlier probe job would have been seen too
+      sc.setJobGroup("probe-positive", "budget 1")
+      assert(DriverBudget.probe(three, 1L).isEmpty)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!started.containsKey("probe-positive") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(started.containsKey("probe-positive"), "the listener saw no probe job at all")
+      assert(!started.containsKey("probe-nonpositive"),
+        s"a budget <= 0 launched ${started.get("probe-nonpositive")} job(s)")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("cleanText: tags stripped, control chars squashed, runs collapsed, edges trimmed") {
@@ -2737,10 +2843,15 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val got = graft.ops.RobustStats
       .madOutlierSummary(df, col("seg"), col("v"))
       .as[(String, Long, Long, Long, Long)].collect().toSet
+    // 7 (seg, v) bins: A's five values and B's two
+    assert(DriverBudget.last("madOutlierSummary").get == DriverBudget.Decision(
+      "madOutlierSummary", Some(7L), graft.ops.RobustStats.DriverWalkMaxBins,
+      DriverBudget.Driver))
     assert(got == Set(("A", 5L, 6L, 4L, 0L), ("B", 5L, 20L, 0L, 1L)))
     val dist = graft.ops.RobustStats
       .madOutlierSummary(df, col("seg"), col("v"), driverWalkMaxBins = 0L)
       .as[(String, Long, Long, Long, Long)].collect().toSet
+    assert(branchOf("madOutlierSummary") == DriverBudget.Distributed)
     assert(dist == got)
     // even-count interpolation: {1,2,3,4} → m2 = 2+3 = 5
     val even = Seq(1L, 2L, 3L, 4L).map(("E", _)).toDF("seg", "v")
@@ -3481,6 +3592,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val seeds = Seq(1L).toDF("node")
     val got = Graph.kHop(edges, seeds, maxHops = 3)
       .as[(Long, Int)].collect().toMap
+    assert(branchOf("kHop") == DriverBudget.Driver)
     // 5 is 4 hops out → absent at cap 3; the cycle never downgrades 1;
     // 6 and 7 unreachable along direction
     assert(got == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
@@ -3495,6 +3607,8 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // the distributed walk (driver chooser disabled) is identical,
     // including output node typing
     val dist = Graph.kHop(edges, seeds, maxHops = 3, driverWalkMaxEdges = 0L)
+    assert(DriverBudget.last("kHop").get ==
+      DriverBudget.Decision("kHop", None, 0L, DriverBudget.Distributed))
     assert(dist.schema("node").dataType ==
       Graph.kHop(edges, seeds, maxHops = 3).schema("node").dataType)
     assert(dist.as[(Long, Int)].collect().toMap == got)

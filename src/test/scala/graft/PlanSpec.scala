@@ -655,6 +655,10 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // no cached-edge plan to assert
     val df = GraftQueries.g1SupplierRankImpl(spark, sfDir, driverWalkMaxEdges = 0L)
     df.collect()
+    import graft.ops.DriverBudget
+    assert(DriverBudget.last("g1SupplierRank").get ==
+      DriverBudget.Decision("g1SupplierRank", None, 0L, DriverBudget.Distributed))
+    assert(DriverBudget.last("pageRank").get.branch == DriverBudget.Distributed)
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, AQEShuffleReadExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
