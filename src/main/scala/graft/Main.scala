@@ -167,35 +167,48 @@ object Main {
     * with every transitive FK descendant (`export.Subset.eraseCascade`),
     * then dump the SURVIVING database through the same pipeline.
     *
-    * Both refuse to write if the result left any dangling row.
+    * A subset takes its kept frames and their orphan proof from
+    * `export.Subset.restrict`: over driver-held keys when they fit its
+    * budget (filtered scans, rendered once by the export), else over
+    * persisted semi-joins. An erasure always runs persisted and is
+    * proven by `Subset.orphanCounts`. Persisted frames live only as
+    * long as this command. Both refuse to write if the result left any
+    * dangling row, and the summary line names the closure's branch
+    * (for a subset also the key rows held and the budget).
     */
   private def runSubset(flags: Flags, forget: Boolean): Unit = {
     val cfg = GraftConfig.load(flags.config)
     if (flags.anchor.isEmpty) { System.err.println("missing --anchor <table>"); sys.exit(2) }
     if (flags.out.isEmpty) { System.err.println("missing -o <out.sql>"); sys.exit(2) }
     require(flags.pct >= 1 && flags.pct <= 100, "--pct must be in 1..100")
-    val (select, what, done) =
-      if (forget) (Subset.eraseCascade _, "erasure",
-        s"Forgot ${flags.pct}% of ${flags.anchor} (+ descendants)")
-      else (Subset.closure _, "subset closure",
-        s"Subset (anchor=${flags.anchor}, ${flags.pct}%)")
+    val (what, done) =
+      if (forget) ("erasure", s"Forgot ${flags.pct}% of ${flags.anchor} (+ descendants)")
+      else ("subset closure", s"Subset (anchor=${flags.anchor}, ${flags.pct}%)")
     withSession { spark =>
       val source = buildSource(spark, cfg, flags.source)
       val fks = source.foreignKeys
       val anchorKey = fks.find(_.referencedTable == flags.anchor).map(_.referencedColumn)
         .getOrElse(source.columns(flags.anchor).head.name)
       val tables = source.tables.map(t => t -> source.read(t)).toMap
-      // the persisted closure frames live only as long as this command
+      val sample = graft.ops.Sampling.bucket(
+        org.apache.spark.sql.functions.col(anchorKey), 100) < flags.pct
       try {
-        val kept = select(tables, fks, flags.anchor,
-          graft.ops.Sampling.bucket(org.apache.spark.sql.functions.col(anchorKey), 100)
-            < flags.pct)
-        val orphans = Subset.orphanCounts(kept, fks)
+        val (kept, orphans, closure) =
+          if (forget) {
+            val kept = Subset.eraseCascade(tables, fks, flags.anchor, sample)
+            (kept, Subset.orphanCounts(kept, fks), s"closure=${graft.ops.DriverBudget.Distributed}")
+          } else {
+            val r = Subset.restrict(tables, fks, flags.anchor, sample)
+            val d = r.decision
+            (r.kept, r.orphans,
+              s"closure=${d.branch} key_rows=${d.size.fold("-")(_.toString)} budget=${d.budget}")
+          }
         require(orphans.values.forall(_ == 0L),
           s"$what left dangling rows: $orphans — refusing to write")
         val stats = exportTo(flags, cfg, new graft.export.SubsetSource(source, kept))
         System.err.println(
-          s"$done: exported ${stats.tablesExported} tables, ${stats.rowsExported} rows, 0 orphans")
+          s"$done: exported ${stats.tablesExported} tables, ${stats.rowsExported} rows, " +
+            s"0 orphans; $closure")
       } finally graft.ops.OpCaches.releaseAll()
     }
   }

@@ -960,7 +960,9 @@ object Dedup {
     * min-id window. If the candidate set exceeds
     * `broadcastMaxCandidates` (bloom mis-sized, or a batch that's
     * mostly dups), falls back to the plain shuffle anti-join — same
-    * output, spec-asserted.
+    * output, spec-asserted; a budget ≤ 0 takes that anti-join without
+    * building the bloom. The choice is recorded as the
+    * `bloomScreenNew` [[DriverBudget.Decision]].
     *
     * The bloom is sized by the UNFILTERED table count — an upper bound
     * on the history rows, and metadata-only on a parquet source where a
@@ -979,19 +981,23 @@ object Dedup {
     val histFp = hist.select(fp.as("fp"))
     val batch = src.filter(isNew(col(idCol))).withColumn("fp", fp)
 
-    val nHist = df.count()
+    lazy val nHist = df.count()
     // empty-safe construction (BloomJoin.buildFilter): an empty history
     // is a legitimate first-ingest case where the right answer is a
     // sketch that contains nothing
-    val bloom = BloomJoin.buildFilter(
+    lazy val bloom = BloomJoin.buildFilter(
       histFp.select(xxhash64(col("fp")).as("fph")), "fph", nHist, fpp)
 
     val probed = batch.withColumn("__fph", xxhash64(col("fp")))
-    val candFps = OpCaches.persist(
+    lazy val candFps = OpCaches.persist(
       probed.filter(BloomJoin.mightContain(probed, "__fph", bloom))
         .select("fp").distinct())
+    val candidates = Option.when(broadcastMaxCandidates > 0)(candFps.count())
+    val screened = candidates.exists(_ <= broadcastMaxCandidates)
+    DriverBudget.record(DriverBudget.Decision("bloomScreenNew", candidates,
+      broadcastMaxCandidates, if (screened) "broadcast" else "shuffle"))
     val survivors =
-      if (candFps.count() <= broadcastMaxCandidates) {
+      if (screened) {
         // hit set = historical fingerprints matching a candidate: history
         // streams against the broadcast candidates, then the (≤ candidate
         // sized) hit set broadcasts back over the whole batch — rows the

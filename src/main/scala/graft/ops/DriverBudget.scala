@@ -3,10 +3,18 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** Heap-derived budgets, the one bounded probe and the decision record
-  * of every cost-based chooser: the driver walks of `Dedup.clusters`,
-  * `Graph` (pageRank, triangles/clustering, kHop), `RobustStats`,
-  * `Generalise` and g1, `Similarity.fitsInBroadcast`, and the d4/d18
-  * candidate-volume choosers.
+  * of every cost-based chooser. Each records its latest [[Decision]]
+  * under its op name:
+  *
+  *  - driver walks: `clusters` (`Dedup.clusters`), `pageRank`,
+  *    `triangles` and `kHop` (`Graph`), `madOutlierSummary`
+  *    (`RobustStats`), `kAnonymize` (`Generalise`), `g1SupplierRank`;
+  *  - broadcast choosers: `fitsInBroadcast` (`Similarity`) and
+  *    `bloomScreenNew` (`Dedup`, broadcast or shuffle anti-join);
+  *  - the d4/d18 candidate-volume choosers `ngramJaccardPairsAuto` and
+  *    `ngramContainmentPairsAuto` (`Dedup`);
+  *  - `subset` (`export.Subset`): the closure over driver-held keys or
+  *    over persisted semi-joins.
   *
   * The per-site caps were MEASURED on a ~28 GB driver (`MEASUREMENTS.md`),
   * where a 2²¹-edge pageRank walk holds ~2 M boxed `GenericRow`s plus its
@@ -55,6 +63,12 @@ object DriverBudget {
     * 200 B per bin, a boxed row (~120 B) plus one walk map entry.
     */
   def bins(cap: Long): Long = derived(cap, 200L)
+
+  /** Subset key-row budget (`export.Subset`): 200 B per probed key
+    * row, a `GenericRow` over 1-3 boxed keys (~120 B) plus its entry in
+    * the `InSet` and proof hash sets.
+    */
+  def keyRows(cap: Long): Long = derived(cap, 200L)
 
   /** `budget` clamped to what one driver array can hold. */
   def bound(budget: Long): Int = math.max(0L, math.min(budget, Int.MaxValue - 2L)).toInt

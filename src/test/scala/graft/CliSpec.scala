@@ -118,9 +118,18 @@ class CliSpec extends AnyFunSuite with SparkSuite {
         |""".stripMargin)
     val out = Files.createTempFile("graft_cli_subset", ".sql").toString
     val cachedBefore = org.apache.spark.sql.graftshim.GraftShims.cachedEntries(spark)
-    Main.main(Array("subset", "-c", cfg, "-o", out, "--anchor", "orders",
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try Main.main(Array("subset", "-c", cfg, "-o", out, "--anchor", "orders",
       "--pct", "20", "--source", "parquet:/root/testdata/sf0.001"))
-    // the closure's persisted frames are released when the command ends
+    finally System.setErr(stderr)
+    // the summary line names the closure's branch: the fixture's keys
+    // fit the driver budget
+    assert(err.toString.contains(
+      s"closure=driver key_rows=") && err.toString.contains(
+      s"budget=${graft.export.Subset.KeyBudget}"), err.toString)
+    // nothing the closure persisted outlives the command
     assert(org.apache.spark.sql.graftshim.GraftShims.cachedEntries(spark) == cachedBefore)
     val dump = Files.readString(Paths.get(out))
     assert(dump.contains("INSERT INTO \"orders\"") &&

@@ -104,6 +104,20 @@ class DerbyIntegrationSpec extends AnyFunSuite with SparkSuite {
       fk.referencedTable == "USERS" && fk.referencedColumn == "ID"))
   }
 
+  test("subset over a live JDBC source: the persisted closure, proven closed") {
+    // a JDBC table may not re-read the same rows at render time, so the
+    // closure keeps its persisted snapshot instead of held keys
+    val src = source()
+    val tables = src.tables.map(t => t -> src.read(t)).toMap
+    try {
+      val r = graft.export.Subset.restrict(tables, src.foreignKeys, "USERS",
+        org.apache.spark.sql.functions.col("ID") <= 3)
+      assert(r.decision.branch == graft.ops.DriverBudget.Distributed, r.decision.toString)
+      assert(r.orphans.values.forall(_ == 0L), r.orphans.toString)
+      assert(r.kept("ORDERS").count() > 0 && r.kept("USERS").count() == 3)
+    } finally graft.ops.OpCaches.releaseAll()
+  }
+
   test("schemaDDL: dialect-native capture — sized types, NOT NULL, DEFAULT, IDENTITY, PK (O2)") {
     val ddl = source().schemaDDL("USERS")
     assert(ddl.contains(""""NAME" VARCHAR(100) NOT NULL"""), ddl)

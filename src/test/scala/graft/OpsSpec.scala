@@ -1463,10 +1463,14 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val out = Dedup.bloomScreenNew(corpus, "doc_id", "text", isNew)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(out == Set(10L, 15L))
-    // bloom route (broadcast) == forced fallback route (shuffle anti)
+    assert(DriverBudget.last("bloomScreenNew").map(_.branch).contains("broadcast"))
+    // bloom route (broadcast) == forced fallback route (shuffle anti),
+    // which a budget of 0 takes without counting the candidates
     val fallback = Dedup.bloomScreenNew(corpus, "doc_id", "text", isNew,
       broadcastMaxCandidates = 0L)
       .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(DriverBudget.last("bloomScreenNew") ==
+      Some(DriverBudget.Decision("bloomScreenNew", None, 0L, "shuffle")))
     assert(fallback == out)
     // adversarial fpp: a bloom that false-positives half the batch only
     // grows the candidate set — the output is still exact
@@ -1969,7 +1973,33 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val counts = Subset.orphanCounts(tables, fks)
     assert(counts("d") == 0L, s"a NULL foreign key is not dangling: $counts")
     assert(counts == Map("p" -> 0L, "s" -> 0L, "q" -> 0L, "c" -> 5L, "d" -> 0L, "e" -> 1L))
+    // the held-key proof: anchored at a table outside every edge, a
+    // closure keeps every other frame as given, so its proof is the
+    // audit of these frames
+    val z = "z" -> frame("id" -> T.LongType)(Seq(1L))
+    def audit(ts: Map[String, org.apache.spark.sql.DataFrame], es: Seq[ForeignKey]) =
+      Subset.restrict(ts + z, es, "z", lit(true))
+    val eligible = fks.filterNot(_.table == "e")
+    val held = audit(tables - "q" - "e", eligible)
+    assert(held.decision.branch == DriverBudget.Driver, held.decision.toString)
+    assert(held.orphans == Subset.orphanCounts(tables - "q" - "e", eligible) + ("z" -> 0L))
+    assert(held.orphans == Map("p" -> 0L, "s" -> 0L, "c" -> 5L, "d" -> 0L, "z" -> 0L))
+    // a DECIMAL edge, or a non-deterministic root filter, goes distributed
+    val decimal = audit(tables, fks)
+    assert(decimal.decision.branch == DriverBudget.Distributed, decimal.decision.toString)
+    assert(decimal.orphans == counts + ("z" -> 0L))
+    val sampled = Subset.restrict(tables - "q" - "e", eligible, "p", rand(7) < 0.5)
+    assert(sampled.decision.branch == DriverBudget.Distributed, sampled.decision.toString)
+    assert(sampled.orphans.values.forall(_ == 0L), sampled.orphans.toString)
+    graft.ops.OpCaches.releaseAll()
   }
+
+  /** The two closure budgets every closure spec runs at, each with the
+    * branch it must record: the default (the held keys of these small
+    * inputs fit) and 0, which forces the persisted semi-joins.
+    */
+  private val closureBudgets =
+    Seq(graft.export.Subset.KeyBudget -> DriverBudget.Driver, 0L -> DriverBudget.Distributed)
 
   test("eraseCascade: victims and descendants gone, survivors and dimensions intact, still closed") {
     import org.apache.spark.sql.functions.{col, pmod, lit}
@@ -2006,22 +2036,43 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       graft.sources.ParquetSource.normalizeNanoTimestamps(
         spark.read.parquet(s"$sfDir/$t.parquet"))).toMap
     val fks = graft.sources.ParquetSource.fixtureForeignKeys
-    val kept = graft.export.Subset.closure(tables, fks, "orders",
-      pmod(col("o_orderkey"), lit(7)) === 0)
-    // closed: no dangling FK anywhere
-    val orphans = graft.export.Subset.orphanCounts(kept, fks)
-    assert(orphans.values.forall(_ == 0L), orphans.toString)
-    // minimal: every kept dimension row is referenced by a kept child
-    def refd(dim: String, dimKey: String, child: String, childKey: String) =
-      kept(dim).join(kept(child).select(col(childKey).as("__k")),
-        col(dimKey) === col("__k"), "left_anti").count()
-    assert(refd("customer", "c_custkey", "orders", "o_custkey") == 0)
-    assert(refd("part", "p_partkey", "lineitem", "l_partkey") == 0)
-    assert(refd("supplier", "s_suppkey", "lineitem", "l_suppkey") == 0)
-    assert(refd("region", "r_regionkey", "nation", "n_regionkey") == 0)
-    // the subset genuinely shrinks the fact chain
-    assert(kept("lineitem").count() < tables("lineitem").count())
-    assert(kept("events").count() < tables("events").count())
+    for ((budget, branch) <- closureBudgets) {
+      val cachedBefore = org.apache.spark.sql.graftshim.GraftShims.cachedEntries(spark)
+      val r = graft.export.Subset.restrict(tables, fks, "orders",
+        pmod(col("o_orderkey"), lit(7)) === 0, keyBudget = budget)
+      assert(r.decision.branch == branch, r.decision.toString)
+      // the held-key branch persists nothing
+      if (branch == DriverBudget.Driver)
+        assert(org.apache.spark.sql.graftshim.GraftShims.cachedEntries(spark) == cachedBefore)
+      // every table's probe is charged against one budget: the total
+      // held fits exactly that total, and one row less goes distributed
+      for (total <- r.decision.size) {
+        val tight = graft.export.Subset.restrict(tables, fks, "orders",
+          pmod(col("o_orderkey"), lit(7)) === 0, keyBudget = total)
+        assert(tight.decision == DriverBudget.Decision("subset", Some(total), total,
+          DriverBudget.Driver))
+        val over = graft.export.Subset.restrict(tables, fks, "orders",
+          pmod(col("o_orderkey"), lit(7)) === 0, keyBudget = total - 1)
+        assert(over.decision.branch == DriverBudget.Distributed, over.decision.toString)
+      }
+      val kept = r.kept
+      // closed: no dangling FK anywhere, by both proofs
+      val orphans = graft.export.Subset.orphanCounts(kept, fks)
+      assert(orphans.values.forall(_ == 0L), orphans.toString)
+      assert(r.orphans == orphans)
+      // minimal: every kept dimension row is referenced by a kept child
+      def refd(dim: String, dimKey: String, child: String, childKey: String) =
+        kept(dim).join(kept(child).select(col(childKey).as("__k")),
+          col(dimKey) === col("__k"), "left_anti").count()
+      assert(refd("customer", "c_custkey", "orders", "o_custkey") == 0)
+      assert(refd("part", "p_partkey", "lineitem", "l_partkey") == 0)
+      assert(refd("supplier", "s_suppkey", "lineitem", "l_suppkey") == 0)
+      assert(refd("region", "r_regionkey", "nation", "n_regionkey") == 0)
+      // the subset genuinely shrinks the fact chain
+      assert(kept("lineitem").count() < tables("lineitem").count())
+      assert(kept("events").count() < tables("events").count())
+      graft.ops.OpCaches.releaseAll()
+    }
   }
 
   test("subset closure: randomized DAG schemas stay closed, anchored, layout-invariant") {
@@ -2046,29 +2097,37 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
           spark.sparkContext.parallelize(rows, 3), schema)
       }.toMap
       val anchor = s"t${rnd.nextInt(nT)}"
-      val kept = graft.export.Subset.closure(tables, fks, anchor,
-        pmod(col("id"), lit(3)) === 0)
-      // closed: zero dangling FK rows anywhere
-      val orphans = graft.export.Subset.orphanCounts(kept, fks)
-      assert(orphans.values.forall(_ == 0L), s"trial=$trial $orphans")
-      // anchored: the anchor keeps exactly its filtered rows
-      val keptAnchor = kept(anchor).select("id").collect().map(_.getLong(0)).toSet
-      assert(keptAnchor == (0L until 40L).filter(_ % 3 == 0).toSet, s"trial=$trial")
-      // restriction: never invents rows
-      for ((t, df) <- kept) {
-        val ids = df.select("id").collect().map(_.getLong(0)).toSet
-        assert(ids.subsetOf((0L until 40L).toSet), s"trial=$trial $t")
+      def ids(df: org.apache.spark.sql.DataFrame) =
+        df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+      val byBranch = for ((budget, branch) <- closureBudgets) yield {
+        val r = graft.export.Subset.restrict(tables, fks, anchor,
+          pmod(col("id"), lit(3)) === 0, keyBudget = budget)
+        assert(r.decision.branch == branch, s"trial=$trial ${r.decision}")
+        val kept = r.kept
+        // closed: zero dangling FK rows anywhere, by both proofs
+        val orphans = graft.export.Subset.orphanCounts(kept, fks)
+        assert(orphans.values.forall(_ == 0L), s"trial=$trial $orphans")
+        assert(r.orphans == orphans, s"trial=$trial")
+        // anchored: the anchor keeps exactly its filtered rows
+        val keptAnchor = kept(anchor).select("id").collect().map(_.getLong(0)).toSet
+        assert(keptAnchor == (0L until 40L).filter(_ % 3 == 0).toSet, s"trial=$trial")
+        // restriction: never invents rows
+        for ((t, df) <- kept) {
+          val ids = df.select("id").collect().map(_.getLong(0)).toSet
+          assert(ids.subsetOf((0L until 40L).toSet), s"trial=$trial $t")
+        }
+        // layout-invariant: an 8-way repartitioned copy closes identically
+        val kept2 = graft.export.Subset.restrict(
+          tables.map { case (t, df) => t -> df.repartition(8) }, fks, anchor,
+          pmod(col("id"), lit(3)) === 0, keyBudget = budget).kept
+        for (t <- tables.keys)
+          assert(ids(kept(t)) == ids(kept2(t)), s"trial=$trial $t layout drift")
+        val keptIds = tables.keys.map(t => t -> ids(kept(t))).toMap
+        graft.ops.OpCaches.releaseAll()
+        keptIds
       }
-      // layout-invariant: an 8-way repartitioned copy closes identically
-      val kept2 = graft.export.Subset.closure(
-        tables.map { case (t, df) => t -> df.repartition(8) }, fks, anchor,
-        pmod(col("id"), lit(3)) === 0)
-      for (t <- tables.keys) {
-        val a = kept(t).select("id").collect().map(_.getLong(0)).sorted.toSeq
-        val b = kept2(t).select("id").collect().map(_.getLong(0)).sorted.toSeq
-        assert(a == b, s"trial=$trial $t layout drift")
-      }
-      graft.ops.OpCaches.releaseAll()
+      // both branches keep the same rows
+      assert(byBranch.distinct.size == 1, s"trial=$trial branch drift")
     }
   }
 
@@ -2094,7 +2153,37 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       val e = intercept[IllegalArgumentException](
         graft.export.Subset.closure(tables, fks, "a", col("id") === 1L))
       assert(e.getMessage.contains("table p") && e.getMessage.contains("(code, id)"), e.getMessage)
+      // both branches refuse in the shared sweep, before any decision
+      // is recorded
+      for ((budget, _) <- closureBudgets) {
+        val before = DriverBudget.last("subset")
+        val e2 = intercept[IllegalArgumentException](graft.export.Subset.restrict(
+          tables, fks, "a", col("id") === 1L, keyBudget = budget))
+        assert(e2.getMessage == e.getMessage)
+        assert(DriverBudget.last("subset") == before)
+      }
     } finally graft.ops.OpCaches.releaseAll()
+  }
+
+  test("subset export: the held-key and persisted closures dump identical bytes") {
+    import org.apache.spark.sql.functions.col
+    import graft.config.{Connection, FakerRule, GraftConfig, TableConfig}
+    val source = graft.sources.ParquetSource(spark, sfDir)
+    val cfg = GraftConfig(connection = Connection(dbType = "sqlite", file = "fixture"),
+      configuration = Map("customer" -> TableConfig(columns = Map("c_name" -> FakerRule("name")))))
+    val tables = source.tables.map(t => t -> source.read(t)).toMap
+    val dumps = for ((budget, branch) <- closureBudgets) yield {
+      val r = graft.export.Subset.restrict(tables, source.foreignKeys, "customer",
+        Sampling.bucket(col("c_custkey"), 100) < 10, keyBudget = budget)
+      assert(r.decision.branch == branch, r.decision.toString)
+      val out = new java.io.StringWriter()
+      try graft.export.ExportPipeline.run(new graft.export.SubsetSource(source, r.kept), cfg,
+        graft.dialect.SqliteDialect, out, timestamp = () => "T")
+      finally graft.ops.OpCaches.releaseAll()
+      out.toString
+    }
+    assert(dumps.head.contains("INSERT INTO \"lineitem\""), dumps.head.take(500))
+    assert(dumps.head == dumps.last)
   }
 
   test("sq8: recall@10 beats PQ and clears the 0.7 verdict floor") {

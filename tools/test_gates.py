@@ -2,6 +2,7 @@
 
 Run from the repository root: python3 -m unittest tools/test_gates.py
 """
+import hashlib
 import json
 import os
 import subprocess
@@ -81,6 +82,26 @@ class GateExitCodes(unittest.TestCase):
         # one file per side is the pairwise comparison
         self.assertEqual(self.run_tool("plan_delta.py", artifact(BASE),
                                        artifact(BASE, hashes={"k1": "flip"})), 1)
+
+    def test_dump_digest_splits_at_table_headers(self):
+        def dump(name, header, orders):
+            path = os.path.join(self.dir.name, name)
+            with open(path, "w") as f:
+                f.write(f"-- graft dump {header}\n-- Table: region\nINSERT INTO region VALUES\n"
+                        "(0,'AFRICA');\n-- Table: orders\n" + orders)
+            return path
+        a = dump("a.sql", "2024-01-01", "INSERT INTO orders VALUES\n(1),\n(2);\n")
+        b = dump("b.sql", "2026-10-20", "INSERT INTO orders VALUES\n(1),\n(2);\n")
+        c = dump("c.sql", "2024-01-01", "INSERT INTO orders VALUES\n(1),\n(3);\n")
+        tool = [sys.executable, os.path.join(TOOLS, "dump_digest.py")]
+        lines = subprocess.run(tool + [a], capture_output=True, text=True).stdout.splitlines()
+        self.assertEqual([l.split("\t")[0] for l in lines], ["region", "orders"])
+        body = "-- Table: orders\nINSERT INTO orders VALUES\n(1),\n(2);\n".encode()
+        self.assertEqual(lines[1].split("\t")[1:],
+                         [hashlib.sha256(body).hexdigest(), "2", str(len(body))])
+        # the header's date is no table's bytes; a changed tuple is
+        self.assertEqual(subprocess.run(tool + [a, b], capture_output=True).returncode, 0)
+        self.assertEqual(subprocess.run(tool + [a, c], capture_output=True).returncode, 1)
 
     def test_mixed_timing_is_refused_by_every_tool(self):
         legacy = artifact(BASE, timing=None)  # no field: timed by count()
