@@ -1233,7 +1233,7 @@ object GraftQueries {
 
   /** Gap-based sessionisation via window functions (micros-exact gap). */
   def qSessionize(s: SparkSession, dir: String): DataFrame =
-    EventsStream.sessionizeBatch(tbl(s, dir, "events"), gapMinutes = 30)
+    EventsStream.sessionizeBatch(tbl(s, dir, "events"))
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"), sum(col("n_events")).as("n_events"))
 
@@ -1952,12 +1952,12 @@ object GraftQueries {
   def st1FirstSeen(s: SparkSession, dir: String): DataFrame =
     graft.streaming.EventsStream.firstSeenDedupBatch(tbl(s, dir, "events"))
 
-  /** Stream-stream interval join, batch form (streaming form asserted
-    * equal in StreamingSpec): purchases within 30 min of a same-user
-    * click.
+  /** Stream-stream interval join (`EventsStream.clickToPurchase`, one
+    * definition for both modes; the streaming run is asserted equal in
+    * StreamingSpec): purchases within 30 min of a same-user click.
     */
   def st2IntervalJoin(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.EventsStream.clickToPurchaseBatch(tbl(s, dir, "events"))
+    graft.streaming.EventsStream.clickToPurchase(tbl(s, dir, "events"), "inner")
 
   /** Latest-per-key materialised view, batch form (streaming
     * `mapGroupsWithState` form asserted equal in StreamingSpec) — the
@@ -1981,8 +1981,9 @@ object GraftQueries {
   def st5Scd2(s: SparkSession, dir: String): DataFrame =
     graft.streaming.EventsStream.scd2Batch(tbl(s, dir, "events"))
 
-  /** Stream-static ingest screen, batch form (streaming form asserted
-    * equal in StreamingSpec): arriving docs (doc_id ≡ 0 mod 5, the d6/
+  /** Stream-static ingest screen (`DocsStream.screenNew`, one
+    * definition for both modes; the streaming run is asserted equal in
+    * StreamingSpec): arriving docs (doc_id ≡ 0 mod 5, the d6/
     * d11 batch marker) whose fingerprint has no match in the static
     * history fingerprint table. Stateless in streaming — no watermark,
     * no state store; the static side is the maintained artifact.
@@ -1991,7 +1992,7 @@ object GraftQueries {
     val docs = tbl(s, dir, "documents")
     val histFps = graft.streaming.DocsStream.historyFingerprints(
       docs.filter(pmod(col("doc_id"), lit(5)) =!= 0))
-    graft.streaming.DocsStream.screenNewBatch(
+    graft.streaming.DocsStream.screenNew(
       docs.filter(pmod(col("doc_id"), lit(5)) === 0), histFps)
       .select(col("doc_id"), col("lang"), col("source"))
   }
@@ -2036,13 +2037,13 @@ object GraftQueries {
       col("eid").as("latest_event_id"), col("value").as("latest_value"))
   }
 
-  /** ST9 [EXT] — left-outer interval join, batch form (the streaming
-    * watermark-expiry null-emission form asserted against this in
-    * `StreamingSpec`): every click with the purchases it converted to
+  /** ST9 [EXT] — left-outer interval join (`EventsStream.clickToPurchase`;
+    * the streaming run's watermark-expiry null emissions are asserted
+    * against this in `StreamingSpec`): every click with the purchases it converted to
     * within 30 minutes, null when unconverted.
     */
   def st9OuterInterval(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.EventsStream.clickToPurchaseLeftBatch(tbl(s, dir, "events"))
+    graft.streaming.EventsStream.clickToPurchase(tbl(s, dir, "events"), "left")
 
   /** ST8 [EXT] — time travel on the merge-on-read table: three delta
     * batches land and a compaction folds them into a new generation,
@@ -2113,13 +2114,14 @@ object GraftQueries {
         col("eid").as("latest_event_id"), col("value").as("latest_value"))
   }
 
-  /** ST13 [EXT] — continuous anonymised replication, batch form
-    * (streaming form asserted row-identical in StreamingSpec): the
+  /** ST13 [EXT] — continuous anonymised replication
+    * (`EventsStream.anonymise`, one definition for both modes; the
+    * streaming run is asserted row-identical in StreamingSpec): the
     * reference's anonymise op on an event stream — consistent
     * stateless pseudonyms (o11 recipe) + t7 PII scrub of the payload.
     */
   def st13AnonymiseStream(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.EventsStream.anonymiseBatch(tbl(s, dir, "events"))
+    graft.streaming.EventsStream.anonymise(tbl(s, dir, "events"))
 
   /** ST15 [EXT] — tombstone DELETES in the merge-on-read keyed table:
     * deletes are last-writer-wins writes like any other (a delete
@@ -2402,16 +2404,17 @@ object GraftQueries {
     }.toDF("table_name", "n_before", "n_deleted", "n_after", "n_orphans")
   }
 
-  /** ST18 [EXT] — the NATIVE `session_window` operator, batch form
-    * (`EventsStream.sessionWindowBatch`; the streaming twin is the
-    * state-store sessionizer already asserted in StreamingSpec). The
+  /** ST18 [EXT] — the NATIVE `session_window` operator
+    * (`EventsStream.sessionWindow`, one definition for both modes; its
+    * streaming run is asserted against `sessionizeBatch` in
+    * StreamingSpec). The
     * oracle replays the merge semantics as gap islands with the
     * end-exclusive `>=` break and `session_end = last + gap`, so the
     * operator's exact window contract — not just session counts — is
     * hash-checked against q_sessionize's independent formulation.
     */
   def st18SessionWindow(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.EventsStream.sessionWindowBatch(tbl(s, dir, "events"))
+    graft.streaming.EventsStream.sessionWindow(tbl(s, dir, "events"))
 
   /** O35 [EXT] — minimisation AT SOURCE (`anonymise.MaskedViews`):
     * per-dialect `CREATE VIEW` DDL applying the masking rules inside
@@ -2500,7 +2503,7 @@ object GraftQueries {
     * both engines).
     */
   def t22BpeTrain(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.bpeTrain(tbl(s, dir, "documents"), rounds = 3)
+    TextAnalysis.bpeTrain(tbl(s, dir, "documents"))
 
   /** T24 [EXT] — BPE ENCODING (`TextAnalysis.bpeEncode`): apply the
     * t22 merge table back to the corpus and account tokens per
@@ -2511,7 +2514,7 @@ object GraftQueries {
     * three rounds and re-encodes in SQL.
     */
   def t24BpeEncode(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.bpeEncode(tbl(s, dir, "documents"), rounds = 3)
+    TextAnalysis.bpeEncode(tbl(s, dir, "documents"))
 
   /** O33 [EXT] — Warner's randomized response: per-row local-DP
     * perturbation of a boolean attribute with an md5-bucket coin
@@ -2922,8 +2925,7 @@ object GraftQueries {
     * detector streamable: three longs of state per key).
     */
   def st14UserDrift(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.EventsStream.userDriftBatch(tbl(s, dir, "events"),
-      targetCents = 5000L, thresholdCents = 20000L)
+    graft.streaming.EventsStream.userDriftBatch(tbl(s, dir, "events"))
 
   /** ST19 [EXT] — late-data audit, batch form (streaming twin
     * asserted row-identical in StreamingSpec): per user, events whose
@@ -2938,13 +2940,13 @@ object GraftQueries {
   def st19LateAudit(s: SparkSession, dir: String): DataFrame = {
     val arrival = graft.ops.Sampling.bucket(col("event_id"), 1 << 20) *
       lit(1099511627776L) + col("event_id")
-    graft.streaming.EventsStream.lateEventAuditBatch(
-      tbl(s, dir, "events"), allowedLateUs = 3600000000L, arrivalCol = arrival)
+    graft.streaming.EventsStream.lateEventAuditBatch(tbl(s, dir, "events"), arrival)
   }
 
   /** ST12 [EXT] — per-day heavy hitters via a Misra–Gries sketch
-    * maintained by the streaming state store, batch form (streaming
-    * form asserted guarantee-equal in StreamingSpec). The verdict
+    * maintained by the streaming state store (`EventsStream.windowTopK`,
+    * one definition for both modes; the streaming run is asserted
+    * guarantee-equal in StreamingSpec). The verdict
     * joins each day's sketch against that day's exact counts: every
     * item above n/(budget+1) must sit in the sketch, and the sketch
     * must stay within budget — the merge-order-invariant guarantee,
@@ -2952,9 +2954,9 @@ object GraftQueries {
     * (the q_approx_topk posture, windowed).
     */
   def st12WindowTopk(s: SparkSession, dir: String): DataFrame = {
-    val budget = 2
+    val budget = graft.streaming.EventsStream.TopKBudget
     val ev = tbl(s, dir, "events")
-    val sketches = graft.streaming.EventsStream.windowTopKBatch(ev, budget)
+    val sketches = graft.streaming.EventsStream.windowTopK(ev)
     val exact = ev.groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
     val tot = exact.groupBy("day").agg(sum("cnt").as("n"))
@@ -3121,7 +3123,7 @@ object GraftQueries {
     */
   def t5Winnowing(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.winnowingFingerprints(tbl(s, dir, "documents"), "doc_id", "text",
-        k = 5, window = 4, portableHash = true)
+        portableHash = true)
       .select(col("id").as("doc_id"), col("fp"))
 
   /** Gopher-style word-level repetition filters (exact integer ratios —
@@ -3522,7 +3524,7 @@ object GraftQueries {
     */
   def t28Fertility(s: SparkSession, dir: String): DataFrame = {
     val docs = tbl(s, dir, "documents")
-    TextAnalysis.bpeEncode(docs, rounds = 3)
+    TextAnalysis.bpeEncode(docs)
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
@@ -3649,14 +3651,14 @@ object GraftQueries {
       .withColumn("n_retained", col("n_rows") - col("n_expired"))
   }
 
-  /** ST20 [EXT] — streaming RAG chunking, batch form
-    * (`DocsStream.chunkBatch`; stream == batch asserted in
+  /** ST20 [EXT] — streaming RAG chunking (`TextAnalysis.chunks`, which
+    * takes a streaming frame as it is; stream == batch asserted in
     * StreamingSpec): the t26 chunk table as a STATELESS streaming
     * projection — non-overlapping 32-token windows, the indexing-feed
     * shape.
     */
   def st20Chunks(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.DocsStream.chunkBatch(tbl(s, dir, "documents"))
+    TextAnalysis.chunks(tbl(s, dir, "documents"), size = 32, stride = 32)
 
   /** G5 [EXT] — local clustering coefficient per supplier
     * (`Graph.clusteringCoefficient`): per-node triangle tallies from
@@ -3762,13 +3764,13 @@ object GraftQueries {
   def qForecastBacktest(s: SparkSession, dir: String): DataFrame =
     graft.ops.TimeSeries.seasonalNaiveBacktest(tbl(s, dir, "events"), "ts")
 
-  /** ST21 [EXT] — streaming watermark screen, batch form
-    * (`DocsStream.watermarkScreenBatch`; stream == batch asserted in
+  /** ST21 [EXT] — streaming watermark screen (`TextAnalysis.watermarkAudit`,
+    * which takes a streaming frame as it is; stream == batch asserted in
     * StreamingSpec): the t27 audit as an alerting feed — only flagged
     * documents are emitted, stateless.
     */
   def st21WatermarkScreen(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.DocsStream.watermarkScreenBatch(tbl(s, dir, "documents"))
+    TextAnalysis.watermarkAudit(tbl(s, dir, "documents")).filter(col("flagged"))
 
   /** P6 [EXT] — the RAG INDEXING pipeline composed end-to-end: length
     * gate → 32-token chunking (t26) → exact chunk-level dedup (min
@@ -4158,7 +4160,7 @@ object GraftQueries {
 
   /** Corpus top-100 tokens — the vocabulary heavy-hitter pass. */
   def t8TopTerms(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.topTerms(tbl(s, dir, "documents"), "text", k = 100)
+    TextAnalysis.topTerms(tbl(s, dir, "documents"), k = 100)
 
   /** Corpus-unigram surprisal per document (perplexity-proxy quality
     * score, `TextAnalysis.unigramSurprisal`) — integer micro-bit
@@ -4193,7 +4195,7 @@ object GraftQueries {
     * micro-bit scoring — hash-exact vs the SQL twin).
     */
   def t10TfidfKeywords(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.tfidfKeywords(tbl(s, dir, "documents"), k = 3)
+    TextAnalysis.tfidfKeywords(tbl(s, dir, "documents"))
 
   /** Water-filling rebalance of the corpus to a target language mix
     * (en-heavy): the largest deterministic subsample hitting the
@@ -4451,8 +4453,9 @@ object GraftQueries {
 
   /** ST22 [EXT] — streaming multimodal ingest summary: the mm1
     * real-container decode as a continuous feed (`streaming
-    * .AssetsStream` — stateless narrow decode, payloads never shuffle,
-    * stream == batch spec-asserted), gated here through its batch twin:
+    * .AssetsStream` — `Multimodal.decodeMeta` is a stateless narrow
+    * decode that serves a stream as it is, payloads never shuffle,
+    * stream == batch spec-asserted), gated here in batch:
     * per-media-type counts, byte volume and dimension/duration maxima,
     * every input field analytically predicted by the oracle.
     */
@@ -4492,8 +4495,9 @@ object GraftQueries {
       .select(col("id").as("doc_id"), col("clean_text"),
         col("n_seg_kept"), col("n_seg_dropped"))
 
-  /** ST10 [EXT] — streaming NEAR-dup ingest screen, batch form
-    * (streaming form asserted equal in `StreamingSpec`): arriving docs
+  /** ST10 [EXT] — streaming NEAR-dup ingest screen
+    * (`DocsStream.nearDupScreen`, one definition for both modes; the
+    * streaming run is asserted equal in `StreamingSpec`): arriving docs
     * (doc_id ≡ 0 mod 5, the st6/d6 batch marker) that share no
     * portable-MinHash LSH band with the static corpus band table —
     * certainly-below-threshold docs admitted without an exact check.
@@ -4509,7 +4513,7 @@ object GraftQueries {
     // (measured 4x the query cost at sf0.1)
     val bands = graft.ops.OpCaches.persist(graft.streaming.DocsStream.corpusBandKeys(
       docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)))
-    graft.streaming.DocsStream.nearDupScreenBatch(
+    graft.streaming.DocsStream.nearDupScreen(
       Partitioning.ensureParallelism(docs.filter(pmod(col("doc_id"), lit(5)) === 0)),
       bands)
       .select(col("doc_id"), col("lang"), col("source"))

@@ -3688,7 +3688,7 @@ object Oracles {
       mm1MetaSql,
 
     // streaming-ingest summary: the SAME prediction relation as mm1,
-    // aggregated per media type (batch twin of AssetsStream.metaStream;
+    // aggregated per media type (Multimodal.decodeMeta, the stream decode;
     // stream == batch is spec-asserted, this gate pins the totals)
     "st22_media_summary" ->
       s"""WITH meta AS ($mm1MetaSql)
@@ -5076,8 +5076,9 @@ object Oracles {
         |       max(s) > 20000 AS drift_flag
         |FROM s GROUP BY user_id""".stripMargin,
 
-    // windowed MG heavy hitters: the oracle derives heavy items from
-    // exact counts and asserts the sketch guarantee as true constants —
+    // windowed MG heavy hitters: the oracle derives heavy items (above
+    // n/5 of a day, EventsStream.TopKBudget = 4) from exact counts and
+    // asserts the sketch guarantee as true constants —
     // the q_approx_topk posture per day window (a broken sketch flips
     // the Spark-side booleans). date_trunc('day') is DATE in DuckDB,
     // TIMESTAMP in Spark — cast.
@@ -5090,7 +5091,7 @@ object Oracles {
         |SELECT c.day, CAST(count(*) AS BIGINT) AS n_heavy,
         |       true AS all_heavy_in_sketch, true AS sketch_within_budget
         |FROM c JOIN t ON c.day = t.day
-        |WHERE CAST(cnt AS DOUBLE) > CAST(n AS DOUBLE) / 3.0
+        |WHERE CAST(cnt AS DOUBLE) > CAST(n AS DOUBLE) / 5.0
         |GROUP BY 1""".stripMargin,
 
     // the portable md5 MinHash family makes the APPROXIMATE band screen

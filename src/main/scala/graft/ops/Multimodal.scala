@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   *     pure-JVM decoder; the mdat payload stays opaque codec data,
   *     exactly as a demuxer (ffprobe-style metadata pass) treats it.
   *
-  * Scale notes: decode is a narrow per-partition map (no shuffle); batch
-  * size is bounded so peak memory is `batchSize × payload` regardless of
-  * partition size; payloads stay binary end-to-end (never stringified).
+  * Scale notes: decode is a narrow per-partition map (no shuffle) that
+  * streams one row at a time, so peak memory is one payload regardless
+  * of partition size; payloads stay binary end-to-end (never
+  * stringified).
   */
 object Multimodal {
 
@@ -514,23 +515,21 @@ object Multimodal {
       }.toDF("asset_id", "payload")
   }
 
-  /** Batched per-partition audio header decode — REAL parsing (the mm1
+  /** Per-partition audio header decode — REAL parsing (the mm1
     * counterpart for audio): every field in the output is read back out
     * of the payload's RIFF structure. Narrow map, no shuffle; unparseable
     * payloads are dropped (a real ingest would route them to a reject
     * sink).
     */
-  def decodeAudioMeta(assets: DataFrame, batchSize: Int = 128): DataFrame = {
+  def decodeAudioMeta(assets: DataFrame): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
     assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.flatMap { case (id, payload) =>
-            WavHeaders.parse(payload).map(m =>
-              AudioMeta(id, m.channels, m.sampleRate, m.bitsPerSample,
-                m.dataBytes, m.durationMs))
-          }
+        it.flatMap { case (id, payload) =>
+          WavHeaders.parse(payload).map(m =>
+            AudioMeta(id, m.channels, m.sampleRate, m.bitsPerSample,
+              m.dataBytes, m.durationMs))
         }
       }.toDF()
   }
@@ -575,34 +574,31 @@ object Multimodal {
       }.toDF("asset_id", "media_type", "payload")
   }
 
-  /** Batched per-partition metadata decode — REAL parsing end to end:
+  /** Per-partition metadata decode — REAL parsing end to end:
     * image dims from the container header bytes ([[ImageHeaders]] —
     * PNG/GIF/JPEG/BMP), audio duration from the RIFF structure
     * ([[WavHeaders]]), video duration/dims from the ISO-BMFF box tree
-    * ([[Mp4Boxes]]). Iterates each partition in bounded batches (the
-    * `mapInPandas` batch shape, Scala-side); unparseable payloads drop
-    * (reject-sink posture, same as [[decodeAudioMeta]]). The checksum
-    * is md5 over the actual payload bytes.
+    * ([[Mp4Boxes]]). Unparseable payloads drop (reject-sink posture,
+    * same as [[decodeAudioMeta]]). The checksum is md5 over the actual
+    * payload bytes. A stateless narrow map, so a streaming frame of
+    * asset rows decodes through this same call (the st22 ingest feed).
     */
-  def decodeMeta(assets: DataFrame, batchSize: Int = 128): DataFrame = {
+  def decodeMeta(assets: DataFrame): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
     assets.as[Asset].mapPartitions { it =>
       val md5 = java.security.MessageDigest.getInstance("MD5")
-      it.grouped(batchSize).flatMap { batch =>
-        // batch boundary = where a vectorised codec would process a chunk
-        batch.iterator.flatMap { a =>
-          val parsed: Option[(Int, Int, Long)] = a.media_type match {
-            case "image" => ImageHeaders.parse(a.payload).map { case (_, w, h) => (w, h, 0L) }
-            case "audio" => WavHeaders.parse(a.payload).map(m => (0, 0, m.durationMs))
-            case "video" => Mp4Boxes.parse(a.payload).map(m => (m.width, m.height, m.durationMs))
-            case _       => None
-          }
-          parsed.map { case (w, h, dur) =>
-            md5.reset()
-            AssetMeta(a.asset_id, a.media_type, a.payload.length.toLong, w, h, dur,
-              md5.digest(a.payload).map("%02x".format(_)).mkString)
-          }
+      it.flatMap { a =>
+        val parsed: Option[(Int, Int, Long)] = a.media_type match {
+          case "image" => ImageHeaders.parse(a.payload).map { case (_, w, h) => (w, h, 0L) }
+          case "audio" => WavHeaders.parse(a.payload).map(m => (0, 0, m.durationMs))
+          case "video" => Mp4Boxes.parse(a.payload).map(m => (m.width, m.height, m.durationMs))
+          case _       => None
+        }
+        parsed.map { case (w, h, dur) =>
+          md5.reset()
+          AssetMeta(a.asset_id, a.media_type, a.payload.length.toLong, w, h, dur,
+            md5.digest(a.payload).map("%02x".format(_)).mkString)
         }
       }
     }.toDF()
@@ -778,15 +774,15 @@ object Multimodal {
     * a learned encoder swaps in behind the same kernel signature.
     * Narrow per-partition map, payloads never shuffle.
     */
-  def imageFeatures(assets: DataFrame, bins: Int = 16): DataFrame = {
+  def imageFeatures(assets: DataFrame): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
     assets.select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.flatMap { case (id, payload) =>
           Option(decodeGray(payload)).map { case (_, _, px) =>
-            val h = new Array[Float](bins)
-            px.foreach(v => h((v * bins) / 256) += 1f)
+            val h = new Array[Float](16)
+            px.foreach(v => h(v >> 4) += 1f)
             val norm = math.sqrt(h.map(x => x.toDouble * x).sum)
             val n = if (norm < 1e-9) 1f else norm.toFloat
             (id, h.map(_ / n))

@@ -9,10 +9,16 @@ import org.apache.spark.sql.DataFrame
   * source with thousands of splits must never pay. So: repartition
   * only when the source actually has fewer splits than the cluster
   * has cores. The check costs one physical-plan build, no job.
+  *
+  * A streaming frame passes through unchanged: it has no `rdd` to ask,
+  * and each micro-batch arrives already split by its source. So a
+  * row-local operator guarded by this call serves both modes.
   */
 object Partitioning {
-  def ensureParallelism(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-  }
+  def ensureParallelism(df: DataFrame): DataFrame =
+    if (df.isStreaming) df
+    else {
+      val p = df.sparkSession.sparkContext.defaultParallelism
+      if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+    }
 }

@@ -10,6 +10,10 @@ import org.apache.spark.sql.functions._
   * (no UDFs in the hot path) so the whole stage stays inside
   * WholeStageCodegen and scales linearly — at 100 TB these are pure
   * narrow map transforms: no shuffle at all.
+  *
+  * Every operator reads the `documents` shape — `doc_id` and `text` —
+  * except where a caller feeds another column (`scrubPii` also scrubs
+  * the events' `props`; the winnowing ops take any id/text pair).
   */
 object TextAnalysis {
 
@@ -75,8 +79,8 @@ object TextAnalysis {
     * All ratios are single `a/b` double divisions so the oracle SQL
     * reproduces them bit-exactly.
     */
-  def withQualityFeatures(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def withQualityFeatures(df: DataFrame): DataFrame = {
+    val t = col("text")
     df.withColumn("n_tokens", tokenCount(t).cast("long"))
       .withColumn("n_chars_m", length(t).cast("long"))
       .withColumn("punct_ratio", punctCount(t).cast("double") / greatest(length(t), lit(1)))
@@ -120,9 +124,9 @@ object TextAnalysis {
   /** `cleanedText` applied to a corpus: adds `clean_text`, plus raw and
     * cleaned lengths so a pipeline can audit how much the cleaner ate.
     */
-  def cleanText(df: DataFrame, textCol: String = "text"): DataFrame =
-    df.withColumn("clean_text", cleanedText(col(textCol)))
-      .withColumn("n_raw", length(col(textCol)).cast("long"))
+  def cleanText(df: DataFrame): DataFrame =
+    df.withColumn("clean_text", cleanedText(col("text")))
+      .withColumn("n_raw", length(col("text")).cast("long"))
       .withColumn("n_clean", length(col("clean_text")).cast("long"))
 
   /** Gopher-style HARD quality filter (Rae et al. 2021's rule family,
@@ -136,8 +140,8 @@ object TextAnalysis {
     * double division with the same operand shapes as the SQL twin, so
     * booleans at the threshold boundary are bit-reproducible.
     */
-  def gopherQualityFilter(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def gopherQualityFilter(df: DataFrame): DataFrame = {
+    val t = col("text")
     val nTok = tokenCount(t)
     val meanLen = (length(t) - nTok + lit(1)).cast("double") / greatest(nTok, lit(1))
     val punctR = punctCount(t).cast("double") / greatest(length(t), lit(1))
@@ -180,11 +184,15 @@ object TextAnalysis {
     u(text)
   }
 
+  /** Winnowing's shingle length in tokens and its window in shingles. */
+  private val WinnowK = 5
+  private val WinnowWindow = 4
+
   /** Winnowing rolling fingerprints (Schleimer, Wilkerson, Aiken,
-    * SIGMOD 2003): hash each k-token shingle, keep the minimum hash of
-    * every `window` consecutive shingles — a compact fingerprint set
+    * SIGMOD 2003): hash each 5-token shingle, keep the minimum hash of
+    * every 4 consecutive shingles — a compact fingerprint set
     * robust to local edits. Output: one (id, fp) row per distinct
-    * selected hash; docs with fewer than k tokens produce no rows.
+    * selected hash; docs with fewer than 5 tokens produce no rows.
     *
     * Plan shape (the `Dedup.simhashSignatures` recipe, not nested
     * HOFs): one shingle kernel pass → posexplode → each shingle hashed
@@ -198,7 +206,6 @@ object TextAnalysis {
     * BIGINT)` — so the operator is oracle-checkable end to end.
     */
   def winnowingFingerprints(df: DataFrame, idCol: String, textCol: String,
-                            k: Int = 5, window: Int = 4,
                             portableHash: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
@@ -207,26 +214,18 @@ object TextAnalysis {
       else s => xxhash64(s)
     val sh = df.select(col(idCol).as("id"), col(textCol).as("t"))
       .repartition(parallelism, col("id"))
-      .select(col("id"), posexplode(orderedShingles(col("t"), k)).as(Seq("pos", "s")))
+      .select(col("id"), posexplode(orderedShingles(col("t"), WinnowK)).as(Seq("pos", "s")))
       .select(col("id"), col("pos"), hashOf(col("s")).as("h"))
     val rolling = Window.partitionBy("id").orderBy("pos")
-      .rowsBetween(Window.currentRow, window - 1)
+      .rowsBetween(Window.currentRow, WinnowWindow - 1)
     sh.withColumn("minh", min(col("h")).over(rolling))
       .withColumn("nsh", count(lit(1)).over(Window.partitionBy("id")))
       // full windows only (plus the single short window of a doc with
-      // fewer than `window` shingles)
-      .filter(col("pos") <= greatest(col("nsh") - window, lit(0)))
+      // fewer than WinnowWindow shingles)
+      .filter(col("pos") <= greatest(col("nsh") - WinnowWindow, lit(0)))
       .select(col("id"), col("minh").as("fp"))
       .distinct()
   }
-
-  /** Per-doc winnowing signature arrays (sorted distinct fingerprints)
-    * — the join-friendly form of `winnowingFingerprints`.
-    */
-  def winnowingSignatures(df: DataFrame, idCol: String, textCol: String,
-                          k: Int = 5, window: Int = 4): DataFrame =
-    winnowingFingerprints(df, idCol, textCol, k, window)
-      .groupBy("id").agg(array_sort(collect_set(col("fp"))).as("sig"))
 
   /** PII patterns for text scrubbing — the anonymiser's domain applied
     * to free text, as a training-data pipeline runs it before the data
@@ -268,9 +267,9 @@ object TextAnalysis {
     * than cores (the single-row-group fixture) — a many-split 100 TB
     * source is never shuffled before the aggregate.
     */
-  def topTerms(df: DataFrame, textCol: String = "text", k: Int = 100): DataFrame = {
-    Partitioning.ensureParallelism(df.select(col(textCol)))
-      .select(explode(tokens(col(textCol))).as("token"))
+  def topTerms(df: DataFrame, k: Int): DataFrame = {
+    Partitioning.ensureParallelism(df.select(col("text")))
+      .select(explode(tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token"))
       .limit(k)
@@ -290,10 +289,9 @@ object TextAnalysis {
     * trigram statistic and are dropped (inner join) — the pipeline's
     * length floor filters those long before repetition scoring.
     */
-  def gopherRepetition(df: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
+  def gopherRepetition(df: DataFrame): DataFrame = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
-    val base = df.select(col(idCol).as("id"), col(textCol).as("t"))
+    val base = df.select(col("doc_id").as("id"), col("text").as("t"))
       .repartition(parallelism, col("id"))
     // ONE pass: tag every gram with its n and explode once; hash(id)
     // partitioning satisfies ClusteredDistribution for BOTH downstream
@@ -324,10 +322,56 @@ object TextAnalysis {
           .as("dup_trigram_frac"))
   }
 
+  /** `(id, t)`: each document's id and text, spread over the cluster's
+    * cores when the source arrives in fewer splits — the input of every
+    * per-document corpus statistic below.
+    */
+  private def idText(df: DataFrame): DataFrame =
+    Partitioning.ensureParallelism(
+      df.select(col("doc_id").as("id"), col("text").as("t")))
+
+  /** `(id, tok)`: one row per whitespace token of each document. */
+  private def docTokens(df: DataFrame): DataFrame =
+    idText(df).select(col("id"), explode(tokens(col("t"))).as("tok"))
+
+  /** `⌊log2(x)·10⁶⌋` as a long, `x` taken as a double: the integer
+    * micro-bit quantisation the corpus statistics here apply ONCE per
+    * count, so everything after it is integer arithmetic — bit-stable
+    * under any partitioning and hash-exact against the SQL twins (the
+    * t9 recipe).
+    */
+  private def microBits(x: Column): Column =
+    floor(log2(x.cast("double")) * lit(1000000L)).cast("long")
+
+  /** The adjacent token pairs `"a b"` of a token array, empty below two
+    * tokens: a NARROW zip of the array with its own tail (no positional
+    * self-join, no window).
+    */
+  private def adjacentBigrams(tk: Column): Column =
+    when(size(tk) >= 2,
+        zip_with(slice(tk, lit(1), size(tk) - 1), slice(tk, lit(2), size(tk) - 1),
+          (a, b) => concat(a, lit(" "), b)))
+      .otherwise(array().cast("array<string>"))
+
+  /** The adjacent two-symbol substrings of column `w`, empty below two
+    * symbols: BPE's pair statistic.
+    */
+  private def symbolPairs: Column =
+    when(length(col("w")) >= 2,
+        transform(sequence(lit(1), length(col("w")) - 1),
+          i => col("w").substr(i, lit(2))))
+      .otherwise(array().cast("array<string>"))
+
+  /** `w0`, one row per `[a-z]+` pre-token of the lowercased column `t`:
+    * the input of the BPE word vocabulary.
+    */
+  private def lowerWords: Column =
+    explode(regexp_extract_all(lower(col("t")), lit("[a-z]+"), lit(0))).as("w0")
+
   /** Per-document TF-IDF keyword extraction — the classic corpus-aware
     * "what is this document about" signal a curation pipeline uses for
     * topic balancing and near-duplicate triage: for each document the
-    * top-`k` tokens by tf·idf with idf = log2(N/df).
+    * top-3 tokens by tf·idf with idf = log2(N/df).
     *
     * Numeric determinism (t9's recipe): idf is quantised ONCE per token
     * in the document-frequency table to integer micro-bits
@@ -346,26 +390,23 @@ object TextAnalysis {
     * appearing in EVERY doc get idf exactly 0 and never outrank a
     * discriminative token.
     */
-  def tfidfKeywords(df: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text", k: Int = 3): DataFrame = {
+  def tfidfKeywords(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = Partitioning.ensureParallelism(
-        df.select(col(idCol).as("id"), col(textCol).as("t")))
-      .select(col("id"), explode(tokens(col("t"))).as("tok"))
+    val toks = docTokens(df)
     val tf = toks.groupBy("id", "tok").agg(count(lit(1)).as("tf"))
     val nDocs = df.agg(count(lit(1)).as("n_docs")) // 1 row — broadcast
     val idf = tf.groupBy("tok").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
       .select(col("tok"),
-        floor(log2(col("n_docs").cast("double") / col("df").cast("double"))
-          * lit(1000000L)).cast("long").as("idf_micro"))
+        microBits(col("n_docs").cast("double") / col("df").cast("double"))
+          .as("idf_micro"))
     val w = Window.partitionBy("id")
       .orderBy(col("score_micro").desc, col("tok"))
     tf.join(idf, "tok")
       .select(col("id"), col("tok"), (col("tf") * col("idf_micro")).as("score_micro"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("id").as(idCol), col("rank").cast("int").as("rank"),
+      .filter(col("rank") <= 3)
+      .select(col("id").as("doc_id"), col("rank").cast("int").as("rank"),
         col("tok").as("term"), col("score_micro"))
   }
 
@@ -391,22 +432,16 @@ object TextAnalysis {
     * corpus size. Docs with zero tokens have no defined surprisal and
     * drop out (matching the SQL twin's join semantics).
     */
-  def unigramSurprisal(df: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
-    val toks = Partitioning.ensureParallelism(
-        df.select(col(idCol).as("id"), col(textCol).as("t")))
-      .select(col("id"), explode(tokens(col("t"))).as("tok"))
+  def unigramSurprisal(df: DataFrame): DataFrame = {
+    val toks = docTokens(df)
     val vocab = OpCaches.persist(toks.groupBy("tok").agg(count(lit(1)).as("c")))
-    val tot = vocab.agg(
-      floor(log2(sum(col("c")).cast("double")) * lit(1000000L)).cast("long")
-        .as("log2n_micro"))
-    val vl = vocab.select(col("tok"),
-      floor(log2(col("c").cast("double")) * lit(1000000L)).cast("long").as("l2c"))
+    val tot = vocab.agg(microBits(sum(col("c"))).as("log2n_micro"))
+    val vl = vocab.select(col("tok"), microBits(col("c")).as("l2c"))
     toks.join(vl, "tok")
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_tok"), sum(col("l2c")).as("sum_micro"))
       .crossJoin(broadcast(tot)) // one row: the corpus total
-      .select(col("id").as(idCol), col("n_tok"),
+      .select(col("id").as("doc_id"), col("n_tok"),
         (col("n_tok") * col("log2n_micro") - col("sum_micro")).as("surprisal_micro"),
         expr("(n_tok * log2n_micro - sum_micro) div n_tok").as("mean_surprisal_micro"))
   }
@@ -433,31 +468,22 @@ object TextAnalysis {
     * re-aggregate of that vocab for the w₁ margins (never a second
     * pass over the token relation), the score join, one doc aggregate.
     */
-  def bigramSurprisal(df: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    val tk = tokens(col("t"))
-    val bigrams = when(size(tk) >= 2,
-        zip_with(slice(tk, lit(1), size(tk) - 1), slice(tk, lit(2), size(tk) - 1),
-          (a, b) => concat(a, lit(" "), b)))
-      .otherwise(array().cast("array<string>"))
-    val bi = Partitioning.ensureParallelism(
-        df.select(col(idCol).as("id"), col(textCol).as("t")))
-      .select(col("id"), explode(bigrams).as("bg"))
+  def bigramSurprisal(df: DataFrame): DataFrame = {
+    val bi = idText(df)
+      .select(col("id"), explode(adjacentBigrams(tokens(col("t")))).as("bg"))
       // tokens are \s+-split so w₁ contains no space: the first field
       // of the bigram string IS the first token
       .withColumn("w1", split(col("bg"), " ", 2).getItem(0))
     val vocab = OpCaches.persist(
       bi.groupBy("bg", "w1").agg(count(lit(1)).as("c")))
-    val vb = vocab.select(col("bg"),
-      floor(log2(col("c").cast("double")) * lit(1000000L)).cast("long").as("l2b"))
+    val vb = vocab.select(col("bg"), microBits(col("c")).as("l2b"))
     val vf = vocab.groupBy("w1").agg(sum(col("c")).as("cf"))
-      .select(col("w1"),
-        floor(log2(col("cf").cast("double")) * lit(1000000L)).cast("long").as("l2f"))
+      .select(col("w1"), microBits(col("cf")).as("l2f"))
     bi.join(vb, "bg").join(vf, "w1")
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(col("l2f") - col("l2b")).as("surprisal_micro"))
-      .select(col("id").as(idCol), col("n_bigrams"), col("surprisal_micro"),
+      .select(col("id").as("doc_id"), col("n_bigrams"), col("surprisal_micro"),
         expr("surprisal_micro div n_bigrams").as("mean_surprisal_micro"))
   }
 
@@ -469,7 +495,7 @@ object TextAnalysis {
     * executors — swap the deterministic weights for trained ones and
     * the plan is unchanged.
     *
-    * The vocabulary is the corpus's top-`vocabSize` tokens by DOCUMENT
+    * The vocabulary is the corpus's top-1000 tokens by DOCUMENT
     * frequency (ties broken token-ascending), so it is reproducible;
     * each weight derives from the portable md5 bucket, mapped to
     * integer micro-logits in [-1e6, 1e6] — the DuckDB twin rebuilds
@@ -482,15 +508,11 @@ object TextAnalysis {
     * scan, one id-keyed doc aggregate. Zero-token docs drop out (the
     * t9 convention).
     */
-  def classifierScore(df: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text",
-                      vocabSize: Int = 1000): DataFrame = {
-    val toks = Partitioning.ensureParallelism(
-        df.select(col(idCol).as("id"), col(textCol).as("t")))
-      .select(col("id"), explode(tokens(col("t"))).as("tok"))
+  def classifierScore(df: DataFrame): DataFrame = {
+    val toks = docTokens(df)
     val vocab = toks.groupBy("tok")
       .agg(countDistinct(col("id")).as("df_docs"))
-      .orderBy(col("df_docs").desc, col("tok")).limit(vocabSize)
+      .orderBy(col("df_docs").desc, col("tok")).limit(1000)
       .select(col("tok"),
         (Sampling.bucket(col("tok"), 2001) * lit(1000L) - lit(1000000L))
           .as("w_micro"))
@@ -499,7 +521,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_tok"),
         count(col("w_micro")).as("n_hits"),
         coalesce(sum(col("w_micro")), lit(0L)).as("logit_micro"))
-      .select(col("id").as(idCol), col("n_tok"), col("n_hits"),
+      .select(col("id").as("doc_id"), col("n_tok"), col("n_hits"),
         col("logit_micro"), (col("logit_micro") > 0L).as("pass"))
   }
 
@@ -513,18 +535,16 @@ object TextAnalysis {
     * size joins in as one broadcast row. Bucket boundaries use integer
     * arithmetic (3·pos vs n), so the assignment is bit-reproducible.
     */
-  def perplexityBuckets(df: DataFrame, idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame = {
+  def perplexityBuckets(df: DataFrame): DataFrame = {
     val scored = OpCaches.persist(
-      unigramSurprisal(df, idCol, textCol)
-        .select(col(idCol), col("mean_surprisal_micro")))
+      unigramSurprisal(df).select(col("doc_id"), col("mean_surprisal_micro")))
     val n = broadcast(scored.agg(count(lit(1)).as("__n")))
     Sampling.runningTotal(
         scored.withColumn("__one", lit(1L)),
-        Seq(col("mean_surprisal_micro"), col(idCol)), "__one")
+        Seq(col("mean_surprisal_micro"), col("doc_id")), "__one")
       .withColumnRenamed("running_total", "pos")
       .crossJoin(n)
-      .select(col(idCol), col("mean_surprisal_micro"), col("pos"),
+      .select(col("doc_id"), col("mean_surprisal_micro"), col("pos"),
         when(col("pos") * 3 <= col("__n"), lit("head"))
           .when(col("pos") * 3 <= col("__n") * 2, lit("middle"))
           .otherwise(lit("tail")).as("ppl_bucket"))
@@ -537,8 +557,9 @@ object TextAnalysis {
     * unigram probabilities over the token total. Kept engine-exact the
     * t15/t9 way: every count's log2 is quantised ONCE to integer
     * micro-bits, PMI is then pure integer arithmetic — Q(c_ab) − Q(N_bi)
-    * − Q(c_a) − Q(c_b) + 2·Q(N_tok) — and the top-k order
-    * (pmi desc, bigram asc) is a deterministic total order.
+    * − Q(c_a) − Q(c_b) + 2·Q(N_tok) — and the top-50 order
+    * (pmi desc, bigram asc) over bigrams seen at least 5 times is a
+    * deterministic total order.
     *
     * Scale shape: unigram/bigram counts are mergeable aggregates; the
     * two totals ride in as broadcast single-row joins; final selection
@@ -546,36 +567,27 @@ object TextAnalysis {
     * vocabulary); the uni-into-bi joins shuffle only aggregated
     * token-keyed relations.
     */
-  def collocations(df: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text",
-                   minCount: Int = 5, topK: Int = 50): DataFrame = {
+  def collocations(df: DataFrame): DataFrame = {
     val tk = tokens(col("t"))
-    val bigramsCol = when(size(tk) >= 2,
-        zip_with(slice(tk, lit(1), size(tk) - 1), slice(tk, lit(2), size(tk) - 1),
-          (a, b) => concat(a, lit(" "), b)))
-      .otherwise(array().cast("array<string>"))
-    val src = Partitioning.ensureParallelism(
-      df.select(col(idCol).as("id"), col(textCol).as("t")))
+    val src = Partitioning.ensureParallelism(df.select(col("text").as("t")))
     val uni = OpCaches.persist(
       src.select(explode(tk).as("w")).groupBy("w").agg(count(lit(1)).as("cu")))
     val bi = OpCaches.persist(
-      src.select(explode(bigramsCol).as("bg"))
+      src.select(explode(adjacentBigrams(tk)).as("bg"))
         .withColumn("w1", split(col("bg"), " ", 2).getItem(0))
         .withColumn("w2", split(col("bg"), " ", 2).getItem(1))
         .groupBy("bg", "w1", "w2").agg(count(lit(1)).as("cb")))
     val totU = uni.agg(sum("cu").as("nu"))
     val totB = bi.agg(sum("cb").as("nb"))
-    def q(c: Column): Column =
-      floor(log2(c.cast("double")) * lit(1000000L)).cast("long")
-    bi.filter(col("cb") >= minCount)
+    bi.filter(col("cb") >= 5)
       .join(uni.select(col("w").as("w1"), col("cu").as("c1")), "w1")
       .join(uni.select(col("w").as("w2"), col("cu").as("c2")), "w2")
       .crossJoin(broadcast(totU)).crossJoin(broadcast(totB))
       .withColumn("pmi_micro",
-        q(col("cb")) - q(col("nb")) - q(col("c1")) - q(col("c2"))
-          + lit(2L) * q(col("nu")))
+        microBits(col("cb")) - microBits(col("nb")) - microBits(col("c1"))
+          - microBits(col("c2")) + lit(2L) * microBits(col("nu")))
       .orderBy(col("pmi_micro").desc, col("bg"))
-      .limit(topK)
+      .limit(50)
       .select(col("bg").as("bigram"), col("cb").as("c_bigram"),
         col("c1").as("c_w1"), col("c2").as("c_w2"), col("pmi_micro"))
   }
@@ -624,24 +636,22 @@ object TextAnalysis {
     * boilerplate detector: machine-generated repetition scores low,
     * encrypted-or-random junk scores near the alphabet maximum):
     * per-document Shannon entropy over codepoints, as the exact
-    * integer score n·H in micro-bits plus a hard gate at
-    * `gateMilliBits` mean bits per char (integer cross-multiplied —
-    * no float at the boundary).
+    * integer score n·H in micro-bits plus a hard gate at 4.000 mean
+    * bits per char (integer cross-multiplied — no float at the
+    * boundary).
     *
     * Narrow per-row kernel, no shuffle — at 100 TB this runs at scan
     * speed next to the other Gopher gates; a per-char explode +
     * `groupBy(doc, char)` would shuffle a corpus-CHARACTER-scale
     * relation for the same answer.
     */
-  def charEntropy(df: DataFrame, textCol: String = "text",
-                  gateMilliBits: Int = 4000): DataFrame = {
+  def charEntropy(df: DataFrame): DataFrame = {
     val u = udf((t: String) => charEntropyKernel(t))
-    df.withColumn("__e", u(col(textCol)))
+    df.withColumn("__e", u(col("text")))
       .withColumn("n_codepoints", col("__e._1"))
       .withColumn("entropy_microbits", col("__e._2"))
-      .withColumn("r_entropy", // score/(1e6·n) ≥ gate/1000 ⇔ score ≥ gate·1000·n
-        col("entropy_microbits") >=
-          lit(gateMilliBits.toLong * 1000L) * col("n_codepoints"))
+      .withColumn("r_entropy", // score/(1e6·n) ≥ 4000/1000 ⇔ score ≥ 4000·1000·n
+        col("entropy_microbits") >= lit(4000L * 1000L) * col("n_codepoints"))
       .drop("__e")
   }
 
@@ -663,17 +673,12 @@ object TextAnalysis {
     * corpus-CHARACTER-scale relation for the same answer. Final
     * selection is `TakeOrderedAndProject` (driver holds k rows).
     */
-  def bpePairs(df: DataFrame, textCol: String = "text",
-               topK: Int = 50, minCount: Long = 2L): DataFrame = {
-    val words = Partitioning.ensureParallelism(df.select(col(textCol).as("t")))
+  def bpePairs(df: DataFrame, topK: Int = 50, minCount: Long = 2L): DataFrame = {
+    val words = Partitioning.ensureParallelism(df.select(col("text").as("t")))
       .select(explode(regexp_extract_all(col("t"),
         lit("[A-Za-z]+|[0-9]+"), lit(0))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("f"))
-    val pairsCol = when(length(col("w")) >= 2,
-        transform(sequence(lit(1), length(col("w")) - 1),
-          i => col("w").substr(i, lit(2))))
-      .otherwise(array().cast("array<string>"))
-    words.select(explode(pairsCol).as("pair"), col("f"))
+    words.select(explode(symbolPairs).as("pair"), col("f"))
       .groupBy("pair").agg(sum("f").as("c_pair"))
       .filter(col("c_pair") >= minCount)
       .orderBy(col("c_pair").desc, col("pair"))
@@ -694,8 +699,9 @@ object TextAnalysis {
     *
     * Features (all integer): bias, capped token count, punctuation and
     * digit per-mille rates. Label: `lang == "en"` → +1 else −1.
-    * Magnitude audit: |x| ≤ 1000, so after E epochs |w| ≤ E·Σ|x| and
-    * margins stay far below 2⁶³ at any realistic corpus size.
+    * Three epochs. Magnitude audit: |x| ≤ 1000, so after E epochs
+    * |w| ≤ E·Σ|x| and margins stay far below 2⁶³ at any realistic
+    * corpus size.
     *
     * Scale shape: the feature projection is a narrow map persisted
     * once; each epoch is a partial+final aggregate (map-side combine),
@@ -703,24 +709,23 @@ object TextAnalysis {
     * loops lower onto a relational engine — the g1/pagerank discipline
     * applied to model training.
     */
-  def perceptronTrain(df: DataFrame, textCol: String = "text",
-                      langCol: String = "lang", epochs: Int = 3): DataFrame = {
-    require(epochs >= 1 && epochs <= 10, "perceptronTrain: epochs must be 1..10")
+  def perceptronTrain(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
+    val t = col("text")
     val feats = OpCaches.persist(
       Partitioning.ensureParallelism(df.select(
-          when(col(langCol) === "en", 1L).otherwise(-1L).as("y"),
-          length(col(textCol)).cast("long").as("nc"),
-          tokenCount(col(textCol)).cast("long").as("ntok"),
-          punctCount(col(textCol)).cast("long").as("np"),
-          digitCount(col(textCol)).cast("long").as("nd")))
+          when(col("lang") === "en", 1L).otherwise(-1L).as("y"),
+          length(t).cast("long").as("nc"),
+          tokenCount(t).cast("long").as("ntok"),
+          punctCount(t).cast("long").as("np"),
+          digitCount(t).cast("long").as("nd")))
         .select(col("y"), lit(1L).as("x0"),
           least(col("ntok"), lit(1000L)).as("x1"),
           expr("(np * 1000) DIV (nc + 1)").as("x2"),
           expr("(nd * 1000) DIV (nc + 1)").as("x3")))
     var w = Array(0L, 0L, 0L, 0L)
     val out = Seq.newBuilder[(Int, Long, Long, Long, Long, Long)]
-    for (e <- 1 to epochs) {
+    for (e <- 1 to 3) {
       val margin = col("y") *
         (lit(w(0)) * col("x0") + lit(w(1)) * col("x1") +
           lit(w(2)) * col("x2") + lit(w(3)) * col("x3"))
@@ -756,43 +761,33 @@ object TextAnalysis {
     * lowercased text); markers are `A`, `B`, `C`, … — disjoint
     * alphabets, so a merged symbol can never be confused with input.
     * Output: one row per round `(round, merged_pair, pair_count)` —
-    * the merge table a tokenizer ships.
+    * the merge table a tokenizer ships. Three rounds.
     *
     * Scale shape: rounds × (vocab-scale pair count + narrow rewrite);
     * the per-round argmax is a TakeOrderedAndProject of ONE row. At
     * 100 TB the corpus is touched exactly once.
     */
-  def bpeTrain(df: DataFrame, textCol: String = "text",
-               rounds: Int = 3): DataFrame = {
-    val spark = df.sparkSession
+  def bpeTrain(df: DataFrame): DataFrame = {
     val vocab = OpCaches.persist(
-      Partitioning.ensureParallelism(df.select(col(textCol).as("t")))
-        .select(explode(regexp_extract_all(lower(col("t")),
-          lit("[a-z]+"), lit(0))).as("w0"))
+      Partitioning.ensureParallelism(df.select(col("text").as("t")))
+        .select(lowerWords)
         .groupBy("w0").agg(count(lit(1)).as("f")))
-    runMergeRounds(vocab, rounds)._2
+    runMergeRounds(vocab)._2
   }
 
   /** The shared merge loop: `vocab` is `(w0, f)` — the ORIGINAL word
     * plus corpus frequency. Returns the rewritten vocabulary
-    * `(w0, w, f)` after all rounds (w0 rides along untouched, so the
+    * `(w0, w, f)` after three rounds (w0 rides along untouched, so the
     * caller can map originals to their merged forms) and the merge
     * table `(round, merged_pair, pair_count)`.
     */
-  private def runMergeRounds(vocab0: DataFrame,
-                             rounds: Int): (DataFrame, DataFrame) = {
-    require(rounds >= 1 && rounds <= 26,
-      "bpe merge loop: rounds must be 1..26")
+  private def runMergeRounds(vocab0: DataFrame): (DataFrame, DataFrame) = {
     val spark = vocab0.sparkSession
     var vocab = OpCaches.persist(
       vocab0.select(col("w0"), col("w0").as("w"), col("f")))
     val merges = Seq.newBuilder[(Int, String, Long)]
-    for (r <- 1 to rounds) {
-      val pairsCol = when(length(col("w")) >= 2,
-          transform(sequence(lit(1), length(col("w")) - 1),
-            i => col("w").substr(i, lit(2))))
-        .otherwise(array().cast("array<string>"))
-      val top = vocab.select(explode(pairsCol).as("pair"), col("f"))
+    for (r <- 1 to 3) {
+      val top = vocab.select(explode(symbolPairs).as("pair"), col("f"))
         .groupBy("pair").agg(sum("f").as("c"))
         .orderBy(col("c").desc, col("pair"))
         .limit(1).collect()
@@ -811,13 +806,13 @@ object TextAnalysis {
   }
 
   /** N-GRAM NOVELTY — the per-document memorization/boilerplate
-    * signal: what fraction of a doc's distinct token k-grams also
+    * signal: what fraction of a doc's distinct token 5-grams also
     * occur in at least one OTHER document. Low novelty = the doc is
     * mostly corpus-repeated content (mirrors, templates, quotes); the
     * complement of d13's span view, scored per document instead of
     * located per span. Output `(doc_id, n_grams, n_shared,
     * novelty_pm)` — integer per-mille, NULL for docs with fewer than
-    * k tokens (no evidence).
+    * 5 tokens (no evidence).
     *
     * Scale shape: distinct (doc, gram) pairs once (one mergeable
     * distinct), gram document-frequency one mergeable count, and the
@@ -826,24 +821,20 @@ object TextAnalysis {
     * the AQE-splittable shape (the t24/d13 posture). The corpus text
     * is scanned exactly once.
     */
-  def ngramNovelty(df: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text", k: Int = 5): DataFrame = {
-    require(k >= 2, "ngramNovelty: k must be >= 2")
+  def ngramNovelty(df: DataFrame): DataFrame = {
     val tk = tokens(col("t"))
-    val gramsCol = when(size(tk) >= k,
-        array_distinct(transform(sequence(lit(1), size(tk) - (k - 1)),
-          i => concat_ws(" ", slice(tk, i, lit(k))))))
+    val gramsCol = when(size(tk) >= 5,
+        array_distinct(transform(sequence(lit(1), size(tk) - 4),
+          i => concat_ws(" ", slice(tk, i, lit(5))))))
       .otherwise(array().cast("array<string>"))
     val dg = OpCaches.persist(
-      Partitioning.ensureParallelism(
-        df.select(col(idCol).as("id"), col(textCol).as("t")))
-        .select(col("id"), explode(gramsCol).as("gram")))
+      idText(df).select(col("id"), explode(gramsCol).as("gram")))
     val dfreq = dg.groupBy("gram").agg(count(lit(1)).as("dfd"))
     val per = dg.join(dfreq, "gram")
       .groupBy("id").agg(
         count(lit(1)).as("n_grams"),
         sum(when(col("dfd") >= 2, 1L).otherwise(0L)).as("n_shared"))
-    df.select(col(idCol).as("doc_id"))
+    df.select(col("doc_id"))
       .join(per.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_grams"), lit(0L)).as("n_grams"),
@@ -873,23 +864,19 @@ object TextAnalysis {
     * head word skews only the probe side, exactly the shape AQE's
     * skew-join splits). The corpus text is touched exactly once.
     */
-  def bpeEncode(df: DataFrame, idCol: String = "doc_id",
-                textCol: String = "text", rounds: Int = 3): DataFrame = {
+  def bpeEncode(df: DataFrame): DataFrame = {
     val docWords = OpCaches.persist(
-      Partitioning.ensureParallelism(
-        df.select(col(idCol).as("id"), col(textCol).as("t")))
-        .select(col("id"), explode(regexp_extract_all(lower(col("t")),
-          lit("[a-z]+"), lit(0))).as("w0"))
+      idText(df).select(col("id"), lowerWords)
         .groupBy("id", "w0").agg(count(lit(1)).as("cnt")))
     val vocab = docWords.groupBy("w0").agg(sum("cnt").as("f"))
-    val encoded = runMergeRounds(vocab, rounds)._1
+    val encoded = runMergeRounds(vocab)._1
       .select(col("w0"), length(col("w")).cast("long").as("toks"))
     val perDoc = docWords.join(encoded, "w0")
       .groupBy("id").agg(
         sum("cnt").as("n_pretokens"),
         sum(col("cnt") * length(col("w0"))).as("n_chars"),
         sum(col("cnt") * col("toks")).as("n_bpe_tokens"))
-    df.select(col(idCol).as("doc_id"))
+    df.select(col("doc_id"))
       .join(perDoc.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_pretokens"), lit(0L)).as("n_pretokens"),
@@ -911,20 +898,17 @@ object TextAnalysis {
     * map (`posexplode` over the per-doc start sequence) — zero
     * shuffle, whole-stage codegen, embarrassingly parallel at any
     * corpus size. Chunk count per doc is ⌈n/stride⌉, bounded by the
-    * document itself — no skew beyond document length skew.
+    * document itself — no skew beyond document length skew. Being
+    * row-local, it serves a streaming frame as it is (st20: the
+    * non-overlapping 32-token indexing feed), with no watermark and no
+    * state store.
     */
-  def chunks(df: DataFrame, idCol: String = "doc_id",
-             textCol: String = "text", size: Int = 64,
-             stride: Int = 48, repartition: Boolean = true): DataFrame = {
+  def chunks(df: DataFrame, size: Int = 64, stride: Int = 48): DataFrame = {
     require(size >= 1 && stride >= 1 && stride <= size,
       "chunks: need 1 <= stride <= size")
-    val tk = tokens(col(textCol))
-    // repartition=false for STREAMING callers: ensureParallelism peeks
-    // at df.rdd, which a streaming frame cannot answer (the op itself
-    // is row-local either way)
-    val base = if (repartition) Partitioning.ensureParallelism(df) else df
-    base
-      .select(col(idCol).as("doc_id"), tk.as("tk"))
+    val tk = tokens(col("text"))
+    Partitioning.ensureParallelism(df)
+      .select(col("doc_id"), tk.as("tk"))
       .filter(size_(col("tk")) >= 1)
       .select(col("doc_id"), col("tk"),
         posexplode(sequence(lit(0), size_(col("tk")) - 1, lit(stride))))
@@ -957,18 +941,16 @@ object TextAnalysis {
     * Scale shape: pure NARROW map — token array, one `filter` HOF for
     * the green count (the lambda touches only its own variable, so no
     * re-evaluation trap), integer verdict per row. Zero shuffle at
-    * any corpus size.
+    * any corpus size. Being row-local, it serves a streaming frame as
+    * it is (st21 emits the flagged rows as an alerting feed).
     */
-  def watermarkAudit(df: DataFrame, idCol: String = "doc_id",
-                     textCol: String = "text",
-                     repartition: Boolean = true): DataFrame = {
-    val tk = tokens(col(textCol))
+  def watermarkAudit(df: DataFrame): DataFrame = {
+    val tk = tokens(col("text"))
     // THE md5 coin (Sampling.bucket) applied per token — one recipe,
     // zero drift risk vs the oracle's bucketSql twin
     val green = filter(tk, t => Sampling.bucket(t, 2) === 0)
-    val base = if (repartition) Partitioning.ensureParallelism(df) else df
-    base
-      .select(col(idCol).as("doc_id"),
+    Partitioning.ensureParallelism(df)
+      .select(col("doc_id"),
         size_(tk).cast("long").as("n_tokens"),
         size_(green).cast("long").as("n_green"))
       .withColumn("green_pm",

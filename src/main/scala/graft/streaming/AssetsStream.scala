@@ -9,9 +9,10 @@ import graft.ops.Multimodal
   * continuous feed: binary asset rows arrive, the REAL parsers
   * (BMP/GIF/PNG/JPEG headers, RIFF chunks, ISO-BMFF boxes) read the
   * metadata back out of the bytes, rejects drop. The decode kernel is
-  * a stateless narrow map ([[Multimodal.decodeMeta]] — per-partition
-  * batched, no shuffle, no state store, no watermark), so stream ==
-  * batch row-identical is a structural property, spec-asserted.
+  * a stateless narrow map, so [[Multimodal.decodeMeta]] itself is the
+  * streaming operator (no shuffle, no state store, no watermark) and
+  * stream == batch row-identical is a structural property,
+  * spec-asserted.
   *
   * Scale shape: payloads never shuffle (decode happens on the arriving
   * split, only id+stat rows leave the map); the downstream per-type
@@ -20,13 +21,6 @@ import graft.ops.Multimodal
   * aggregate the stats.
   */
 object AssetsStream {
-
-  /** Stateless streaming metadata decode over already-synthesised
-    * asset rows (asset_id, media_type, payload). Append mode; rejects
-    * (unparseable payloads) drop, the reject-sink posture.
-    */
-  def metaStream(assets: DataFrame): DataFrame =
-    Multimodal.decodeMeta(assets)
 
   /** Batch twin of the full ingest (the oracle-gated catalog form):
     * synthesise the mixed-media assets from the documents fixture,

@@ -20,67 +20,37 @@ import graft.ops.TextAnalysis
   * the thing you maintain incrementally (append on every accepted
   * ingest), and Spark broadcast-joins it when small or shuffles only
   * the micro-batch when not.
+  *
+  * One definition, both modes: `screenNew` and `nearDupScreen` are
+  * stateless stream-static joins, so each is one DataFrame program for
+  * a streaming and a batch frame (stream == batch asserted in
+  * StreamingSpec). The row-local t26 chunker and t27 watermark audit
+  * need no streaming wrapper at all: `TextAnalysis.chunks` and
+  * `TextAnalysis.watermarkAudit` take a streaming frame as they are
+  * (`Partitioning.ensureParallelism` leaves a stream unchanged).
   */
 object DocsStream {
 
   /** Fingerprints of the historical corpus: the single-column static
     * side of the screen (build once, maintain incrementally).
     */
-  def historyFingerprints(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(TextAnalysis.fingerprint(col(textCol)).as("fp")).distinct()
+  def historyFingerprints(docs: DataFrame): DataFrame =
+    docs.select(TextAnalysis.fingerprint(col("text")).as("fp")).distinct()
 
-  /** Streaming form: emit every arriving doc whose normalized-text
-    * fingerprint has no historical match. No within-stream dedup here —
-    * first-arrival semantics across micro-batches would make the
-    * emitted set depend on arrival order; compose with
-    * `dropDuplicatesWithinWatermark` when the source carries event
-    * time and that trade is wanted.
+  /** Emit every arriving doc whose normalized-text fingerprint has no
+    * historical match. No within-stream dedup here — first-arrival
+    * semantics across micro-batches would make the emitted set depend
+    * on arrival order; compose with `dropDuplicatesWithinWatermark`
+    * when the source carries event time and that trade is wanted.
     */
-  def screenNewStream(stream: DataFrame, historyFps: DataFrame,
-                      textCol: String = "text"): DataFrame =
-    stream.withColumn("fp", TextAnalysis.fingerprint(col(textCol)))
+  def screenNew(docs: DataFrame, historyFps: DataFrame): DataFrame =
+    docs.withColumn("fp", TextAnalysis.fingerprint(col("text")))
       .join(historyFps, Seq("fp"), "left_anti")
       .drop("fp")
 
-  /** Batch form (asserted equal to the streaming form in
-    * `StreamingSpec`): the same anti join run over the bounded batch.
-    */
-  def screenNewBatch(docs: DataFrame, historyFps: DataFrame,
-                     textCol: String = "text"): DataFrame =
-    screenNewStream(docs, historyFps, textCol)
-
-  /** Streaming RAG chunking — the t26 chunk table maintained over an
-    * unbounded document feed: a chunk is a pure row-local function of
-    * its document (tokenize → windowed slice → content fingerprint),
-    * so the streaming form is STATELESS — no watermark, no state
-    * store, one narrow codegen'd projection per micro-batch, and
-    * stream == batch row-identical by construction (spec-asserted).
-    * Non-overlapping 32-token windows here (the indexing-feed shape);
-    * the overlap knobs are the same as batch `TextAnalysis.chunks`.
-    */
-  def chunkStream(stream: DataFrame, size: Int = 32,
-                  stride: Int = 32): DataFrame =
-    TextAnalysis.chunks(stream, size = size, stride = stride,
-      repartition = false)
-
-  /** Batch twin of [[chunkStream]] (the oracle-gated form). */
-  def chunkBatch(docs: DataFrame, size: Int = 32,
-                 stride: Int = 32): DataFrame =
-    TextAnalysis.chunks(docs, size = size, stride = stride)
-
-  /** Streaming WATERMARK SCREEN — the t27 green-list audit as an
-    * alerting feed: arriving documents whose green-token count flags
-    * the χ²(1) deviation test are emitted, everything else is dropped.
-    * Stateless (the audit is a pure row function) — no watermark, no
-    * state store; stream == batch row-identical, spec-asserted.
-    */
-  def watermarkScreenStream(stream: DataFrame): DataFrame =
-    TextAnalysis.watermarkAudit(stream, repartition = false)
-      .filter(col("flagged"))
-
-  /** Batch twin of [[watermarkScreenStream]] (the oracle-gated form). */
-  def watermarkScreenBatch(docs: DataFrame): DataFrame =
-    TextAnalysis.watermarkAudit(docs).filter(col("flagged"))
+  /** The band screen's MinHash signature length and rows per band. */
+  private val SignatureSlots = 8
+  private val RowsPerBand = 2
 
   /** PER-ROW portable MinHash LSH band keys — the streaming-shaped twin
     * of `Dedup.minhashCandidates`' banding. The batch form aggregates
@@ -93,7 +63,7 @@ object DocsStream {
     *
     * The hash family is the repo's portable md5 recipe (the
     * `t5_winnowing` rationale): slot i re-hashes the shingle digest
-    * with a salt, bands concatenate `rowsPerBand` adjacent slots —
+    * with a salt, bands concatenate `RowsPerBand` adjacent slots —
     * every byte DuckDB-reproducible, so even this approximate op is
     * hash-checked exactly by its oracle. Docs with fewer than 3 tokens
     * have no shingles and emit NULL (no bands, never matched).
@@ -103,12 +73,12 @@ object DocsStream {
     * bite: the shingle kernel runs once per row, each slot's transform
     * is one md5 per (shingle, slot).
     */
-  def portableBandKeys(text: Column, k: Int = 8, rowsPerBand: Int = 2): Column = {
+  private def portableBandKeys(text: Column): Column = {
     val hs = transform(graft.ops.Dedup.shingles(text, 3), s => md5(s))
-    val sigs = (0 until k).map(i =>
+    val sigs = (0 until SignatureSlots).map(i =>
       array_min(transform(hs, h => md5(concat(h, lit("_" + i))))))
-    val bands = (0 until k / rowsPerBand).map { j =>
-      val slots = (0 until rowsPerBand).map(r => sigs(j * rowsPerBand + r))
+    val bands = (0 until SignatureSlots / RowsPerBand).map { j =>
+      val slots = (0 until RowsPerBand).map(r => sigs(j * RowsPerBand + r))
       md5(concat_ws("|", slots :+ lit(j.toString): _*))
     }
     when(size(hs) >= 1, array(bands: _*))
@@ -118,16 +88,15 @@ object DocsStream {
     * (band index, band hash) the historical corpus occupies — like
     * `historyFingerprints`, append-maintained on every accepted ingest.
     */
-  def corpusBandKeys(docs: DataFrame, textCol: String = "text",
-                     k: Int = 8, rowsPerBand: Int = 2): DataFrame =
+  def corpusBandKeys(docs: DataFrame): DataFrame =
     graft.ops.Partitioning.ensureParallelism(docs)
-      .select(posexplode(portableBandKeys(col(textCol), k, rowsPerBand))
+      .select(posexplode(portableBandKeys(col("text")))
         .as(Seq("band_idx", "h")))
       .distinct()
 
-  /** Streaming NEAR-dup ingest screen: emit every arriving doc that
-    * shares NO LSH band with the historical corpus — certainly below
-    * the banding's similarity knee (k=8, r=2 ⇒ s-curve threshold
+  /** NEAR-dup ingest screen: emit every arriving doc that shares NO LSH
+    * band with the historical corpus — certainly below the banding's
+    * similarity knee (8 slots, 2 rows per band ⇒ s-curve threshold
     * (1/4)^(1/2) = 0.5 Jaccard), so safe to admit without an exact
     * check; docs with a band hit are near-dup SUSPECTS a pipeline
     * routes to the exact verifier (`Dedup.minhashNearDupsIncremental`,
@@ -140,23 +109,12 @@ object DocsStream {
     * band table is the artifact you maintain; Spark broadcasts it when
     * small and shuffles only the micro-batch when not.
     */
-  def nearDupScreenStream(stream: DataFrame, corpusBands: DataFrame,
-                          textCol: String = "text",
-                          k: Int = 8, rowsPerBand: Int = 2): DataFrame = {
-    val nBands = k / rowsPerBand
-    val withBands = stream.withColumn("__bands",
-      portableBandKeys(col(textCol), k, rowsPerBand))
-    (0 until nBands).foldLeft(withBands) { (df, j) =>
+  def nearDupScreen(docs: DataFrame, corpusBands: DataFrame): DataFrame = {
+    val withBands = docs.withColumn("__bands", portableBandKeys(col("text")))
+    (0 until SignatureSlots / RowsPerBand).foldLeft(withBands) { (df, j) =>
       df.join(
         corpusBands.filter(col("band_idx") === j).select(col("h").as(s"__h$j")),
         col("__bands")(j) === col(s"__h$j"), "left_anti")
     }.drop("__bands")
   }
-
-  /** Batch form (asserted equal to the streaming form in
-    * `StreamingSpec`). */
-  def nearDupScreenBatch(docs: DataFrame, corpusBands: DataFrame,
-                         textCol: String = "text",
-                         k: Int = 8, rowsPerBand: Int = 2): DataFrame =
-    nearDupScreenStream(docs, corpusBands, textCol, k, rowsPerBand)
 }

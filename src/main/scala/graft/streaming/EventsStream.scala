@@ -5,13 +5,31 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming over the `events` table shape: watermarked
-  * tumbling-window aggregation and gap-based sessionisation.
+  * tumbling-window aggregation, sessionisation, interval joins and
+  * keyed state.
   *
   * The reference has no streaming at all (its "streams" are JDBC cursors,
-  * SURVEY.md §1.1); these are [EXT] operators. Each has a batch-equivalent
-  * form (`*_batch`) with identical semantics — the batch form is what the
-  * correctness oracle checks, the streaming form is driven in tests via
-  * the memory sink + `processAllAvailable()`.
+  * SURVEY.md §1.1); these are [EXT] operators. The correctness oracle
+  * checks batch results; the streaming runs are driven in tests via the
+  * memory sink + `processAllAvailable()`.
+  *
+  * One definition, both modes: `sessionWindow`, `windowTopK`,
+  * `clickToPurchase` and `anonymise` are each one DataFrame program for
+  * a streaming and a batch frame. Spark's analyzer drops a watermark
+  * from a batch plan, so the batch plan is the one a watermark-free
+  * copy would produce.
+  *
+  * A reference twin stays where the two modes cannot share one program:
+  *   - the `*GroupsWithState` operators (`firstSeenDedupStream`,
+  *     `latestPerUserStream`, `userDriftStream`, `lateEventAuditStream`,
+  *     `scd2Stream`) fold keyed state; their `*Batch` twins compute the
+  *     same answer with window functions or aggregates, and StreamingSpec
+  *     compares the two;
+  *   - `dedupKeysStream`: `dropDuplicatesWithinWatermark` throws on a
+  *     batch frame, so `dedupKeysBatch` is the distinct key set;
+  *   - `hourlyAgg`/`hourlyAggBatch` and `sessionizeBatch`: references
+  *     with another algorithm (`date_trunc` grouping; a lag/running-sum
+  *     sessioniser) that the specs compare the streaming runs against.
   */
 object EventsStream {
 
@@ -31,14 +49,17 @@ object EventsStream {
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
 
+  /** The session gap of every sessioniser here, in minutes. */
+  private val SessionGapMinutes = 30
+
   /** Gap-based sessionisation (batch form): a new session starts when the
-    * gap to the previous event of the same user exceeds `gapMinutes`.
+    * gap to the previous event of the same user exceeds the session gap.
     * Window functions only — one shuffle on user_id.
     */
-  def sessionizeBatch(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
+  def sessionizeBatch(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val gapSec = gapMinutes * 60L
+    val gapSec = SessionGapMinutes * 60L
     events
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       .withColumn("new_session",
@@ -54,27 +75,21 @@ object EventsStream {
         max(col("ts")).as("session_end"))
   }
 
-  /** The NATIVE `session_window` operator in batch form — one
-    * definition with [[sessionizeStream]] minus the watermark. Session
-    * semantics: each event opens `[ts, ts+gap)` and overlapping
-    * windows merge, so a gap of EXACTLY `gapMinutes` starts a new
-    * session (end-exclusive) and `session_end = last_ts + gap` — the
-    * contract the oracle's gap-islands replay encodes with `>=` and
-    * `max(ts) + gap`. One user-keyed shuffle; merge state is bounded
-    * per user like every sessionizer here.
+  /** Sessionisation with the NATIVE `session_window` operator (state
+    * store on a stream; the watermark bounds that state and is dropped
+    * from a batch plan). Session semantics: each event opens
+    * `[ts, ts+gap)` and overlapping windows merge, so a gap of EXACTLY
+    * the session gap starts a new session (end-exclusive) and
+    * `session_end = last_ts + gap` — the contract the oracle's
+    * gap-islands replay encodes with `>=` and `max(ts) + gap`. One
+    * user-keyed shuffle; merge state is bounded per user like every
+    * sessioniser here.
     */
-  def sessionWindowBatch(events: DataFrame, gapMinutes: Int = 30): DataFrame =
-    events
-      .groupBy(session_window(col("ts"), s"$gapMinutes minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"))
-
-  /** Streaming sessionisation via session_window (native state store). */
-  def sessionizeStream(events: DataFrame, gapMinutes: Int = 30): DataFrame =
+  def sessionWindow(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), s"$gapMinutes minutes").as("w"), col("user_id"))
+      .groupBy(session_window(col("ts"), s"$SessionGapMinutes minutes").as("w"),
+        col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"))
@@ -82,8 +97,8 @@ object EventsStream {
   /** Streaming first-seen dedup with explicit state
     * (`flatMapGroupsWithState`): emit only the first event per
     * (user_id, event_type), remembering seen types per user. State is
-    * bounded by an event-time idle timeout against the watermark — a
-    * user idle past the timeout has its state dropped, so state size
+    * bounded by a 2-hour event-time idle timeout against the watermark —
+    * a user idle past the timeout has its state dropped, so state size
     * tracks the *active* key set, not the all-time one. (Event-time,
     * not processing-time, timeout: processing time "always advances",
     * which makes the micro-batch engine re-trigger empty batches
@@ -92,7 +107,7 @@ object EventsStream {
     * covers the simple case; this is the template for arbitrary keyed
     * state.
     */
-  def firstSeenDedupStream(events: DataFrame, idleTimeoutHours: Int = 2): DataFrame = {
+  def firstSeenDedupStream(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
@@ -117,7 +132,7 @@ object EventsStream {
             // timeout must sit at-or-after the current watermark
             state.setTimeoutTimestamp(
               math.max(state.getCurrentWatermarkMs(), maxTs) +
-                idleTimeoutHours * 3600L * 1000L)
+                2 * 3600L * 1000L)
             out.iterator
           }
       }
@@ -136,7 +151,7 @@ object EventsStream {
   /** Streaming dedup via the NATIVE watermark-bounded operator
     * (`dropDuplicatesWithinWatermark`) — the platform path for turning
     * an at-least-once event feed effectively-once: duplicate keys
-    * arriving within the watermark delay are dropped, and the engine
+    * arriving within the 24-hour watermark delay are dropped, and the engine
     * expires key state automatically once the watermark passes it
     * (state tracks the active window, not the all-time key set).
     * Contrast `firstSeenDedupStream`, the explicit
@@ -144,16 +159,17 @@ object EventsStream {
     * custom state; when plain key-dedup is the goal, the native
     * operator wins — no user state code, RocksDB-backed at scale.
     */
-  def dedupKeysStream(events: DataFrame, delayHours: Int = 24): DataFrame =
-    events.withWatermark("ts", s"$delayHours hours")
+  def dedupKeysStream(events: DataFrame): DataFrame =
+    events.withWatermark("ts", "24 hours")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select("user_id", "event_type")
 
   /** Batch-equivalent of the native streaming dedup: the distinct key
     * set. (The streaming form may legitimately re-emit a key whose
     * duplicates arrive farther apart in event time than the watermark
-    * delay; the fixture's replay spans well under the default delay,
-    * so the outputs are equal — spec-asserted.)
+    * delay; the fixture's replay spans well under that delay, so the
+    * outputs are equal — spec-asserted. `dropDuplicatesWithinWatermark`
+    * itself throws on a batch frame, hence this twin.)
     */
   def dedupKeysBatch(events: DataFrame): DataFrame =
     events.select("user_id", "event_type").distinct()
@@ -198,21 +214,24 @@ object EventsStream {
       .select(col("user_id"), col("m.eid").as("latest_event_id"),
         col("m.v").as("latest_value"))
 
+  /** The CUSUM drift detector's fixed target and alarm threshold. */
+  private val DriftTargetCents = 5000L
+  private val DriftThresholdCents = 20000L
+
   /** Per-user streaming CUSUM drift vs a FIXED target (Page's actual
     * formulation — the reference value is a known parameter, which is
     * exactly what makes the detector STREAMABLE: no data-dependent mean
     * to learn, so per-key state is three longs). Each user's event
-    * values (cents) accumulate one-sided deviations against
-    * `targetCents`; the recurrence S = max(0, S + (cents − target))
+    * values (cents) accumulate one-sided deviations against the
+    * 5000-cent target; the recurrence S = max(0, S + (cents − target))
     * folds via (P, minP) so the state update is branch-free, and the
     * emitted row tracks the maximum drift score ever reached plus the
-    * flag at `thresholdCents`. Update-mode latest-per-key emission (the
+    * flag above 20000 cents. Update-mode latest-per-key emission (the
     * st3 contract); within a micro-batch rows sort by (ts, event_id),
     * across batches the contract is arrival order, which the bounded
     * replay satisfies (the firstSeenDedupStream posture).
     */
-  def userDriftStream(events: DataFrame, targetCents: Long,
-                      thresholdCents: Long): DataFrame = {
+  def userDriftStream(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     val spark = events.sparkSession
     import spark.implicits._
@@ -228,13 +247,13 @@ object EventsStream {
           // state = (P running deviation sum, min(0, min P), max S)
           var (p, minP, maxS) = state.getOption.getOrElse((0L, 0L, 0L))
           for ((_, _, _, cents) <- rows.toSeq.sortBy(r => (r._2, r._3))) {
-            p += cents - targetCents
+            p += cents - DriftTargetCents
             if (p < minP) minP = p
             val sNow = p - minP
             if (sNow > maxS) maxS = sNow
           }
           state.update((p, minP, maxS))
-          (uid, maxS, maxS > thresholdCents)
+          (uid, maxS, maxS > DriftThresholdCents)
       }
       .toDF("user_id", "max_drift_cents", "drift_flag")
   }
@@ -243,25 +262,27 @@ object EventsStream {
     * identity over one (ts, event_id)-ordered window — S_i = P_i −
     * min(0, min_{j≤i} P_j) — then a mergeable per-user max.
     */
-  def userDriftBatch(events: DataFrame, targetCents: Long,
-                     thresholdCents: Long): DataFrame = {
+  def userDriftBatch(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     events
       .withColumn("dev",
-        (col("value").cast("decimal(18,2)") * 100).cast("long") - targetCents)
+        (col("value").cast("decimal(18,2)") * 100).cast("long") - DriftTargetCents)
       .withColumn("p", sum(col("dev")).over(w))
       .withColumn("s", col("p") - min(least(col("p"), lit(0L))).over(w))
       .groupBy("user_id")
       .agg(max(col("s")).as("max_drift_cents"))
       .select(col("user_id"), col("max_drift_cents"),
-        (col("max_drift_cents") > thresholdCents).as("drift_flag"))
+        (col("max_drift_cents") > DriftThresholdCents).as("drift_flag"))
   }
+
+  /** The late-data audit's allowance: one hour, in microseconds. */
+  private val AllowedLateUs = 3600000000L
 
   /** LATE-DATA AUDIT — the observability every watermarked pipeline
     * needs: per user, how many events arrived with an event time more
-    * than `allowedLateUs` behind that user's event-time HIGH-WATER
+    * than one hour behind that user's event-time HIGH-WATER
     * MARK at their arrival, and the worst observed lateness. "Arrival
     * order" is the fixture's monotone `event_id` (the st1 posture);
     * a watermarked aggregation would have DROPPED exactly these rows,
@@ -270,12 +291,10 @@ object EventsStream {
     * plus the two counters.
     *
     * `arrivalCol` must be a UNIQUE long encoding arrival order (the
-    * fixture's `event_id` by default; the catalog query feeds a
-    * hash-permuted key to simulate network reordering, since the
-    * fixture itself arrives perfectly ordered).
+    * catalog query feeds a hash-permuted `event_id` to simulate network
+    * reordering, since the fixture itself arrives perfectly ordered).
     */
-  def lateEventAuditStream(events: DataFrame, allowedLateUs: Long,
-                           arrivalCol: Column = col("event_id")): DataFrame = {
+  def lateEventAuditStream(events: DataFrame, arrivalCol: Column): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     val spark = events.sparkSession
     import spark.implicits._
@@ -292,7 +311,7 @@ object EventsStream {
             state.getOption.getOrElse((Long.MinValue, 0L, 0L, 0L))
           for ((_, tsUs, _) <- rows.toSeq.sortBy(_._3)) {
             n += 1
-            if (hwm != Long.MinValue && tsUs < hwm - allowedLateUs) {
+            if (hwm != Long.MinValue && tsUs < hwm - AllowedLateUs) {
               nLate += 1
               if (hwm - tsUs > maxLate) maxLate = hwm - tsUs
             }
@@ -308,13 +327,12 @@ object EventsStream {
     * is a per-user running max over the PRECEDING rows in arrival
     * order, then one mergeable aggregate.
     */
-  def lateEventAuditBatch(events: DataFrame, allowedLateUs: Long,
-                          arrivalCol: Column = col("event_id")): DataFrame = {
+  def lateEventAuditBatch(events: DataFrame, arrivalCol: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(arrivalCol)
       .rowsBetween(Window.unboundedPreceding, -1)
     val late = col("hwm").isNotNull &&
-      col("ts_us") < col("hwm") - allowedLateUs
+      col("ts_us") < col("hwm") - AllowedLateUs
     events
       .withColumn("ts_us", unix_micros(col("ts")))
       .withColumn("hwm", max(col("ts_us")).over(w))
@@ -384,83 +402,39 @@ object EventsStream {
       .select("user_id", "event_type", "valid_from_us", "valid_to_us")
   }
 
-  private def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame,
-                                gapMinutes: Int,
-                                joinType: String = "inner"): DataFrame =
+  /** Interval self-join: purchases within 30 minutes of a click by the
+    * same user. `joinType` is `"inner"` (st2, the converted pairs) or
+    * `"left"` (st9, every click, null `purchase_id` when none followed).
+    *
+    * On a stream, watermarks on BOTH sides plus the time bound let the
+    * engine expire join state — without them a stream-stream join
+    * buffers both inputs forever. Equi-key is user_id, so the shuffle
+    * is one hash partition per side; the time bound is a post-join
+    * filter, not a range explosion.
+    *
+    * In the left form the engine buffers a click until the WATERMARK
+    * proves no matching purchase can still arrive, then emits it
+    * null-extended: the null side is produced by state EXPIRY, not by a
+    * scan finishing. On a bounded replay, clicks the final watermark
+    * never passes stay buffered and are dropped on stop — the spec
+    * compares accordingly (matched rows must be identical, null
+    * emissions must be a subset of the batch's null set).
+    */
+  def clickToPurchase(events: DataFrame, joinType: String): DataFrame = {
+    val clicks = events.filter(col("event_type") === "click")
+      .withWatermark("ts", "2 hours")
+      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
+        col("ts").as("click_ts"))
+    val purchases = events.filter(col("event_type") === "purchase")
+      .withWatermark("ts", "2 hours")
+      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
+        col("ts").as("purchase_ts"))
     clicks.join(purchases,
       col("c_user") === col("p_user") &&
         col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $gapMinutes MINUTES"),
+        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
       joinType)
       .select(col("click_id"), col("purchase_id"))
-
-  /** Stream-stream interval self-join: purchases within `gapMinutes` of
-    * a click by the same user. Watermarks on BOTH sides plus the time
-    * bound let the engine expire join state — without them a
-    * stream-stream join buffers both inputs forever. Equi-key is
-    * user_id, so the shuffle is one hash partition per side; the time
-    * bound is a post-join filter, not a range explosion.
-    */
-  def clickToPurchaseStream(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .withWatermark("ts", "2 hours")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .withWatermark("ts", "2 hours")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-    clickPurchaseJoin(clicks, purchases, gapMinutes)
-  }
-
-  /** Batch-equivalent of the interval join (identical join logic, no
-    * watermarks) — the oracle-checked form.
-    */
-  def clickToPurchaseBatch(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-    clickPurchaseJoin(clicks, purchases, gapMinutes)
-  }
-
-  /** Stream-stream LEFT OUTER interval join — the attribution query
-    * where unconverted clicks must still be emitted. The engine buffers
-    * a left row until the WATERMARK proves no matching right row can
-    * still arrive, then emits it null-extended: the null side of the
-    * result is produced by state EXPIRY, not by a scan finishing — the
-    * semantic difference between outer joins in the two worlds. Both
-    * watermarks plus the time bound keep join state bounded exactly as
-    * in the inner form; on a bounded replay, left rows the final
-    * watermark never passes stay buffered and are dropped on stop —
-    * the spec compares accordingly (matched rows must be identical,
-    * null emissions must be a subset of the batch's null set).
-    */
-  def clickToPurchaseLeftStream(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .withWatermark("ts", "2 hours")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .withWatermark("ts", "2 hours")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-    clickPurchaseJoin(clicks, purchases, gapMinutes, "leftOuter")
-  }
-
-  /** Batch-equivalent of the left-outer interval join: every click,
-    * null purchase_id when none followed within the gap.
-    */
-  def clickToPurchaseLeftBatch(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-    clickPurchaseJoin(clicks, purchases, gapMinutes, "left")
   }
 
   /** Streaming CDC upsert: commit each micro-batch as one [[KeyedTable]]
@@ -508,11 +482,10 @@ object EventsStream {
     * the JSON payload via the t7 scrub chain.
     *
     * No watermark, no state store: anonymisation is a narrow map, so
-    * the streaming form IS the batch Column compiler applied to a
-    * streaming frame — one definition, both execution modes
+    * one Column program serves a streaming and a batch frame
     * (stream == batch asserted exactly in StreamingSpec).
     */
-  def anonymiseBatch(events: DataFrame): DataFrame =
+  def anonymise(events: DataFrame): DataFrame =
     graft.ops.TextAnalysis.scrubPii(events, "props")
       .select(col("event_id"),
         substring(md5(col("user_id").cast("string")), 1, 16).as("user_pseud"),
@@ -520,17 +493,20 @@ object EventsStream {
         col("n_pii"),
         md5(col("scrubbed")).as("props_scrubbed_md5"))
 
-  /** Streaming form of [[anonymiseBatch]] — same plan, streaming frame. */
-  def anonymiseStream(events: DataFrame): DataFrame = anonymiseBatch(events)
+  /** The Misra–Gries sketch budget of [[windowTopK]]: at most this many
+    * items per day, and every item above n/(budget+1) of a day's
+    * events is guaranteed present.
+    */
+  val TopKBudget = 4
 
   /** Per-day heavy-hitter SKETCHES maintained by the state store: the
-    * mergeable Misra–Gries aggregator runs as a streaming tumbling-
-    * window aggregate, so each day's bounded sketch accretes across
-    * micro-batches and is emitted once when the watermark closes the
-    * window — the streaming form of q_approx_topk. State per window is
-    * the sketch's own budget (a ≤ `budget`-entry map), never the item
-    * cardinality: this is exactly why heavy-hitter sketches matter on
-    * an unbounded stream. Streaming form; append-mode.
+    * mergeable Misra–Gries aggregator runs as a tumbling-window
+    * aggregate, so on a stream each day's bounded sketch accretes
+    * across micro-batches and is emitted once when the watermark closes
+    * the window (append mode) — the streaming form of q_approx_topk.
+    * State per window is the sketch's own budget (a ≤ [[TopKBudget]]-
+    * entry map), never the item cardinality: this is exactly why
+    * heavy-hitter sketches matter on an unbounded stream.
     *
     * Merge-order caveat (same as q_approx_topk): MG counters depend on
     * merge order, so stream and batch sketches need not be map-equal —
@@ -538,20 +514,11 @@ object EventsStream {
     * GUARANTEE: every item above n/(budget+1) is present and the
     * sketch stays within budget.
     */
-  def windowTopKStream(events: DataFrame, budget: Int = 2): DataFrame =
+  def windowTopK(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "24 hours")
       .groupBy(window(col("ts"), "1 day").as("w"))
-      .agg(graft.functions.MisraGriesAgg.column(col("event_type"), budget).as("mg"))
-      .select(col("w.start").as("day"), col("mg"))
-
-  /** Batch-equivalent of [[windowTopKStream]] (same grouping, no
-    * watermark).
-    */
-  def windowTopKBatch(events: DataFrame, budget: Int = 2): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 day").as("w"))
-      .agg(graft.functions.MisraGriesAgg.column(col("event_type"), budget).as("mg"))
+      .agg(graft.functions.MisraGriesAgg.column(col("event_type"), TopKBudget).as("mg"))
       .select(col("w.start").as("day"), col("mg"))
 
   /** Drive a streaming DataFrame built by `build` over the fixture

@@ -288,12 +288,13 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val shifted = "PREFIX " + base
     val df = Seq((1L, base), (2L, shifted), (3L, base), (4L, "too few")).toDF("id", "text")
-    val sigs = TextAnalysis.winnowingSignatures(df, "id", "text").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    // each doc's signature: its distinct fingerprints
+    val sigs = TextAnalysis.winnowingFingerprints(df, "id", "text").collect()
+      .groupBy(_.getLong(0)).map { case (id, rows) => id -> rows.map(_.getLong(1)).toSet }
     assert(sigs(1) == sigs(3)) // deterministic
     assert(!sigs.contains(4L), "docs with fewer than k tokens produce no fingerprints")
     // the shifted doc shares most fingerprint hashes with the original
-    val overlap = sigs(1).toSet.intersect(sigs(2).toSet).size.toDouble / sigs(1).size
+    val overlap = sigs(1).intersect(sigs(2)).size.toDouble / sigs(1).size
     assert(overlap >= 0.5, s"overlap=$overlap")
     // portable (md5-based) hash selects the same positions deterministically
     val port = TextAnalysis.winnowingFingerprints(df, "id", "text", portableHash = true)
@@ -302,9 +303,11 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("multimodal decode: real container metadata, batch-shaped") {
-    val meta1 = Multimodal.decodeMeta(Multimodal.assetsFromDocuments(docs), batchSize = 7)
-    val meta2 = Multimodal.decodeMeta(Multimodal.assetsFromDocuments(docs), batchSize = 128)
-    assert(meta1.exceptAll(meta2).count() == 0) // batch size never changes results
+    val assets = Multimodal.assetsFromDocuments(docs)
+    val meta1 = Multimodal.decodeMeta(assets.repartition(7))
+    val meta2 = Multimodal.decodeMeta(assets.coalesce(1))
+    // how rows arrive never changes results
+    assert(meta1.exceptAll(meta2).count() == 0 && meta2.exceptAll(meta1).count() == 0)
     // every synthesised container parses — nothing hits the reject sink
     assert(meta1.count() == docs.count())
     val byType = meta1.groupBy("media_type").count().collect()
@@ -562,9 +565,11 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(meta.filter(col("duration_ms") =!=
       floor(col("data_bytes") * 1000 /
         (col("sample_rate") * col("channels") * 2)).cast("long")).count() == 0)
-    // batch size never changes results
-    val m2 = Multimodal.decodeAudioMeta(assets, batchSize = 3)
-    assert(meta.exceptAll(m2).count() == 0)
+    // how rows arrive never changes results
+    val spread = Multimodal.decodeAudioMeta(assets.repartition(7))
+    val single = Multimodal.decodeAudioMeta(assets.coalesce(1))
+    assert(spread.exceptAll(single).count() == 0 && single.exceptAll(spread).count() == 0)
+    assert(meta.exceptAll(single).count() == 0)
   }
 
   test("segment dedup keeps the globally-first occurrence and reassembles") {
@@ -605,7 +610,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       (102L, "tiny doc")                                        // <3 tokens → passes
     ).toDF("doc_id", "text")
     val bands = DocsStream.corpusBandKeys(corpus)
-    val out = DocsStream.nearDupScreenBatch(arriving, bands)
+    val out = DocsStream.nearDupScreen(arriving, bands)
       .select("doc_id").as[Long].collect().toSet
     assert(out == Set(101L, 102L))
     // band table is (band_idx, h) distinct — bounded by 4 rows per corpus doc
@@ -1049,7 +1054,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       (2L, "a b d"),
     ).toDF("doc_id", "text")
     // counts: a=3, c=2, b=2, d=1; k=3 cuts inside the (b,c) tie → token order
-    val out = TextAnalysis.topTerms(corpus, "text", k = 3)
+    val out = TextAnalysis.topTerms(corpus, k = 3)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(out == Seq(("a", 3L), ("b", 2L), ("c", 2L)))
   }
@@ -1063,7 +1068,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     ).toDF("doc_id", "text")
     // N=3; df: apple=1, banana=2, cherry=2, date=1
     // idf_micro: log2(3)→1584962, log2(1.5)→584962
-    val out = TextAnalysis.tfidfKeywords(corpus, k = 3)
+    val out = TextAnalysis.tfidfKeywords(corpus)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
     assert(out == Set(
       (1L, 1, "apple", 2L * 1584962L),
@@ -3101,11 +3106,11 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // r3 pairs: Ac: 2, cA: 1 → merge "Ac"→C
     val docs = (Seq.fill(3)("abab") ++ Seq.fill(2)("abc") ++ Seq("cab"))
       .toDF("text")
-    val got = TextAnalysis.bpeTrain(docs, rounds = 3)
+    val got = TextAnalysis.bpeTrain(docs)
       .as[(Int, String, Long)].collect().toSeq.sortBy(_._1)
     assert(got == Seq((1, "ab", 9L), (2, "AA", 3L), (3, "Ac", 2L)))
     // layout invariance of the whole merge chain
-    val re = TextAnalysis.bpeTrain(docs.repartition(5), rounds = 3)
+    val re = TextAnalysis.bpeTrain(docs.repartition(5))
       .as[(Int, String, Long)].collect().toSeq.sortBy(_._1)
     assert(re == got)
   }
@@ -3117,7 +3122,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val docs = ((Seq.fill(3)("abab") ++ Seq.fill(2)("abc") ++ Seq("cab"))
       .zipWithIndex.map { case (t, i) => (i.toLong, t) } :+ (9L, "123 !?"))
       .toDF("doc_id", "text")
-    val got = TextAnalysis.bpeEncode(docs, rounds = 3)
+    val got = TextAnalysis.bpeEncode(docs)
       .as[(Long, Long, Long, Long)].collect()
       .map(t => t._1 -> (t._2, t._3, t._4)).toMap
     assert(got(0L) == (1L, 4L, 1L) && got(1L) == (1L, 4L, 1L) && got(2L) == (1L, 4L, 1L))
@@ -3127,7 +3132,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(got(9L) == (0L, 0L, 0L))
     // encoding can only shorten: bpe tokens ≤ letters, and layout-invariant
     assert(got.values.forall { case (_, ch, bpe) => bpe <= ch })
-    val re = TextAnalysis.bpeEncode(docs.repartition(5), rounds = 3)
+    val re = TextAnalysis.bpeEncode(docs.repartition(5))
       .as[(Long, Long, Long, Long)].collect()
       .map(t => t._1 -> (t._2, t._3, t._4)).toMap
     assert(re == got)

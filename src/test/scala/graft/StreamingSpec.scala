@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.sources.ParquetSource
 import graft.streaming.EventsStream
 
-/** Structured Streaming specs: the streaming forms must agree with their
-  * batch-equivalent forms when the fixture is replayed as a bounded
-  * stream through the memory sink.
+/** Structured Streaming specs: a streaming run must agree with the batch
+  * run of the same operator (or with its reference twin) when the
+  * fixture is replayed as a bounded stream through the memory sink.
   */
 class StreamingSpec extends AnyFunSuite with SparkSuite {
 
@@ -34,9 +34,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   test("session_window streaming sessionisation matches gap-based batch count") {
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$sfDir/events.parquet", rawSchema,
-      df => EventsStream.sessionizeStream(ParquetSource.normalizeNanoTimestamps(df), 30),
+      df => EventsStream.sessionWindow(ParquetSource.normalizeNanoTimestamps(df)),
       queryName = "sessions_test")
-    val batchSessions = EventsStream.sessionizeBatch(events, 30)
+    val batchSessions = EventsStream.sessionizeBatch(events)
     assert(streamed.count() > 0)
     // append mode emits a session only once the watermark passes it;
     // sessions still open at end-of-stream stay in state. So: every
@@ -97,10 +97,10 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   test("stream-stream interval join matches batch equivalent") {
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$sfDir/events.parquet", rawSchema,
-      df => EventsStream.clickToPurchaseStream(
-        ParquetSource.normalizeNanoTimestamps(df)),
+      df => EventsStream.clickToPurchase(
+        ParquetSource.normalizeNanoTimestamps(df), "inner"),
       queryName = "interval_join_test")
-    val batch = EventsStream.clickToPurchaseBatch(events)
+    val batch = EventsStream.clickToPurchase(events, "inner")
     assert(batch.count() > 0, "fixture should contain click→purchase pairs")
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
@@ -109,10 +109,10 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   test("stream-stream LEFT OUTER interval join: matches exact, nulls only from expiry") {
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$sfDir/events.parquet", rawSchema,
-      df => EventsStream.clickToPurchaseLeftStream(
-        ParquetSource.normalizeNanoTimestamps(df)),
+      df => EventsStream.clickToPurchase(
+        ParquetSource.normalizeNanoTimestamps(df), "left"),
       queryName = "outer_interval_test")
-    val batch = EventsStream.clickToPurchaseLeftBatch(events)
+    val batch = EventsStream.clickToPurchase(events, "left")
     val streamedMatched = streamed.filter(col("purchase_id").isNotNull)
     val batchMatched = batch.filter(col("purchase_id").isNotNull)
     // matched rows never wait on the watermark — they must be identical
@@ -135,7 +135,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       docs.filter(pmod(col("doc_id"), lit(5)) =!= 0))
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$sfDir/documents.parquet", docsSchema,
-      df => DocsStream.screenNewStream(
+      df => DocsStream.screenNew(
         df.filter(pmod(col("doc_id"), lit(5)) === 0), histFps),
       queryName = "screen_stream_test")
     val batch = GraftQueries.st6ScreenStream(spark, sfDir)
@@ -146,13 +146,13 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("chunk stream: stateless row-local projection — streaming == batch row-identical") {
-    import graft.streaming.DocsStream
+    import graft.ops.TextAnalysis
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$sfDir/documents.parquet", docs.schema,
-      df => DocsStream.chunkStream(df),
+      df => TextAnalysis.chunks(df, size = 32, stride = 32),
       queryName = "chunk_stream_test")
-    val batch = DocsStream.chunkBatch(docs)
+    val batch = TextAnalysis.chunks(docs, size = 32, stride = 32)
     assert(batch.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0 &&
       batch.exceptAll(streamed).count() == 0)
@@ -170,7 +170,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val src = spark.read.parquet(s"$dir/assets")
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$dir/assets", src.schema,
-      df => AssetsStream.metaStream(df),
+      df => Multimodal.decodeMeta(df),
       queryName = "asset_meta_stream_test")
     val batch = Multimodal.decodeMeta(src)
     // every synthesised container decodes; the stream emits the exact
@@ -187,13 +187,13 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("watermark screen stream: stateless — streaming == batch; only flagged docs emitted") {
-    import graft.streaming.DocsStream
+    import graft.ops.TextAnalysis
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$sfDir/documents.parquet", docs.schema,
-      df => DocsStream.watermarkScreenStream(df),
+      df => TextAnalysis.watermarkAudit(df).filter(col("flagged")),
       queryName = "watermark_screen_test")
-    val batch = DocsStream.watermarkScreenBatch(docs)
+    val batch = TextAnalysis.watermarkAudit(docs).filter(col("flagged"))
     assert(streamed.exceptAll(batch).count() == 0 &&
       batch.exceptAll(streamed).count() == 0)
     // the screen must emit a strict subset (the fixture's natural text
@@ -210,7 +210,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       docs.filter(pmod(col("doc_id"), lit(5)) =!= 0))
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$sfDir/documents.parquet", docsSchema,
-      df => DocsStream.nearDupScreenStream(
+      df => DocsStream.nearDupScreen(
         df.filter(pmod(col("doc_id"), lit(5)) === 0), bands),
       queryName = "neardup_screen_stream_test")
     val batch = GraftQueries.st10NearDupScreen(spark, sfDir)
@@ -281,9 +281,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   test("anonymise stream: stateless — streaming == batch row-identical; pseudonyms consistent") {
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$sfDir/events.parquet", rawSchema,
-      df => EventsStream.anonymiseStream(ParquetSource.normalizeNanoTimestamps(df)),
+      df => EventsStream.anonymise(ParquetSource.normalizeNanoTimestamps(df)),
       queryName = "anon_stream_test")
-    val batch = EventsStream.anonymiseBatch(events)
+    val batch = EventsStream.anonymise(events)
     assert(streamed.exceptAll(batch).count() == 0 &&
       batch.exceptAll(streamed).count() == 0)
     assert(batch.count() > 0)
@@ -298,9 +298,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$sfDir/events.parquet", rawSchema,
       df => EventsStream.userDriftStream(
-        ParquetSource.normalizeNanoTimestamps(df), 5000L, 20000L),
+        ParquetSource.normalizeNanoTimestamps(df)),
       queryName = "user_drift_test", outputMode = "update")
-    val batch = EventsStream.userDriftBatch(events, 5000L, 20000L)
+    val batch = EventsStream.userDriftBatch(events)
     // single-batch bounded replay: the update-mode table IS final state
     assert(streamed.exceptAll(batch).count() == 0 &&
       batch.exceptAll(streamed).count() == 0)
@@ -315,9 +315,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$sfDir/events.parquet", rawSchema,
       df => EventsStream.lateEventAuditStream(
-        ParquetSource.normalizeNanoTimestamps(df), 3600000000L, arrival),
+        ParquetSource.normalizeNanoTimestamps(df), arrival),
       queryName = "late_audit_test", outputMode = "update")
-    val batch = EventsStream.lateEventAuditBatch(events, 3600000000L, arrival)
+    val batch = EventsStream.lateEventAuditBatch(events, arrival)
     assert(streamed.exceptAll(batch).count() == 0 &&
       batch.exceptAll(streamed).count() == 0)
     assert(batch.count() > 0)
@@ -326,12 +326,58 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(batch.agg(sum(col("n_late"))).head().getLong(0) > 0)
   }
 
+  test("one definition per mode: a batch frame's plan keeps no watermark") {
+    import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+    // the watermarked operators serve batch frames too because the
+    // analyzer drops a watermark from a batch plan; planning only, no job
+    for ((name, df) <- Seq(
+        "sessionWindow" -> EventsStream.sessionWindow(events),
+        "windowTopK" -> EventsStream.windowTopK(events),
+        "clickToPurchase" -> EventsStream.clickToPurchase(events, "left"))) {
+      val marks = df.queryExecution.optimizedPlan.collect { case w: EventTimeWatermark => w }
+      assert(marks.isEmpty, s"$name: batch plan keeps $marks")
+    }
+  }
+
+  test("ensureParallelism returns a streaming frame unchanged and starts no job") {
+    import graft.ops.Partitioning
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_parallelism")
+    java.nio.file.Files.createSymbolicLink(dir.resolve("documents.parquet"),
+      java.nio.file.Paths.get(s"$sfDir/documents.parquet").toAbsolutePath)
+    val stream = spark.readStream.schema(docs.schema).parquet(dir.toString)
+    val started = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => started.merge(g, 1, _ + _))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("parallelism-stream", "streaming frame")
+      assert(Partitioning.ensureParallelism(stream) eq stream)
+      // a sentinel job: the bus is ordered, so once it is seen any job
+      // the call above started would have been seen too
+      sc.setJobGroup("parallelism-sentinel", "sentinel")
+      spark.range(1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!started.containsKey("parallelism-sentinel") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(started.containsKey("parallelism-sentinel"), "the listener saw no sentinel job")
+      assert(!started.containsKey("parallelism-stream"),
+        s"the streaming call launched ${started.get("parallelism-stream")} job(s)")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("windowed MG sketch: streaming sketches satisfy the heavy-hitter guarantee") {
-    val budget = 2
+    val budget = EventsStream.TopKBudget
     val streamed = EventsStream.runOnceOnParquet(
       spark, s"$sfDir/events.parquet", rawSchema,
-      df => EventsStream.windowTopKStream(
-        ParquetSource.normalizeNanoTimestamps(df), budget),
+      df => EventsStream.windowTopK(ParquetSource.normalizeNanoTimestamps(df)),
       queryName = "window_topk_test")
     assert(streamed.count() > 0, "append mode should emit watermark-closed days")
     // every emitted day's sketch must contain all of that day's heavy
@@ -343,7 +389,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .agg(count(lit(1)).as("cnt"))
     val tot = exact.groupBy("day").agg(sum("cnt").as("n"))
     val verdicts = exact.join(tot, "day")
-      .filter(col("cnt").cast("double") > col("n").cast("double") / 3.0)
+      .filter(col("cnt").cast("double") > col("n").cast("double") / (budget + 1.0))
       .join(streamed, "day") // inner: only emitted days are checkable
       .select(map_contains_key(col("mg"), col("event_type")).as("found"),
         (size(map_keys(col("mg"))) <= budget).as("size_ok"))
